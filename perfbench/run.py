@@ -5,15 +5,17 @@
 Run from the root of a checkout. It generates the seeded inputs,
 computes the correct outputs with DuckDB, then starts fresh worker
 processes (``worker.py``): one that only sets up a session, and one
-that sets up and runs the workload. It polls the resident memory of
-the worker's process tree, checks every pass's output, and prints one
-JSON object as the last line of stdout:
+that sets up and runs the workload. It checks every pass's output,
+and prints one JSON object as the last line of stdout:
 
 * ``--trace 0``: the end-to-end metrics (``setup_s`` is the median of
   the two set-ups);
-* ``--trace 1``: the per-layer metrics, as means over the traced
-  passes, plus the tracing overhead measured against the untraced
-  passes of the same run. The spans go to ``perfbench/.work/``.
+* ``--trace 1``: only the workload process, traced; the per-layer
+  metrics, as means over its measured passes, its median pass time
+  (``trace.pass_s_p50``, which against ``pass_s_p50`` of an untraced
+  run of the same seed gives the tracing overhead) and the peak memory
+  of its process tree, polled every 0.2 s. The spans go to
+  ``perfbench/.work/``.
 
 Everything it writes stays under ``perfbench/.work/``.
 """
@@ -38,9 +40,13 @@ sys.path.insert(0, HERE)
 
 import gen  # noqa: E402
 from spans import LAYER_UNITS  # noqa: E402
-from workloads import WORKLOADS, expected_digests, table_rows  # noqa: E402
+from workloads import (  # noqa: E402
+    WARMUP_PASSES,
+    WORKLOADS,
+    expected_digests,
+    table_rows,
+)
 
-FACTOR = 5  # replication factor of the seeded base tables
 SETUP_PROBES = 1  # set-up-only processes besides the workload process
 CHILD_TIMEOUT_S = 150
 
@@ -60,14 +66,6 @@ def child_env(tmp: str) -> dict[str, str]:
     return env
 
 
-def _ppid(pid: int) -> int | None:
-    try:
-        with open(f"/proc/{pid}/stat", encoding="ascii") as fh:
-            return int(fh.read().rsplit(")", 1)[1].split()[1])
-    except (OSError, IndexError, ValueError):
-        return None
-
-
 def _pss(pid: int) -> int:
     """Proportional set size in bytes: pages shared between the Python
     daemon and the workers it forks count once in the sum."""
@@ -81,20 +79,20 @@ def _pss(pid: int) -> int:
     return 0
 
 
-def _tree(root: int) -> set[int]:
-    """``root`` and its live descendants."""
-    parent = {}
+def _session(sid: int) -> set[int]:
+    """Live processes of session ``sid``: a worker started as a session
+    leader, its JVM and the Python workers, which leave the worker's
+    process group but not its session."""
+    out = set()
     for name in os.listdir("/proc"):
         if name.isdigit():
-            pp = _ppid(int(name))
-            if pp is not None:
-                parent[int(name)] = pp
-    tree, grew = {root}, True
-    while grew:
-        more = {p for p, pp in parent.items() if pp in tree} - tree
-        tree |= more
-        grew = bool(more)
-    return tree
+            try:
+                with open(f"/proc/{name}/stat", encoding="ascii") as fh:
+                    if int(fh.read().rsplit(")", 1)[1].split()[3]) == sid:
+                        out.add(int(name))
+            except (OSError, IndexError, ValueError):
+                pass
+    return out
 
 
 def run_child(args: list[str], run_dir: str, poll_mem: bool = False) -> float:
@@ -107,24 +105,21 @@ def run_child(args: list[str], run_dir: str, poll_mem: bool = False) -> float:
     cmd = [sys.executable, os.path.join(HERE, "worker.py"), "--t0", repr(time.time()), *args]
     with open(os.path.join(run_dir, "worker.log"), "ab") as log:
         proc = subprocess.Popen(cmd, cwd=run_dir, env=child_env(tmp),
-                                stdout=log, stderr=log)
-    seen: set[int] = set()
+                                stdout=log, stderr=log, start_new_session=True)
     peak = 0
     deadline = time.time() + CHILD_TIMEOUT_S
     try:
         while proc.poll() is None:
             if time.time() > deadline:
                 raise RuntimeError(f"worker exceeded {CHILD_TIMEOUT_S}s")
-            tree = _tree(proc.pid)
-            seen |= tree
             if poll_mem:
-                peak = max(peak, sum(_pss(p) for p in tree))
+                peak = max(peak, sum(_pss(p) for p in _session(proc.pid)))
             time.sleep(0.2)
     finally:
         if proc.poll() is None:
             proc.kill()
         proc.wait()
-        _reap(seen - {proc.pid})
+        _reap(_session(proc.pid))
     if proc.returncode != 0:
         with open(os.path.join(run_dir, "worker.log"), "rb") as fh:
             sys.stderr.write(fh.read()[-4000:].decode(errors="replace"))
@@ -164,10 +159,11 @@ def main() -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
 
-    data = gen.generate(args.seed, FACTOR, os.path.join(WORK, "data"))
+    workload = WORKLOADS[args.workload]
+    data = gen.generate(args.seed, workload.factor, os.path.join(WORK, "data"),
+                        workload.sizes)
     expected = expected_digests(args.workload, data)
-    requests = WORKLOADS[args.workload].requests
-    rows_per_pass = sum(table_rows(data, r.tables) for r in requests)
+    rows_per_pass = sum(table_rows(data, r.tables) for r in workload.requests)
 
     run_dir = os.path.join(WORK, f"run-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
@@ -184,7 +180,7 @@ def main() -> int:
              "--out", os.path.join(run_dir, "out"), "--seconds", str(args.seconds)]
             + (["--trace"] if args.trace else []),
             run_dir,
-            poll_mem=True,
+            poll_mem=bool(args.trace),
         )
         result = _load(res)
         if args.trace:
@@ -195,10 +191,10 @@ def main() -> int:
 
     runs = [r for p in result["passes"] for r in p["runs"]]
     failed = failed_runs(runs, expected)
-    measured = result["passes"][result["warmup"]:]
+    measured = result["passes"][WARMUP_PASSES:]
     times = [p["s"] for p in measured]
     if args.trace:
-        metrics = traced_metrics(result, measured)
+        metrics = traced_metrics(result["setup_s"], measured)
         metrics["mem.peak_mb"] = (peak_mb, "MB")
     else:
         tail_s, tail_pct = tail(times)
@@ -236,17 +232,12 @@ def failed_runs(runs: list[dict], expected: dict[str, str]) -> int:
     return failed
 
 
-def traced_metrics(result: dict, measured: list[dict]) -> dict[str, tuple[float, str]]:
-    """Per-layer means over the traced passes, and the tracing overhead."""
-    traced = [p for p in measured if p["traced"]]
-    plain = [p for p in measured if not p["traced"]]
-    out = {"session.start_s": (result["setup_s"], "s")}
+def traced_metrics(setup_s: float, measured: list[dict]) -> dict[str, tuple[float, str]]:
+    """Per-layer means over the traced passes, and their median time."""
+    out = {"session.start_s": (setup_s, "s")}
     for name, unit in LAYER_UNITS.items():
-        out[name] = (statistics.fmean(p["layers"][name] for p in traced), unit)
-    t_on = statistics.median(p["s"] for p in traced)
-    out["trace.pass_s_p50"] = (t_on, "s")
-    overhead = 100.0 * (t_on / statistics.median(p["s"] for p in plain) - 1) if plain else 0.0
-    out["trace.overhead_pct"] = (overhead, "%")
+        out[name] = (statistics.fmean(p["layers"][name] for p in measured), unit)
+    out["trace.pass_s_p50"] = (statistics.median(p["s"] for p in measured), "s")
     return out
 
 

@@ -41,7 +41,9 @@ def test_cache_is_reused_and_builds_leave_nothing(tmp_path):
 def test_replication_scales_keys(tmp_path):
     import pyarrow.parquet as pq
 
-    d = gen.generate(6, 3, str(tmp_path))
+    d = gen.generate(6, 3, str(tmp_path), sizes=(("orders", 400),))
     orders = pq.read_table(os.path.join(d, "orders.parquet"))
     keys = orders.column("o_orderkey").to_pylist()
-    assert sorted(keys) == list(range(3 * gen.N_ORDERS))
+    assert sorted(keys) == list(range(3 * 400))
+    customers = pq.read_metadata(os.path.join(d, "customer.parquet")).num_rows
+    assert customers == 3 * gen.BASE_ROWS["customer"]

@@ -8,12 +8,11 @@
 from process start to a ``get_spark`` session that has finished one
 action. With ``--setup-only`` that is all it measures. Otherwise it
 runs the workload in a closed loop of passes, each running every
-request once: the workload's warm-up passes (the first request of the
-first is ``first_pass_s``), then passes until ``--seconds`` have
-elapsed. Each request is timed alone; its output is digested
-afterwards, outside the timed region. With ``--trace`` every other
-pass is traced and its per-layer metrics are recorded. The result is
-one JSON file.
+request once: the warm-up passes (the first is ``first_pass_s``),
+then passes until ``--seconds`` have elapsed. Each request is timed
+alone; its output is digested afterwards, outside the timed region.
+With ``--trace`` every pass after the warm-up is traced and its
+per-layer metrics are recorded. The result is one JSON file.
 """
 
 from __future__ import annotations
@@ -66,7 +65,7 @@ def main() -> None:
 
 def run_workload(spark, tracer, args) -> dict:
     from status import StatusReader
-    from workloads import WORKLOADS, Runner, digest
+    from workloads import WARMUP_PASSES, WORKLOADS, Runner, digest
 
     workload = WORKLOADS[args.workload]
     runner = Runner(spark, args.data, args.out)
@@ -92,7 +91,7 @@ def run_workload(spark, tracer, args) -> dict:
                 run["s"] = time.perf_counter() - t
                 run["error"] = traceback.format_exc(limit=3)
             runs.append(run)
-        rec = {"traced": traced, "runs": runs, "s": sum(r["s"] for r in runs)}
+        rec = {"runs": runs, "s": sum(r["s"] for r in runs)}
         if traced:
             rec["layers"] = tracer.layer_metrics(
                 pass_id, rec["s"], reader.stats_since(last_job),
@@ -101,18 +100,12 @@ def run_workload(spark, tracer, args) -> dict:
             tracer.active = False
         passes.append(rec)
 
-    for _ in range(workload.warmup_passes):
+    for _ in range(WARMUP_PASSES):
         one_pass(traced=False)
     start = time.perf_counter()
-    # a traced run needs a traced and an untraced pass for the overhead
-    while (time.perf_counter() - start < args.seconds
-           or args.trace and len(passes) < workload.warmup_passes + 2):
-        one_pass(traced=args.trace and len(passes) % 2 == 0)
-    return {
-        "first_pass_s": passes[0]["runs"][0]["s"],
-        "warmup": workload.warmup_passes,
-        "passes": passes,
-    }
+    while time.perf_counter() - start < args.seconds:
+        one_pass(traced=args.trace)
+    return {"first_pass_s": passes[0]["s"], "passes": passes}
 
 
 if __name__ == "__main__":

@@ -10,8 +10,8 @@ in an order-insensitive sort, values exact.
 
 * ``dwh`` — ``examples/dwh_quarterly.json`` through
   ``spec.from_spec(...).run``: parquet source, filter, mapper, vocab
-  joiner, decimal reducer, sorter, parquet sink. Expected output: a
-  DuckDB rewrite of the spec.
+  joiner, decimal reducer, sorter, parquet sink, on 1.5 M orders.
+  Expected output: a DuckDB rewrite of the spec.
 * ``graph_stream`` — two registry queries through ``queries()``,
   collected to the driver: ``q141_part_communities`` (label
   propagation, eager per-round actions in ``fn()``) and
@@ -52,24 +52,35 @@ class Request:
     tables: tuple[str, ...]
 
 
+# the first passes of a session are not measured: pass times keep
+# falling for tens of seconds while the JVM compiles
+WARMUP_PASSES = 3
+
+
 @dataclass(frozen=True)
 class Workload:
-    """A pass runs every request once, in order. The first
-    ``warmup_passes`` passes of a session are not measured: pass times
-    keep falling for tens of seconds while the JVM compiles."""
+    """A pass runs every request once, in order, on the dataset
+    ``gen.generate(seed, factor, ..., sizes)``."""
 
     requests: tuple[Request, ...]
-    warmup_passes: int
+    factor: int
+    sizes: tuple[tuple[str, int], ...] = ()
 
 
 WORKLOADS: dict[str, Workload] = {
-    "dwh": Workload((Request("dwh_quarterly", ("orders", "customer")),), 3),
+    # the tables dwh reads at the shapes of sf0.1 (15,000 customers,
+    # 150,000 orders), replicated x10
+    "dwh": Workload(
+        (Request("dwh_quarterly", ("orders", "customer")),),
+        factor=10,
+        sizes=(("customer", 15_000), ("orders", 150_000)),
+    ),
     "graph_stream": Workload(
         (
             Request("q141_part_communities", ("lineitem",)),
             Request("q149_stream_dedup", ("events",)),
         ),
-        3,
+        factor=5,
     ),
 }
 
