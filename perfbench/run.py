@@ -1,23 +1,29 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload dwh --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload dwh --seed 1 --seconds 8 --trace 0
 
 Run from the root of a checkout. It generates the seeded inputs,
-computes the correct outputs with DuckDB, then starts fresh worker
-processes (``worker.py``): one that only sets up a session, and one
-that sets up and runs the workload. It checks every pass's output,
+computes the correct outputs with DuckDB, then starts one fresh worker
+process (``worker.py``) that sets up a session and runs the workload,
+each pass followed by the workload's control (plain Spark SQL of the
+same shape, see ``workloads.py``). It checks every request's output,
 and prints one JSON object as the last line of stdout:
 
-* ``--trace 0``: the end-to-end metrics (``setup_s`` is the median of
-  the two set-ups);
-* ``--trace 1``: only the workload process, traced; the per-layer
-  metrics, as means over its measured passes, its median pass time
-  (``trace.pass_s_p50``, which against ``pass_s_p50`` of an untraced
+* ``--trace 0``: the end-to-end metrics. ``setup_s`` is the time from
+  process start to the end of the first pass (a session, then one cold
+  pass), scaled to a reference host speed by the controls.
+  ``pass_x_p50`` and ``pass_x_tail`` are the median and tail of
+  the measured passes' times, each over the mean of the two controls
+  run on either side of it in the same session;
+* ``--trace 1``: the workload process, traced; the per-layer metrics,
+  as means over its measured passes, its median pass-to-control ratio
+  (``trace.pass_x_p50``, which against ``pass_x_p50`` of an untraced
   run of the same seed gives the tracing overhead) and the peak memory
   of its process tree, polled every 0.2 s. The spans go to
   ``perfbench/.work/``.
 
-Everything it writes stays under ``perfbench/.work/``.
+Per-pass seconds go to stderr. Everything it writes stays under
+``perfbench/.work/``.
 """
 
 from __future__ import annotations
@@ -47,7 +53,6 @@ from workloads import (  # noqa: E402
     table_rows,
 )
 
-SETUP_PROBES = 1  # set-up-only processes besides the workload process
 CHILD_TIMEOUT_S = 150
 
 
@@ -141,6 +146,23 @@ def _reap(pids: set[int], timeout_s: float = 10.0) -> None:
         raise RuntimeError(f"processes {sorted(pids)} did not exit")
 
 
+def pass_ratios(passes: list[dict]) -> list[float]:
+    """Each measured pass's time over the mean of the two controls
+    around it: the one after the pass before and the one after it."""
+    return [
+        passes[i]["s"] / statistics.fmean((passes[i - 1]["control_s"], passes[i]["control_s"]))
+        for i in range(WARMUP_PASSES, len(passes))
+    ]
+
+
+def scaled_setup_s(result: dict, control_ref_s: float) -> float:
+    """Session set-up plus the cold first pass, scaled from this run's
+    host speed, the median control around the measured passes, to a
+    host where the control takes ``control_ref_s``."""
+    host_s = statistics.median(p["control_s"] for p in result["passes"][WARMUP_PASSES - 1:])
+    return (result["session_s"] + result["first_pass_s"]) * control_ref_s / host_s
+
+
 def tail(samples: list[float]) -> tuple[float, float]:
     """The highest percentile with min(10, n/4) samples beyond it, and
     that percentile. Ten samples beyond it once the run has 40 or more;
@@ -169,11 +191,6 @@ def main() -> int:
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(run_dir)
     try:
-        setups = []
-        for i in range(0 if args.trace else SETUP_PROBES):
-            res = os.path.join(run_dir, f"setup{i}.json")
-            run_child(["--setup-only", "--result", res], run_dir)
-            setups.append(_load(res)["setup_s"])
         res = os.path.join(run_dir, "result.json")
         peak_mb = run_child(
             ["--result", res, "--workload", args.workload, "--data", data,
@@ -191,24 +208,29 @@ def main() -> int:
 
     runs = [r for p in result["passes"] for r in p["runs"]]
     failed = failed_runs(runs, expected)
-    measured = result["passes"][WARMUP_PASSES:]
-    times = [p["s"] for p in measured]
+    passes = result["passes"]
+    measured = passes[WARMUP_PASSES:]
+    ratios = pass_ratios(passes)
+    sys.stderr.write(
+        f"perfbench {args.workload} seed={args.seed}: session {result['session_s']:.2f} s, "
+        f"first pass {result['first_pass_s']:.2f} s, {len(ratios)} measured passes "
+        f"after {WARMUP_PASSES}, {rows_per_pass} input rows per pass\n"
+        f"  pass s    {_fmt(p['s'] for p in passes)}\n"
+        f"  control s {_fmt(p['control_s'] for p in passes)}\n"
+    )
+    for i, req in enumerate(workload.requests):
+        sys.stderr.write(f"  {req.key} s {_fmt(p['runs'][i]['s'] for p in passes)}\n")
     if args.trace:
-        metrics = traced_metrics(result["setup_s"], measured)
+        metrics = traced_metrics(result["session_s"], measured, ratios)
         metrics["mem.peak_mb"] = (peak_mb, "MB")
     else:
-        tail_s, tail_pct = tail(times)
-        sys.stderr.write(
-            f"perfbench {args.workload} seed={args.seed}: {len(times)} measured "
-            f"passes, tail is p{tail_pct:.0f}\n"
-        )
-        p50 = statistics.median(times)
+        tail_x, tail_pct = tail(ratios)
+        sys.stderr.write(f"  pass_x_tail is p{tail_pct:.0f} of {len(ratios)}; setup_s is "
+                         f"scaled to a control of {workload.control_ref_s} s\n")
         metrics = {
-            "setup_s": (statistics.median(setups + [result["setup_s"]]), "s"),
-            "first_pass_s": (result["first_pass_s"], "s"),
-            "pass_s_p50": (p50, "s"),
-            "pass_s_tail": (tail_s, "s"),
-            "rows_per_s": (rows_per_pass / p50, "rows/s"),
+            "setup_s": (scaled_setup_s(result, workload.control_ref_s), "s"),
+            "pass_x_p50": (statistics.median(ratios), "x"),
+            "pass_x_tail": (tail_x, "x"),
         }
     print(json.dumps({
         "correct": failed == 0,
@@ -232,13 +254,19 @@ def failed_runs(runs: list[dict], expected: dict[str, str]) -> int:
     return failed
 
 
-def traced_metrics(setup_s: float, measured: list[dict]) -> dict[str, tuple[float, str]]:
-    """Per-layer means over the traced passes, and their median time."""
-    out = {"session.start_s": (setup_s, "s")}
+def traced_metrics(session_s: float, measured: list[dict],
+                   ratios: list[float]) -> dict[str, tuple[float, str]]:
+    """Per-layer means over the traced passes, and their median ratio
+    to the control."""
+    out = {"session.start_s": (session_s, "s")}
     for name, unit in LAYER_UNITS.items():
         out[name] = (statistics.fmean(p["layers"][name] for p in measured), unit)
-    out["trace.pass_s_p50"] = (statistics.median(p["s"] for p in measured), "s")
+    out["trace.pass_x_p50"] = (statistics.median(ratios), "x")
     return out
+
+
+def _fmt(xs) -> str:
+    return " ".join(f"{x:.2f}" for x in xs)
 
 
 def _load(path: str) -> dict:

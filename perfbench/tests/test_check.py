@@ -44,3 +44,20 @@ def test_tail_stays_above_median():
     assert run.tail(xs) == (12.0, 75.0)
     xs = [float(i) for i in range(1, 101)]
     assert run.tail(xs) == (90.0, 90.0)
+
+
+def test_pass_ratio_uses_the_controls_on_both_sides():
+    warmup = [{"s": 9.0, "control_s": 4.0}] * (run.WARMUP_PASSES - 1)
+    passes = warmup + [{"s": 3.0, "control_s": 2.0}, {"s": 3.0, "control_s": 1.0},
+                       {"s": 4.0, "control_s": 3.0}]
+    # warm-up passes are not measured, and a measured pass is divided
+    # by the mean of the control before it and the one after it
+    assert run.pass_ratios(passes) == [2.0, 2.0]
+
+
+def test_setup_is_scaled_by_the_controls_around_measured_passes():
+    passes = [{"s": 9.0, "control_s": 8.0}] * (run.WARMUP_PASSES - 1) + [
+        {"s": 3.0, "control_s": 4.0}, {"s": 3.0, "control_s": 4.0}]
+    result = {"session_s": 10.0, "first_pass_s": 10.0, "passes": passes}
+    # the controls took twice the reference time: the host ran at half speed
+    assert run.scaled_setup_s(result, 2.0) == 10.0

@@ -1,18 +1,18 @@
 """The benchmark's Spark-side process: one fresh session per process.
 
-    python3 perfbench/worker.py --t0 EPOCH --result FILE --setup-only
     python3 perfbench/worker.py --t0 EPOCH --result FILE \\
         --workload NAME --data DIR --out DIR --seconds S [--trace]
 
-``--t0`` is when the parent started this process, so ``setup_s`` runs
-from process start to a ``get_spark`` session that has finished one
-action. With ``--setup-only`` that is all it measures. Otherwise it
-runs the workload in a closed loop of passes, each running every
-request once: the warm-up passes (the first is ``first_pass_s``),
-then passes until ``--seconds`` have elapsed. Each request is timed
-alone; its output is digested afterwards, outside the timed region.
-With ``--trace`` every pass after the warm-up is traced and its
-per-layer metrics are recorded. The result is one JSON file.
+``--t0`` is when the parent started this process, so ``session_s``
+runs from process start to a ``get_spark`` session that has finished
+one action. The worker then runs the workload in a closed loop of
+passes, each running every request once and then the workload's
+control: the warm-up passes (the first is ``first_pass_s``), then
+passes until ``--seconds`` have elapsed. Each request and each control
+is timed alone; outputs are digested afterwards, outside the timed
+region. With ``--trace`` every pass after the warm-up is traced and
+its per-layer metrics, which leave out the control, are recorded. The
+result is one JSON file.
 """
 
 from __future__ import annotations
@@ -29,11 +29,10 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--t0", type=float, required=True)
     ap.add_argument("--result", required=True)
-    ap.add_argument("--setup-only", action="store_true")
-    ap.add_argument("--workload")
-    ap.add_argument("--data")
-    ap.add_argument("--out")
-    ap.add_argument("--seconds", type=float, default=10.0)
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--data", required=True)
+    ap.add_argument("--out", required=True)
+    ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", action="store_true")
     args = ap.parse_args()
 
@@ -46,12 +45,10 @@ def main() -> None:
     with tracer.span("session.get_spark"):
         spark = get_spark("perfbench")
         spark.range(1).count()
-    setup_s = time.time() - args.t0
     tracer.active = False
-    result: dict = {"setup_s": setup_s}
+    result: dict = {"session_s": time.time() - args.t0}
     try:
-        if not args.setup_only:
-            result.update(run_workload(spark, tracer, args))
+        result.update(run_workload(spark, tracer, args))
     finally:
         if args.trace:
             tracer.write(os.path.join(os.path.dirname(args.result), "trace.json"))
@@ -98,6 +95,9 @@ def run_workload(spark, tracer, args) -> dict:
                 reader.persistent_rdds() - rdds,
             )
             tracer.active = False
+        t = time.perf_counter()
+        runner.control(workload)
+        rec["control_s"] = time.perf_counter() - t
         passes.append(rec)
 
     for _ in range(WARMUP_PASSES):

@@ -17,6 +17,10 @@ in an order-insensitive sort, values exact.
   propagation, eager per-round actions in ``fn()``) and
   ``q149_stream_dedup`` (availableNow stream replay with a memory
   sink). Expected output: each query's ``oracle_sql()`` entry.
+
+Each workload also has a control, plain Spark SQL of the same shape
+that calls none of the program's code; the worker runs it after every
+pass, and pass times are reported relative to it (see the README).
 """
 
 from __future__ import annotations
@@ -54,18 +58,35 @@ class Request:
 
 # the first passes of a session are not measured: pass times keep
 # falling for tens of seconds while the JVM compiles
-WARMUP_PASSES = 3
+WARMUP_PASSES = 2
 
 
 @dataclass(frozen=True)
 class Workload:
     """A pass runs every request once, in order, on the dataset
-    ``gen.generate(seed, factor, ..., sizes)``."""
+    ``gen.generate(seed, factor, ..., sizes)``. ``control`` is plain
+    Spark SQL over the same tables (``control_tables``) with the shape
+    of a pass: the same scans and aggregates for ``dwh``, as many small
+    shuffling jobs for ``graph_stream``. It calls none of the program's
+    code; see ``Runner.control``."""
 
     requests: tuple[Request, ...]
     factor: int
+    control: tuple[str, ...]
+    control_tables: tuple[str, ...]
+    # the control's median seconds on the host the benchmark was
+    # calibrated on (a shared 4-core VM, seeds 101-110); ``setup_s`` is
+    # scaled to a host where the control takes this long
+    control_ref_s: float
     sizes: tuple[tuple[str, int], ...] = ()
 
+
+# SQL settings the control runs with, whatever the session's are
+CONTROL_CONF = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+}
 
 WORKLOADS: dict[str, Workload] = {
     # the tables dwh reads at the shapes of sf0.1 (15,000 customers,
@@ -73,6 +94,10 @@ WORKLOADS: dict[str, Workload] = {
     "dwh": Workload(
         (Request("dwh_quarterly", ("orders", "customer")),),
         factor=10,
+        # the spec's query in Spark SQL, sorted as the spec's sorter does
+        control=(DWH_SQL + "ORDER BY 1, 2",),
+        control_tables=("orders", "customer"),
+        control_ref_s=2.0,
         sizes=(("customer", 15_000), ("orders", 150_000)),
     ),
     "graph_stream": Workload(
@@ -81,6 +106,13 @@ WORKLOADS: dict[str, Workload] = {
             Request("q149_stream_dedup", ("events",)),
         ),
         factor=5,
+        control=tuple(
+            f"SELECT l_partkey % 97 AS k, COUNT(*) AS n FROM lineitem "
+            f"WHERE l_orderkey % 8 = {i} GROUP BY 1"
+            for i in range(8)
+        ),
+        control_tables=("lineitem",),
+        control_ref_s=1.7,
     ),
 }
 
@@ -139,6 +171,27 @@ class Runner:
         self.queries = queries()
         with open(DWH_SPEC, encoding="utf-8") as fh:
             self.dwh_spec = json.load(fh)
+
+    def control(self, workload: Workload) -> None:
+        """Run the workload's control statements. Its tables are read
+        with Spark's own parquet reader, not the program's sources, and
+        the SQL settings it depends on are pinned while it runs, so a
+        change to ``get_spark``'s settings does not move it."""
+        conf = self.spark.conf
+        saved = {k: conf.get(k, None) for k in CONTROL_CONF}
+        for k, v in CONTROL_CONF.items():
+            conf.set(k, v)
+        try:
+            for t in workload.control_tables:
+                self.spark.read.parquet(f"{self.data}/{t}.parquet").createOrReplaceTempView(t)
+            for sql in workload.control:
+                self.spark.sql(sql).collect()
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
 
     def run(self, req: Request, tracer):
         if req.key == "dwh_quarterly":
