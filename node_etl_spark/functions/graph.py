@@ -623,15 +623,19 @@ def label_propagation(
     start as the node's own id; a node with no in-edges keeps its
     current label. All-integer state: no float portability concerns.
 
-    Scale shape: per round one join (labels onto the checkpointed
-    edge set by ``src``) + one count aggregate keyed (dst, label) +
-    one max_by reduction keyed dst — the two aggregations hash on
-    overlapping keys so AQE plans them back-to-back without an extra
-    wide stage. Label state is one row per node (tiny next to edges)
-    and broadcasts by default, making the per-round join map-side
-    over edges persisted once — the same Pregel cost shape as
+    Scale shape: only each round's winners travel between rounds. A
+    node with an in-edge gets a winner every round and a node without
+    one keeps its own id, so ``label_i(n) = coalesce(winner_i(n), n)``
+    and round i+1 is one join (the previous winners onto the edge set
+    persisted once, by ``src``) + one count aggregate keyed
+    (dst, label) + one max_by reduction keyed dst — the two
+    aggregations hash on overlapping keys so AQE plans them
+    back-to-back without an extra wide stage. Every node meets the
+    last winners once, at the end. Winners are at most one row per
+    node (tiny next to edges) and broadcast by default, making the
+    per-round join map-side — the same Pregel cost shape as
     :func:`pagerank`. Disable ``broadcast_labels`` for billion-node
-    graphs where the state exceeds the broadcast budget.
+    graphs where the winners exceed the broadcast budget.
 
     The reference engine has no graph surface (single-pass stream
     transforms only, jobs/convertors/*); net-new capability.
@@ -639,32 +643,32 @@ def label_propagation(
     e = edges.select(
         F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
     ).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("e_src").alias("node"))
-        .unionByName(e.select(F.col("e_dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = nodes.select("node", F.col("node").alias("label"))
+
+    def hint(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if broadcast_labels else df
+
+    # a null src matches no node, so (as an inner join on it would)
+    # it casts no vote
+    voters = e.where(F.col("e_src").isNotNull())
+    winner = None
     for i in range(iterations):
-        lside = F.broadcast(labels) if broadcast_labels else labels
+        if winner is None:
+            labelled = voters.withColumn("label", F.col("e_src"))
+        else:
+            labelled = voters.join(
+                hint(winner), F.col("e_src") == F.col("v"), "left"
+            ).select(
+                "e_dst",
+                F.coalesce(F.col("new_label"), F.col("e_src")).alias("label"),
+            )
         # most-frequent neighbor label, smallest label on ties:
         # max_by over (count, -label) is a single scalar reduction —
         # no per-node collected sets, no window sort
-        votes = (
-            e.join(lside, F.col("e_src") == F.col("node"))
-            .groupBy(F.col("e_dst").alias("v"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+        votes = labelled.groupBy(F.col("e_dst").alias("v"), "label").agg(
+            F.count(F.lit(1)).alias("cnt")
         )
         winner = votes.groupBy("v").agg(
             F.expr("max_by(label, struct(cnt, -label))").alias("new_label")
-        )
-        labels = (
-            labels.join(winner, labels.node == winner.v, "left")
-            .select(
-                "node",
-                F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-            )
         )
         if (
             checkpoint_every
@@ -673,8 +677,17 @@ def label_propagation(
         ):
             # same rationale (and same knob) as pagerank: truncate
             # lineage only when plan depth, not data, becomes the cost
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+            winner = winner.localCheckpoint(eager=True)
+    nodes = (
+        e.select(F.col("e_src").alias("node"))
+        .unionByName(e.select(F.col("e_dst").alias("node")))
+        .distinct()
+    )
+    if winner is None:
+        return nodes.select("node", F.col("node").alias("label"))
+    return nodes.join(hint(winner), F.col("node") == F.col("v"), "left").select(
+        "node", F.coalesce(F.col("new_label"), F.col("node")).alias("label")
+    )
 
 
 def label_propagation_oracle_sql(

@@ -4015,7 +4015,13 @@ def _replay_events(
     drain the built stream into a memory sink, clean up the staging
     dir, and return the sink table. ``copies > 1`` stages that many
     identical copies of every event — the at-least-once re-delivery
-    simulation q149's dedup consumes."""
+    simulation q149's dedup consumes.
+
+    The drain is one micro-batch over the staged files, plus the
+    input-less finalising batch for streams that need it
+    (``stream.run_to_memory``): q138's session timeouts, q204's
+    unmatched left rows and append-mode windows emit there, while a
+    dedup-only stream such as q149's skips it."""
     import shutil
     import tempfile
     import uuid
@@ -6004,24 +6010,20 @@ def _part_cooccur(spark: SparkSession, sf_dir: str, min_cnt: int = 1) -> DataFra
     execute the reduce-side aggregate twice). The co-order count of
     (a, b) equals that of (b, a), so mirroring post-aggregation is
     value-identical while the explode output and the (src, dst) count
-    shuffle both halve. Pairs are generated by a nested HOF over the
-    sorted set — exactly n(n-1)/2 rows — instead of the n^2 double
-    explode + filter."""
+    shuffle both halve. Pairs come from two generators over the
+    sorted set — each element (posexplode) against the elements after
+    it (explode of a slice) — exactly n(n-1)/2 rows instead of the n^2
+    double explode + filter, with no lambda in the plan."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     sets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("ps")
     )
     lo = (
-        sets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps)),"
-                    " y -> struct(x AS src, y AS dst))))"
-                )
-            ).alias("p")
+        sets.select("ps", F.posexplode("ps").alias("pos", "src"))
+        .select(
+            "src",
+            F.explode(F.slice("ps", F.col("pos") + 2, F.size("ps"))).alias("dst"),
         )
-        .select("p.src", "p.dst")
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

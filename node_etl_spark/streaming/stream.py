@@ -63,22 +63,16 @@ def scaled_state_partitions(
     regardless of how little state it holds. A cluster-sized
     partition count on a small replay is therefore pure overhead:
     the guide's "fewer, larger partitions" rule (§2.2) applied to
-    state stores. Deriving the count from staged input bytes
-    (~32 MB/partition, floor ``floor``, capped at the session's
-    configured shuffle partitions) keeps big streams at full
-    parallelism while small replays stop paying for empty stores —
-    measured 2.3x on the sf0.1 interval-join drain (9.2s -> 4.0s).
-    Override with ``SPARK_GRAFT_STREAM_STATE_PARTS``.
+    state stores. The count is one store per ~32 MB of staged input,
+    capped at the session's configured shuffle partitions, and at
+    least ``floor`` — measured 2.3x on the sf0.1 interval-join drain
+    (9.2s -> 4.0s). The floor is itself capped at one task wave
+    (``defaultParallelism``): stores beyond the cores add waves, not
+    parallelism.
     """
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-    if env:
-        target = int(env)
-    else:
-        target = max(
-            floor,
-            min(sess, math.ceil(input_bytes / float(bytes_per_partition))),
-        )
+    wave = min(floor, spark.sparkContext.defaultParallelism)
+    target = max(wave, min(sess, math.ceil(input_bytes / float(bytes_per_partition))))
     spark.conf.set("spark.sql.shuffle.partitions", str(target))
     try:
         yield target
@@ -345,16 +339,60 @@ def route_sinks(
     )
 
 
+# the logical nodes a dedup-only stream is built from: deduplications
+# and nodes that keep no state across micro-batches
+_DEDUP_ONLY_NODES = frozenset(
+    {
+        "Deduplicate", "DeduplicateWithinWatermark",
+        "Project", "Filter", "SubqueryAlias", "EventTimeWatermark", "Generate",
+        "MapInPandas", "Union", "StreamingRelation", "StreamingRelationV2",
+    }
+)
+
+
+def _only_dedup_state(stream: DataFrame) -> bool:
+    """True when every stateful operator in ``stream``'s analysed plan
+    is a deduplication. Conservative: any node outside
+    ``_DEDUP_ONLY_NODES`` (aggregation, join, stateful function,
+    anything unlisted) answers False."""
+    plans = [stream._jdf.queryExecution().analyzed()]
+    while plans:
+        p = plans.pop()
+        if p.nodeName() not in _DEDUP_ONLY_NODES:
+            return False
+        children = p.children()
+        plans.extend(children.apply(i) for i in range(children.size()))
+    return True
+
+
 def run_to_memory(stream: DataFrame, name: str, mode: str = "append"):
-    """Drain an availableNow stream into an in-memory table (tests)."""
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """Drain an availableNow stream into an in-memory table.
+
+    Once the input is consumed, Spark runs one more micro-batch without
+    input if the watermark moved, so stateful operators can finalise:
+    sessionize's timeouts, outer interval joins' unmatched rows and
+    append-mode window aggregations emit there. A deduplication emits
+    each row when it arrives, so for it that batch only evicts state.
+    When every stateful operator in the plan is a deduplication, the
+    query runs with ``spark.sql.streaming.noDataMicroBatches.enabled``
+    off (restored afterwards) and finishes in one batch per input batch.
+    """
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark = stream.sparkSession
+    before = spark.conf.get(conf)
+    if _only_dedup_state(stream):
+        spark.conf.set(conf, "false")
+    try:
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set(conf, before)
     return q
 
 

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import math
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as hst
 from pyspark.sql import functions as F
 
 from node_etl_spark.functions.graph import connected_components, dedup_clusters
@@ -275,6 +277,66 @@ def test_lpa_isolated_sink_updates_from_single_neighbor(spark):
     e = _edges(spark, [(7, 8)])
     got = {r["node"]: r["label"] for r in label_propagation(e, iterations=2).collect()}
     assert got == {7: 7, 8: 7}
+
+
+def test_lpa_null_source_casts_no_vote(spark):
+    from node_etl_spark.functions.graph import label_propagation
+
+    # the null node is listed but votes for nobody: 5 takes 1's label
+    # although two of its three in-edges come from null
+    e = _edges(spark, [(None, 5), (None, 5), (1, 5)])
+    got = {r["node"]: r["label"] for r in label_propagation(e, iterations=2).collect()}
+    assert got == {None: None, 1: 1, 5: 1}
+
+
+def _lpa_reference(pairs, iterations):
+    """Synchronous LPA in plain Python: every node takes the most
+    frequent label among its in-neighbors' previous labels, smallest
+    label on ties; a node without in-edges keeps its label."""
+    from collections import Counter
+
+    labels = {n: n for pair in pairs for n in pair}
+    for _ in range(iterations):
+        votes: dict[int, Counter] = {}
+        for s, d in pairs:
+            votes.setdefault(d, Counter())[labels[s]] += 1
+        labels = {
+            n: min(votes[n], key=lambda lab: (-votes[n][lab], lab))
+            if n in votes else lab
+            for n, lab in labels.items()
+        }
+    return labels
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    pairs=hst.lists(
+        hst.tuples(hst.integers(0, 9), hst.integers(0, 9)), min_size=1, max_size=25
+    ),
+    iterations=hst.integers(1, 4),
+)
+def test_lpa_matches_python_reference(spark, pairs, iterations):
+    from node_etl_spark.functions.graph import label_propagation
+
+    # 100 and 101 are source-only and tie on 102's vote; duplicate
+    # pairs from the strategy give multi-edges and further ties
+    pairs = pairs + [(100, 102), (101, 102)]
+    got = label_propagation(_edges(spark, pairs), iterations=iterations)
+    assert {r["node"]: r["label"] for r in got.collect()} == _lpa_reference(
+        pairs, iterations
+    )
+
+
+def test_lpa_checkpointed_winners_match_reference(spark):
+    from node_etl_spark.functions.graph import label_propagation
+
+    # checkpoint_every=1 truncates the winners after every round but
+    # the last
+    pairs = _sym([(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6)])
+    pairs += [(9, 1), (9, 4), (8, 4)]
+    got = label_propagation(_edges(spark, pairs), iterations=4, checkpoint_every=1)
+    assert {r["node"]: r["label"] for r in got.collect()} == _lpa_reference(pairs, 4)
 
 
 # ------------------------------------------------ weighted shortest paths

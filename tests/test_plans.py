@@ -1266,6 +1266,16 @@ def test_part_cooccur_matches_double_explode_reference(spark, sf_dir):
         assert got == want and len(got) > 0
 
 
+def test_part_cooccur_plan_has_no_lambda(spark, sf_dir):
+    # pairs come from two codegen'd Generates, not interpreted HOF
+    # lambdas (the nested-transform form made q122 and q130 slower)
+    from node_etl_spark.plans.queries import _part_cooccur
+
+    plan = _part_cooccur(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert "lambdafunction" not in plan
+    assert plan.count("Generate") == 3
+
+
 def test_session_enables_aqe_for_cached_plan_partitioning(spark):
     # r12: persisted plans must materialize WITH AQE coalescing —
     # without this conf every persist() of a small frame pins the
