@@ -28,7 +28,7 @@ from collections.abc import Sequence
 import pandas as pd  # module-level: pandas_udf resolves stringified
 # type hints (PEP 563 above) against module globals
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import normalize_text
@@ -575,11 +575,6 @@ def minhash_oracle_sql(
 # ------------------------------------------------------------- SimHash
 
 
-def _hex_to_int(col: Column) -> Column:
-    """First-8-hex-chars of an md5 -> 32-bit int, via conv (Spark)."""
-    return F.conv(F.substring(col, 1, 8), 16, 10).cast("bigint")
-
-
 def simhash32(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -689,56 +684,6 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = 4, chunks: int = 4) -> Dat
         .filter(F.col("hamming") <= max_hamming)
         .select("d1", "d2", "hamming")
     )
-
-
-def simhash_oracle_sql(
-    table: str = "documents",
-    text: str = "text",
-    id_: str = "doc_id",
-    max_hamming: int = 4,
-    chunks: int = 4,
-) -> str:
-    bit_sums = ", ".join(
-        f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS s{i}"
-        for i in range(32)
-    )
-    sim_expr = " + ".join(
-        f"CASE WHEN s{i} > 0 THEN CAST({1 << i} AS BIGINT) ELSE 0 END"
-        for i in range(32)
-    )
-    width = 32 // chunks
-    mask = (1 << width) - 1
-    chunk_rows = " UNION ALL ".join(
-        f"SELECT doc_id, simhash, {c} AS ci, (simhash >> {c * width}) & {mask} AS cv FROM sigs"
-        for c in range(chunks)
-    )
-    # DuckDB: from_hex->blob is awkward; use a digit-by-digit hex parse
-    hex_to_int = (
-        "("
-        + " + ".join(
-            f"CAST((strpos('0123456789abcdef', substr(m, {p + 1}, 1)) - 1) AS BIGINT) * {16 ** (7 - p)}"
-            for p in range(8)
-        )
-        + ")"
-    )
-    return f"""
-    WITH toks AS (
-        SELECT DISTINCT {id_} AS doc_id, unnest(string_split({text}, ' ')) AS tok
-        FROM {table}),
-    hashed AS (
-        SELECT doc_id, {hex_to_int} AS h
-        FROM (SELECT doc_id, md5(tok) AS m FROM toks)),
-    sums AS (SELECT doc_id, {bit_sums} FROM hashed GROUP BY doc_id),
-    sigs AS (SELECT doc_id, {sim_expr} AS simhash FROM sums),
-    chunked AS ({chunk_rows}),
-    cands AS (
-        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-               a.simhash AS h1, b.simhash AS h2
-        FROM chunked a JOIN chunked b
-          ON a.ci = b.ci AND a.cv = b.cv AND a.doc_id < b.doc_id)
-    SELECT d1, d2, CAST(bit_count(xor(h1, h2)) AS INTEGER) AS hamming
-    FROM cands WHERE bit_count(xor(h1, h2)) <= {max_hamming}
-    """
 
 
 # ---------------------------------------- 60-bit simhash, Manku banding

@@ -623,19 +623,29 @@ def label_propagation(
     start as the node's own id; a node with no in-edges keeps its
     current label. All-integer state: no float portability concerns.
 
-    Scale shape: only each round's winners travel between rounds. A
-    node with an in-edge gets a winner every round and a node without
-    one keeps its own id, so ``label_i(n) = coalesce(winner_i(n), n)``
-    and round i+1 is one join (the previous winners onto the edge set
-    persisted once, by ``src``) + one count aggregate keyed
-    (dst, label) + one max_by reduction keyed dst — the two
-    aggregations hash on overlapping keys so AQE plans them
-    back-to-back without an extra wide stage. Every node meets the
-    last winners once, at the end. Winners are at most one row per
-    node (tiny next to edges) and broadcast by default, making the
+    Scale shape: each round is one aggregation, and only its winners
+    travel to the next. A node with an in-edge gets a winner every
+    round and a node without one keeps its own id, so ``label_i(n) =
+    coalesce(winner_i(n), n)`` and round i+1 is one join (the previous
+    winners onto the edge set persisted once, by ``src``) + one
+    ``mode(label, deterministic=True)`` aggregation keyed by dst —
+    most frequent label, lowest on ties, which is exactly this rule —
+    so a round is a single ``Exchange hashpartitioning(v)`` between
+    ``partial_mode`` and ``mode``. The last round also covers every
+    node: its votes are unioned with one null-label row per edge
+    endpoint; ``mode`` skips nulls, so a node without votes gets null
+    and keeps its own id through the ``coalesce``, with no separate
+    node list, shuffle or join. Winners are at most one row per node
+    (tiny next to edges) and broadcast by default, making the
     per-round join map-side — the same Pregel cost shape as
     :func:`pagerank`. Disable ``broadcast_labels`` for billion-node
     graphs where the winners exceed the broadcast budget.
+
+    Memory bound: ``mode``'s buffer is a hash map per node of its
+    distinct in-neighbour labels, held in memory on the reduce side
+    (an ``ObjectHashAggregate``, which falls back to sort-based
+    aggregation when too many nodes share a task), so a single node's
+    distinct in-neighbour labels must fit one task's memory.
 
     The reference engine has no graph surface (single-pass stream
     transforms only, jobs/convertors/*); net-new capability.
@@ -643,32 +653,38 @@ def label_propagation(
     e = edges.select(
         F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
     ).localCheckpoint(eager=True)
+    # every edge endpoint, null ones included, as a label-less row
+    endpoints = e.select(F.col("e_src").alias("v")).unionByName(
+        e.select(F.col("e_dst").alias("v"))
+    )
+    if iterations <= 0:
+        return endpoints.distinct().select(
+            F.col("v").alias("node"), F.col("v").alias("label")
+        )
 
     def hint(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_labels else df
 
     # a null src matches no node, so (as an inner join on it would)
-    # it casts no vote
-    voters = e.where(F.col("e_src").isNotNull())
+    # it casts no vote; a null dst is no node to vote for
+    voters = e.where(F.col("e_src").isNotNull() & F.col("e_dst").isNotNull())
     winner = None
     for i in range(iterations):
         if winner is None:
-            labelled = voters.withColumn("label", F.col("e_src"))
+            label = F.col("e_src")
+            labelled = voters
         else:
+            label = F.coalesce(F.col("new_label"), F.col("e_src"))
             labelled = voters.join(
                 hint(winner), F.col("e_src") == F.col("v"), "left"
-            ).select(
-                "e_dst",
-                F.coalesce(F.col("new_label"), F.col("e_src")).alias("label"),
             )
-        # most-frequent neighbor label, smallest label on ties:
-        # max_by over (count, -label) is a single scalar reduction —
-        # no per-node collected sets, no window sort
-        votes = labelled.groupBy(F.col("e_dst").alias("v"), "label").agg(
-            F.count(F.lit(1)).alias("cnt")
+        labelled = labelled.select(
+            F.col("e_dst").alias("v"), label.alias("label")
         )
-        winner = votes.groupBy("v").agg(
-            F.expr("max_by(label, struct(cnt, -label))").alias("new_label")
+        if i + 1 == iterations:
+            labelled = labelled.unionByName(endpoints, allowMissingColumns=True)
+        winner = labelled.groupBy("v").agg(
+            F.mode("label", deterministic=True).alias("new_label")
         )
         if (
             checkpoint_every
@@ -678,15 +694,9 @@ def label_propagation(
             # same rationale (and same knob) as pagerank: truncate
             # lineage only when plan depth, not data, becomes the cost
             winner = winner.localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("e_src").alias("node"))
-        .unionByName(e.select(F.col("e_dst").alias("node")))
-        .distinct()
-    )
-    if winner is None:
-        return nodes.select("node", F.col("node").alias("label"))
-    return nodes.join(hint(winner), F.col("node") == F.col("v"), "left").select(
-        "node", F.coalesce(F.col("new_label"), F.col("node")).alias("label")
+    return winner.select(
+        F.col("v").alias("node"),
+        F.coalesce(F.col("new_label"), F.col("v")).alias("label"),
     )
 
 
@@ -696,10 +706,12 @@ def label_propagation_oracle_sql(
     """DuckDB mirror of :func:`label_propagation`: rounds unrolled
     into CTEs. DuckDB's ``arg_max`` takes a single ordering value, so
     the (cnt DESC, label ASC) winner is encoded arithmetically as
-    ``arg_max(label, cnt * id_span - label)`` — exactly the engine's
-    ``max_by(label, struct(cnt, -label))`` whenever node ids are
-    non-negative, below ``id_span``, and ``cnt * id_span`` fits an
-    int64 (always true at oracle test scale)."""
+    ``arg_max(label, cnt * id_span - label)``, which mirrors the
+    engine's ``mode(label, true)`` (most frequent label, lowest on
+    ties) whenever node ids are non-negative, below ``id_span``, and
+    ``cnt * id_span`` fits an int64 (always true at oracle test
+    scale). DuckDB's own ``mode`` leaves ties unspecified, hence the
+    explicit encoding."""
     parts = [
         f"WITH e AS ({edges_sql})",
         "nodes AS (SELECT DISTINCT src AS node FROM e"

@@ -13,11 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def quarter_of(ts: str | Column) -> Column:
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.quarter(c)
-
-
 def start_quarter_date(year: str | Column | int, quarter: str | Column | int) -> Column:
     """First day of (year, quarter) as a date (utils.js:126-134)."""
     y = F.lit(year) if isinstance(year, int) else (F.col(year) if isinstance(year, str) else year)

@@ -742,36 +742,6 @@ def lsh_adaptive_config(n: int) -> tuple[int, int]:
     return LSH_LADDER[-1][1], LSH_LADDER[-1][0]
 
 
-def _projection(vec: Column, plane: int, dim: int) -> Column:
-    """Dot(vec, hyperplane) as a compact zip_with/aggregate expression
-    (weight array is a literal -> stays in codegen)."""
-    weights = F.array(*[F.lit(_plane_weight(plane, d)) for d in range(dim)])
-    return F.aggregate(
-        F.zip_with(vec, weights, lambda x, w: x.cast("double") * w),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def lsh_buckets(
-    vec: Column, dim: int, n_tables: int = 8, planes_per_table: int = 4
-) -> Column:
-    """Multi-table hyperplane LSH: array of (table, bucket) structs.
-
-    One table of m planes has collision prob cos-sim-monotone but low
-    recall for moderate similarity; L independent tables boost it to
-    1-(1-p^m)^L — the standard recall/cost dial. Each vector lands in
-    exactly L buckets."""
-    entries = []
-    for t in range(n_tables):
-        bucket = F.lit(0)
-        for p in range(planes_per_table):
-            proj = _projection(vec, t * planes_per_table + p, dim)
-            bucket = bucket + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        entries.append(F.struct(F.lit(t).alias("t"), bucket.alias("b")))
-    return F.array(*entries)
-
-
 def _plane_matrix(dim: int, n_tables: int, planes_per_table: int):
     """Shared hyperplane construction for the bucket UDFs: (M, powers)
     with M[(t * planes_per_table + p), d] = _plane_weight(...). ONE

@@ -1703,8 +1703,10 @@ def _codec_fixture(spark, sf_dir, name, version, build):
 
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     final = f"{_SCRATCH}/fixtures/{tag}/{name}_v{version}"
-    ok = _os.path.exists(_os.path.join(final, "_FIXTURE_OK"))
-    if ok:
+
+    def published(path: str) -> bool:
+        if not _os.path.exists(_os.path.join(path, "_FIXTURE_OK")):
+            return False
         # r12 (verdict r11 ask #6): the r11 multi-file layout landed
         # without a version bump, so a stale single-file fixture from
         # an earlier round (or one built by a low-core companion run)
@@ -1715,19 +1717,16 @@ def _codec_fixture(spark, sf_dir, name, version, build):
         # one file per row and stay valid; a fixture built at higher
         # parallelism stays valid at lower.)
         try:
-            with open(_os.path.join(final, "_FIXTURE_OK")) as f:
+            with open(_os.path.join(path, "_FIXTURE_OK")) as f:
                 rows = int(_json.load(f).get("rows", 0))
+            nparts = sum(
+                1 for f in _os.listdir(path) if f.startswith("part-")
+            )
         except (OSError, ValueError):
-            rows = 0
-        nparts = sum(
-            1 for f in _os.listdir(final) if f.startswith("part-")
-        )
-        if nparts < min(spark.sparkContext.defaultParallelism, rows):
-            ok = False
-            # drop the stale layout now so the atomic publish rename
-            # below has a clear target
-            _shutil.rmtree(final, ignore_errors=True)
-    if not ok:
+            return False
+        return nparts >= min(spark.sparkContext.defaultParallelism, rows)
+
+    if not published(final):
         tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
         # r11: one part-file per core (was: the build plan's native
         # partitioning — usually ONE file, because the generator
@@ -1751,11 +1750,21 @@ def _codec_fixture(spark, sf_dir, name, version, build):
         ).collect()[0]
         with open(_os.path.join(tmp, "_FIXTURE_OK"), "w") as f:
             f.write(_json.dumps({"rows": fp["n"], "xxh64_xor": fp["h"]}))
+        _os.makedirs(_os.path.dirname(final), exist_ok=True)
+        # a stale layout stays readable until the new build replaces
+        # it: rename it aside, rename the build into place, then
+        # delete the aside copy — never an in-place delete
+        aside = f"{tmp}.stale"
+        if _os.path.exists(final) and not published(final):
+            try:
+                _os.rename(final, aside)
+            except OSError:  # another builder set it aside first
+                pass
         try:
-            _os.makedirs(_os.path.dirname(final), exist_ok=True)
             _os.rename(tmp, final)
         except OSError:  # lost the publish race: another build won
             _shutil.rmtree(tmp, ignore_errors=True)
+        _shutil.rmtree(aside, ignore_errors=True)
     return spark.read.parquet(final)
 
 
@@ -3986,10 +3995,11 @@ def q103_lineno_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Per-group mode (most frequent p_type per brand) with a "
         "deterministic tiebreak — two-phase count then a tiny window "
-        "over the already-aggregated frame (built-in mode() has "
-        "engine-specific ties, so the explicit form is the portable "
-        "and scale-safe one: the window sees |brands x types| rows, "
-        "not the corpus).",
+        "over the already-aggregated frame (Spark's mode(..., true) "
+        "breaks ties to the lowest value, but DuckDB's mode() leaves "
+        "them unspecified, so the explicit form is the portable one "
+        "the oracle can mirror, and scale-safe: the window sees "
+        "|brands x types| rows, not the corpus).",
 )
 def q104_brand_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
@@ -6051,9 +6061,10 @@ def _part_cooccur(spark: SparkSession, sf_dir: str, min_cnt: int = 1) -> DataFra
         "in >= 2 distinct orders form symmetric edges; 3 LPA rounds, "
         "most-frequent-neighbor label with deterministic "
         "smallest-label tie-break. Per round one broadcast join over "
-        "checkpointed edges + two aggregations — the Pregel cost "
-        "shape; all-integer state rides the exact hash gate via an "
-        "unrolled-CTE oracle.",
+        "checkpointed edges + one mode(label, true) aggregation (one "
+        "shuffle), the last round also covering every node — the "
+        "Pregel cost shape; all-integer state rides the exact hash "
+        "gate via an unrolled-CTE oracle.",
 )
 def q141_part_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.graph import label_propagation

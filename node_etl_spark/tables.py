@@ -78,7 +78,3 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}

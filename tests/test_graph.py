@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as hst
 from pyspark.sql import functions as F
@@ -328,15 +329,36 @@ def test_lpa_matches_python_reference(spark, pairs, iterations):
     )
 
 
-def test_lpa_checkpointed_winners_match_reference(spark):
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        # truncates the winners after every round but the last
+        pytest.param(dict(iterations=4, checkpoint_every=1), id="checkpointed"),
+        # per-round winners joined by shuffle, not broadcast
+        pytest.param(dict(iterations=4, broadcast_labels=False), id="unbroadcast"),
+        # no round: every node keeps its own id
+        pytest.param(dict(iterations=0), id="zero_rounds"),
+    ],
+)
+def test_lpa_checkpointed_winners_match_reference(spark, kwargs):
     from node_etl_spark.functions.graph import label_propagation
 
-    # checkpoint_every=1 truncates the winners after every round but
-    # the last
     pairs = _sym([(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6)])
     pairs += [(9, 1), (9, 4), (8, 4)]
-    got = label_propagation(_edges(spark, pairs), iterations=4, checkpoint_every=1)
-    assert {r["node"]: r["label"] for r in got.collect()} == _lpa_reference(pairs, 4)
+    got = label_propagation(_edges(spark, pairs), **kwargs)
+    assert {r["node"]: r["label"] for r in got.collect()} == _lpa_reference(
+        pairs, kwargs["iterations"]
+    )
+
+
+def test_lpa_null_destination_takes_no_votes(spark):
+    from node_etl_spark.functions.graph import label_propagation
+
+    # the null node is listed with a null label, as a null source is;
+    # the votes sent to it reach no real node
+    e = _edges(spark, [(1, None), (1, None), (2, 5), (5, 2)])
+    got = {r["node"]: r["label"] for r in label_propagation(e, iterations=2).collect()}
+    assert got == {None: None, 1: 1, 2: 2, 5: 5}
 
 
 # ------------------------------------------------ weighted shortest paths

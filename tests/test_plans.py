@@ -2,6 +2,8 @@
 specific plan shapes (pushdown, broadcast, top-k), so assert them —
 a correct-but-full-scan plan is a perf bug, not a pass."""
 
+import pytest
+
 from node_etl_spark.plans import QUERIES
 
 
@@ -234,6 +236,56 @@ def test_codec_fixture_build_reuse_determinism(spark, tmp_path, monkeypatch):
     # a version bump (generation change) must rebuild, not reuse
     Q._codec_fixture(spark, "/any/sf0.001", "fx", 2, build)
     assert calls["n"] == 3
+
+
+def test_codec_fixture_rebuild_keeps_stale_copy_readable(spark, tmp_path, monkeypatch):
+    # a stale single-file layout is rebuilt by renaming it aside and the
+    # new build into place: a reader racing the rebuild (the other
+    # half of a pytest-xdist run) reads the whole old copy while the
+    # build runs, never a missing or half-deleted one
+    import json
+    import os
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from node_etl_spark.plans import queries as Q
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one core: a single-file fixture is not stale")
+    monkeypatch.setattr(Q, "_SCRATCH", str(tmp_path))
+    final = tmp_path / "fixtures/sf0.001/fx_v1"
+    spark.range(10).coalesce(1).write.parquet(str(final))
+    (final / "_FIXTURE_OK").write_text(json.dumps({"rows": 10}))
+
+    building, read_done = threading.Event(), threading.Event()
+    seen, errors = [], []
+
+    def reader():
+        building.wait(60)
+        try:
+            for _ in range(3):
+                assert (final / "_FIXTURE_OK").exists()
+                seen.append(pq.read_table(str(final)).num_rows)
+        except Exception as exc:  # noqa: BLE001 - reported below
+            errors.append(repr(exc))
+        read_done.set()
+
+    def build():
+        building.set()
+        assert read_done.wait(60), "reader did not finish"
+        return spark.range(10).withColumnRenamed("id", "doc_id")
+
+    t = threading.Thread(target=reader)
+    t.start()
+    df = Q._codec_fixture(spark, "/any/sf0.001", "fx", 1, build)
+    t.join(60)
+    assert not t.is_alive()
+    assert errors == [] and seen == [10, 10, 10]
+    assert df.count() == 10
+    parts = [f for f in os.listdir(final) if f.startswith("part-")]
+    assert len(parts) > 1, "stale layout was not replaced"
+    assert os.listdir(final.parent) == ["fx_v1"], "aside or build copy left"
 
 
 def test_gate_order_staleness_ladder(tmp_path):
@@ -1274,6 +1326,31 @@ def test_part_cooccur_plan_has_no_lambda(spark, sf_dir):
     plan = _part_cooccur(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "lambdafunction" not in plan
     assert plan.count("Generate") == 3
+
+
+@pytest.mark.parametrize("k", [1, 3])
+def test_lpa_plan_one_shuffle_per_round(spark, k):
+    # each round is one mode() aggregation behind one hash exchange,
+    # every round after the first broadcasts the previous winners, and
+    # the last round covers every node itself: no (dst, label) count,
+    # no max_by SortAggregate, no node-list shuffle or join
+    from node_etl_spark.functions.graph import label_propagation
+
+    pairs = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (9, 1)]
+    edges = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src long, dst long"
+    )
+    df = label_propagation(edges, iterations=k)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        # the final plan only: the adaptive node's own string also
+        # prints the initial plan
+        plan = plan.executedPlan()
+    plan = plan.toString()
+    assert plan.count("Exchange hashpartitioning") == k
+    assert plan.count("BroadcastExchange") == k - 1
+    assert "SortAggregate" not in plan and "max_by" not in plan
 
 
 def test_session_enables_aqe_for_cached_plan_partitioning(spark):
