@@ -29,12 +29,38 @@ Scale design (the 100 TB story):
   (GraphFrames does the same); a lost executor costs a job retry.
 * Labels are ``min(reachable id)`` — deterministic, so results are
   oracle-checkable against a DuckDB recursive CTE at test scale.
+
+The iterative operators share two rules and take no tuning options:
+
+* **Truncation.** The fixed-round loops (pagerank, personalized
+  pagerank, label propagation) checkpoint their per-round state every
+  ``_TRUNCATE_EVERY`` rounds, never after the last (``_truncate``):
+  short runs stay checkpoint-free and the plan stays bounded at tens
+  of rounds.
+* **Broadcast.** Node-sized per-round state (ranks, winners, ratings)
+  is always broadcast onto the edges persisted once, so each round is
+  a map-side join plus one aggregation. HITS always shuffles (see
+  :func:`hits` for the measurement). BFS and SSSP frontiers broadcast
+  while the row count each round already takes is at most
+  ``_BROADCAST_MAX_ROWS`` and shuffle beyond it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_TRUNCATE_EVERY = 8
+_BROADCAST_MAX_ROWS = 5_000_000
+
+
+def _truncate(df: DataFrame, i: int, rounds: int) -> DataFrame:
+    """Checkpoint ``df``, the state after round ``i`` (0-based) of
+    ``rounds``, on every ``_TRUNCATE_EVERY``-th round but the last,
+    whose result the caller consumes once."""
+    if (i + 1) % _TRUNCATE_EVERY == 0 and i + 1 < rounds:
+        return df.localCheckpoint(eager=True)
+    return df
 
 
 def connected_components(
@@ -329,9 +355,7 @@ def blocked_components(
     )
 
 
-def _pagerank_edge_frame(
-    edges, src: str, dst: str, broadcast_ranks: bool, assume_no_dangling: bool
-):
+def _pagerank_edge_frame(edges, src: str, dst: str, assume_no_dangling: bool):
     """Shared one-time edge build for the power-iteration family
     (:func:`pagerank` / :func:`personalized_pagerank`): out-degrees,
     the checkpointed node universe (every source), and the
@@ -355,17 +379,42 @@ def _pagerank_edge_frame(
     nodes = deg.select(F.col("e_src").alias("node")).localCheckpoint(
         eager=True
     )
-    # the broadcast hint obeys the rank-state budget (deg and ranks
-    # have identical cardinality: one row per source node)
-    dside = F.broadcast(deg) if broadcast_ranks else deg
-    e = e0.join(dside, "e_src").select("e_src", "e_dst", "outdeg")
+    # deg and nodes are node-sized like the rank state: broadcast
+    e = e0.join(F.broadcast(deg), "e_src").select("e_src", "e_dst", "outdeg")
     if not assume_no_dangling:
         # ``assume_no_dangling=True`` is a caller contract that every
         # dst also appears as a src, making this semi-join a no-op —
         # skipping it drops one join from the one-time edge build.
-        nside = F.broadcast(nodes) if broadcast_ranks else nodes
-        e = e.join(nside, F.col("e_dst") == F.col("node"), "left_semi")
+        e = e.join(F.broadcast(nodes), F.col("e_dst") == F.col("node"), "left_semi")
     return deg, nodes, e.localCheckpoint(eager=True)
+
+
+def _power_round(e: DataFrame, ranks: DataFrame, universe: DataFrame) -> DataFrame:
+    """One power-iteration round of :func:`pagerank` and
+    :func:`personalized_pagerank`: (node, csum) with csum the sum of
+    the in-edge contributions rank/outdeg, each quantised to a
+    15-decimal fixed point long. The rank state is broadcast, so the
+    round is a map-side join over the checkpointed edges plus one
+    groupBy(node) — Catalyst can't estimate the post-agg size itself,
+    so mid-chain rounds would otherwise fall back to sort-merge.
+
+    A zero contribution for every ``universe`` node is unioned in
+    instead of a left join from the universe: the zero rows ride the
+    SAME groupBy shuffle (adding 0 to a long sum is exact), every node
+    stays in the result — including zero-in-degree sources — and each
+    round sheds a join (with its per-round broadcast job; measured
+    ~10% on the 5-round query). The oracles keep the equivalent LEFT
+    JOIN + COALESCE formulation: same csum, bit-identical ranks."""
+    contrib = e.join(F.broadcast(ranks), F.col("e_src") == F.col("node")).select(
+        F.col("e_dst").alias("node"),
+        F.round(F.col("rank") / F.col("outdeg") * F.lit(1e15))
+        .cast("bigint")
+        .alias("c"),
+    )
+    contrib = contrib.unionByName(
+        universe.select("node", F.lit(0).cast("bigint").alias("c"))
+    )
+    return contrib.groupBy("node").agg(F.sum("c").alias("csum"))
 
 
 def pagerank(
@@ -374,8 +423,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 8,
-    broadcast_ranks: bool = True,
     assume_no_dangling: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge set.
@@ -388,22 +435,22 @@ def pagerank(
     node). Destination-only nodes are out of scope (they are
     dangling: no outdeg; edges into them are pre-filtered once and
     their would-be rank mass is dropped, see below).
-    Classic power iteration: each round is one shuffle join
-    (ranks onto edges by src) plus one groupBy(dst) — the GraphX/
-    Pregel cost shape expressed as plain DataFrame ops, so Catalyst
-    handles partitioning and AQE handles skewed hub nodes.
+    Classic power iteration: each round is one join (ranks onto
+    edges by src) plus one groupBy(dst) — the GraphX/Pregel cost
+    shape expressed as plain DataFrame ops, so Catalyst handles
+    partitioning and AQE handles skewed hub nodes.
 
-    Scale notes: rank state is one row per node (tiny vs edges);
-    edges are persisted once and reused every round. Unlike
-    connected components (data-dependent round count), the iteration
-    count here is small and fixed, so lineage is checkpointed only
-    every ``checkpoint_every`` rounds — eager per-round
-    materialization measured 2x slower at 5 iterations with
+    Scale notes: rank state is one row per node (tiny vs edges) and
+    broadcast every round; edges are persisted once and reused every
+    round. Unlike connected components (data-dependent round count),
+    the iteration count here is small and fixed, so lineage is
+    checkpointed only every ``_TRUNCATE_EVERY`` rounds — eager
+    per-round materialization measured 2x slower at 5 iterations with
     identical results, and even a single mid-run checkpoint costs
-    ~12% at 5 rounds (interleaved best-of-3 A/B at sf0.1: 9.5s with
-    checkpoint_every=4 vs 8.4s without), so the default interval (8)
-    keeps short fixed-count runs checkpoint-free; plan depth only
-    bites at tens of rounds.
+    ~12% at 5 rounds (interleaved best-of-3 A/B at sf0.1: 9.5s
+    checkpointing every 4 rounds vs 8.4s without), so short
+    fixed-count runs stay checkpoint-free; plan depth only bites at
+    tens of rounds.
     Dangling nodes are out of scope (callers
     pass symmetrized edge sets; a dangling-mass correction would add
     one broadcast scalar per round).
@@ -425,41 +472,14 @@ def pagerank(
     # round (below) so zero-in-degree sources don't silently vanish
     # after iteration 1 on non-symmetric edge sets; dangling (dst-
     # only) edges pre-filtered once — see _pagerank_edge_frame
-    deg, nodes, e = _pagerank_edge_frame(
-        edges, src, dst, broadcast_ranks, assume_no_dangling
-    )
+    deg, nodes, e = _pagerank_edge_frame(edges, src, dst, assume_no_dangling)
     nstats = deg.agg(F.count(F.lit(1)).alias("n"))
     ranks = nodes.crossJoin(F.broadcast(nstats)).select(
         "node",
         F.expr("1.0 / CAST(n AS DOUBLE)").alias("rank"),
     )
     for i in range(iterations):
-        # rank state is one row per node — tiny next to the edge set.
-        # Broadcasting it makes every round a map-side join over the
-        # checkpointed edges (no per-round edge shuffle; the only wide
-        # op left is the contribution groupBy). Catalyst can't
-        # estimate the post-agg size itself, so mid-chain rounds
-        # otherwise fall back to sort-merge. Disable for
-        # billion-node graphs where ranks exceed the broadcast budget.
-        rside = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = e.join(rside, e.e_src == ranks.node).select(
-            F.col("e_dst").alias("node"),
-            F.round(F.col("rank") / F.col("outdeg") * F.lit(1e15))
-            .cast("bigint")
-            .alias("c"),
-        )
-        # union a zero contribution for every node instead of a
-        # left-join from the universe: the zero rows ride the SAME
-        # groupBy shuffle (adding 0 to a long sum is exact), every
-        # node stays in the result — including zero-in-degree sources
-        # at the (1-d)/n base rank — and each round sheds a join
-        # (with its per-round broadcast job; measured ~10% on the
-        # 5-round query). The oracle keeps the equivalent LEFT JOIN +
-        # COALESCE formulation: same csum, bit-identical ranks.
-        contrib = contrib.unionByName(
-            nodes.select("node", F.lit(0).cast("bigint").alias("c"))
-        )
-        csums = contrib.groupBy("node").agg(F.sum("c").alias("csum"))
+        csums = _power_round(e, ranks, nodes)
         ranks = csums.crossJoin(F.broadcast(nstats)).select(
             "node",
             F.expr(
@@ -467,12 +487,7 @@ def pagerank(
                 f" + {damping} * (CAST(csum AS DOUBLE) / 1e15)"
             ).alias("rank"),
         )
-        if (
-            checkpoint_every
-            and (i + 1) % checkpoint_every == 0
-            and i + 1 < iterations
-        ):
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = _truncate(ranks, i, iterations)
     return ranks
 
 
@@ -524,8 +539,6 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     node: str = "node",
-    broadcast_frontier: bool | None = None,
-    broadcast_max_rows: int = 5_000_000,
 ) -> DataFrame:
     """Multi-source BFS: min-hop distance from any seed, bounded by
     ``max_hops`` (nodes further than that are absent).
@@ -540,13 +553,13 @@ def bfs_hops(
     frontier broadcasts, making the round a map-side join over those
     persisted edges — no per-round edge shuffle at all.
 
-    ``broadcast_frontier=None`` (default) decides **per round** from
-    the frontier's actual row count (free — the frontier is eagerly
-    checkpointed anyway): broadcast while ``<= broadcast_max_rows``,
-    shuffle join beyond, so a corpus-scale hop can never hit Spark's
-    8 GB broadcast ceiling or the driver's memory. True/False force
-    one mode for every round. Oracle: ``bfs_oracle_sql`` unrolls the
-    rounds into CTEs (the k-hop-neighborhood / blast-radius shape).
+    The broadcast is decided **per round** from the frontier's actual
+    row count (free — the frontier is eagerly checkpointed anyway):
+    broadcast while ``<= _BROADCAST_MAX_ROWS``, shuffle join beyond,
+    so a corpus-scale hop can never hit Spark's 8 GB broadcast
+    ceiling or the driver's memory. Oracle: ``bfs_oracle_sql`` unrolls
+    the rounds into CTEs (the k-hop-neighborhood / blast-radius
+    shape).
     """
     e = edges.select(
         F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
@@ -560,13 +573,9 @@ def bfs_hops(
         # in unit-weight BFS any node already in `dist` was reached in
         # <= k hops, so an anti-join (not a min-agg over the union) is
         # enough to keep only first-time reachings
-        if broadcast_frontier is None:
-            if n_frontier is None:
-                n_frontier = frontier.count()
-            bcast = n_frontier <= broadcast_max_rows
-        else:
-            bcast = broadcast_frontier
-        fr = F.broadcast(frontier) if bcast else frontier
+        if n_frontier is None:
+            n_frontier = frontier.count()
+        fr = F.broadcast(frontier) if n_frontier <= _BROADCAST_MAX_ROWS else frontier
         expanded = (
             e.join(fr, e.e_src == frontier.node)
             .select(F.col("e_dst").alias("node"), (F.col("dist") + 1).alias("dist"))
@@ -609,8 +618,6 @@ def label_propagation(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    broadcast_labels: bool = True,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Synchronous label propagation (community detection), fixed
     iteration count, deterministic tie-break.
@@ -636,10 +643,9 @@ def label_propagation(
     endpoint; ``mode`` skips nulls, so a node without votes gets null
     and keeps its own id through the ``coalesce``, with no separate
     node list, shuffle or join. Winners are at most one row per node
-    (tiny next to edges) and broadcast by default, making the
-    per-round join map-side — the same Pregel cost shape as
-    :func:`pagerank`. Disable ``broadcast_labels`` for billion-node
-    graphs where the winners exceed the broadcast budget.
+    (tiny next to edges) and broadcast, making the per-round join
+    map-side — the same Pregel cost shape as :func:`pagerank`, with
+    the same lineage truncation (``_truncate``) of the winners.
 
     Memory bound: ``mode``'s buffer is a hash map per node of its
     distinct in-neighbour labels, held in memory on the reduce side
@@ -662,9 +668,6 @@ def label_propagation(
             F.col("v").alias("node"), F.col("v").alias("label")
         )
 
-    def hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_labels else df
-
     # a null src matches no node, so (as an inner join on it would)
     # it casts no vote; a null dst is no node to vote for
     voters = e.where(F.col("e_src").isNotNull() & F.col("e_dst").isNotNull())
@@ -676,7 +679,7 @@ def label_propagation(
         else:
             label = F.coalesce(F.col("new_label"), F.col("e_src"))
             labelled = voters.join(
-                hint(winner), F.col("e_src") == F.col("v"), "left"
+                F.broadcast(winner), F.col("e_src") == F.col("v"), "left"
             )
         labelled = labelled.select(
             F.col("e_dst").alias("v"), label.alias("label")
@@ -686,14 +689,7 @@ def label_propagation(
         winner = labelled.groupBy("v").agg(
             F.mode("label", deterministic=True).alias("new_label")
         )
-        if (
-            checkpoint_every
-            and (i + 1) % checkpoint_every == 0
-            and i + 1 < iterations
-        ):
-            # same rationale (and same knob) as pagerank: truncate
-            # lineage only when plan depth, not data, becomes the cost
-            winner = winner.localCheckpoint(eager=True)
+        winner = _truncate(winner, i, iterations)
     return winner.select(
         F.col("v").alias("node"),
         F.coalesce(F.col("new_label"), F.col("v")).alias("label"),
@@ -745,7 +741,6 @@ def shortest_paths(
     dst: str = "dst",
     weight: str = "weight",
     node: str = "node",
-    broadcast_max_rows: int = 5_000_000,
 ) -> DataFrame:
     """Weighted single/multi-source shortest paths: frontier
     Bellman-Ford with non-negative BIGINT weights, bounded at
@@ -761,8 +756,9 @@ def shortest_paths(
     Integer weights keep min/plus arithmetic exact across engines;
     ``shortest_paths_oracle_sql`` unrolls the rounds (the simple
     full-relaxation form — same fixpoint per round). Edges persist
-    once (localCheckpoint); a frontier under ``broadcast_max_rows``
-    broadcasts, so the common round is a map-side join.
+    once (localCheckpoint); a frontier of at most
+    ``_BROADCAST_MAX_ROWS`` broadcasts, so the common round is a
+    map-side join.
     """
     e = edges.select(
         F.col(src).alias("e_src"),
@@ -777,11 +773,7 @@ def shortest_paths(
         n_frontier = frontier.count()
         if n_frontier == 0:
             break
-        fr = (
-            F.broadcast(frontier)
-            if n_frontier <= broadcast_max_rows
-            else frontier
-        )
+        fr = F.broadcast(frontier) if n_frontier <= _BROADCAST_MAX_ROWS else frontier
         # best candidate distance per reached neighbor this round
         relax = (
             e.join(fr, F.col("e_src") == F.col("node"))
@@ -971,25 +963,21 @@ def personalized_pagerank(
     src: str = "src",
     dst: str = "dst",
     node: str = "node",
-    broadcast_ranks: bool = True,
     assume_no_dangling: bool = False,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Personalized PageRank: the restart mass returns to a SEED set
     instead of the uniform distribution — the "related items for X"
     / topic-sensitive ranking primitive (Haveliwala WWW'02).
 
-    Same Pregel cost shape and fixed-point arithmetic as
-    :func:`pagerank` (edges checkpointed once, per-round broadcast
-    join + contribution aggregate, 15-decimal long sums for
-    bit-exact cross-engine parity); only the base term differs:
+    Same round as :func:`pagerank` (``_power_round``: edges
+    checkpointed once, per-round broadcast join + contribution
+    aggregate, 15-decimal long sums for bit-exact cross-engine parity)
+    and the same lineage truncation; only the base term differs:
     ``(1 - d) / |S|`` on seed nodes, zero elsewhere. Seeds outside
     the source universe are ignored. Initial rank = uniform over the
     (kept) seeds.
     """
-    deg, nodes, e = _pagerank_edge_frame(
-        edges, src, dst, broadcast_ranks, assume_no_dangling
-    )
+    deg, nodes, e = _pagerank_edge_frame(edges, src, dst, assume_no_dangling)
     s = (
         seeds.select(F.col(node).alias("node"))
         .distinct()
@@ -1022,29 +1010,14 @@ def personalized_pagerank(
     )
     ranks = base.select("node", F.col("r0").alias("rank"))
     for i in range(iterations):
-        rside = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = e.join(rside, F.col("e_src") == F.col("node")).select(
-            F.col("e_dst").alias("node"),
-            F.round(F.col("rank") / F.col("outdeg") * F.lit(1e15))
-            .cast("bigint")
-            .alias("c"),
-        )
-        contrib = contrib.unionByName(
-            base.select("node", F.lit(0).cast("bigint").alias("c"))
-        )
-        csums = contrib.groupBy("node").agg(F.sum("c").alias("csum"))
+        csums = _power_round(e, ranks, base)
         ranks = csums.join(base.select("node", "base"), "node").select(
             "node",
             F.expr(
                 f"base + {damping} * (CAST(csum AS DOUBLE) / 1e15)"
             ).alias("rank"),
         )
-        if (
-            checkpoint_every
-            and (i + 1) % checkpoint_every == 0
-            and i + 1 < iterations
-        ):
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = _truncate(ranks, i, iterations)
     return ranks
 
 
@@ -1276,7 +1249,6 @@ def bradley_terry(
     iterations: int = 3,
     winner: str = "winner",
     loser: str = "loser",
-    broadcast_ratings: bool = True,
 ) -> DataFrame:
     """Bradley-Terry preference ratings via Hunter's MM updates
     (Hunter, Annals of Statistics 2004) — the model behind reward
@@ -1296,15 +1268,6 @@ def bradley_terry(
     their own scale (the usual BT identifiability caveat — compare
     within components, here per round count). Returns
     (item, games, wins, rating).
-
-    ``broadcast_ratings`` mirrors :func:`pagerank`'s
-    ``broadcast_ranks``: the per-round rating state is one row per
-    item — tiny next to the games frame — so by default it is
-    broadcast and every round is a map-side join over the
-    checkpointed symmetric games. For billion-item preference graphs
-    where the rating state exceeds the broadcast budget, pass False
-    to fall back to shuffle joins (identical results; the unit test
-    hash-matches both paths).
     """
     pairs = prefs.select(
         F.col(winner).alias("w"), F.col(loser).alias("l")
@@ -1341,10 +1304,8 @@ def bradley_terry(
     )
     r = stats.select("i", F.lit(1.0).alias("p"))
     for _ in range(iterations):
-        ri = r.select(F.col("i").alias("__i"), F.col("p").alias("pi"))
-        rj = r.select(F.col("i").alias("__j"), F.col("p").alias("pj"))
-        if broadcast_ratings:
-            ri, rj = F.broadcast(ri), F.broadcast(rj)
+        ri = F.broadcast(r.select(F.col("i").alias("__i"), F.col("p").alias("pi")))
+        rj = F.broadcast(r.select(F.col("i").alias("__j"), F.col("p").alias("pj")))
         den = (
             sym.join(ri, F.col("i") == F.col("__i"))
             .join(rj, F.col("j") == F.col("__j"))
@@ -1425,7 +1386,6 @@ def hits(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    broadcast_scores: bool = False,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a directed —
     typically bipartite — edge set: authority(p) = Σ hub(c) over
@@ -1439,16 +1399,12 @@ def hits(
     with each half-round's raw sums persisted (the renorm max and the
     next half-round both re-read them). Score state is one row per
     node; edges persist once.
-    ``broadcast_scores`` (mirroring pagerank's ``broadcast_ranks``)
-    ships the node-sized score frame to the persisted edge partitions
-    instead of shuffling the edge set twice per round. Default False:
-    interleaved best-of-2 A/B at sf0.1 (4 rounds) measured the
-    shuffle form FASTER on local mode — 5.7-7.4s vs 7.6-9.0s — because
-    each of the 2*rounds broadcasts pays a driver collect round-trip
-    that outweighs a co-located exchange. On a real cluster with an
-    edge set that dwarfs node state, the trade reverses (two saved
-    edge shuffles per round); flip it on there — unless node state
-    itself outgrows executor memory (billions of nodes).
+    Unlike the other node-state loops, the score joins are never
+    hinted to broadcast: interleaved best-of-2 A/B at sf0.1 (4 rounds)
+    measured the shuffle form FASTER on local mode — 5.7-7.4s vs
+    7.6-9.0s broadcasting the score frame — because each of the
+    2*rounds broadcasts pays a driver collect round-trip that
+    outweighs a co-located exchange.
 
     Cross-engine exactness: scores live on the 1e-6 integer grid
     (BIGINT in [0, 1e6]); each half-round's sums are pure BIGINT
@@ -1495,17 +1451,16 @@ def hits(
             .alias(col),
         )
 
-    state = (lambda df: F.broadcast(df)) if broadcast_scores else (lambda df: df)
     auth = None
     for _ in range(rounds):
         raw_a = (
-            e.join(state(hubs), "s")
+            e.join(hubs, "s")
             .groupBy("d")
             .agg(F.sum("h").alias("a"))
         )
         auth = renorm(raw_a, "a")
         raw_h = (
-            e.join(state(auth), "d")
+            e.join(auth, "d")
             .groupBy("s")
             .agg(F.sum("a").alias("h"))
         )

@@ -97,186 +97,17 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-# Driver-gate visibility rotation (round-3 verdict ask #5): the
-# driver's CORRECTNESS artifact records only the first ~50
-# registration-order entries, and rounds 2-3 added q52-q200 behind
-# that cap — three rounds of new work the driver never verified.
-# query_map()/oracle_map() therefore emit a sentinel set of the
-# newest/riskiest queries FIRST (round-4 fixes, round-3 wave:
-# iterative graph, similarity, streaming replay, decimal-heavy
-# stats), then every other query in registration order. The full
-# 195-query gate is unchanged (scripts/check_oracle.py iterates
-# QUERIES itself); only the driver's 50-row sample rotates.
-DRIVER_GATE_SENTINELS: list[str] = [
-    # ROUND-7 ROTATION (verdict r6 ask #1): the ENTIRE 50-row driver
-    # sample is drawn from the 144 queries that have never had a row
-    # in any CORRECTNESS_r*.json (r1-r6 artifacts, union of keys).
-    # No new catalog query goes ahead of this backlog; new round-7
-    # entries are appended at the BACK. Order: the explicitly carried
-    # q93-q99 first, then q100-q104, the q106-q135 band, q139,
-    # q144-q147, q151/q155/q165 — exactly 50 — then the rest of the
-    # backlog (carries to r8), then the remaining registration order.
-    "q93_incremental_dedup",
-    "q94_salted_enrichment",
-    "q95_json_props_rollup",
-    "q96_calendar_coverage",
-    "q97_event_funnel",
-    "q98_retention_cohorts",
-    "q99_locf_imputation",
-    "q100_value_anomalies",
-    "q101_approx_percentiles",
-    "q102_event_transitions",
-    "q103_lineno_integrity",
-    "q104_brand_mode",
-    "q106_scd2_intervals",
-    "q107_skew_profile",
-    "q108_fuzzy_part_pairs",
-    "q109_weighted_sample",
-    "q110_rolling_distinct_users",
-    "q111_vocab_growth",
-    "q112_mad_outliers",
-    "q113_partition_checksum",
-    "q114_incremental_rollup",
-    "q115_event_paths",
-    "q116_dq_suite",
-    "q117_psi_drift",
-    "q118_sketch_rollup",
-    "q119_bm25_search",
-    "q120_brand_trend",
-    "q121_trailing_window",
-    "q122_part_pagerank",
-    "q123_order_streaks",
-    "q124_bitmap_distinct",
-    "q125_golden_records",
-    "q126_doc_keywords",
-    "q127_corr_matrix",
-    "q128_basket_pairs",
-    "q129_hashed_features",
-    "q130_part_reach",
-    "q131_pack_sequences",
-    "q132_token_entropy",
-    "q133_kmeans_step",
-    "q134_linear_interp",
-    "q135_session_window",
-    "q139_pii_scrub",
-    "q144_brand_trend_ols",
-    "q145_part_skyline",
-    "q146_orc_roundtrip",
-    "q147_audio_energy",
-    "q151_audience_overlap",
-    "q155_resample_epochs",
-    "q165_mannwhitney_auc",
-    # --- r8 carry: the rest of the never-driver-checked backlog.
-    # Verdict r7 ask #1 orders it explicitly: q19 + q52-q92 first
-    # (the oldest never-checked band), then the q167-q250 gaps. ---
-    "q19_cube",
-    "q52_moving_average",
-    "q53_nested_details",
-    "q54_dup_clusters",
-    "q55_hash_split",
-    "q56_stratified_sample",
-    "q57_sessionize",
-    "q58_priority_exists",
-    "q59_promo_share",
-    "q60_small_qty_revenue",
-    "q61_large_orders",
-    "q62_idle_rich_customers",
-    "q63_or_predicates",
-    "q64_returned_revenue",
-    "q65_cheapest_parts",
-    "q66_pivot_events",
-    "q67_lww_merge",
-    "q68_token_frequencies",
-    "q69_profile_documents",
-    "q70_trade_volume",
-    "q71_market_share",
-    "q72_dedup_within_gap",
-    "q73_hopping_windows",
-    "q74_neardup_by_source",
-    "q75_acctbal_quartiles",
-    "q76_forecast_revenue",
-    "q77_product_profit",
-    "q78_important_parts",
-    "q79_lateness_priority",
-    "q80_order_distribution",
-    "q81_top_supplier",
-    "q82_supplier_diversity",
-    "q83_excess_shippers",
-    "q84_waiting_suppliers",
-    "q85_repetition_signals",
-    "q86_decontaminate",
-    "q87_label_centroids",
-    "q88_centroid_outliers",
-    "q89_source_health",
-    "q90_price_histogram",
-    "q91_balance_distribution",
-    "q92_reorder_gaps",
-    "q167_chisq_independence",
-    "q168_mutual_information",
-    "q171_bloom_semi_join",
-    "q176_partition_pruned_read",
-    "q182_join_size_estimate",
-    "q183_snapshot_diff",
-    "q184_lateness_audit",
-    "q188_fd_audit",
-    "q192_schema_evolution",
-    "q193_trimmed_mean",
-    "q194_range_boundaries",
-    "q197_k_anonymity",
-    "q198_survival_curve",
-    "q212_retrieval_eval",
-    "q213_rater_agreement",
-    "q214_fs_record_linkage",
-    "q215_media_dedup_groups",
-    "q216_incremental_neardup",
-    "q217_stream_enrich",
-    "q218_kn_trigram_score",
-    "q219_dsir_select",
-    "q220_domain_cap",
-    "q221_bpe_learn",
-    "q222_cm_sketch",
-    "q223_novelty_audit",
-    "q224_blocklist_filter",
-    "q225_jl_projection",
-    "q226_top_pc_power",
-    "q227_pmi_collocations",
-    "q228_tokenizer_fertility",
-    "q229_hits_hubs_authorities",
-    "q230_quantile_calibrate",
-    "q231_decayed_trending",
-    "q232_hard_negatives",
-    "q233_knn_label_eval",
-    "q234_temporal_split",
-    "q235_target_encoding",
-    "q236_skipgram_pairs",
-    "q237_source_divergence",
-    "q238_wilson_ranking",
-    "q239_funnel_count",
-    "q240_theil_sen_trend",
-    "q241_lead_lag_corr",
-    "q242_line_dedup",
-    "q243_hll_cardinality",
-    "q244_rendezvous_shards",
-    "q245_attribution",
-    "q246_quota_sample",
-    "q247_percolate",
-    "q248_spearman_corr",
-    "q249_sequence_mining",
-    "q250_isotonic_fit",
-]
-
-
 def _driver_green_rounds(root=None) -> dict[str, int]:
     """Latest round in which each query had a GREEN row (hash_match ==
     true and err == null) in a committed CORRECTNESS_r*.json driver
     artifact, keyed by query name. Makes the rotation self-maintaining:
     each round's ~50-row driver sample targets the still-unverified
-    backlog automatically, without hand-reordering DRIVER_GATE_SENTINELS
-    every round. Rows that merely APPEAR in an artifact but never
-    hash-passed (err='no_oracle' rows from r1-r3, hash_match=false
-    failures) do NOT count — a reshaped or previously failed query
-    re-queues ahead of already-green queries. Missing or unreadable
-    artifacts degrade to the static order (empty dict)."""
+    backlog automatically, with no hand-curated list. Rows that merely
+    APPEAR in an artifact but never hash-passed (err='no_oracle' rows
+    from r1-r3, hash_match=false failures) do NOT count — a reshaped
+    or previously failed query re-queues ahead of already-green
+    queries. Missing or unreadable
+    artifacts degrade to registration order (empty dict)."""
     import json
     import re
     from pathlib import Path
@@ -307,24 +138,16 @@ def _driver_verified(root=None) -> set[str]:
 
 
 def _gate_order() -> list[str]:
-    """Driver-gate emission order: (1) never-driver-verified queries —
-    curated DRIVER_GATE_SENTINELS order first, then remaining
-    registration order (new queries land here, BEHIND the curated
-    backlog, per the round-6 verdict rule); (2) already-verified
-    queries on a STALENESS LADDER (verdict r9 ask #3): ascending by the
-    round of their most recent green driver row, oldest-confirmed
-    first, so spare rotation slots re-confirm the r1-era rows on the
-    current tree instead of re-verifying last round's sample. Ties
-    break by the same sentinel-then-registration order."""
+    """Driver-gate emission order: (1) never-driver-verified queries in
+    registration order; (2) already-verified queries on a STALENESS
+    LADDER (verdict r9 ask #3): ascending by the round of their most
+    recent green driver row, oldest-confirmed first, so spare rotation
+    slots re-confirm the oldest rows on the current tree instead of
+    re-verifying last round's sample. ``sorted`` is stable, so ties
+    keep registration order."""
     green_rounds = _driver_green_rounds()
-    curated = [n for n in DRIVER_GATE_SENTINELS if n in QUERIES]
-    rest = [n for n in QUERIES if n not in set(curated)]
-    ordered = curated + rest
-    head = [n for n in ordered if n not in green_rounds]
-    tail = sorted(
-        (n for n in ordered if n in green_rounds),
-        key=lambda n: (green_rounds[n], ordered.index(n)),
-    )
+    head = [n for n in QUERIES if n not in green_rounds]
+    tail = sorted((n for n in QUERIES if n in green_rounds), key=green_rounds.get)
     return head + tail
 
 

@@ -332,10 +332,8 @@ def test_lpa_matches_python_reference(spark, pairs, iterations):
 @pytest.mark.parametrize(
     "kwargs",
     [
-        # truncates the winners after every round but the last
-        pytest.param(dict(iterations=4, checkpoint_every=1), id="checkpointed"),
-        # per-round winners joined by shuffle, not broadcast
-        pytest.param(dict(iterations=4, broadcast_labels=False), id="unbroadcast"),
+        # crosses _TRUNCATE_EVERY: the winners are checkpointed mid-run
+        pytest.param(dict(iterations=10), id="checkpointed"),
         # no round: every node keeps its own id
         pytest.param(dict(iterations=0), id="zero_rounds"),
     ],
@@ -483,6 +481,35 @@ def test_ppr_seed_outside_universe_ignored(spark):
     assert got[1] > got[2]
 
 
+# ------------------------------------------------ lineage truncation
+
+
+@pytest.mark.parametrize(
+    "op", ["label_propagation", "pagerank", "personalized_pagerank"]
+)
+def test_fixed_round_lineage_stays_bounded(spark, op):
+    # the state is checkpointed every _TRUNCATE_EVERY rounds, so the
+    # plan after 24 rounds is no deeper than after 16
+    from node_etl_spark.functions import graph as G
+
+    edges = _edges(spark, _sym([(i, (i + 1) % 20) for i in range(20)]))
+    seeds = spark.createDataFrame([(0,)], "node long")
+    run = {
+        "label_propagation": lambda k: G.label_propagation(edges, iterations=k),
+        "pagerank": lambda k: G.pagerank(edges, iterations=k),
+        "personalized_pagerank": lambda k: G.personalized_pagerank(
+            edges, seeds, iterations=k
+        ),
+    }[op]
+
+    def plan_lines(rounds):
+        plan = run(rounds)._jdf.queryExecution().executedPlan().toString()
+        return len(plan.splitlines())
+
+    assert 8 % G._TRUNCATE_EVERY == 0  # 16 and 24 end on a whole interval
+    assert plan_lines(16) == plan_lines(24)
+
+
 def test_kcore_peels_tail(spark):
     from node_etl_spark.functions.graph import kcore
 
@@ -557,29 +584,6 @@ def test_bradley_terry_symmetric_record_is_even(spark):
     )
     out = {r.item: r.rating for r in bradley_terry(prefs, iterations=4).collect()}
     assert out[1] == out[2]
-
-
-def test_bradley_terry_shuffle_path_matches_broadcast(spark):
-    # broadcast_ratings=False is the billion-item fallback (VERDICT r3
-    # ask #3, mirroring pagerank's broadcast_ranks): same fixed-round
-    # MM updates through shuffle joins must produce bit-identical
-    # ratings, since per-term rounding happens before the sum.
-    from node_etl_spark.functions.graph import bradley_terry
-
-    prefs = spark.createDataFrame(
-        [(1, 2), (1, 2), (1, 3), (2, 3), (3, 4), (2, 4), (4, 1)],
-        "winner bigint, loser bigint",
-    )
-    bc = sorted(
-        tuple(r) for r in bradley_terry(prefs, iterations=4).collect()
-    )
-    sh = sorted(
-        tuple(r)
-        for r in bradley_terry(
-            prefs, iterations=4, broadcast_ratings=False
-        ).collect()
-    )
-    assert bc == sh
 
 
 def test_hits_hub_and_authority_ordering(spark):
