@@ -611,7 +611,7 @@ def percolate(
         [
             (qid, t, len(set(terms)))
             for qid, terms in queries
-            for t in set(terms)
+            for t in dict.fromkeys(terms)
         ],
         "query_id string, term string, n_terms int",
     )
@@ -650,10 +650,12 @@ def percolate_oracle_sql(
 ) -> str:
     """DuckDB mirror of :func:`percolate` (registry as VALUES, same
     distinct-token conjunction count)."""
+    # dict.fromkeys: distinct terms in input order, so the SQL text
+    # does not depend on the process's string-hash seed
     reg_rows = ", ".join(
         f"('{qid}', '{t}', {len(set(terms))})"
         for qid, terms in queries
-        for t in set(terms)
+        for t in dict.fromkeys(terms)
     )
     all_rows = ", ".join(
         f"('{qid}', {len(set(terms))})" for qid, terms in queries

@@ -21,11 +21,23 @@ Cross-engine determinism rules (why the code looks the way it does):
   timestamp value hash.
 * Every computed column is aliased identically on both sides (the
   driver hash-matches by sorted column name).
+
+Registration rule: an entry is one module-level
+``@register(name, oracle, doc=...)`` on its query function, with the
+oracle SQL computed inline in the decorator; ``register`` refuses an
+entry without one. Helpers, constants and imports an entry needs sit
+at module level just above it. Query functions read module globals at
+call time, so no module-level name may be bound twice
+(``tests/test_plans.py`` checks this): entry-private names carry the
+query number (``_q254_rows_sql``, ``_Q166_K``). ``QUERIES`` is in
+registration order; the driver's gate order is the adapter's business
+(``__spark_entry__.py``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -82,14 +94,17 @@ YMD_SQL = "strftime({col}, '%Y-%m-%d')"
 class Query:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
     doc: str = ""
 
 
 QUERIES: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None, doc: str = ""):
+def register(name: str, oracle: str, doc: str = ""):
+    if not oracle:
+        raise ValueError(f"{name}: every catalog entry needs a DuckDB oracle")
+
     def deco(fn):
         QUERIES[name] = Query(name=name, fn=fn, oracle=oracle, doc=doc)
         return fn
@@ -97,70 +112,12 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-def _driver_green_rounds(root=None) -> dict[str, int]:
-    """Latest round in which each query had a GREEN row (hash_match ==
-    true and err == null) in a committed CORRECTNESS_r*.json driver
-    artifact, keyed by query name. Makes the rotation self-maintaining:
-    each round's ~50-row driver sample targets the still-unverified
-    backlog automatically, with no hand-curated list. Rows that merely
-    APPEAR in an artifact but never hash-passed (err='no_oracle' rows
-    from r1-r3, hash_match=false failures) do NOT count — a reshaped
-    or previously failed query re-queues ahead of already-green
-    queries. Missing or unreadable
-    artifacts degrade to registration order (empty dict)."""
-    import json
-    import re
-    from pathlib import Path
-
-    latest: dict[str, int] = {}
-    if root is None:
-        root = Path(__file__).resolve().parents[2]
-    for f in sorted(Path(root).glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)", f.name)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            rows = json.loads(f.read_text())
-            for k, v in rows.items():
-                if (
-                    isinstance(v, dict)
-                    and v.get("hash_match") is True
-                    and v.get("err") is None
-                ):
-                    latest[k] = max(latest.get(k, 0), rnd)
-        except Exception:  # noqa: BLE001 - artifact hygiene, never fatal
-            pass
-    return latest
-
-
-def _driver_verified(root=None) -> set[str]:
-    """Set view of _driver_green_rounds (names with any green row)."""
-    return set(_driver_green_rounds(root))
-
-
-def _gate_order() -> list[str]:
-    """Driver-gate emission order: (1) never-driver-verified queries in
-    registration order; (2) already-verified queries on a STALENESS
-    LADDER (verdict r9 ask #3): ascending by the round of their most
-    recent green driver row, oldest-confirmed first, so spare rotation
-    slots re-confirm the oldest rows on the current tree instead of
-    re-verifying last round's sample. ``sorted`` is stable, so ties
-    keep registration order."""
-    green_rounds = _driver_green_rounds()
-    head = [n for n in QUERIES if n not in green_rounds]
-    tail = sorted((n for n in QUERIES if n in green_rounds), key=green_rounds.get)
-    return head + tail
-
-
 def query_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].fn for name in _gate_order()}
+    return {name: q.fn for name, q in QUERIES.items()}
 
 
 def oracle_map() -> dict[str, str]:
-    return {
-        name: QUERIES[name].oracle
-        for name in _gate_order()
-        if QUERIES[name].oracle is not None
-    }
+    return {name: q.oracle for name, q in QUERIES.items()}
 
 
 def _src(sf_dir: str, name: str) -> ParquetSource:
@@ -686,6 +643,8 @@ def q16_routed_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..functions import dedup as D  # noqa: E402
 from ..functions import similarity as S  # noqa: E402
 from ..functions import text as T  # noqa: E402
+from ..functions import multimodal as M  # noqa: E402
+from ..functions import web as W  # noqa: E402
 
 
 @register(
@@ -1495,7 +1454,8 @@ _ROUNDTRIP_ORACLE = f"""
     FROM orders GROUP BY o_orderstatus
 """
 
-_SCRATCH = "/root/repo/.scratch"
+# per-checkout scratch root (fixtures, round-trip outputs), kept out of git
+_SCRATCH = str(Path(__file__).resolve().parents[2] / ".scratch")
 
 
 def _codec_fixture(spark, sf_dir, name, version, build):
@@ -4598,9 +4558,12 @@ def q118_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_TERMS = ["hash", "stream", "vector"]
 
 
+from ..functions.search import bm25_oracle_sql
+
+
 @register(
     "q119_bm25_search",
-    None,  # filled below from functions.search (shared generator)
+    bm25_oracle_sql("documents", _BM25_TERMS, k=10),
     doc="BM25 ranked retrieval over the documents corpus "
         "(functions/search.py): one token scan yields doc lengths and "
         "query-term tfs (term filter BEFORE the tf shuffle, so only "
@@ -4614,17 +4577,6 @@ def q119_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.search import bm25_topk
 
     return bm25_topk(table(spark, sf_dir, "documents"), _BM25_TERMS, k=10)
-
-
-def _init_q119_oracle() -> None:
-    from ..functions.search import bm25_oracle_sql
-
-    QUERIES["q119_bm25_search"].oracle = bm25_oracle_sql(
-        "documents", _BM25_TERMS, k=10
-    )
-
-
-_init_q119_oracle()
 
 
 @register(
@@ -4746,9 +4698,17 @@ _PART_EDGES_SQL = """
 """
 
 
+from ..functions.graph import pagerank_oracle_sql
+
+_q122_inner = pagerank_oracle_sql(_PART_EDGES_SQL, iterations=5, damping=0.85)
+
+
 @register(
     "q122_part_pagerank",
-    None,  # filled below (unrolled-iteration oracle from functions.graph)
+    f"""
+    SELECT node, round(rank, 12) AS rank FROM ({_q122_inner})
+    ORDER BY rank DESC, node LIMIT 20
+    """,
     doc="PageRank over the part co-purchase graph (functions/"
         "graph.py pagerank): parts co-occurring in an order form "
         "symmetric edges; 5 power iterations, each one shuffle join "
@@ -4773,19 +4733,6 @@ def q122_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("rank"), F.asc("node"))
         .limit(20)
     )
-
-
-def _init_q122_oracle() -> None:
-    from ..functions.graph import pagerank_oracle_sql
-
-    inner = pagerank_oracle_sql(_PART_EDGES_SQL, iterations=5, damping=0.85)
-    QUERIES["q122_part_pagerank"].oracle = f"""
-    SELECT node, round(rank, 12) AS rank FROM ({inner})
-    ORDER BY rank DESC, node LIMIT 20
-    """
-
-
-_init_q122_oracle()
 
 
 @register(
@@ -4904,17 +4851,15 @@ _FUZZY_PAIRS_SQL = """
 """
 
 
-def _init_q125_oracle() -> str:
-    inner = G.components_oracle_sql(_FUZZY_PAIRS_SQL)
-    return f"""
-    SELECT doc_id AS partkey, cluster_id AS canonical_key, is_canonical
-    FROM ({inner})
-    """
+_q125_inner = G.components_oracle_sql(_FUZZY_PAIRS_SQL)
 
 
 @register(
     "q125_golden_records",
-    None,  # filled right after registration (needs G import above)
+    f"""
+    SELECT doc_id AS partkey, cluster_id AS canonical_key, is_canonical
+    FROM ({_q125_inner})
+    """,
     doc="Entity resolution end-to-end: FastSS deletion-neighborhood "
         "fuzzy-match pairs (functions/dedup.py "
         "deletion_neighborhood_pairs — lossless, so the oracle stays "
@@ -4976,9 +4921,6 @@ def q125_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("p_partkey") == F.col("root")).alias("is_canonical"),
         )
     )
-
-
-QUERIES["q125_golden_records"].oracle = _init_q125_oracle()
 
 
 @register(
@@ -5243,7 +5185,7 @@ _BFS_SEEDS_SQL = """
 
 @register(
     "q130_part_reach",
-    None,  # filled below (unrolled-CTE oracle from functions.graph)
+    G.bfs_oracle_sql(_PART_EDGES_SQL, _BFS_SEEDS_SQL, max_hops=3),
     doc="Multi-source BFS (functions/graph.py bfs_hops): min-hop "
         "distance from seed parts over the co-purchase graph, bounded "
         "at 3 hops — the blast-radius / k-hop-neighborhood shape "
@@ -5274,15 +5216,6 @@ def q130_part_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return G.bfs_hops(edges, seeds, max_hops=3)
-
-
-def _init_q130_oracle() -> None:
-    QUERIES["q130_part_reach"].oracle = G.bfs_oracle_sql(
-        _PART_EDGES_SQL, _BFS_SEEDS_SQL, max_hops=3
-    )
-
-
-_init_q130_oracle()
 
 
 # --------------------------------------------------------------------
@@ -5876,9 +5809,12 @@ def _part_cooccur(spark: SparkSession, sf_dir: str, min_cnt: int = 1) -> DataFra
     ).select("p.src", "p.dst", "p.cnt")
 
 
+from ..functions.graph import label_propagation_oracle_sql
+
+
 @register(
     "q141_part_communities",
-    None,  # filled below (unrolled-iteration oracle from functions.graph)
+    label_propagation_oracle_sql(_PART_EDGES2_SQL, iterations=3),
     doc="Community detection via synchronous label propagation "
         "(functions/graph.py label_propagation): parts co-purchased "
         "in >= 2 distinct orders form symmetric edges; 3 LPA rounds, "
@@ -5894,17 +5830,6 @@ def q141_part_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _part_cooccur(spark, sf_dir, min_cnt=2).select("src", "dst")
     return label_propagation(edges, iterations=3)
-
-
-def _init_q141_oracle() -> None:
-    from ..functions.graph import label_propagation_oracle_sql
-
-    QUERIES["q141_part_communities"].oracle = label_propagation_oracle_sql(
-        _PART_EDGES2_SQL, iterations=3
-    )
-
-
-_init_q141_oracle()
 
 
 # --------------------------------------------------------------------
@@ -5926,9 +5851,12 @@ _PART_WEDGES_SQL = """
 _PART_SEED_SQL = "SELECT MIN(l_partkey) AS node FROM lineitem"
 
 
+from ..functions.graph import shortest_paths_oracle_sql
+
+
 @register(
     "q142_part_distances",
-    None,  # filled below (unrolled-round oracle from functions.graph)
+    shortest_paths_oracle_sql(_PART_WEDGES_SQL, _PART_SEED_SQL, max_rounds=4),
     doc="Weighted shortest paths (functions/graph.py shortest_paths, "
         "frontier Bellman-Ford): co-purchase edges weighted "
         "1000 // (1 + co-order count) — frequent pairings are cheap "
@@ -5952,17 +5880,6 @@ def q142_part_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("l_partkey").alias("node"))
     )
     return shortest_paths(edges, seeds, max_rounds=4)
-
-
-def _init_q142_oracle() -> None:
-    from ..functions.graph import shortest_paths_oracle_sql
-
-    QUERIES["q142_part_distances"].oracle = shortest_paths_oracle_sql(
-        _PART_WEDGES_SQL, _PART_SEED_SQL, max_rounds=4
-    )
-
-
-_init_q142_oracle()
 
 
 # --------------------------------------------------------------------
@@ -6034,9 +5951,17 @@ def q144_brand_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q145 — Pareto frontier (skyline operator)
 # --------------------------------------------------------------------
 
+from ..functions.frontier import skyline_oracle_sql
+
+
 @register(
     "q145_part_skyline",
-    None,  # filled below from functions.frontier
+    skyline_oracle_sql(
+        "SELECT p_partkey, p_brand, p_size, p_retailprice FROM part",
+        maximize=("p_size",),
+        minimize=("p_retailprice",),
+        float_criteria=("p_retailprice",),
+    ),
     doc="Skyline / Pareto frontier (functions/frontier.py skyline, "
         "Borzsonyi et al. ICDE'01): parts where no other part is "
         "cheaper AND larger. Distributive two-phase plan — streaming "
@@ -6052,20 +5977,6 @@ def q145_part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey", "p_brand", "p_size", "p_retailprice"
     )
     return skyline(parts, maximize=("p_size",), minimize=("p_retailprice",))
-
-
-def _init_q145_oracle() -> None:
-    from ..functions.frontier import skyline_oracle_sql
-
-    QUERIES["q145_part_skyline"].oracle = skyline_oracle_sql(
-        "SELECT p_partkey, p_brand, p_size, p_retailprice FROM part",
-        maximize=("p_size",),
-        minimize=("p_retailprice",),
-        float_criteria=("p_retailprice",),
-    )
-
-
-_init_q145_oracle()
 
 
 # --------------------------------------------------------------------
@@ -6091,9 +6002,12 @@ def q146_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q147 — windowed PCM energy over opaque binary payloads (audio path)
 # --------------------------------------------------------------------
 
+from ..functions.multimodal import pcm_energy_oracle_sql
+
+
 @register(
     "q147_audio_energy",
-    None,  # filled below from functions.multimodal
+    pcm_energy_oracle_sql(),
     doc="Windowed audio-energy profile (functions/multimodal.py "
         "pcm_window_energy): documents' UTF-8 payloads stand in for "
         "u8 PCM samples; per 256-sample window an exact integer "
@@ -6108,15 +6022,6 @@ def q147_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode("text", "UTF-8").alias("content")
     )
     return pcm_window_energy(docs)
-
-
-def _init_q147_oracle() -> None:
-    from ..functions.multimodal import pcm_energy_oracle_sql
-
-    QUERIES["q147_audio_energy"].oracle = pcm_energy_oracle_sql()
-
-
-_init_q147_oracle()
 
 
 # --------------------------------------------------------------------
@@ -6216,9 +6121,12 @@ def q150_mix_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q151 — KMV bottom-k sketches: audience overlap between event types
 # --------------------------------------------------------------------
 
+from ..functions.sketch import kmv_jaccard_oracle_sql
+
+
 @register(
     "q151_audience_overlap",
-    None,  # filled below from functions.sketch
+    kmv_jaccard_oracle_sql("events", "event_type", "user_id", k=256),
     doc="Audience-overlap estimation via KMV bottom-k sketches "
         "(functions/sketch.py kmv_jaccard, Bar-Yossef'02 / Beyer "
         "SIGMOD'07): per event type keep the 256 smallest md5-derived "
@@ -6235,24 +6143,16 @@ def q151_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_jaccard(ev, "event_type", "user_id", k=256)
 
 
-def _init_q151_oracle() -> None:
-    from ..functions.sketch import kmv_jaccard_oracle_sql
-
-    QUERIES["q151_audience_overlap"].oracle = kmv_jaccard_oracle_sql(
-        "events", "event_type", "user_id", k=256
-    )
-
-
-_init_q151_oracle()
-
-
 # --------------------------------------------------------------------
 # q152 — Benford first-digit audit of the revenue feed
 # --------------------------------------------------------------------
 
+from ..functions.dq import benford_oracle_sql
+
+
 @register(
     "q152_benford_audit",
-    None,  # filled below from functions.dq
+    benford_oracle_sql("lineitem", "l_extendedprice"),
     doc="Benford's-law first-digit audit (functions/dq.py "
         "benford_profile): observed vs expected leading-digit "
         "distribution of lineitem extended prices with per-digit "
@@ -6269,24 +6169,21 @@ def q152_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _init_q152_oracle() -> None:
-    from ..functions.dq import benford_oracle_sql
-
-    QUERIES["q152_benford_audit"].oracle = benford_oracle_sql(
-        "lineitem", "l_extendedprice"
-    )
-
-
-_init_q152_oracle()
-
-
 # --------------------------------------------------------------------
 # q153 — sorted-neighborhood blocking + edit-distance verify
 # --------------------------------------------------------------------
 
 @register(
     "q153_sorted_neighborhood",
-    None,  # filled below from functions.dedup
+    D.sorted_neighborhood_oracle_sql(
+        "part", "p_name", "p_partkey", window=6,
+        extra_where="levenshtein(a.key, b.key) <= 2",
+    ).replace(
+        "SELECT a.rid AS id_a, b.rid AS id_b, a.key AS key_a, b.key AS key_b",
+        "SELECT a.rid AS id_a, b.rid AS id_b, a.key AS key_a,"
+        " b.key AS key_b, CAST(levenshtein(a.key, b.key) AS INTEGER)"
+        " AS dist",
+    ),
     doc="Sorted-neighborhood entity-resolution blocking (functions/"
         "dedup.py sorted_neighborhood_pairs, Hernandez-Stolfo "
         "SIGMOD'95): parts ranked by name via util.global_row_index "
@@ -6306,23 +6203,6 @@ def q153_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.withColumn(
         "dist", F.levenshtein("key_a", "key_b")
     ).filter(F.col("dist") <= 2)
-
-
-def _init_q153_oracle() -> None:
-    QUERIES["q153_sorted_neighborhood"].oracle = (
-        D.sorted_neighborhood_oracle_sql(
-            "part", "p_name", "p_partkey", window=6,
-            extra_where="levenshtein(a.key, b.key) <= 2",
-        ).replace(
-            "SELECT a.rid AS id_a, b.rid AS id_b, a.key AS key_a, b.key AS key_b",
-            "SELECT a.rid AS id_a, b.rid AS id_b, a.key AS key_a,"
-            " b.key AS key_b, CAST(levenshtein(a.key, b.key) AS INTEGER)"
-            " AS dist",
-        )
-    )
-
-
-_init_q153_oracle()
 
 
 # --------------------------------------------------------------------
@@ -6387,9 +6267,14 @@ _Q156_POINTS_SQL = """
 """
 
 
+from ..functions.dq import cusum_oracle_sql
+
+
 @register(
     "q156_cusum_drift",
-    None,  # filled below from functions.dq
+    cusum_oracle_sql(
+        _Q156_POINTS_SQL, ["o_orderstatus"], "day", threshold=10_000_000_00
+    ),
     doc="Two-sided CUSUM level-shift detection (functions/dq.py "
         "cusum_shift, Page 1954) over daily order-revenue series per "
         "status: the textbook recursion replaced by the prefix "
@@ -6421,17 +6306,6 @@ def q156_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _init_q156_oracle() -> None:
-    from ..functions.dq import cusum_oracle_sql
-
-    QUERIES["q156_cusum_drift"].oracle = cusum_oracle_sql(
-        _Q156_POINTS_SQL, ["o_orderstatus"], "day", threshold=10_000_000_00
-    )
-
-
-_init_q156_oracle()
-
-
 # --------------------------------------------------------------------
 # q157 — deterministic negative sampling (contrastive training pairs)
 # --------------------------------------------------------------------
@@ -6457,9 +6331,19 @@ def q157_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q158 — Gini concentration of corpus contribution and revenue
 # --------------------------------------------------------------------
 
+from ..functions.profile import gini_oracle_sql
+
+
 @register(
     "q158_concentration_audit",
-    None,  # filled below from functions.profile
+    gini_oracle_sql(
+        """
+        SELECT l_suppkey AS g,
+               CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
+                    AS BIGINT) AS x
+        FROM lineitem GROUP BY 1
+        """
+    ),
     doc="Gini concentration audit (functions/profile.py "
         "gini_concentration): inequality of supplier revenue "
         "contribution via the exact integer sort formula "
@@ -6477,42 +6361,24 @@ def q158_concentration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gini_concentration(li, "l_suppkey", "cents")
 
 
-def _init_q158_oracle() -> None:
-    from ..functions.profile import gini_oracle_sql
-
-    QUERIES["q158_concentration_audit"].oracle = gini_oracle_sql(
-        """
-        SELECT l_suppkey AS g,
-               CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS x
-        FROM lineitem GROUP BY 1
-        """
-    )
-
-
-_init_q158_oracle()
-
-
 # --------------------------------------------------------------------
 # q159 — contrastive triplets: near-dup positives + hash-ring negatives
 # --------------------------------------------------------------------
 
-def _init_q159_oracle() -> None:
-    pos_sql = D.minhash_oracle_sql(threshold=0.8)
-    neg_sql = SA.negative_samples_sql("documents", "doc_id", k=2)
-    QUERIES["q159_contrastive_triplets"].oracle = f"""
-    WITH pos AS ({pos_sql}),
-    neg AS ({neg_sql})
-    SELECT p.d1 AS anchor_id, p.d2 AS positive_id, p.jac,
-           n.neg_rank, n.neg_id
-    FROM pos p JOIN neg n ON n.anchor_id = p.d1
-    WHERE n.neg_id <> p.d2
-    """
+_q159_pos_sql = D.minhash_oracle_sql(threshold=0.8)
+_q159_neg_sql = SA.negative_samples_sql("documents", "doc_id", k=2)
 
 
 @register(
     "q159_contrastive_triplets",
-    None,  # filled above after registration
+    f"""
+    WITH pos AS ({_q159_pos_sql}),
+    neg AS ({_q159_neg_sql})
+    SELECT p.d1 AS anchor_id, p.d2 AS positive_id, p.jac,
+           n.neg_rank, n.neg_id
+    FROM pos p JOIN neg n ON n.anchor_id = p.d1
+    WHERE n.neg_id <> p.d2
+    """,
     doc="Contrastive training triplets: minhash-verified near-dup "
         "pairs as (anchor, positive), crossed with 2 deterministic "
         "hash-ring negatives per anchor (functions/sampling.py "
@@ -6536,16 +6402,16 @@ def q159_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_init_q159_oracle()
-
-
 # --------------------------------------------------------------------
 # q160 — triangle census of the co-purchase graph
 # --------------------------------------------------------------------
 
+from ..functions.graph import triangle_oracle_sql
+
+
 @register(
     "q160_triangle_census",
-    None,  # filled below from functions.graph
+    triangle_oracle_sql(_PART_EDGES2_SQL),
     doc="Triangle count + global clustering coefficient (functions/"
         "graph.py triangle_stats) over the thresholded co-purchase "
         "graph: degree-oriented wedge join (Suri-Vassilvitskii MR "
@@ -6561,24 +6427,16 @@ def q160_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_stats(edges)
 
 
-def _init_q160_oracle() -> None:
-    from ..functions.graph import triangle_oracle_sql
-
-    QUERIES["q160_triangle_census"].oracle = triangle_oracle_sql(
-        _PART_EDGES2_SQL
-    )
-
-
-_init_q160_oracle()
-
-
 # --------------------------------------------------------------------
 # q161 — KMV cardinality estimation per event type
 # --------------------------------------------------------------------
 
+from ..functions.sketch import kmv_distinct_oracle_sql
+
+
 @register(
     "q161_kmv_cardinality",
-    None,  # filled below from functions.sketch
+    kmv_distinct_oracle_sql("events", "event_type", "user_id", k=128),
     doc="Distinct-audience estimation from KMV bottom-k state "
         "(functions/sketch.py kmv_distinct): (k-1)*2^60/h_k per "
         "event type, exact below k. The deterministic alternative to "
@@ -6593,17 +6451,6 @@ def q161_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_distinct(ev, "event_type", "user_id", k=128)
 
 
-def _init_q161_oracle() -> None:
-    from ..functions.sketch import kmv_distinct_oracle_sql
-
-    QUERIES["q161_kmv_cardinality"].oracle = kmv_distinct_oracle_sql(
-        "events", "event_type", "user_id", k=128
-    )
-
-
-_init_q161_oracle()
-
-
 # --------------------------------------------------------------------
 # q162 — personalized PageRank: related parts for a seed set
 # --------------------------------------------------------------------
@@ -6611,9 +6458,19 @@ _init_q161_oracle()
 _Q162_SEEDS_SQL = "SELECT DISTINCT l_partkey AS node FROM lineitem WHERE l_partkey < 5"
 
 
+from ..functions.graph import ppr_oracle_sql
+
+_q162_inner = ppr_oracle_sql(
+    _PART_EDGES2_SQL, _Q162_SEEDS_SQL, iterations=5, damping=0.85
+)
+
+
 @register(
     "q162_related_parts_ppr",
-    None,  # filled below from functions.graph
+    f"""
+    SELECT node, round(rank, 12) AS rank FROM ({_q162_inner})
+    ORDER BY rank DESC, node LIMIT 25
+    """,
     doc="Personalized PageRank (functions/graph.py "
         "personalized_pagerank, Haveliwala WWW'02): restart mass "
         "returns to a 5-part seed set over the co-purchase graph — "
@@ -6644,28 +6501,24 @@ def q162_related_parts_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _init_q162_oracle() -> None:
-    from ..functions.graph import ppr_oracle_sql
-
-    inner = ppr_oracle_sql(
-        _PART_EDGES2_SQL, _Q162_SEEDS_SQL, iterations=5, damping=0.85
-    )
-    QUERIES["q162_related_parts_ppr"].oracle = f"""
-    SELECT node, round(rank, 12) AS rank FROM ({inner})
-    ORDER BY rank DESC, node LIMIT 25
-    """
-
-
-_init_q162_oracle()
-
-
 # --------------------------------------------------------------------
 # q163 — two-sample KS drift test between order-status cohorts
 # --------------------------------------------------------------------
 
+from ..functions.profile import ks_oracle_sql
+
+
 @register(
     "q163_ks_drift",
-    None,  # filled below from functions.profile
+    ks_oracle_sql(
+        """
+        SELECT o_orderstatus AS g,
+               CAST(round(o_totalprice * 100) AS BIGINT) AS value
+        FROM orders
+        """,
+        "'F'",
+        "'O'",
+    ),
     doc="Two-sample Kolmogorov-Smirnov drift statistic (functions/"
         "profile.py ks_statistic): order-value distributions of the "
         "'F' vs 'O' cohorts compared at every pooled jump point with "
@@ -6684,23 +6537,6 @@ def q163_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_statistic(orders, "g", "value", "F", "O")
 
 
-def _init_q163_oracle() -> None:
-    from ..functions.profile import ks_oracle_sql
-
-    QUERIES["q163_ks_drift"].oracle = ks_oracle_sql(
-        """
-        SELECT o_orderstatus AS g,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS value
-        FROM orders
-        """,
-        "'F'",
-        "'O'",
-    )
-
-
-_init_q163_oracle()
-
-
 # --------------------------------------------------------------------
 # q164 — corpus boilerplate stripping (shared-footer removal)
 # --------------------------------------------------------------------
@@ -6713,9 +6549,16 @@ _Q164_DIRTY_SQL = """
 """
 
 
+_q164_inner = T.strip_boilerplate_sql(_Q164_DIRTY_SQL, min_df=10)
+
+
 @register(
     "q164_boilerplate_strip",
-    None,  # filled below from functions.text
+    f"""
+    SELECT doc_id, md5(text) AS clean_fp,
+           CAST(length(text) AS BIGINT) AS n_chars_clean
+    FROM ({_q164_inner})
+    """,
     doc="Corpus boilerplate removal (functions/text.py "
         "strip_boilerplate, the CCNet/C4 cleanup): a deterministic "
         "per-source footer is injected into every document (the q139 "
@@ -6743,25 +6586,24 @@ def q164_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _init_q164_oracle() -> None:
-    inner = T.strip_boilerplate_sql(_Q164_DIRTY_SQL, min_df=10)
-    QUERIES["q164_boilerplate_strip"].oracle = f"""
-    SELECT doc_id, md5(text) AS clean_fp,
-           CAST(length(text) AS BIGINT) AS n_chars_clean
-    FROM ({inner})
-    """
-
-
-_init_q164_oracle()
-
-
 # --------------------------------------------------------------------
 # q165 — Mann-Whitney U / AUC between order-status cohorts
 # --------------------------------------------------------------------
 
+from ..functions.profile import mannwhitney_oracle_sql
+
+
 @register(
     "q165_mannwhitney_auc",
-    None,  # filled below from functions.profile
+    mannwhitney_oracle_sql(
+        """
+        SELECT o_orderstatus AS g,
+               CAST(round(o_totalprice * 100) AS BIGINT) AS value
+        FROM orders
+        """,
+        "'F'",
+        "'O'",
+    ),
     doc="Mann-Whitney U with AUC effect size (functions/profile.py "
         "mannwhitney_u): rank-based location test between the 'F' "
         "and 'O' order-value distributions, exact midrank tie "
@@ -6777,23 +6619,6 @@ def q165_mannwhitney_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("value"),
     )
     return mannwhitney_u(orders, "g", "value", "F", "O")
-
-
-def _init_q165_oracle() -> None:
-    from ..functions.profile import mannwhitney_oracle_sql
-
-    QUERIES["q165_mannwhitney_auc"].oracle = mannwhitney_oracle_sql(
-        """
-        SELECT o_orderstatus AS g,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS value
-        FROM orders
-        """,
-        "'F'",
-        "'O'",
-    )
-
-
-_init_q165_oracle()
 
 
 # --------------------------------------------------------------------
@@ -6820,34 +6645,31 @@ def _q166_item_col() -> Column:
     ).otherwise(F.concat(F.lit("cold_"), F.col("event_id").cast("string")))
 
 
-def _init_q166() -> None:
-    from ..functions.sketch import heavy_hitters, heavy_hitters_oracle_sql
+from ..functions.sketch import heavy_hitters, heavy_hitters_oracle_sql
 
-    @register(
-        "q166_heavy_hitters",
-        heavy_hitters_oracle_sql(
-            f"SELECT {_Q166_ITEM} AS item FROM events", _Q166_K
-        ),
-        doc="Exact frequent items at sketch cost (functions/sketch.py "
-            "heavy_hitters): per-partition Misra-Gries summaries prune "
-            "the candidate set (the singleton tail never crosses the "
-            "wire), then an exact count pass over candidates keeps "
-            "items with cnt > N/(k+1) — the sketch is only a pruner, "
-            "so the entry sits on the exact gate with the plain "
-            "GROUP BY/HAVING definition as its oracle. Item domain is "
-            "a deterministic 3-hot/long-tail synthesis over events "
-            "(the testdata is uniform).",
+
+@register(
+    "q166_heavy_hitters",
+    heavy_hitters_oracle_sql(
+        f"SELECT {_Q166_ITEM} AS item FROM events", _Q166_K
+    ),
+    doc="Exact frequent items at sketch cost (functions/sketch.py "
+        "heavy_hitters): per-partition Misra-Gries summaries prune "
+        "the candidate set (the singleton tail never crosses the "
+        "wire), then an exact count pass over candidates keeps "
+        "items with cnt > N/(k+1) — the sketch is only a pruner, "
+        "so the entry sits on the exact gate with the plain "
+        "GROUP BY/HAVING definition as its oracle. Item domain is "
+        "a deterministic 3-hot/long-tail synthesis over events "
+        "(the testdata is uniform).",
+)
+def q166_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    items = table(spark, sf_dir, "events").select(
+        _q166_item_col().alias("item")
     )
-    def q166_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-        items = table(spark, sf_dir, "events").select(
-            _q166_item_col().alias("item")
-        )
-        from ..functions.sketch import heavy_hitters as hh
+    from ..functions.sketch import heavy_hitters as hh
 
-        return hh(items, "item", k=_Q166_K)
-
-
-_init_q166()
+    return hh(items, "item", k=_Q166_K)
 
 
 # --------------------------------------------------------------------
@@ -6855,126 +6677,118 @@ _init_q166()
 # information) on the cell-frame shape
 # --------------------------------------------------------------------
 
-def _init_q167_q168() -> None:
-    from ..functions.profile import (
-        chisq_independence,
-        chisq_oracle_sql,
-        mutual_information,
-        mutual_information_oracle_sql,
+from ..functions.profile import (
+    chisq_independence,
+    chisq_oracle_sql,
+    mutual_information,
+    mutual_information_oracle_sql,
+)
+
+
+@register(
+    "q167_chisq_independence",
+    chisq_oracle_sql(
+        "SELECT o_orderpriority AS a, o_orderstatus AS b FROM orders"
+    ),
+    doc="Pearson chi-square independence test + Cramér's V between "
+        "order priority and status (functions/profile.py "
+        "chisq_independence): one shuffle to contingency cells, "
+        "margins re-aggregate the cell frame; per-cell statistic "
+        "from identical BIGINTs, DECIMAL(28,12)-quantized, exact "
+        "sum — the stratification-column audit of a training "
+        "pipeline.",
+)
+def q167_chisq_independence(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return chisq_independence(
+        table(spark, sf_dir, "orders"), "o_orderpriority", "o_orderstatus"
     )
 
-    @register(
-        "q167_chisq_independence",
-        chisq_oracle_sql(
-            "SELECT o_orderpriority AS a, o_orderstatus AS b FROM orders"
-        ),
-        doc="Pearson chi-square independence test + Cramér's V between "
-            "order priority and status (functions/profile.py "
-            "chisq_independence): one shuffle to contingency cells, "
-            "margins re-aggregate the cell frame; per-cell statistic "
-            "from identical BIGINTs, DECIMAL(28,12)-quantized, exact "
-            "sum — the stratification-column audit of a training "
-            "pipeline.",
+
+@register(
+    "q168_mutual_information",
+    mutual_information_oracle_sql(
+        "SELECT lang AS a, source AS b FROM documents"
+    ),
+    doc="Mutual information (bits) + NMI between document language "
+        "and source (functions/profile.py mutual_information): the "
+        "feature-relevance / target-leakage measure beside q167's "
+        "chi-square; same cell-frame scale shape, quantized-log "
+        "exactness discipline (q148).",
+)
+def q168_mutual_information(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return mutual_information(
+        table(spark, sf_dir, "documents"), "lang", "source"
     )
-    def q167_chisq_independence(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        return chisq_independence(
-            table(spark, sf_dir, "orders"), "o_orderpriority", "o_orderstatus"
-        )
-
-    @register(
-        "q168_mutual_information",
-        mutual_information_oracle_sql(
-            "SELECT lang AS a, source AS b FROM documents"
-        ),
-        doc="Mutual information (bits) + NMI between document language "
-            "and source (functions/profile.py mutual_information): the "
-            "feature-relevance / target-leakage measure beside q167's "
-            "chi-square; same cell-frame scale shape, quantized-log "
-            "exactness discipline (q148).",
-    )
-    def q168_mutual_information(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        return mutual_information(
-            table(spark, sf_dir, "documents"), "lang", "source"
-        )
-
-
-_init_q167_q168()
 
 
 # --------------------------------------------------------------------
 # q169 — SemDeDup: semantic (embedding-space) deduplication
 # --------------------------------------------------------------------
 
-def _init_q169() -> None:
-    from ..functions.similarity import semdedup, semdedup_oracle_sql
+from ..functions.similarity import semdedup, semdedup_oracle_sql
 
-    @register(
-        "q169_semdedup",
-        semdedup_oracle_sql(threshold=0.35),
-        doc="Semantic dedup (functions/similarity.py semdedup; Abbas "
-            "et al. SemDeDup): k-means-style cluster assignment "
-            "(broadcast centroids, q133 kernel) then in-cluster cosine "
-            "pruning — pair work is sum(c_i^2), never N^2, and the "
-            "cluster count follows the sqrt-balanced rule (k ~ "
-            "sqrt(n), mirrored by the oracle as a scalar subquery) so "
-            "assignment and pair stages are both O(n^1.5), the best "
-            "exact shape the algorithm admits; the embedding-space "
-            "complement of MinHash (q22) / SimHash (q23) lexical "
-            "dedup. Deterministic keep-lowest-id rule on the exact "
-            "gate.",
+
+@register(
+    "q169_semdedup",
+    semdedup_oracle_sql(threshold=0.35),
+    doc="Semantic dedup (functions/similarity.py semdedup; Abbas "
+        "et al. SemDeDup): k-means-style cluster assignment "
+        "(broadcast centroids, q133 kernel) then in-cluster cosine "
+        "pruning — pair work is sum(c_i^2), never N^2, and the "
+        "cluster count follows the sqrt-balanced rule (k ~ "
+        "sqrt(n), mirrored by the oracle as a scalar subquery) so "
+        "assignment and pair stages are both O(n^1.5), the best "
+        "exact shape the algorithm admits; the embedding-space "
+        "complement of MinHash (q22) / SimHash (q23) lexical "
+        "dedup. Deterministic keep-lowest-id rule on the exact "
+        "gate.",
+)
+def q169_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return semdedup(
+        table(spark, sf_dir, "embeddings"),
+        threshold=0.35,
     )
-    def q169_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return semdedup(
-            table(spark, sf_dir, "embeddings"),
-            threshold=0.35,
-        )
-
-
-_init_q169()
 
 
 # --------------------------------------------------------------------
 # q170 — product quantization codes for the embedding store
 # --------------------------------------------------------------------
 
-def _init_q170() -> None:
-    from ..functions.similarity import pq_encode, pq_oracle_sql
-
-    @register(
-        "q170_pq_codes",
-        pq_oracle_sql(seed_mod=50),
-        doc="Product quantization (functions/similarity.py pq_encode; "
-            "Jégou et al. PAMI'11): 64-dim vectors compressed to 8 "
-            "sub-codeword ids (32x) against deterministic seed "
-            "codebooks capped at 64 codewords (6-bit codes — codebook "
-            "size is a fixed quantization budget, so encoding stays "
-            "O(n*64*d) linear at any corpus size) — the IVF-PQ store "
-            "layout beside q154's int8 scalar quantization; broadcast "
-            "codebook, narrow argmin, one n_blocks-rows-per-vector "
-            "rollup shuffle. Code fingerprints and decimal-summed "
-            "reconstruction error on the exact gate.",
-    )
-    def q170_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return pq_encode(table(spark, sf_dir, "embeddings"), seed_mod=50)
+from ..functions.similarity import pq_encode, pq_oracle_sql
 
 
-_init_q170()
+@register(
+    "q170_pq_codes",
+    pq_oracle_sql(seed_mod=50),
+    doc="Product quantization (functions/similarity.py pq_encode; "
+        "Jégou et al. PAMI'11): 64-dim vectors compressed to 8 "
+        "sub-codeword ids (32x) against deterministic seed "
+        "codebooks capped at 64 codewords (6-bit codes — codebook "
+        "size is a fixed quantization budget, so encoding stays "
+        "O(n*64*d) linear at any corpus size) — the IVF-PQ store "
+        "layout beside q154's int8 scalar quantization; broadcast "
+        "codebook, narrow argmin, one n_blocks-rows-per-vector "
+        "rollup shuffle. Code fingerprints and decimal-summed "
+        "reconstruction error on the exact gate.",
+)
+def q170_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return pq_encode(table(spark, sf_dir, "embeddings"), seed_mod=50)
 
 
 # --------------------------------------------------------------------
 # q171 — bloom-pruned semi join (the explicit runtime filter)
 # --------------------------------------------------------------------
 
-def _init_q171() -> None:
-    from ..functions.sketch import bloom_semi_join
+from ..functions.sketch import bloom_semi_join
 
-    @register(
-        "q171_bloom_semi_join",
-        """
+
+@register(
+    "q171_bloom_semi_join",
+    """
         SELECT l_returnflag,
                CAST(COUNT(*) AS BIGINT) AS n_items,
                CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
@@ -6984,135 +6798,124 @@ def _init_q171() -> None:
                              WHERE o_orderpriority = '1-URGENT')
         GROUP BY l_returnflag
         """,
-        doc="Semi join with explicit bloom runtime filter (functions/"
-            "sketch.py bloom_semi_join): urgent-order keys collapse "
-            "to a bloom word array (one agg + bounded collect), the "
-            "lineitem scan is pruned by a codegen'd literal bit test "
-            "BEFORE any exchange, and only survivors reach the exact "
-            "verify semi join — shuffle volume tracks the match rate, "
-            "not the fact-table size. Result is exactly the semi "
-            "join; the oracle is the plain IN-subquery definition.",
+    doc="Semi join with explicit bloom runtime filter (functions/"
+        "sketch.py bloom_semi_join): urgent-order keys collapse "
+        "to a bloom word array (one agg + bounded collect), the "
+        "lineitem scan is pruned by a codegen'd literal bit test "
+        "BEFORE any exchange, and only survivors reach the exact "
+        "verify semi join — shuffle volume tracks the match rate, "
+        "not the fact-table size. Result is exactly the semi "
+        "join; the oracle is the plain IN-subquery definition.",
+)
+def q171_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem")
+    urgent = table(spark, sf_dir, "orders").filter(
+        "o_orderpriority = '1-URGENT'"
     )
-    def q171_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = table(spark, sf_dir, "lineitem")
-        urgent = table(spark, sf_dir, "orders").filter(
-            "o_orderpriority = '1-URGENT'"
-        )
-        hits = bloom_semi_join(li, urgent, "l_orderkey", "o_orderkey")
-        return hits.groupBy("l_returnflag").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-            dsum("l_extendedprice * (1 - l_discount)", 4).alias("revenue"),
-        )
-
-
-_init_q171()
+    hits = bloom_semi_join(li, urgent, "l_orderkey", "o_orderkey")
+    return hits.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_items"),
+        dsum("l_extendedprice * (1 - l_discount)", 4).alias("revenue"),
+    )
 
 
 # --------------------------------------------------------------------
 # q172 — margin-based bitext mining over the embedding space
 # --------------------------------------------------------------------
 
-def _init_q172() -> None:
-    from ..functions.similarity import bitext_margin_pairs, bitext_oracle_sql
+from ..functions.similarity import bitext_margin_pairs, bitext_oracle_sql
 
-    @register(
-        "q172_bitext_mining",
-        bitext_oracle_sql(k=4, threshold=1.1),
-        doc="Margin-based parallel-pair mining (functions/similarity.py "
-            "bitext_margin_pairs; Artetxe & Schwenk ratio margin, the "
-            "CCMatrix/LASER harvesting rule): label-parity halves of "
-            "the embedding table stand in for the two languages; best "
-            "cross-side cosine normalized by both endpoints' mean "
-            "top-4 neighborhood density. Two blocked-GEMM top-k "
-            "passes; hubness-robust where an absolute cosine cut is "
-            "not. Exact gate via rounded sims + decimal means.",
+
+@register(
+    "q172_bitext_mining",
+    bitext_oracle_sql(k=4, threshold=1.1),
+    doc="Margin-based parallel-pair mining (functions/similarity.py "
+        "bitext_margin_pairs; Artetxe & Schwenk ratio margin, the "
+        "CCMatrix/LASER harvesting rule): label-parity halves of "
+        "the embedding table stand in for the two languages; best "
+        "cross-side cosine normalized by both endpoints' mean "
+        "top-4 neighborhood density. Two blocked-GEMM top-k "
+        "passes; hubness-robust where an absolute cosine cut is "
+        "not. Exact gate via rounded sims + decimal means.",
+)
+def q172_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    return bitext_margin_pairs(
+        emb.filter("label % 2 = 0"),
+        emb.filter("label % 2 = 1"),
+        k=4,
+        threshold=1.1,
     )
-    def q172_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = table(spark, sf_dir, "embeddings")
-        return bitext_margin_pairs(
-            emb.filter("label % 2 = 0"),
-            emb.filter("label % 2 = 1"),
-            k=4,
-            threshold=1.1,
-        )
-
-
-_init_q172()
 
 
 # --------------------------------------------------------------------
 # q173 — temperature-based source rebalancing
 # --------------------------------------------------------------------
 
-def _init_q173() -> None:
-    from ..functions.sampling import temperature_mix, temperature_mix_sql
+from ..functions.sampling import temperature_mix, temperature_mix_sql
 
-    @register(
-        "q173_temperature_mix",
-        temperature_mix_sql(alpha=0.5, budget_frac=0.5),
-        doc="Temperature-based source sampling (functions/sampling.py "
-            "temperature_mix; the XLM-R/mT5 multilingual rebalancing "
-            "rule): per-source share n_i^0.5 / sum n_j^0.5 lifts "
-            "small sources toward uniform, realized as a portable "
-            "hash-bucket keep test — one dimension-sized size agg, "
-            "one narrow pass, append-stable. The one-scalar-recipe "
-            "complement of q150's explicit-share mix.",
+
+@register(
+    "q173_temperature_mix",
+    temperature_mix_sql(alpha=0.5, budget_frac=0.5),
+    doc="Temperature-based source sampling (functions/sampling.py "
+        "temperature_mix; the XLM-R/mT5 multilingual rebalancing "
+        "rule): per-source share n_i^0.5 / sum n_j^0.5 lifts "
+        "small sources toward uniform, realized as a portable "
+        "hash-bucket keep test — one dimension-sized size agg, "
+        "one narrow pass, append-stable. The one-scalar-recipe "
+        "complement of q150's explicit-share mix.",
+)
+def q173_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return temperature_mix(
+        table(spark, sf_dir, "documents"), alpha=0.5, budget_frac=0.5
     )
-    def q173_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return temperature_mix(
-            table(spark, sf_dir, "documents"), alpha=0.5, budget_frac=0.5
-        )
-
-
-_init_q173()
 
 
 # --------------------------------------------------------------------
 # q174/q175 — graph-structure audits: k-core backbone + assortativity
 # --------------------------------------------------------------------
 
-def _init_q174_q175() -> None:
-    # reuses _PART_EDGES2_SQL (the distinct-co-order >= 2 edge set
-    # shared with q141/q142)
-    from ..functions.graph import (
-        assortativity_oracle_sql,
-        degree_assortativity,
-        kcore,
-        kcore_oracle_sql,
-    )
-
-    @register(
-        "q174_part_kcore",
-        kcore_oracle_sql(_PART_EDGES2_SQL, k=3, rounds=4),
-        doc="3-core of the repeat co-purchase graph (functions/"
-            "graph.py kcore): fixed-round degree peeling to the dense "
-            "backbone — per round one degree agg over the shrinking "
-            "checkpointed edge set + two broadcast semi joins; rounds "
-            "unrolled in the DuckDB oracle, overshoot is a no-op.",
-    )
-    def q174_part_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-        edges = _part_cooccur(spark, sf_dir, min_cnt=2).select("src", "dst")
-        return kcore(edges, k=3, rounds=4)
-
-    @register(
-        "q175_degree_assortativity",
-        assortativity_oracle_sql(_PART_EDGES2_SQL),
-        doc="Degree assortativity (functions/graph.py "
-            "degree_assortativity; Newman 2002) of the repeat "
-            "co-purchase graph: Pearson correlation of endpoint "
-            "degrees from five DECIMAL(38,0) sufficient statistics "
-            "(the q144 OLS discipline) — the one-number structural "
-            "audit run before committing to a triangle/LPA/component "
-            "plan whose cost depends on hub shape.",
-    )
-    def q175_degree_assortativity(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        edges = _part_cooccur(spark, sf_dir, min_cnt=2).select("src", "dst")
-        return degree_assortativity(edges)
+# reuses _PART_EDGES2_SQL (the distinct-co-order >= 2 edge set
+# shared with q141/q142)
+from ..functions.graph import (
+    assortativity_oracle_sql,
+    degree_assortativity,
+    kcore,
+    kcore_oracle_sql,
+)
 
 
-_init_q174_q175()
+@register(
+    "q174_part_kcore",
+    kcore_oracle_sql(_PART_EDGES2_SQL, k=3, rounds=4),
+    doc="3-core of the repeat co-purchase graph (functions/"
+        "graph.py kcore): fixed-round degree peeling to the dense "
+        "backbone — per round one degree agg over the shrinking "
+        "checkpointed edge set + two broadcast semi joins; rounds "
+        "unrolled in the DuckDB oracle, overshoot is a no-op.",
+)
+def q174_part_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    edges = _part_cooccur(spark, sf_dir, min_cnt=2).select("src", "dst")
+    return kcore(edges, k=3, rounds=4)
+
+
+@register(
+    "q175_degree_assortativity",
+    assortativity_oracle_sql(_PART_EDGES2_SQL),
+    doc="Degree assortativity (functions/graph.py "
+        "degree_assortativity; Newman 2002) of the repeat "
+        "co-purchase graph: Pearson correlation of endpoint "
+        "degrees from five DECIMAL(38,0) sufficient statistics "
+        "(the q144 OLS discipline) — the one-number structural "
+        "audit run before committing to a triangle/LPA/component "
+        "plan whose cost depends on hub shape.",
+)
+def q175_degree_assortativity(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    edges = _part_cooccur(spark, sf_dir, min_cnt=2).select("src", "dst")
+    return degree_assortativity(edges)
 
 
 # --------------------------------------------------------------------
@@ -7175,66 +6978,63 @@ _Q177_RAW_URL_SQL = """
 """
 
 
-def _init_q177() -> None:
-    canon = T.canonicalize_url_sql("url")
+_q177_canon = T.canonicalize_url_sql("url")
 
-    @register(
-        "q177_url_canonical_dedup",
-        f"""
+
+@register(
+    "q177_url_canonical_dedup",
+    f"""
         WITH raw AS (
             SELECT doc_id, ({_Q177_RAW_URL_SQL}) AS url FROM documents),
-        canon AS (SELECT doc_id, {canon} AS curl FROM raw)
+        canon AS (SELECT doc_id, {_q177_canon} AS curl FROM raw)
         SELECT curl AS canonical_url,
                CAST(COUNT(*) AS BIGINT) AS n_raw,
                CAST(MIN(doc_id) AS BIGINT) AS keep_doc
         FROM canon GROUP BY curl
         """,
-        doc="Crawl-level URL dedup (functions/text.py "
-            "canonicalize_url; the Common Crawl / C4 normalization "
-            "step): lowercase host, strip fragments and utm/clid "
-            "tracking params, trim trailing slashes — all codegen'd "
-            "regexp expressions, zero Python — then keep the lowest "
-            "doc per canonical URL. Raw forms are synthesized "
-            "deterministically with case/param/slash/fragment "
-            "variation the canonicalizer must collapse.",
+    doc="Crawl-level URL dedup (functions/text.py "
+        "canonicalize_url; the Common Crawl / C4 normalization "
+        "step): lowercase host, strip fragments and utm/clid "
+        "tracking params, trim trailing slashes — all codegen'd "
+        "regexp expressions, zero Python — then keep the lowest "
+        "doc per canonical URL. Raw forms are synthesized "
+        "deterministically with case/param/slash/fragment "
+        "variation the canonicalizer must collapse.",
+)
+def q177_url_canonical_dedup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    raw = table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat(
+            F.lit("https://"),
+            F.when(
+                F.col("doc_id") % 7 == 0, F.lit("WWW.Example.ORG")
+            ).otherwise(F.lit("www.example.org")),
+            F.lit("/page/"),
+            (F.col("doc_id") % 250).cast("string"),
+            F.when(F.col("doc_id") % 5 == 0, F.lit("/")).otherwise(
+                F.lit("")
+            ),
+            F.when(
+                F.col("doc_id") % 3 == 0,
+                F.lit("?utm_source=feed&utm_campaign=x"),
+            ).otherwise(F.lit("")),
+            F.when(
+                F.col("doc_id") % 11 == 0, F.lit("#section-2")
+            ).otherwise(F.lit("")),
+        ).alias("url"),
     )
-    def q177_url_canonical_dedup(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        raw = table(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.concat(
-                F.lit("https://"),
-                F.when(
-                    F.col("doc_id") % 7 == 0, F.lit("WWW.Example.ORG")
-                ).otherwise(F.lit("www.example.org")),
-                F.lit("/page/"),
-                (F.col("doc_id") % 250).cast("string"),
-                F.when(F.col("doc_id") % 5 == 0, F.lit("/")).otherwise(
-                    F.lit("")
-                ),
-                F.when(
-                    F.col("doc_id") % 3 == 0,
-                    F.lit("?utm_source=feed&utm_campaign=x"),
-                ).otherwise(F.lit("")),
-                F.when(
-                    F.col("doc_id") % 11 == 0, F.lit("#section-2")
-                ).otherwise(F.lit("")),
-            ).alias("url"),
+    return (
+        raw.select(
+            "doc_id", T.canonicalize_url(F.col("url")).alias("curl")
         )
-        return (
-            raw.select(
-                "doc_id", T.canonicalize_url(F.col("url")).alias("curl")
-            )
-            .groupBy(F.col("curl").alias("canonical_url"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_raw"),
-                F.min("doc_id").cast("bigint").alias("keep_doc"),
-            )
+        .groupBy(F.col("curl").alias("canonical_url"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_raw"),
+            F.min("doc_id").cast("bigint").alias("keep_doc"),
         )
-
-
-_init_q177()
+    )
 
 
 # --------------------------------------------------------------------
@@ -7368,14 +7168,14 @@ def q178_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q179 — quality-weighted soft sampling (DCLM-style quality filter)
 # --------------------------------------------------------------------
 
-def _init_q179() -> None:
-    from ..functions.sampling import BUCKETS, hash_bucket, hash_bucket_sql
+from ..functions.sampling import BUCKETS, hash_bucket, hash_bucket_sql
 
-    bucket = hash_bucket_sql("doc_id", seed=7)
+_q179_bucket = hash_bucket_sql("doc_id", seed=7)
 
-    @register(
-        "q179_quality_weighted_sample",
-        f"""
+
+@register(
+    "q179_quality_weighted_sample",
+    f"""
         WITH scored AS (
             SELECT doc_id,
                    len(string_split(text, ' ')) AS n,
@@ -7391,61 +7191,57 @@ def _init_q179() -> None:
         SELECT doc_id, quality,
                round(greatest(quality, 0.05), 6) AS keep_rate
         FROM q
-        WHERE CAST({bucket} AS DOUBLE)
+        WHERE CAST({_q179_bucket} AS DOUBLE)
               < round(greatest(quality, 0.05), 6) * {float(BUCKETS)!r}
         """,
-        doc="Quality-weighted soft sampling (the DCLM/FineWeb move "
-            "from hard quality cuts to probabilistic keeps): keep "
-            "probability = quality score floored at 0.05, realized "
-            "with the portable hash bucket — row-local, append-"
-            "stable, reproducible; a document's fate never depends "
-            "on partitioning. Composes q33's scorer with q55's "
-            "hash-split machinery.",
+    doc="Quality-weighted soft sampling (the DCLM/FineWeb move "
+        "from hard quality cuts to probabilistic keeps): keep "
+        "probability = quality score floored at 0.05, realized "
+        "with the portable hash bucket — row-local, append-"
+        "stable, reproducible; a document's fate never depends "
+        "on partitioning. Composes q33's scorer with q55's "
+        "hash-split machinery.",
+)
+def q179_quality_weighted_sample(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    scored = docs.select(
+        "doc_id", T.quality_score("text").alias("quality")
     )
-    def q179_quality_weighted_sample(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        scored = docs.select(
-            "doc_id", T.quality_score("text").alias("quality")
+    rate = F.round(F.greatest(F.col("quality"), F.lit(0.05)), 6)
+    b = hash_bucket(F.col("doc_id"), seed=7)
+    return (
+        scored.withColumn("keep_rate", rate)
+        .filter(
+            b.cast("double")
+            < F.col("keep_rate") * F.lit(float(BUCKETS))
         )
-        rate = F.round(F.greatest(F.col("quality"), F.lit(0.05)), 6)
-        b = hash_bucket(F.col("doc_id"), seed=7)
-        return (
-            scored.withColumn("keep_rate", rate)
-            .filter(
-                b.cast("double")
-                < F.col("keep_rate") * F.lit(float(BUCKETS))
-            )
-            .select("doc_id", "quality", "keep_rate")
-        )
-
-
-_init_q179()
+        .select("doc_id", "quality", "keep_rate")
+    )
 
 
 # --------------------------------------------------------------------
 # q180 — hybrid retrieval: BM25 + embedding ranks fused by RRF
 # --------------------------------------------------------------------
 
-def _init_q180() -> None:
-    from ..functions.search import bm25_oracle_sql
-    from ..functions.similarity import topk_oracle_sql
+from ..functions.similarity import topk_oracle_sql
 
-    lex_inner = bm25_oracle_sql("documents", _BM25_TERMS, k=20)
-    sem_inner = topk_oracle_sql(k=20, query_pred="vec_id = 0")
+_q180_lex_inner = bm25_oracle_sql("documents", _BM25_TERMS, k=20)
+_q180_sem_inner = topk_oracle_sql(k=20, query_pred="vec_id = 0")
 
-    @register(
-        "q180_hybrid_rrf",
-        f"""
+
+@register(
+    "q180_hybrid_rrf",
+    f"""
         WITH lex AS (
             SELECT doc_id,
                    CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id)
                         AS BIGINT) AS lex_rank
-            FROM ({lex_inner})),
+            FROM ({_q180_lex_inner})),
         sem AS (
             SELECT neighbor_id AS doc_id, CAST(rank AS BIGINT) AS sem_rank
-            FROM ({sem_inner})),
+            FROM ({_q180_sem_inner})),
         fused AS (
             SELECT COALESCE(lex.doc_id, sem.doc_id) AS doc_id,
                    round(COALESCE(1.0 / (60 + lex_rank), 0)
@@ -7455,127 +7251,117 @@ def _init_q180() -> None:
         SELECT doc_id, rrf, lex_rank, sem_rank
         FROM fused ORDER BY rrf DESC, doc_id LIMIT 10
         """,
-        doc="Hybrid retrieval via reciprocal rank fusion (Cormack et "
-            "al. SIGIR'09, the standard lexical+vector fusion in RAG "
-            "stacks): q119's BM25 ranking and q26's exact embedding "
-            "top-k fused as sum 1/(60+rank) over a full outer join of "
-            "the two k-row candidate lists — rank arithmetic on "
-            "identical integers, so the fusion inherits both "
-            "retrievers' exact-gate determinism. Both inputs are "
-            "top-k frames; the fusion itself touches 2k rows "
-            "regardless of corpus size.",
+    doc="Hybrid retrieval via reciprocal rank fusion (Cormack et "
+        "al. SIGIR'09, the standard lexical+vector fusion in RAG "
+        "stacks): q119's BM25 ranking and q26's exact embedding "
+        "top-k fused as sum 1/(60+rank) over a full outer join of "
+        "the two k-row candidate lists — rank arithmetic on "
+        "identical integers, so the fusion inherits both "
+        "retrievers' exact-gate determinism. Both inputs are "
+        "top-k frames; the fusion itself touches 2k rows "
+        "regardless of corpus size.",
+)
+def q180_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.search import bm25_topk
+    from ..functions.similarity import brute_force_topk
+
+    docs = table(spark, sf_dir, "documents")
+    emb = table(spark, sf_dir, "embeddings")
+    lex = (
+        bm25_topk(docs, _BM25_TERMS, k=20)
+        .withColumn(
+            "lex_rank",
+            F.row_number()
+            .over(Window.orderBy(F.desc("bm25"), F.asc("doc_id")))
+            .cast("bigint"),
+        )
+        .select("doc_id", "lex_rank")
     )
-    def q180_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.search import bm25_topk
-        from ..functions.similarity import brute_force_topk
-
-        docs = table(spark, sf_dir, "documents")
-        emb = table(spark, sf_dir, "embeddings")
-        lex = (
-            bm25_topk(docs, _BM25_TERMS, k=20)
-            .withColumn(
-                "lex_rank",
-                F.row_number()
-                .over(Window.orderBy(F.desc("bm25"), F.asc("doc_id")))
-                .cast("bigint"),
-            )
-            .select("doc_id", "lex_rank")
+    sem = brute_force_topk(emb, emb.filter("vec_id = 0"), k=20).select(
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("rank").cast("bigint").alias("sem_rank"),
+    )
+    fused = (
+        lex.join(sem, "doc_id", "full_outer")
+        .select(
+            "doc_id",
+            F.round(
+                F.coalesce(
+                    F.lit(1.0) / (F.lit(60) + F.col("lex_rank")),
+                    F.lit(0.0),
+                )
+                + F.coalesce(
+                    F.lit(1.0) / (F.lit(60) + F.col("sem_rank")),
+                    F.lit(0.0),
+                ),
+                9,
+            ).alias("rrf"),
+            "lex_rank",
+            "sem_rank",
         )
-        sem = brute_force_topk(emb, emb.filter("vec_id = 0"), k=20).select(
-            F.col("neighbor_id").alias("doc_id"),
-            F.col("rank").cast("bigint").alias("sem_rank"),
-        )
-        fused = (
-            lex.join(sem, "doc_id", "full_outer")
-            .select(
-                "doc_id",
-                F.round(
-                    F.coalesce(
-                        F.lit(1.0) / (F.lit(60) + F.col("lex_rank")),
-                        F.lit(0.0),
-                    )
-                    + F.coalesce(
-                        F.lit(1.0) / (F.lit(60) + F.col("sem_rank")),
-                        F.lit(0.0),
-                    ),
-                    9,
-                ).alias("rrf"),
-                "lex_rank",
-                "sem_rank",
-            )
-        )
-        return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(10)
-
-
-_init_q180()
+    )
+    return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(10)
 
 
 # --------------------------------------------------------------------
 # q181 — span-corruption masking (T5/UL2 denoising data prep)
 # --------------------------------------------------------------------
 
-def _init_q181() -> None:
-    @register(
-        "q181_span_corruption",
-        T.span_corrupt_sql(mask_rate=0.15, seed=13),
-        doc="Span-corruption masking (functions/text.py span_corrupt; "
-            "the T5/UL2 denoising objective's data prep): ~15% of "
-            "token positions masked by the portable hash, maximal "
-            "masked runs collapsed to numbered sentinels, corrupted "
-            "input and sentinel+span target emitted as fingerprints — "
-            "deterministic and append-stable, so the same document "
-            "always produces the same corruption on any engine. One "
-            "tokenize pass, one doc-key shuffle for the "
-            "gaps-and-islands run arithmetic (the q123 trick), one "
-            "rollup.",
+@register(
+    "q181_span_corruption",
+    T.span_corrupt_sql(mask_rate=0.15, seed=13),
+    doc="Span-corruption masking (functions/text.py span_corrupt; "
+        "the T5/UL2 denoising objective's data prep): ~15% of "
+        "token positions masked by the portable hash, maximal "
+        "masked runs collapsed to numbered sentinels, corrupted "
+        "input and sentinel+span target emitted as fingerprints — "
+        "deterministic and append-stable, so the same document "
+        "always produces the same corruption on any engine. One "
+        "tokenize pass, one doc-key shuffle for the "
+        "gaps-and-islands run arithmetic (the q123 trick), one "
+        "rollup.",
+)
+def q181_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return T.span_corrupt(
+        table(spark, sf_dir, "documents"), mask_rate=0.15, seed=13
     )
-    def q181_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return T.span_corrupt(
-            table(spark, sf_dir, "documents"), mask_rate=0.15, seed=13
-        )
-
-
-_init_q181()
 
 
 # --------------------------------------------------------------------
 # q182 — join-size estimation from a coordinated key sample
 # --------------------------------------------------------------------
 
-def _init_q182() -> None:
-    from ..functions.sketch import join_size_estimate, join_size_oracle_sql
+from ..functions.sketch import join_size_estimate, join_size_oracle_sql
 
-    @register(
-        "q182_join_size_estimate",
-        join_size_oracle_sql(
-            "SELECT o_custkey AS k FROM orders",
-            "SELECT c_custkey AS k FROM customer",
-            sample_frac=0.05,
-        ),
-        doc="Equi-join output-size estimate (functions/sketch.py "
-            "join_size_estimate; end-biased coordinated sampling, "
-            "Estan & Naughton ICDE'06 family): both sides keep keys "
-            "under the SAME portable hash cut, so per-key count "
-            "products are exact within the sample and the estimate "
-            "is their mass / frac — the pre-flight audit before a "
-            "join whose skewed keys could multiply output 100x. One "
-            "narrow filter + count-agg per side; the join itself "
-            "never runs. Deterministic, so the estimator sits on the "
-            "exact gate; accuracy is bracket-tested in unit tests.",
+
+@register(
+    "q182_join_size_estimate",
+    join_size_oracle_sql(
+        "SELECT o_custkey AS k FROM orders",
+        "SELECT c_custkey AS k FROM customer",
+        sample_frac=0.05,
+    ),
+    doc="Equi-join output-size estimate (functions/sketch.py "
+        "join_size_estimate; end-biased coordinated sampling, "
+        "Estan & Naughton ICDE'06 family): both sides keep keys "
+        "under the SAME portable hash cut, so per-key count "
+        "products are exact within the sample and the estimate "
+        "is their mass / frac — the pre-flight audit before a "
+        "join whose skewed keys could multiply output 100x. One "
+        "narrow filter + count-agg per side; the join itself "
+        "never runs. Deterministic, so the estimator sits on the "
+        "exact gate; accuracy is bracket-tested in unit tests.",
+)
+def q182_join_size_estimate(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return join_size_estimate(
+        table(spark, sf_dir, "orders"),
+        table(spark, sf_dir, "customer"),
+        "o_custkey",
+        "c_custkey",
+        sample_frac=0.05,
     )
-    def q182_join_size_estimate(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        return join_size_estimate(
-            table(spark, sf_dir, "orders"),
-            table(spark, sf_dir, "customer"),
-            "o_custkey",
-            "c_custkey",
-            sample_frac=0.05,
-        )
-
-
-_init_q182()
 
 
 # --------------------------------------------------------------------
@@ -7959,27 +7745,24 @@ _Q188_FDS = [
 ]
 
 
-def _init_q188() -> None:
-    from ..functions.profile import fd_audit, fd_audit_oracle_sql
-
-    @register(
-        "q188_fd_audit",
-        fd_audit_oracle_sql("part", _Q188_FDS),
-        doc="Functional-dependency audit (functions/profile.py "
-            "fd_audit; the profiling primitive behind key discovery): "
-            "per candidate lhs->rhs, violating-group count and worst "
-            "fanout from one count-distinct agg over the pair frame — "
-            "run before trusting a column as a join key or collapsing "
-            "a denormalized table. Candidates here: the real key "
-            "(holds) and two plausible-but-false dependencies.",
-    )
-    def q188_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.profile import fd_audit as fda
-
-        return fda(table(spark, sf_dir, "part"), _Q188_FDS)
+from ..functions.profile import fd_audit, fd_audit_oracle_sql
 
 
-_init_q188()
+@register(
+    "q188_fd_audit",
+    fd_audit_oracle_sql("part", _Q188_FDS),
+    doc="Functional-dependency audit (functions/profile.py "
+        "fd_audit; the profiling primitive behind key discovery): "
+        "per candidate lhs->rhs, violating-group count and worst "
+        "fanout from one count-distinct agg over the pair frame — "
+        "run before trusting a column as a join key or collapsing "
+        "a denormalized table. Candidates here: the real key "
+        "(holds) and two plausible-but-false dependencies.",
+)
+def q188_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.profile import fd_audit as fda
+
+    return fda(table(spark, sf_dir, "part"), _Q188_FDS)
 
 
 # --------------------------------------------------------------------
@@ -7987,62 +7770,56 @@ _init_q188()
 # pattern; the incremental twin of q166)
 # --------------------------------------------------------------------
 
-def _init_q189() -> None:
-    from ..functions.sketch import heavy_hitters_oracle_sql
-
-    @register(
-        "q189_stream_heavy_hitters",
-        heavy_hitters_oracle_sql(
-            f"SELECT {_Q166_ITEM} AS item FROM events", _Q166_K
-        ),
-        doc="Streaming frequent items with batch parity (q105's "
-            "availableNow replay): the q166 item stream counted "
-            "INCREMENTALLY by a complete-mode streaming aggregation "
-            "— state is one row per distinct item, updated per "
-            "micro-batch, no event rescans — then thresholded at "
-            "cnt*(k+1) > N when the state table is read. Same "
-            "GROUP BY/HAVING oracle as q166: the stream's final "
-            "state must equal the batch answer exactly. State here is "
-            "one row per distinct item — right for bounded/hot "
-            "domains; for an unbounded cold tail pair the stream "
-            "with q166's Misra-Gries pruning instead of raw counts.",
-    )
-    def q189_stream_heavy_hitters(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        def build(source):
-            return (
-                source()
-                .select(_q166_item_col().alias("item"))
-                .groupBy("item")
-                .count()
-            )
-
-        sink = _replay_events(
-            spark,
-            sf_dir,
-            ["event_id", "ts"],
-            build,
-            mode="complete",
-            sink_prefix="q189",
-        )
-        n = sink.agg(F.sum("count").cast("bigint").alias("n"))
+@register(
+    "q189_stream_heavy_hitters",
+    heavy_hitters_oracle_sql(
+        f"SELECT {_Q166_ITEM} AS item FROM events", _Q166_K
+    ),
+    doc="Streaming frequent items with batch parity (q105's "
+        "availableNow replay): the q166 item stream counted "
+        "INCREMENTALLY by a complete-mode streaming aggregation "
+        "— state is one row per distinct item, updated per "
+        "micro-batch, no event rescans — then thresholded at "
+        "cnt*(k+1) > N when the state table is read. Same "
+        "GROUP BY/HAVING oracle as q166: the stream's final "
+        "state must equal the batch answer exactly. State here is "
+        "one row per distinct item — right for bounded/hot "
+        "domains; for an unbounded cold tail pair the stream "
+        "with q166's Misra-Gries pruning instead of raw counts.",
+)
+def q189_stream_heavy_hitters(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    def build(source):
         return (
-            sink.crossJoin(F.broadcast(n))
-            .filter(F.col("count") * (_Q166_K + 1) > F.col("n"))
-            .select(
-                "item",
-                F.col("count").cast("bigint").alias("cnt"),
-                "n",
-                F.round(
-                    F.col("count").cast("double") / F.col("n").cast("double"),
-                    6,
-                ).alias("share"),
-            )
+            source()
+            .select(_q166_item_col().alias("item"))
+            .groupBy("item")
+            .count()
         )
 
-
-_init_q189()
+    sink = _replay_events(
+        spark,
+        sf_dir,
+        ["event_id", "ts"],
+        build,
+        mode="complete",
+        sink_prefix="q189",
+    )
+    n = sink.agg(F.sum("count").cast("bigint").alias("n"))
+    return (
+        sink.crossJoin(F.broadcast(n))
+        .filter(F.col("count") * (_Q166_K + 1) > F.col("n"))
+        .select(
+            "item",
+            F.col("count").cast("bigint").alias("cnt"),
+            "n",
+            F.round(
+                F.col("count").cast("double") / F.col("n").cast("double"),
+                6,
+            ).alias("share"),
+        )
+    )
 
 
 # --------------------------------------------------------------------
@@ -8197,32 +7974,29 @@ def q191_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _init_q191() -> None:
-    from ..functions.graph import bradley_terry, bradley_terry_oracle_sql
+from ..functions.graph import bradley_terry, bradley_terry_oracle_sql
 
-    @register(
-        "q191_bradley_terry",
-        bradley_terry_oracle_sql(_Q191_PREFS_SQL, iterations=3),
-        doc="Bradley-Terry preference ratings (functions/graph.py "
-            "bradley_terry; Hunter's MM, 3 fixed rounds unrolled in "
-            "the oracle): rank-banded within-source quality "
-            "comparisons (each doc vs its next "
-            f"{Q191_RANK_BAND} lower-ranked neighbours clearing a "
-            "0.05 margin — O(band*n) pairs via an exploded-offset "
-            "equi-join, replacing round-3's O(group^2) all-pairs "
-            "self-join) become (winner, loser) games; ratings "
-            "iterate as broadcast state over the symmetric "
-            "comparison graph with per-round round(9) and decimal "
-            "denominator sums — the reward-ranking / arena-scoring "
-            "aggregate, on the exact gate like its pagerank sibling.",
+
+@register(
+    "q191_bradley_terry",
+    bradley_terry_oracle_sql(_Q191_PREFS_SQL, iterations=3),
+    doc="Bradley-Terry preference ratings (functions/graph.py "
+        "bradley_terry; Hunter's MM, 3 fixed rounds unrolled in "
+        "the oracle): rank-banded within-source quality "
+        "comparisons (each doc vs its next "
+        f"{Q191_RANK_BAND} lower-ranked neighbours clearing a "
+        "0.05 margin — O(band*n) pairs via an exploded-offset "
+        "equi-join, replacing round-3's O(group^2) all-pairs "
+        "self-join) become (winner, loser) games; ratings "
+        "iterate as broadcast state over the symmetric "
+        "comparison graph with per-round round(9) and decimal "
+        "denominator sums — the reward-ranking / arena-scoring "
+        "aggregate, on the exact gate like its pagerank sibling.",
+)
+def q191_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return bradley_terry(
+        q191_preference_pairs(spark, sf_dir), iterations=3
     )
-    def q191_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return bradley_terry(
-            q191_preference_pairs(spark, sf_dir), iterations=3
-        )
-
-
-_init_q191()
 
 
 # --------------------------------------------------------------------
@@ -8506,52 +8280,49 @@ def q195_sentence_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q196 — leakage-safe splits: split by duplicate CLUSTER, not by doc
 # --------------------------------------------------------------------
 
-def _init_q196() -> None:
-    comp_inner = G.components_oracle_sql(D.jaccard_oracle_sql(threshold=0.8))
-    case = SA.hash_split_case_sql("COALESCE(c.cluster_id, d.doc_id)", _SPLITS)
+_q196_comp_inner = G.components_oracle_sql(D.jaccard_oracle_sql(threshold=0.8))
+_q196_case = SA.hash_split_case_sql("COALESCE(c.cluster_id, d.doc_id)", _SPLITS)
 
-    @register(
-        "q196_leakage_safe_split",
-        f"""
-        WITH comp AS ({comp_inner})
+
+@register(
+    "q196_leakage_safe_split",
+    f"""
+        WITH comp AS ({_q196_comp_inner})
         SELECT d.doc_id,
                CAST(COALESCE(c.cluster_id, d.doc_id) AS BIGINT)
                    AS split_key,
-               {case} AS split
+               {_q196_case} AS split
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
         """,
-        doc="Leakage-safe train/val/test split: near-duplicate "
-            "CLUSTERS (q54's exact-Jaccard components) share one "
-            "split key — a near-copy of a training document can "
-            "never land in the test set, the group-split discipline "
-            "every dedup-aware eval needs; clean documents key on "
-            "themselves. Composes dedup_clusters with the row-local "
-            "q55 hash split; the only extra cost over q55 is the "
-            "pair-stream closure, joined back as a dimension-sized "
-            "frame.",
+    doc="Leakage-safe train/val/test split: near-duplicate "
+        "CLUSTERS (q54's exact-Jaccard components) share one "
+        "split key — a near-copy of a training document can "
+        "never land in the test set, the group-split discipline "
+        "every dedup-aware eval needs; clean documents key on "
+        "themselves. Composes dedup_clusters with the row-local "
+        "q55 hash split; the only extra cost over q55 is the "
+        "pair-stream closure, joined back as a dimension-sized "
+        "frame.",
+)
+def q196_leakage_safe_split(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    pairs = D.jaccard_pairs(D.shingle_rows(docs), threshold=0.8)
+    clusters = G.dedup_clusters(docs, pairs).select(
+        "doc_id", "cluster_id"
     )
-    def q196_leakage_safe_split(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        pairs = D.jaccard_pairs(D.shingle_rows(docs), threshold=0.8)
-        clusters = G.dedup_clusters(docs, pairs).select(
-            "doc_id", "cluster_id"
+    keyed = (
+        docs.select("doc_id")
+        .join(clusters, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("cluster_id", "doc_id")
+            .cast("bigint")
+            .alias("split_key"),
         )
-        keyed = (
-            docs.select("doc_id")
-            .join(clusters, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("cluster_id", "doc_id")
-                .cast("bigint")
-                .alias("split_key"),
-            )
-        )
-        return SA.hash_split(keyed, "split_key", _SPLITS)
-
-
-_init_q196()
+    )
+    return SA.hash_split(keyed, "split_key", _SPLITS)
 
 
 # --------------------------------------------------------------------
@@ -8737,45 +8508,40 @@ def q198_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q199_FOLDS = 5
 
 
-def _init_q199() -> None:
-    from ..functions.sampling import hash_bucket, hash_bucket_sql
+_q199_bucket = hash_bucket_sql("doc_id", seed=11)
 
-    bucket = hash_bucket_sql("doc_id", seed=11)
 
-    @register(
-        "q199_kfold_assignment",
-        f"""
+@register(
+    "q199_kfold_assignment",
+    f"""
         WITH folds AS (
             SELECT doc_id, lang,
-                   CAST(({bucket}) % {_Q199_FOLDS} AS INTEGER) AS fold
+                   CAST(({_q199_bucket}) % {_Q199_FOLDS} AS INTEGER) AS fold
             FROM documents)
         SELECT fold, lang,
                CAST(COUNT(*) AS BIGINT) AS n
         FROM folds GROUP BY fold, lang
         """,
-        doc="k-fold cross-validation assignment (hash-deterministic, "
-            "append-stable — a document's fold never changes when the "
-            "corpus grows, unlike rand() folds) with the per-fold "
-            "class-balance audit that validates the folds are usable: "
-            "fold x language counts from one aggregation. Row-local "
-            "assignment, the q55 discipline applied to evaluation "
-            "protocol.",
-    )
-    def q199_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-        b = hash_bucket(F.col("doc_id"), seed=11)
-        return (
-            table(spark, sf_dir, "documents")
-            .select(
-                "doc_id",
-                "lang",
-                (b % _Q199_FOLDS).cast("int").alias("fold"),
-            )
-            .groupBy("fold", "lang")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    doc="k-fold cross-validation assignment (hash-deterministic, "
+        "append-stable — a document's fold never changes when the "
+        "corpus grows, unlike rand() folds) with the per-fold "
+        "class-balance audit that validates the folds are usable: "
+        "fold x language counts from one aggregation. Row-local "
+        "assignment, the q55 discipline applied to evaluation "
+        "protocol.",
+)
+def q199_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    b = hash_bucket(F.col("doc_id"), seed=11)
+    return (
+        table(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            "lang",
+            (b % _Q199_FOLDS).cast("int").alias("fold"),
         )
-
-
-_init_q199()
+        .groupBy("fold", "lang")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
 
 
 # --------------------------------------------------------------------
@@ -8995,69 +8761,63 @@ def q201_skew_salted_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q202 — LSH-gated bitext mining (the billion-pair path for q172)
 # --------------------------------------------------------------------
 
-def _init_q202() -> None:
-    from ..functions.similarity import bitext_lsh_oracle_sql, bitext_margin_pairs
+from ..functions.similarity import bitext_lsh_oracle_sql
 
-    @register(
-        "q202_bitext_mining_lsh",
-        bitext_lsh_oracle_sql(k=4, threshold=1.1, dim=64),
-        doc="LSH-gated margin-based bitext mining (functions/"
-            "similarity.py bitext_margin_pairs method='lsh'): each "
-            "direction's top-k comes from ladder-sized hyperplane "
-            "buckets (rung from that direction's corpus count) instead "
-            "of the O(|A|*|B|) GEMM — the q35->q136 exact/LSH pairing "
-            "applied to the two-sided miner, so the billion-pair "
-            "regime is oracle-gated rather than asserted. The oracle "
-            "replicates both directions' candidate generation "
-            "bit-exactly (md5 plane weights, per-direction rung "
-            "CASE) and scores exact cosine + margin on candidates "
-            "only.",
+
+@register(
+    "q202_bitext_mining_lsh",
+    bitext_lsh_oracle_sql(k=4, threshold=1.1, dim=64),
+    doc="LSH-gated margin-based bitext mining (functions/"
+        "similarity.py bitext_margin_pairs method='lsh'): each "
+        "direction's top-k comes from ladder-sized hyperplane "
+        "buckets (rung from that direction's corpus count) instead "
+        "of the O(|A|*|B|) GEMM — the q35->q136 exact/LSH pairing "
+        "applied to the two-sided miner, so the billion-pair "
+        "regime is oracle-gated rather than asserted. The oracle "
+        "replicates both directions' candidate generation "
+        "bit-exactly (md5 plane weights, per-direction rung "
+        "CASE) and scores exact cosine + margin on candidates "
+        "only.",
+)
+def q202_bitext_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    return bitext_margin_pairs(
+        emb.filter("label % 2 = 0"),
+        emb.filter("label % 2 = 1"),
+        k=4,
+        threshold=1.1,
+        method="lsh",
+        dim=64,
     )
-    def q202_bitext_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = table(spark, sf_dir, "embeddings")
-        return bitext_margin_pairs(
-            emb.filter("label % 2 = 0"),
-            emb.filter("label % 2 = 1"),
-            k=4,
-            threshold=1.1,
-            method="lsh",
-            dim=64,
-        )
-
-
-_init_q202()
 
 
 # --------------------------------------------------------------------
 # q203 — z-order layout statistics (multi-dimensional file skipping)
 # --------------------------------------------------------------------
 
-def _init_q203() -> None:
-    from ..functions.layout import zorder_bucket_stats, zorder_stats_sql
+from ..functions.layout import zorder_bucket_stats, zorder_stats_sql
 
-    @register(
-        "q203_zorder_layout",
-        zorder_stats_sql("lineitem", "l_partkey", "l_suppkey"),
-        doc="Z-order layout statistics (functions/layout.py; Morton "
-            "interleaving, the Delta/Iceberg OPTIMIZE ZORDER BY and "
-            "UB-tree idea): lineitem's (l_partkey, l_suppkey) bits "
-            "interleave into a 32-bit z-value and rows group by the "
-            "z>>22 file grain; per-bucket min/max of BOTH keys is "
-            "exactly what a writer puts in parquet footers, and under "
-            "z-order both ranges are tight simultaneously — a filter "
-            "on EITHER key skips most files, where a single-column "
-            "sort serves only its own column. Pure shift/and "
-            "arithmetic, codegen end to end, identical in both "
-            "engines — layout planning on the exact gate beside "
-            "q176's partition pruning and q194's range boundaries.",
+
+@register(
+    "q203_zorder_layout",
+    zorder_stats_sql("lineitem", "l_partkey", "l_suppkey"),
+    doc="Z-order layout statistics (functions/layout.py; Morton "
+        "interleaving, the Delta/Iceberg OPTIMIZE ZORDER BY and "
+        "UB-tree idea): lineitem's (l_partkey, l_suppkey) bits "
+        "interleave into a 32-bit z-value and rows group by the "
+        "z>>22 file grain; per-bucket min/max of BOTH keys is "
+        "exactly what a writer puts in parquet footers, and under "
+        "z-order both ranges are tight simultaneously — a filter "
+        "on EITHER key skips most files, where a single-column "
+        "sort serves only its own column. Pure shift/and "
+        "arithmetic, codegen end to end, identical in both "
+        "engines — layout planning on the exact gate beside "
+        "q176's partition pruning and q194's range boundaries.",
+)
+def q203_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return zorder_bucket_stats(
+        table(spark, sf_dir, "lineitem"), "l_partkey", "l_suppkey"
     )
-    def q203_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return zorder_bucket_stats(
-            table(spark, sf_dir, "lineitem"), "l_partkey", "l_suppkey"
-        )
-
-
-_init_q203()
 
 
 # --------------------------------------------------------------------
@@ -9141,49 +8901,46 @@ def q204_stream_interval_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q205 — perceptual-hash near-dup for the image modality
 # --------------------------------------------------------------------
 
-def _init_q205() -> None:
-    from ..functions.similarity import sign_sketch60_sql
+from ..functions.similarity import sign_sketch60_sql
 
-    oracle = f"""
+_q205_oracle = f"""
     WITH {sign_sketch60_sql()}
     SELECT doc_id AS vec_id, simhash AS sketch,
            CAST(bit_count(simhash) AS INTEGER) AS popcount
     FROM sigs
     """
 
-    @register(
-        "q205_binary_sketches",
-        oracle,
-        doc="Binary sign-sketches for the embedding store (functions/"
-            "similarity.py sign_sketch60): each dense vector compacts "
-            "to a 60-bit code (bit = component above the vector's own "
-            "mean — the aHash rule on decoded features, simplest of "
-            "the ITQ/sign-projection binary-code family). Cross-engine "
-            "exact by construction: components quantize to a 1e-6 "
-            "BIGINT grid via IEEE-exact double ops and the bit rule "
-            "is pure integer arithmetic (q_i*60 > sum q) — the r4 "
-            "FLOAT->DECIMAL mean diverged ~1.5e-11 between engines "
-            "and flipped near-threshold bits. The code table is the "
-            "memory/compute layout real media-dedup and billion-scale "
-            "ANN stores keep hot: Hamming on 60 bits instead of float "
-            "dot products, 34x smaller than the float32 vectors. "
-            "Near-dup pair-finding composes with dedup."
-            "simhash_band_pairs (guaranteed-complete Manku banding) — "
-            "oracle-gated end-to-end in q206. Shape: posexplode to "
-            "narrow (id, i, q) rows, two hash aggregates (two small "
-            "shuffles on the narrow rows); no driver work, no Python.",
+
+@register(
+    "q205_binary_sketches",
+    _q205_oracle,
+    doc="Binary sign-sketches for the embedding store (functions/"
+        "similarity.py sign_sketch60): each dense vector compacts "
+        "to a 60-bit code (bit = component above the vector's own "
+        "mean — the aHash rule on decoded features, simplest of "
+        "the ITQ/sign-projection binary-code family). Cross-engine "
+        "exact by construction: components quantize to a 1e-6 "
+        "BIGINT grid via IEEE-exact double ops and the bit rule "
+        "is pure integer arithmetic (q_i*60 > sum q) — the r4 "
+        "FLOAT->DECIMAL mean diverged ~1.5e-11 between engines "
+        "and flipped near-threshold bits. The code table is the "
+        "memory/compute layout real media-dedup and billion-scale "
+        "ANN stores keep hot: Hamming on 60 bits instead of float "
+        "dot products, 34x smaller than the float32 vectors. "
+        "Near-dup pair-finding composes with dedup."
+        "simhash_band_pairs (guaranteed-complete Manku banding) — "
+        "oracle-gated end-to-end in q206. Shape: posexplode to "
+        "narrow (id, i, q) rows, two hash aggregates (two small "
+        "shuffles on the narrow rows); no driver work, no Python.",
+)
+def q205_binary_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.similarity import sign_sketch60
+
+    return sign_sketch60(table(spark, sf_dir, "embeddings")).select(
+        "vec_id",
+        "sketch",
+        F.bit_count("sketch").cast("int").alias("popcount"),
     )
-    def q205_binary_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.similarity import sign_sketch60
-
-        return sign_sketch60(table(spark, sf_dir, "embeddings")).select(
-            "vec_id",
-            "sketch",
-            F.bit_count("sketch").cast("int").alias("popcount"),
-        )
-
-
-_init_q205()
 
 
 def _q206_variant(e: DataFrame, off: int) -> DataFrame:
@@ -9210,17 +8967,16 @@ def _q206_variant(e: DataFrame, off: int) -> DataFrame:
     )
 
 
-def _init_q206() -> None:
-    from ..functions.dedup import _band_pairs_sql
+from ..functions.dedup import _band_pairs_sql
 
-    off = 1 << 40
-    # the sketch pipeline's own grid quantization, applied to (a) the
-    # corpus and (b) a deterministic near-dup batch derived from it —
-    # each vector with component (vec_id % 60) zeroed. Zeroing a
-    # float to literal 0.0 is exact on every engine, so the variant's
-    # grid cells equal the original's except one, and both engines
-    # see byte-identical inputs to the integer bit rule.
-    oracle = f"""
+_q206_off = 1 << 40
+# the sketch pipeline's own grid quantization, applied to (a) the
+# corpus and (b) a deterministic near-dup batch derived from it —
+# each vector with component (vec_id % 60) zeroed. Zeroing a
+# float to literal 0.0 is exact on every engine, so the variant's
+# grid cells equal the original's except one, and both engines
+# see byte-identical inputs to the integer bit rule.
+_q206_oracle = f"""
     WITH base AS (
         SELECT vec_id AS doc_id, i - 1 AS i,
                CAST(floor(CAST(embedding[i] AS DOUBLE) * 1e6 + 0.5)
@@ -9230,7 +8986,7 @@ def _init_q206() -> None:
     cells AS (
         SELECT doc_id, i, q FROM base
         UNION ALL
-        SELECT doc_id + {off}, i,
+        SELECT doc_id + {_q206_off}, i,
                CASE WHEN i = doc_id % 60 THEN 0 ELSE q END
         FROM base),
     tot AS (SELECT doc_id, CAST(SUM(q) AS BIGINT) AS s
@@ -9245,221 +9001,199 @@ def _init_q206() -> None:
     {_band_pairs_sql(4, 60, 6)}
     """
 
-    @register(
-        "q206_sketch_neardup",
-        oracle,
-        doc="End-to-end near-dup discovery over binary sketches "
-            "(functions/similarity.py sketch_neardup_pairs): "
-            "sign_sketch60 -> Manku combination banding -> exact "
-            "Hamming verify — the composed pipeline a media-dedup "
-            "store runs, now oracle-gated whole (r4 verdict ask #2; "
-            "previously pinned only by a planted-pair unit test). "
-            "The fixture has no natural Hamming<=4 pair (min is 13), "
-            "so the query derives a near-dup batch from the corpus "
-            "itself: every vector unioned with a variant whose "
-            "component (vec_id % 60) is zeroed — a deterministic, "
-            "cross-engine-exact float edit — and the pipeline must "
-            "recover exactly the planted original<->variant pairs "
-            "(500 at sf0.01, verified: zero spurious pairs). "
-            "Embedding-scale analogue of the reference Uniquer "
-            "contract (jobs/convertors/job-uniquer.js:15-26). Shape: "
-            "narrow-row aggregates + 15 combo keys/doc over a 20-bit "
-            "key space; candidate volume tracks near-dup density, "
-            "never corpus^2.",
+
+@register(
+    "q206_sketch_neardup",
+    _q206_oracle,
+    doc="End-to-end near-dup discovery over binary sketches "
+        "(functions/similarity.py sketch_neardup_pairs): "
+        "sign_sketch60 -> Manku combination banding -> exact "
+        "Hamming verify — the composed pipeline a media-dedup "
+        "store runs, now oracle-gated whole (r4 verdict ask #2; "
+        "previously pinned only by a planted-pair unit test). "
+        "The fixture has no natural Hamming<=4 pair (min is 13), "
+        "so the query derives a near-dup batch from the corpus "
+        "itself: every vector unioned with a variant whose "
+        "component (vec_id % 60) is zeroed — a deterministic, "
+        "cross-engine-exact float edit — and the pipeline must "
+        "recover exactly the planted original<->variant pairs "
+        "(500 at sf0.01, verified: zero spurious pairs). "
+        "Embedding-scale analogue of the reference Uniquer "
+        "contract (jobs/convertors/job-uniquer.js:15-26). Shape: "
+        "narrow-row aggregates + 15 combo keys/doc over a 20-bit "
+        "key space; candidate volume tracks near-dup density, "
+        "never corpus^2.",
+)
+def q206_sketch_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.similarity import sketch_neardup_pairs
+
+    e = (
+        table(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull())
+        .select("vec_id", "embedding")
     )
-    def q206_sketch_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.similarity import sketch_neardup_pairs
-
-        e = (
-            table(spark, sf_dir, "embeddings")
-            .filter(F.col("embedding").isNotNull())
-            .select("vec_id", "embedding")
-        )
-        return sketch_neardup_pairs(
-            e.unionByName(_q206_variant(e, off)), max_hamming=4
-        )
-
-
-_init_q206()
+    return sketch_neardup_pairs(
+        e.unionByName(_q206_variant(e, _q206_off)), max_hamming=4
+    )
 
 
 # --------------------------------------------------------------------
 # q207 — capped SemDeDup: the 100 TB-shape practical variant
 # --------------------------------------------------------------------
 
-def _init_q207() -> None:
-    from ..functions.similarity import semdedup, semdedup_capped_oracle_sql
+from ..functions.similarity import semdedup_capped_oracle_sql
 
-    @register(
-        "q207_semdedup_capped",
-        semdedup_capped_oracle_sql(
-            n_clusters=16, max_cluster_size=20, threshold=0.35
-        ),
-        doc="Capped SemDeDup (functions/similarity.py semdedup "
-            "mode='capped'; Abbas et al. 2023's practical variant, "
-            "r4/r5 verdict ask): FIXED cluster count (seed stride "
-            "ceil(n/k), so assignment is O(n*k) GEMM flops — linear, "
-            "vs q169's exact-O(n^1.5) sqrt rule) plus a hard "
-            "max_cluster_size cap (in-cluster pairing runs within "
-            "id-ordered chunks, so pair work is <= n*cap however "
-            "skewed assignment gets). Assignment is an Arrow-batched "
-            "numpy GEMM against the broadcast centroid matrix with "
-            "squared distances quantized to the 1e-6 half-up grid "
-            "(cross-engine-exact vs the oracle's decimal sum, same "
-            "rule as q205), ties to the smallest cluster id. The "
-            "parameters (k=16, cap=20) are sized so the cap actually "
-            "engages at sf0.01 (~31 vectors/cluster -> 2 chunks). "
-            "Agreement vs exact mode is bracketed in "
-            "tests/test_similarity.py.",
+
+@register(
+    "q207_semdedup_capped",
+    semdedup_capped_oracle_sql(
+        n_clusters=16, max_cluster_size=20, threshold=0.35
+    ),
+    doc="Capped SemDeDup (functions/similarity.py semdedup "
+        "mode='capped'; Abbas et al. 2023's practical variant, "
+        "r4/r5 verdict ask): FIXED cluster count (seed stride "
+        "ceil(n/k), so assignment is O(n*k) GEMM flops — linear, "
+        "vs q169's exact-O(n^1.5) sqrt rule) plus a hard "
+        "max_cluster_size cap (in-cluster pairing runs within "
+        "id-ordered chunks, so pair work is <= n*cap however "
+        "skewed assignment gets). Assignment is an Arrow-batched "
+        "numpy GEMM against the broadcast centroid matrix with "
+        "squared distances quantized to the 1e-6 half-up grid "
+        "(cross-engine-exact vs the oracle's decimal sum, same "
+        "rule as q205), ties to the smallest cluster id. The "
+        "parameters (k=16, cap=20) are sized so the cap actually "
+        "engages at sf0.01 (~31 vectors/cluster -> 2 chunks). "
+        "Agreement vs exact mode is bracketed in "
+        "tests/test_similarity.py.",
+)
+def q207_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return semdedup(
+        table(spark, sf_dir, "embeddings"),
+        threshold=0.35,
+        mode="capped",
+        n_clusters=16,
+        max_cluster_size=20,
     )
-    def q207_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return semdedup(
-            table(spark, sf_dir, "embeddings"),
-            threshold=0.35,
-            mode="capped",
-            n_clusters=16,
-            max_cluster_size=20,
-        )
-
-
-_init_q207()
 
 
 # --------------------------------------------------------------------
 # q208 — k-dimensional z-order layout (3 columns)
 # --------------------------------------------------------------------
 
-def _init_q208() -> None:
-    from ..functions.layout import zorder_bucket_stats, zorder_stats_sql
-
-    @register(
-        "q208_zorder_kd",
-        zorder_stats_sql(
-            "lineitem", "l_partkey", "l_suppkey", "l_orderkey",
-            bits=10, n_buckets=256,
-        ),
-        doc="k-dimensional z-order layout statistics (functions/"
-            "layout.py, generalized from q203's 2-D form per the r4/r5 "
-            "verdict ask — Delta/Iceberg users z-order 3-4 columns): "
-            "lineitem's (l_partkey, l_suppkey, l_orderkey) each "
-            "quantize to 10 bits, interleave into a 30-bit z-value "
-            "(column j's bit i at position i*k+j), and rows group by "
-            "the 256-bucket file grain; per-bucket min/max of ALL "
-            "THREE keys stays tight simultaneously, so a filter on "
-            "any one key prunes most files. Pure shift/and integer "
-            "arithmetic, codegen end to end, bit-identical across "
-            "engines. The written-layout read-back (per-file footer "
-            "boxes + pushed filters) is gated in tests/test_plans.py.",
+@register(
+    "q208_zorder_kd",
+    zorder_stats_sql(
+        "lineitem", "l_partkey", "l_suppkey", "l_orderkey",
+        bits=10, n_buckets=256,
+    ),
+    doc="k-dimensional z-order layout statistics (functions/"
+        "layout.py, generalized from q203's 2-D form per the r4/r5 "
+        "verdict ask — Delta/Iceberg users z-order 3-4 columns): "
+        "lineitem's (l_partkey, l_suppkey, l_orderkey) each "
+        "quantize to 10 bits, interleave into a 30-bit z-value "
+        "(column j's bit i at position i*k+j), and rows group by "
+        "the 256-bucket file grain; per-bucket min/max of ALL "
+        "THREE keys stays tight simultaneously, so a filter on "
+        "any one key prunes most files. Pure shift/and integer "
+        "arithmetic, codegen end to end, bit-identical across "
+        "engines. The written-layout read-back (per-file footer "
+        "boxes + pushed filters) is gated in tests/test_plans.py.",
+)
+def q208_zorder_kd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return zorder_bucket_stats(
+        table(spark, sf_dir, "lineitem"),
+        "l_partkey", "l_suppkey", "l_orderkey",
+        bits=10, n_buckets=256,
     )
-    def q208_zorder_kd(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return zorder_bucket_stats(
-            table(spark, sf_dir, "lineitem"),
-            "l_partkey", "l_suppkey", "l_orderkey",
-            bits=10, n_buckets=256,
-        )
-
-
-_init_q208()
 
 
 # --------------------------------------------------------------------
 # q209 — exact duplicated-substring spans (ExactSubstr dedup)
 # --------------------------------------------------------------------
 
-def _init_q209() -> None:
-    from ..functions.dedup import duplicate_spans, duplicate_spans_sql
-
-    @register(
-        "q209_duplicate_spans",
-        duplicate_spans_sql(k=8),
-        doc="Exact duplicated-substring spans (functions/dedup.py "
-            "duplicate_spans; Lee et al. 2022 ExactSubstr dedup — the "
-            "training-data hygiene step beside MinHash q22 / SimHash "
-            "q23 whole-doc dedup): every 8-token window md5-hashes "
-            "(the only cross-engine-exact hash); windows whose hash "
-            "repeats corpus-wide flag their positions, and a per-doc "
-            "gaps-and-islands merge reconstructs the maximal repeated "
-            "spans the paper deletes. One narrow row per token "
-            "window, one hash agg (map-side combine), one join back, "
-            "one per-doc window — linear end to end, nothing "
-            "quadratic, hash key space scales with the corpus.",
-    )
-    def q209_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return duplicate_spans(table(spark, sf_dir, "documents"), k=8)
+from ..functions.dedup import duplicate_spans, duplicate_spans_sql
 
 
-_init_q209()
+@register(
+    "q209_duplicate_spans",
+    duplicate_spans_sql(k=8),
+    doc="Exact duplicated-substring spans (functions/dedup.py "
+        "duplicate_spans; Lee et al. 2022 ExactSubstr dedup — the "
+        "training-data hygiene step beside MinHash q22 / SimHash "
+        "q23 whole-doc dedup): every 8-token window md5-hashes "
+        "(the only cross-engine-exact hash); windows whose hash "
+        "repeats corpus-wide flag their positions, and a per-doc "
+        "gaps-and-islands merge reconstructs the maximal repeated "
+        "spans the paper deletes. One narrow row per token "
+        "window, one hash agg (map-side combine), one join back, "
+        "one per-doc window — linear end to end, nothing "
+        "quadratic, hash key space scales with the corpus.",
+)
+def q209_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return duplicate_spans(table(spark, sf_dir, "documents"), k=8)
 
 
 # --------------------------------------------------------------------
 # q210 — per-segment SimHash dedup groups (the groups form)
 # --------------------------------------------------------------------
 
-def _init_q210() -> None:
-    @register(
-        "q210_simhash_dedup_groups",
-        G.components_oracle_sql(
-            D.simhash60_oracle_sql(
-                max_hamming=2, segment="concat_ws('|', lang, source)"
-            )
-        ),
-        doc="Groups-form SimHash dedup, segment-scoped: the operator "
-            "SCALE_BENCH's q23 analysis prescribes for dense corpora — "
-            "emit keep/drop clusters (output ~n) instead of the full "
-            "pair list (output ~n^2 on near-duplicate-heavy data). "
-            "simhash60 carries the (lang,source) segment key through "
-            "the Arrow batch (no join-back shuffle), Manku banding "
-            "folds the segment into the 20-bit combo keys so "
-            "candidates never cross segments, and the transitive "
-            "closure runs as graph.blocked_components — ONE shuffle of "
-            "per-segment union-find instead of the O(log^2 n)-round "
-            "global algorithm, valid because (lang,source) partitions "
-            "the nodes (each doc has exactly one segment). Output: "
-            "(doc_id, cluster_id=min id, is_canonical) for docs with "
-            ">=1 same-segment near-dup at hamming<=2.",
+@register(
+    "q210_simhash_dedup_groups",
+    G.components_oracle_sql(
+        D.simhash60_oracle_sql(
+            max_hamming=2, segment="concat_ws('|', lang, source)"
+        )
+    ),
+    doc="Groups-form SimHash dedup, segment-scoped: the operator "
+        "SCALE_BENCH's q23 analysis prescribes for dense corpora — "
+        "emit keep/drop clusters (output ~n) instead of the full "
+        "pair list (output ~n^2 on near-duplicate-heavy data). "
+        "simhash60 carries the (lang,source) segment key through "
+        "the Arrow batch (no join-back shuffle), Manku banding "
+        "folds the segment into the 20-bit combo keys so "
+        "candidates never cross segments, and the transitive "
+        "closure runs as graph.blocked_components — ONE shuffle of "
+        "per-segment union-find instead of the O(log^2 n)-round "
+        "global algorithm, valid because (lang,source) partitions "
+        "the nodes (each doc has exactly one segment). Output: "
+        "(doc_id, cluster_id=min id, is_canonical) for docs with "
+        ">=1 same-segment near-dup at hamming<=2.",
+)
+def q210_simhash_dedup_groups(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").withColumn(
+        "seg", F.concat_ws("|", "lang", "source")
     )
-    def q210_simhash_dedup_groups(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").withColumn(
-            "seg", F.concat_ws("|", "lang", "source")
-        )
-        sigs = D.simhash60(docs, carry_cols=["seg"])
-        pairs = D.simhash_band_pairs(
-            sigs, max_hamming=2, segment_col="seg",
-            collapse_identical=True,
-        )
-        return G.dedup_clusters(docs, pairs, block_col="seg")
-
-
-_init_q210()
+    sigs = D.simhash60(docs, carry_cols=["seg"])
+    pairs = D.simhash_band_pairs(
+        sigs, max_hamming=2, segment_col="seg",
+        collapse_identical=True,
+    )
+    return G.dedup_clusters(docs, pairs, block_col="seg")
 
 
 # --------------------------------------------------------------------
 # q211 — IVF-PQ composed ANN search (exact-oracle ADC)
 # --------------------------------------------------------------------
 
-def _init_q211() -> None:
-    @register(
-        "q211_ivf_pq_topk",
-        S.ivf_pq_oracle_sql(),
-        doc="IVF-PQ composed ANN top-5 (functions/similarity.py "
-            "ivf_pq_topk; Jégou PAMI'11 IVFADC, non-residual): "
-            "deterministic seeded coarse cells (count-derived CASE "
-            "ladder, n_cells ~ sqrt(n), n_probe = log2(cells)) prune "
-            "the corpus per query; distances inside probed cells are "
-            "PQ asymmetric-distance lookups against q170's seeded "
-            "codebook. Every step round-6 quantized with id "
-            "tie-breaks, so unlike q27/q38 (float ANN, rows-only "
-            "checks) the full composed search gates EXACTLY against "
-            "DuckDB. Candidate volume per query ~n*log2(cells)/cells "
-            "— sub-linear; both codebooks broadcast.",
-    )
-    def q211_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return S.ivf_pq_topk(table(spark, sf_dir, "embeddings"))
-
-
-_init_q211()
+@register(
+    "q211_ivf_pq_topk",
+    S.ivf_pq_oracle_sql(),
+    doc="IVF-PQ composed ANN top-5 (functions/similarity.py "
+        "ivf_pq_topk; Jégou PAMI'11 IVFADC, non-residual): "
+        "deterministic seeded coarse cells (count-derived CASE "
+        "ladder, n_cells ~ sqrt(n), n_probe = log2(cells)) prune "
+        "the corpus per query; distances inside probed cells are "
+        "PQ asymmetric-distance lookups against q170's seeded "
+        "codebook. Every step round-6 quantized with id "
+        "tie-breaks, so unlike q27/q38 (float ANN, rows-only "
+        "checks) the full composed search gates EXACTLY against "
+        "DuckDB. Candidate volume per query ~n*log2(cells)/cells "
+        "— sub-linear; both codebooks broadcast.",
+)
+def q211_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return S.ivf_pq_topk(table(spark, sf_dir, "embeddings"))
 
 
 # --------------------------------------------------------------------
@@ -9474,46 +9208,42 @@ _Q212_QUERIES = {
 }
 
 
-def _init_q212() -> None:
-    from ..functions.search import (
-        bm25_multi,
-        retrieval_eval_oracle_sql,
-        retrieval_metrics,
-    )
-
-    @register(
-        "q212_retrieval_eval",
-        retrieval_eval_oracle_sql("documents", _Q212_QUERIES, k=10,
-                                  rel_min=3),
-        doc="Retrieval quality harness (functions/search.py "
-            "bm25_multi |> retrieval_metrics): four probe queries "
-            "BM25-ranked in ONE corpus scan, then per-query nDCG@10 "
-            "(Järvelin & Kekäläinen TOIS'02 graded gains, grade = "
-            "distinct query terms matched), MRR@10, precision@10 and "
-            "recall@10 with relevant = all-terms match. The eval "
-            "half of a RAG/search curation loop next to q119 (BM25) "
-            "and q180 (RRF fusion). Every log2 weight is a Python "
-            "literal shared by both engines; IDCG comes from a "
-            "map-side grade histogram + prefix-sum weights, not a "
-            "second full sort — the only per-query ordering is the "
-            "bounded top-10 window.",
-    )
-    def q212_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-        m = bm25_multi(table(spark, sf_dir, "documents"), _Q212_QUERIES)
-        return retrieval_metrics(m, k=10, rel_min=3)
+from ..functions.search import (
+    bm25_multi,
+    retrieval_eval_oracle_sql,
+    retrieval_metrics,
+)
 
 
-_init_q212()
+@register(
+    "q212_retrieval_eval",
+    retrieval_eval_oracle_sql("documents", _Q212_QUERIES, k=10,
+                              rel_min=3),
+    doc="Retrieval quality harness (functions/search.py "
+        "bm25_multi |> retrieval_metrics): four probe queries "
+        "BM25-ranked in ONE corpus scan, then per-query nDCG@10 "
+        "(Järvelin & Kekäläinen TOIS'02 graded gains, grade = "
+        "distinct query terms matched), MRR@10, precision@10 and "
+        "recall@10 with relevant = all-terms match. The eval "
+        "half of a RAG/search curation loop next to q119 (BM25) "
+        "and q180 (RRF fusion). Every log2 weight is a Python "
+        "literal shared by both engines; IDCG comes from a "
+        "map-side grade histogram + prefix-sum weights, not a "
+        "second full sort — the only per-query ordering is the "
+        "bounded top-10 window.",
+)
+def q212_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    m = bm25_multi(table(spark, sf_dir, "documents"), _Q212_QUERIES)
+    return retrieval_metrics(m, k=10, rel_min=3)
 
 
 # --------------------------------------------------------------------
 # q213 — label agreement audit (Cohen's kappa per language)
 # --------------------------------------------------------------------
 
-def _init_q213() -> None:
-    from ..functions import agreement as AG
+from ..functions import agreement as AG
 
-    labels_sql = """
+_q213_labels_sql = """
     SELECT lang,
            CASE WHEN n_chars < 200 THEN 0
                 WHEN n_chars < 400 THEN 1 ELSE 2 END AS la,
@@ -9523,137 +9253,131 @@ def _init_q213() -> None:
     FROM documents
     """
 
-    @register(
-        "q213_rater_agreement",
-        AG.cohen_kappa_oracle_sql(labels_sql, group_cols=("lang",)),
-        doc="Chance-corrected label agreement (functions/agreement.py "
-            "cohen_kappa; Cohen 1960): two cheap quality raters — a "
-            "char-length bucketer and a token-count bucketer — scored "
-            "per language. The audit that belongs in front of q187 "
-            "preference pairs / q191 Bradley-Terry: raw percent "
-            "agreement rewards imbalanced marginals, kappa does not. "
-            "One map-side contingency aggregate (<= 9 cells per "
-            "group); marginal products join on the label; ratios are "
-            "single integer divisions — no row survives the first "
-            "shuffle.",
+
+@register(
+    "q213_rater_agreement",
+    AG.cohen_kappa_oracle_sql(_q213_labels_sql, group_cols=("lang",)),
+    doc="Chance-corrected label agreement (functions/agreement.py "
+        "cohen_kappa; Cohen 1960): two cheap quality raters — a "
+        "char-length bucketer and a token-count bucketer — scored "
+        "per language. The audit that belongs in front of q187 "
+        "preference pairs / q191 Bradley-Terry: raw percent "
+        "agreement rewards imbalanced marginals, kappa does not. "
+        "One map-side contingency aggregate (<= 9 cells per "
+        "group); marginal products join on the label; ratios are "
+        "single integer divisions — no row survives the first "
+        "shuffle.",
+)
+def q213_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    la = (
+        F.when(F.col("n_chars") < 200, 0)
+        .when(F.col("n_chars") < 400, 1)
+        .otherwise(2)
     )
-    def q213_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        la = (
-            F.when(F.col("n_chars") < 200, 0)
-            .when(F.col("n_chars") < 400, 1)
-            .otherwise(2)
-        )
-        nt = F.size(F.split("text", " "))
-        lb = F.when(nt < 36, 0).when(nt < 72, 1).otherwise(2)
-        labeled = docs.select("lang", la.alias("la"), lb.alias("lb"))
-        return AG.cohen_kappa(labeled, "la", "lb", group_cols=("lang",))
-
-
-_init_q213()
+    nt = F.size(F.split("text", " "))
+    lb = F.when(nt < 36, 0).when(nt < 72, 1).otherwise(2)
+    labeled = docs.select("lang", la.alias("la"), lb.alias("lb"))
+    return AG.cohen_kappa(labeled, "la", "lb", group_cols=("lang",))
 
 
 # --------------------------------------------------------------------
 # q214 — Fellegi-Sunter probabilistic record linkage
 # --------------------------------------------------------------------
 
-def _init_q214() -> None:
-    from ..functions.linkage import FSField, fs_link_oracle_sql, fs_link_pairs
+from ..functions.linkage import FSField, fs_link_oracle_sql, fs_link_pairs
 
-    def _fields():
-        return [
-            FSField(
-                "bal_kbucket",
-                "FLOOR(c_acctbal / CAST(1000.0 AS DOUBLE))",
-                "FLOOR(c_acctbal / CAST(1000.0 AS DOUBLE))",
-                0.95,
-            ),
-            FSField(
-                "name_suffix",
-                "right(c_name, 2)",
-                "right(c_name, 2)",
-                0.9,
-            ),
-            FSField(
-                "bal_unit_digit",
-                "CAST(FLOOR(c_acctbal) AS BIGINT) % 10",
-                "CAST(FLOOR(c_acctbal) AS BIGINT) % 10",
-                0.85,
-            ),
-        ]
 
-    # Count-laddered third block key (the q136/q202 ladder discipline
-    # applied to blocking): (nation, segment) alone is 125 FIXED
-    # blocks, so within-block candidate pairs grow ~n^2/125 — 93s at
-    # sf1, hours at sf10. Bucketing acctbal with width 11000/f,
-    # f = ceil(n / 31250), holds blocks at ~250 rows at any corpus
-    # size; f = 1 at every gate SF (n <= 15000), where the +1000
-    # shift keeps all rows in bucket 0 — gate results are unchanged
-    # bit-for-bit, and the ladder only engages where the quadratic
-    # would. Standard multi-pass blocking semantics: candidate pairs
-    # must also agree on the coarse balance bucket.
-    _LADDER_SRC = (
-        "(SELECT c.*, CAST(FLOOR((CAST(c_acctbal AS DOUBLE)"
-        " + 1000.0e0) / (11000.0e0 / CAST((SELECT (COUNT(*)"
-        " + 31249) // 31250 FROM customer) AS DOUBLE)))"
-        " AS BIGINT) AS bal_block FROM customer c)"
-    )
-
-    @register(
-        "q214_fs_record_linkage",
-        fs_link_oracle_sql(
-            _LADDER_SRC,
-            _fields(),
-            ("c_nationkey", "c_mktsegment", "bal_block"),
-            "c_custkey",
+def _q214_fields():
+    return [
+        FSField(
+            "bal_kbucket",
+            "FLOOR(c_acctbal / CAST(1000.0 AS DOUBLE))",
+            "FLOOR(c_acctbal / CAST(1000.0 AS DOUBLE))",
+            0.95,
         ),
-        doc="Fellegi-Sunter probabilistic record linkage (functions/"
-            "linkage.py; Fellegi & Sunter JASA'69): customers blocked "
-            "by (nation, segment, count-laddered balance bucket — "
-            "fixed 125-block granularity is quadratic in corpus "
-            "size; the ladder holds blocks at ~250 rows and is a "
-            "no-op at gate SFs), candidate pairs scored by summed "
-            "per-field log-likelihood weights ln(m/u) / ln((1-m)/"
-            "(1-u)) over three fields with distinct discriminating "
-            "power; u estimated EXACTLY from value frequencies "
-            "(sum c_v^2 / n^2). Pairs land in match / possible-review "
-            "bands; the sub-threshold mass is never materialized. "
-            "Generalizes q125's single-field golden records to "
-            "calibrated multi-field evidence. ln runs once per field "
-            "in a broadcast scalar frame — pair scoring is pure "
-            "fixed-order double addition, no UDF, one block shuffle.",
+        FSField(
+            "name_suffix",
+            "right(c_name, 2)",
+            "right(c_name, 2)",
+            0.9,
+        ),
+        FSField(
+            "bal_unit_digit",
+            "CAST(FLOOR(c_acctbal) AS BIGINT) % 10",
+            "CAST(FLOOR(c_acctbal) AS BIGINT) % 10",
+            0.85,
+        ),
+    ]
+
+# Count-laddered third block key (the q136/q202 ladder discipline
+# applied to blocking): (nation, segment) alone is 125 FIXED
+# blocks, so within-block candidate pairs grow ~n^2/125 — 93s at
+# sf1, hours at sf10. Bucketing acctbal with width 11000/f,
+# f = ceil(n / 31250), holds blocks at ~250 rows at any corpus
+# size; f = 1 at every gate SF (n <= 15000), where the +1000
+# shift keeps all rows in bucket 0 — gate results are unchanged
+# bit-for-bit, and the ladder only engages where the quadratic
+# would. Standard multi-pass blocking semantics: candidate pairs
+# must also agree on the coarse balance bucket.
+_Q214_LADDER_SRC = (
+    "(SELECT c.*, CAST(FLOOR((CAST(c_acctbal AS DOUBLE)"
+    " + 1000.0e0) / (11000.0e0 / CAST((SELECT (COUNT(*)"
+    " + 31249) // 31250 FROM customer) AS DOUBLE)))"
+    " AS BIGINT) AS bal_block FROM customer c)"
+)
+
+
+@register(
+    "q214_fs_record_linkage",
+    fs_link_oracle_sql(
+        _Q214_LADDER_SRC,
+        _q214_fields(),
+        ("c_nationkey", "c_mktsegment", "bal_block"),
+        "c_custkey",
+    ),
+    doc="Fellegi-Sunter probabilistic record linkage (functions/"
+        "linkage.py; Fellegi & Sunter JASA'69): customers blocked "
+        "by (nation, segment, count-laddered balance bucket — "
+        "fixed 125-block granularity is quadratic in corpus "
+        "size; the ladder holds blocks at ~250 rows and is a "
+        "no-op at gate SFs), candidate pairs scored by summed "
+        "per-field log-likelihood weights ln(m/u) / ln((1-m)/"
+        "(1-u)) over three fields with distinct discriminating "
+        "power; u estimated EXACTLY from value frequencies "
+        "(sum c_v^2 / n^2). Pairs land in match / possible-review "
+        "bands; the sub-threshold mass is never materialized. "
+        "Generalizes q125's single-field golden records to "
+        "calibrated multi-field evidence. ln runs once per field "
+        "in a broadcast scalar frame — pair scoring is pure "
+        "fixed-order double addition, no UDF, one block shuffle.",
+)
+def q214_fs_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cust = table(spark, sf_dir, "customer")
+    f = (cust.count() + 31249) // 31250
+    width = 11000.0 / f
+    cust = cust.withColumn(
+        "bal_block",
+        F.floor(
+            (F.col("c_acctbal").cast("double") + F.lit(1000.0))
+            / F.lit(width)
+        ).cast("bigint"),
     )
-    def q214_fs_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cust = table(spark, sf_dir, "customer")
-        f = (cust.count() + 31249) // 31250
-        width = 11000.0 / f
-        cust = cust.withColumn(
-            "bal_block",
-            F.floor(
-                (F.col("c_acctbal").cast("double") + F.lit(1000.0))
-                / F.lit(width)
-            ).cast("bigint"),
-        )
-        return fs_link_pairs(
-            cust,
-            _fields(),
-            ("c_nationkey", "c_mktsegment", "bal_block"),
-            "c_custkey",
-        )
-
-
-_init_q214()
+    return fs_link_pairs(
+        cust,
+        _q214_fields(),
+        ("c_nationkey", "c_mktsegment", "bal_block"),
+        "c_custkey",
+    )
 
 
 # --------------------------------------------------------------------
 # q215 — perceptual-hash media dedup groups (multimodal q210)
 # --------------------------------------------------------------------
 
-def _init_q215() -> None:
-    from ..functions.dedup import _band_pairs_sql
-    from ..functions.multimodal import ahash60, ahash60_phash_sql
+from ..functions.multimodal import ahash60, ahash60_phash_sql
 
-    pairs_sql = f"""
+_q215_pairs_sql = f"""
     WITH sigs AS (
         SELECT doc_id, {ahash60_phash_sql("documents.text")} AS simhash,
                source AS seg
@@ -9661,93 +9385,87 @@ def _init_q215() -> None:
     {_band_pairs_sql(1, 60, 6, segment=True)}
     """
 
-    @register(
-        "q215_media_dedup_groups",
-        G.components_oracle_sql(pairs_sql),
-        doc="Perceptual-hash media dedup groups: the image-modality "
-            "twin of q210 — multimodal.ahash60 fingerprints each "
-            "media blob (fake byte-class gray grid standing in for "
-            "decode+resize; the all-integer bit rule keeps it "
-            "oracle-exact), Manku banding scoped per source album "
-            "(segment folded into the 20-bit combo keys), and "
-            "Hamming<=1 near-identical media collapse to keep/drop "
-            "clusters via the one-shuffle blocked union-find. The "
-            "near-dup image dedup step of a multimodal training "
-            "pipeline, sharing the text pipeline's banding plan "
-            "wholesale — one fingerprint swap.",
+
+@register(
+    "q215_media_dedup_groups",
+    G.components_oracle_sql(_q215_pairs_sql),
+    doc="Perceptual-hash media dedup groups: the image-modality "
+        "twin of q210 — multimodal.ahash60 fingerprints each "
+        "media blob (fake byte-class gray grid standing in for "
+        "decode+resize; the all-integer bit rule keeps it "
+        "oracle-exact), Manku banding scoped per source album "
+        "(segment folded into the 20-bit combo keys), and "
+        "Hamming<=1 near-identical media collapse to keep/drop "
+        "clusters via the one-shuffle blocked union-find. The "
+        "near-dup image dedup step of a multimodal training "
+        "pipeline, sharing the text pipeline's banding plan "
+        "wholesale — one fingerprint swap.",
+)
+def q215_media_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    bins = docs.select(
+        "doc_id", F.encode("text", "UTF-8").alias("content"), "source"
     )
-    def q215_media_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        bins = docs.select(
-            "doc_id", F.encode("text", "UTF-8").alias("content"), "source"
-        )
-        sigs = ahash60(
-            bins, id_col="doc_id", carry_cols=("source",)
-        ).withColumnRenamed("phash", "simhash")
-        # groups form: identical perceptual hashes collapse to a rep
-        # before banding (low-entropy byte-grid hashes saturate the
-        # 60-bit space — without the collapse the in-bucket pair
-        # stream went quadratic, 27.5x at 10x data; components are
-        # exactly equal either way, see simhash_band_pairs)
-        pairs = D.simhash_band_pairs(
-            sigs, max_hamming=1, segment_col="source",
-            collapse_identical=True,
-        )
-        return G.dedup_clusters(docs, pairs, block_col="source")
-
-
-_init_q215()
+    sigs = ahash60(
+        bins, id_col="doc_id", carry_cols=("source",)
+    ).withColumnRenamed("phash", "simhash")
+    # groups form: identical perceptual hashes collapse to a rep
+    # before banding (low-entropy byte-grid hashes saturate the
+    # 60-bit space — without the collapse the in-bucket pair
+    # stream went quadratic, 27.5x at 10x data; components are
+    # exactly equal either way, see simhash_band_pairs)
+    pairs = D.simhash_band_pairs(
+        sigs, max_hamming=1, segment_col="source",
+        collapse_identical=True,
+    )
+    return G.dedup_clusters(docs, pairs, block_col="source")
 
 
 # --------------------------------------------------------------------
 # q216 — incremental near-dup: batch probe of a persisted LSH index
 # --------------------------------------------------------------------
 
-def _init_q216() -> None:
-    from ..functions.dedup import (
-        incremental_neardup_oracle_sql,
-        neardup_index_probe,
-        neardup_index_write,
+from ..functions.dedup import (
+    incremental_neardup_oracle_sql,
+    neardup_index_probe,
+    neardup_index_write,
+)
+
+
+@register(
+    "q216_incremental_neardup",
+    incremental_neardup_oracle_sql(
+        SA.hash_split_case_sql("doc_id", _SPLITS)
+    ),
+    doc="Incremental near-dup against a PERSISTED LSH index "
+        "(functions/dedup.py neardup_index_write/probe): the "
+        "train-split corpus is shingled+minhashed ONCE and "
+        "written as bucket + shingle-posting parquets; the "
+        "test-split batch probes it — band-bucket equi-join "
+        "costs ~batch, never corpus, and exact-Jaccard verify "
+        "touches only candidate postings. THE serving shape at "
+        "100 TB: per-batch cost is independent of corpus size "
+        "(q22 re-hashes everything per run; q93 is "
+        "exact-fingerprint only). The gate goes through the real "
+        "write -> read-back path; the oracle computes both sides "
+        "directly (the parquet round-trip is lossless).",
+)
+def q216_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = SA.hash_split(
+        table(spark, sf_dir, "documents"), "doc_id", _SPLITS
     )
-
-    @register(
-        "q216_incremental_neardup",
-        incremental_neardup_oracle_sql(
-            SA.hash_split_case_sql("doc_id", _SPLITS)
-        ),
-        doc="Incremental near-dup against a PERSISTED LSH index "
-            "(functions/dedup.py neardup_index_write/probe): the "
-            "train-split corpus is shingled+minhashed ONCE and "
-            "written as bucket + shingle-posting parquets; the "
-            "test-split batch probes it — band-bucket equi-join "
-            "costs ~batch, never corpus, and exact-Jaccard verify "
-            "touches only candidate postings. THE serving shape at "
-            "100 TB: per-batch cost is independent of corpus size "
-            "(q22 re-hashes everything per run; q93 is "
-            "exact-fingerprint only). The gate goes through the real "
-            "write -> read-back path; the oracle computes both sides "
-            "directly (the parquet round-trip is lossless).",
-    )
-    def q216_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = SA.hash_split(
-            table(spark, sf_dir, "documents"), "doc_id", _SPLITS
-        )
-        path = f"{_SCRATCH}/neardup_index"
-        neardup_index_write(docs.filter("split = 'train'"), path)
-        return neardup_index_probe(docs.filter("split = 'test'"), path)
-
-
-_init_q216()
+    path = f"{_SCRATCH}/neardup_index"
+    neardup_index_write(docs.filter("split = 'train'"), path)
+    return neardup_index_probe(docs.filter("split = 'test'"), path)
 
 
 # --------------------------------------------------------------------
 # q217 — stream-static broadcast enrichment on the correctness gate
 # --------------------------------------------------------------------
 
-def _init_q217() -> None:
-    @register(
-        "q217_stream_enrich",
-        """
+@register(
+    "q217_stream_enrich",
+    """
         SELECT strftime(date_trunc('hour', e.ts), '%Y-%m-%d %H:%M:%S')
                    AS window_start,
                n.n_name AS nation,
@@ -9759,134 +9477,123 @@ def _init_q217() -> None:
         LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
         GROUP BY 1, 2
         """,
-        doc="Stream-static enrichment on the gate (streaming/"
-            "stream.py enrich, the reference's unbounded Joiner path "
-            "job-joiner.js:35-102): the events table replayed through "
-            "a real availableNow stream, broadcast-left-joined per "
-            "micro-batch against the customer->nation dimension, then "
-            "1h tumbling windows keyed by nation. The static side is "
-            "re-read per micro-batch (slowly-changing dims without "
-            "restart); no state beyond the window agg, so the final "
-            "state hash-matches the batch oracle exactly. At 100 TB "
-            "the dim stays broadcast-sized while the stream scales "
-            "with partitions — no stream-side shuffle before the agg.",
+    doc="Stream-static enrichment on the gate (streaming/"
+        "stream.py enrich, the reference's unbounded Joiner path "
+        "job-joiner.js:35-102): the events table replayed through "
+        "a real availableNow stream, broadcast-left-joined per "
+        "micro-batch against the customer->nation dimension, then "
+        "1h tumbling windows keyed by nation. The static side is "
+        "re-read per micro-batch (slowly-changing dims without "
+        "restart); no state beyond the window agg, so the final "
+        "state hash-matches the batch oracle exactly. At 100 TB "
+        "the dim stays broadcast-sized while the stream scales "
+        "with partitions — no stream-side shuffle before the agg.",
+)
+def q217_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..streaming import stream as st
+
+    nat = table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name"
     )
-    def q217_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..streaming import stream as st
-
-        nat = table(spark, sf_dir, "nation").select(
-            "n_nationkey", "n_name"
+    dim = (
+        table(spark, sf_dir, "customer")
+        .select(
+            F.col("c_custkey").alias("user_id"), "c_nationkey"
         )
-        dim = (
-            table(spark, sf_dir, "customer")
-            .select(
-                F.col("c_custkey").alias("user_id"), "c_nationkey"
-            )
-            .join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
-            .select("user_id", "n_name")
-        )
-        sink = _replay_events(
-            spark,
-            sf_dir,
-            ["event_id", "ts", "user_id", "event_type", "value"],
-            lambda source: st.windowed_agg(
-                st.enrich(source(), dim, on="user_id"),
-                keys=("n_name",),
-            ),
-            mode="complete",
-            sink_prefix="q217",
-        )
-        return sink.select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            F.col("n_name").alias("nation"),
-            "n_events",
-            "total_value",
-        )
-
-
-_init_q217()
+        .join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
+        .select("user_id", "n_name")
+    )
+    sink = _replay_events(
+        spark,
+        sf_dir,
+        ["event_id", "ts", "user_id", "event_type", "value"],
+        lambda source: st.windowed_agg(
+            st.enrich(source(), dim, on="user_id"),
+            keys=("n_name",),
+        ),
+        mode="complete",
+        sink_prefix="q217",
+    )
+    return sink.select(
+        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
+            "window_start"
+        ),
+        F.col("n_name").alias("nation"),
+        "n_events",
+        "total_value",
+    )
 
 
 # --------------------------------------------------------------------
 # q218 — Kneser-Ney trigram LM scoring (CCNet-grade perplexity filter)
 # --------------------------------------------------------------------
 
-def _init_q218() -> None:
-    @register(
-        "q218_kn_trigram_score",
-        T.kn_trigram_oracle_sql(),
-        doc="Interpolated Kneser-Ney trigram scoring "
-            "(functions/text.py kn_trigram_score): mean log-prob of "
-            "each document under a KN-smoothed trigram model with "
-            "continuation lower orders — the model family CCNet-style "
-            "perplexity filters actually train, upgrading q148's "
-            "add-one bigram. All statistics are re-aggregations of "
-            "the per-doc trigram tf frame (one text-sized shuffle); "
-            "scoring joins run in type space. Exactness: identical "
-            "integer counts, identical IEEE double expression tree, "
-            "DECIMAL(28,12) term quantization, round(6) finish.",
-    )
-    def q218_kn_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return T.kn_trigram_score(table(spark, sf_dir, "documents"))
-
-
-_init_q218()
+@register(
+    "q218_kn_trigram_score",
+    T.kn_trigram_oracle_sql(),
+    doc="Interpolated Kneser-Ney trigram scoring "
+        "(functions/text.py kn_trigram_score): mean log-prob of "
+        "each document under a KN-smoothed trigram model with "
+        "continuation lower orders — the model family CCNet-style "
+        "perplexity filters actually train, upgrading q148's "
+        "add-one bigram. All statistics are re-aggregations of "
+        "the per-doc trigram tf frame (one text-sized shuffle); "
+        "scoring joins run in type space. Exactness: identical "
+        "integer counts, identical IEEE double expression tree, "
+        "DECIMAL(28,12) term quantization, round(6) finish.",
+)
+def q218_kn_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return T.kn_trigram_score(table(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------
 # q219 — DSIR: data selection via importance resampling
 # --------------------------------------------------------------------
 
-def _init_q219() -> None:
-    @register(
-        "q219_dsir_select",
-        SA.dsir_oracle_sql("lang = 'en'", k=100),
-        doc="DSIR data selection (functions/sampling.py dsir_select, "
-            "Xie et al. NeurIPS 2023): per-token log importance ratio "
-            "of a target unigram model (lang='en' docs) over the raw "
-            "corpus model, add-one smoothed on shared support; top-k "
-            "selection with deterministic tiebreak. One text-sized "
-            "shuffle to per-doc token tf; models are re-aggregations; "
-            "scoring joins in vocab space; doc-level top-k sort. "
-            "Exactness: q148 decimal-term discipline, ranks agree "
-            "because the round(6) scores do.",
+@register(
+    "q219_dsir_select",
+    SA.dsir_oracle_sql("lang = 'en'", k=100),
+    doc="DSIR data selection (functions/sampling.py dsir_select, "
+        "Xie et al. NeurIPS 2023): per-token log importance ratio "
+        "of a target unigram model (lang='en' docs) over the raw "
+        "corpus model, add-one smoothed on shared support; top-k "
+        "selection with deterministic tiebreak. One text-sized "
+        "shuffle to per-doc token tf; models are re-aggregations; "
+        "scoring joins in vocab space; doc-level top-k sort. "
+        "Exactness: q148 decimal-term discipline, ranks agree "
+        "because the round(6) scores do.",
+)
+def q219_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return SA.dsir_select(
+        table(spark, sf_dir, "documents"), "lang = 'en'", k=100
     )
-    def q219_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return SA.dsir_select(
-            table(spark, sf_dir, "documents"), "lang = 'en'", k=100
-        )
-
-
-_init_q219()
 
 
 # --------------------------------------------------------------------
 # q220 — per-domain rate capping (C4/web-corpus domain balancing)
 # --------------------------------------------------------------------
 
-def _init_q220() -> None:
-    _CAP = 5
-    # synthetic skewed domain: quadratic map of doc_id onto ~20
-    # domains, denser at low ids (web corpora are domain-skewed; the
-    # cap must actually bind on some domains and not on others)
-    _DOM_SPARK = (
-        "concat('d', cast(cast(floor((cast(doc_id % 100 as double)"
-        " * cast(doc_id % 100 as double)) / 500.0e0) as bigint)"
-        " as string))"
-    )
-    _DOM_DUCK = (
-        "concat('d', CAST(CAST(FLOOR((CAST(doc_id % 100 AS DOUBLE)"
-        " * CAST(doc_id % 100 AS DOUBLE)) / 500.0e0) AS BIGINT)"
-        " AS VARCHAR))"
-    )
+_Q220_CAP = 5
+# synthetic skewed domain: quadratic map of doc_id onto ~20
+# domains, denser at low ids (web corpora are domain-skewed; the
+# cap must actually bind on some domains and not on others)
+_Q220_DOM_SPARK = (
+    "concat('d', cast(cast(floor((cast(doc_id % 100 as double)"
+    " * cast(doc_id % 100 as double)) / 500.0e0) as bigint)"
+    " as string))"
+)
+_Q220_DOM_DUCK = (
+    "concat('d', CAST(CAST(FLOOR((CAST(doc_id % 100 AS DOUBLE)"
+    " * CAST(doc_id % 100 AS DOUBLE)) / 500.0e0) AS BIGINT)"
+    " AS VARCHAR))"
+)
 
-    @register(
-        "q220_domain_cap",
-        f"""
+
+@register(
+    "q220_domain_cap",
+    f"""
         WITH d AS (
-            SELECT doc_id, n_chars, {_DOM_DUCK} AS domain
+            SELECT doc_id, n_chars, {_Q220_DOM_DUCK} AS domain
             FROM documents),
         ranked AS (
             SELECT doc_id, domain, n_chars,
@@ -9894,75 +9601,68 @@ def _init_q220() -> None:
                        ORDER BY n_chars DESC, doc_id) AS rk
             FROM d)
         SELECT doc_id, domain, n_chars, CAST(rk AS BIGINT) AS rk
-        FROM ranked WHERE rk <= {_CAP}
+        FROM ranked WHERE rk <= {_Q220_CAP}
         """,
-        doc="Per-domain rate capping (the C4/web-pipeline domain "
-            "balancing step): rank documents within each domain by "
-            "quality proxy (n_chars desc, doc_id tiebreak) and keep "
-            "at most N per domain, so no single host dominates the "
-            "training mix. Domains are synthesized deterministically "
-            "with a skewed quadratic map so the cap binds on hot "
-            "domains and passes cold ones through. One window over a "
-            "domain-partitioned shuffle — partition-parallel at "
-            "100 TB, no global sort; hot-domain skew is bounded "
-            "because rank short-circuits at the cap under "
-            "TakeOrdered-style partial windows.",
+    doc="Per-domain rate capping (the C4/web-pipeline domain "
+        "balancing step): rank documents within each domain by "
+        "quality proxy (n_chars desc, doc_id tiebreak) and keep "
+        "at most N per domain, so no single host dominates the "
+        "training mix. Domains are synthesized deterministically "
+        "with a skewed quadratic map so the cap binds on hot "
+        "domains and passes cold ones through. One window over a "
+        "domain-partitioned shuffle — partition-parallel at "
+        "100 TB, no global sort; hot-domain skew is bounded "
+        "because rank short-circuits at the cap under "
+        "TakeOrdered-style partial windows.",
+)
+def q220_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "n_chars", F.expr(_Q220_DOM_SPARK).alias("domain")
     )
-    def q220_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        d = table(spark, sf_dir, "documents").select(
-            "doc_id", "n_chars", F.expr(_DOM_SPARK).alias("domain")
-        )
-        w = Window.partitionBy("domain").orderBy(
-            F.col("n_chars").desc(), "doc_id"
-        )
-        return (
-            d.withColumn("rk", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rk") <= _CAP)
-            .select("doc_id", "domain", "n_chars", "rk")
-        )
-
-
-_init_q220()
+    w = Window.partitionBy("domain").orderBy(
+        F.col("n_chars").desc(), "doc_id"
+    )
+    return (
+        d.withColumn("rk", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rk") <= _Q220_CAP)
+        .select("doc_id", "domain", "n_chars", "rk")
+    )
 
 
 # --------------------------------------------------------------------
 # q221 — BPE tokenizer training: first k merges, learned distributed
 # --------------------------------------------------------------------
 
-def _init_q221() -> None:
-    @register(
-        "q221_bpe_learn",
-        T.bpe_learn_oracle_sql(k=8),
-        doc="BPE tokenizer TRAINING (functions/text.py "
-            "bpe_learn_merges; q39 only applies a fixed vocab): learn "
-            "the first 8 merges the way industrial trainers do — "
-            "corpus collapses to a word-frequency dict once, then "
-            "each greedy round is a vocab-sized pair count, a "
-            "deterministic top-1 (count desc, lexicographic), and an "
-            "engine-native non-overlapping replace on "
-            "delimiter-wrapped symbol strings; the winner joins back "
-            "as a broadcast row, never a driver collect. Integer "
-            "counts and string ops only — exact by construction.",
-    )
-    def q221_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return T.bpe_learn_merges(table(spark, sf_dir, "documents"), k=8)
-
-
-_init_q221()
+@register(
+    "q221_bpe_learn",
+    T.bpe_learn_oracle_sql(k=8),
+    doc="BPE tokenizer TRAINING (functions/text.py "
+        "bpe_learn_merges; q39 only applies a fixed vocab): learn "
+        "the first 8 merges the way industrial trainers do — "
+        "corpus collapses to a word-frequency dict once, then "
+        "each greedy round is a vocab-sized pair count, a "
+        "deterministic top-1 (count desc, lexicographic), and an "
+        "engine-native non-overlapping replace on "
+        "delimiter-wrapped symbol strings; the winner joins back "
+        "as a broadcast row, never a driver collect. Integer "
+        "counts and string ops only — exact by construction.",
+)
+def q221_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return T.bpe_learn_merges(table(spark, sf_dir, "documents"), k=8)
 
 
 # --------------------------------------------------------------------
 # q222 — Count-Min sketch: mergeable frequency monitoring
 # --------------------------------------------------------------------
 
-def _init_q222() -> None:
-    from ..functions import sketch as SK
+from ..functions import sketch as SK
 
-    _D, _W = 4, 256
+_D, _W = 4, 256
 
-    @register(
-        "q222_cm_sketch",
-        f"""
+
+@register(
+    "q222_cm_sketch",
+    f"""
         WITH ins AS (
             SELECT event_type, user_id, r
             FROM events CROSS JOIN (SELECT unnest(range({_D})) AS r)),
@@ -9987,132 +9687,118 @@ def _init_q222() -> None:
         FROM probe p JOIN merged m USING (r, c)
         GROUP BY 1, 2
         """,
-        doc="Count-Min sketch on the gate (functions/sketch.py "
-            "cm_sketch/cm_point_estimates): per-event-type sketches "
-            "built independently, MERGED by re-summing cells (the "
-            "associative rollup a 1000-executor frequency monitor "
-            "needs — sketch size is depth*width regardless of input "
-            "rows), then every user probed: estimate = min over rows "
-            "of the hashed cell, always >= the true count. md5 row "
-            "hashes keep both engines on identical cells, so the "
-            "oracle is exact including collision overcounts.",
+    doc="Count-Min sketch on the gate (functions/sketch.py "
+        "cm_sketch/cm_point_estimates): per-event-type sketches "
+        "built independently, MERGED by re-summing cells (the "
+        "associative rollup a 1000-executor frequency monitor "
+        "needs — sketch size is depth*width regardless of input "
+        "rows), then every user probed: estimate = min over rows "
+        "of the hashed cell, always >= the true count. md5 row "
+        "hashes keep both engines on identical cells, so the "
+        "oracle is exact including collision overcounts.",
+)
+def q222_cm_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    per = SK.cm_sketch(
+        ev, "user_id", depth=_D, width=_W,
+        group_cols=("event_type",),
     )
-    def q222_cm_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        per = SK.cm_sketch(
-            ev, "user_id", depth=_D, width=_W,
-            group_cols=("event_type",),
-        )
-        merged = per.groupBy("r", "c").agg(F.sum("cnt").alias("cnt"))
-        truth = ev.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("true_cnt")
-        )
-        est = SK.cm_point_estimates(
-            truth, "user_id", merged, depth=_D, width=_W
-        )
-        return est.select(
-            "user_id",
-            "true_cnt",
-            "cm_est",
-            (F.col("cm_est") - F.col("true_cnt"))
-            .cast("bigint")
-            .alias("overcount"),
-        )
-
-
-_init_q222()
+    merged = per.groupBy("r", "c").agg(F.sum("cnt").alias("cnt"))
+    truth = ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("true_cnt")
+    )
+    est = SK.cm_point_estimates(
+        truth, "user_id", merged, depth=_D, width=_W
+    )
+    return est.select(
+        "user_id",
+        "true_cnt",
+        "cm_est",
+        (F.col("cm_est") - F.col("true_cnt"))
+        .cast("bigint")
+        .alias("overcount"),
+    )
 
 
 # --------------------------------------------------------------------
 # q223 — eval-set n-gram novelty audit (memorization risk)
 # --------------------------------------------------------------------
 
-def _init_q223() -> None:
-    @register(
-        "q223_novelty_audit",
-        D.novelty_audit_oracle_sql(
-            "documents",
-            SA.hash_split_case_sql("doc_id", _SPLITS),
-            n=8,
-        ),
-        doc="Eval-set novelty audit (functions/dedup.py "
-            "novelty_audit): per TEST doc, the share of its distinct "
-            "8-grams never seen in ANY train doc — the memorization "
-            "check run before trusting a benchmark number (q86 finds "
-            "contaminated pairs; this scores every eval doc). One "
-            "shingle pass per side, train distinct is the only "
-            "train-sized shuffle, then a shingle-keyed left join. "
-            "Integer counts and exact divisions only.",
+@register(
+    "q223_novelty_audit",
+    D.novelty_audit_oracle_sql(
+        "documents",
+        SA.hash_split_case_sql("doc_id", _SPLITS),
+        n=8,
+    ),
+    doc="Eval-set novelty audit (functions/dedup.py "
+        "novelty_audit): per TEST doc, the share of its distinct "
+        "8-grams never seen in ANY train doc — the memorization "
+        "check run before trusting a benchmark number (q86 finds "
+        "contaminated pairs; this scores every eval doc). One "
+        "shingle pass per side, train distinct is the only "
+        "train-sized shuffle, then a shingle-keyed left join. "
+        "Integer counts and exact divisions only.",
+)
+def q223_novelty_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = SA.hash_split(
+        table(spark, sf_dir, "documents").select("doc_id", "text"),
+        "doc_id",
+        _SPLITS,
     )
-    def q223_novelty_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = SA.hash_split(
-            table(spark, sf_dir, "documents").select("doc_id", "text"),
-            "doc_id",
-            _SPLITS,
-        )
-        return D.novelty_audit(docs, "split", "train", "test", n=8)
-
-
-_init_q223()
+    return D.novelty_audit(docs, "split", "train", "test", n=8)
 
 
 # --------------------------------------------------------------------
 # q224 — blocklist phrase filter (C4 bad-words audit)
 # --------------------------------------------------------------------
 
-def _init_q224() -> None:
-    from ..functions import text as T
+_q224_terms = T.DEFAULT_BLOCKLIST
+_q224_m = T.blocklist_matches_sql("d.text", _q224_terms)
 
-    terms = T.DEFAULT_BLOCKLIST
-    m = T.blocklist_matches_sql("d.text", terms)
 
-    @register(
-        "q224_blocklist_filter",
-        f"""
+@register(
+    "q224_blocklist_filter",
+    f"""
         SELECT d.doc_id, d.lang, d.source,
-               COALESCE(array_to_string({m}, ','), '') AS terms_csv,
-               CAST(len({m}) AS INTEGER) AS n_blocked,
-               len({m}) > 0 AS blocked
+               COALESCE(array_to_string({_q224_m}, ','), '') AS terms_csv,
+               CAST(len({_q224_m}) AS INTEGER) AS n_blocked,
+               len({_q224_m}) > 0 AS blocked
         FROM documents d
         """,
-        doc="C4-style blocklist phrase filter (functions/text.py "
-            "blocklist_matches): token-boundary contains over the "
-            "space-padded text, term list compiled into one "
-            "higher-order filter expression — pure codegen, zero "
-            "shuffles, rides the scan. Audit form (matched terms + "
-            "flag per doc); dropping is a trailing filter. The list "
-            "includes one corpus-absent phrase to prove the "
-            "non-match path.",
+    doc="C4-style blocklist phrase filter (functions/text.py "
+        "blocklist_matches): token-boundary contains over the "
+        "space-padded text, term list compiled into one "
+        "higher-order filter expression — pure codegen, zero "
+        "shuffles, rides the scan. Audit form (matched terms + "
+        "flag per doc); dropping is a trailing filter. The list "
+        "includes one corpus-absent phrase to prove the "
+        "non-match path.",
+)
+def q224_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "text"
     )
-    def q224_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "source", "text"
-        )
-        return T.blocklist_matches(docs, terms).select(
-            "doc_id",
-            "lang",
-            "source",
-            F.array_join("matched", ",").alias("terms_csv"),
-            "n_blocked",
-            "blocked",
-        )
-
-
-_init_q224()
+    return T.blocklist_matches(docs, _q224_terms).select(
+        "doc_id",
+        "lang",
+        "source",
+        F.array_join("matched", ",").alias("terms_csv"),
+        "n_blocked",
+        "blocked",
+    )
 
 
 # --------------------------------------------------------------------
 # q225 — Johnson-Lindenstrauss projection distortion audit
 # --------------------------------------------------------------------
 
-def _init_q225() -> None:
-    from ..functions import similarity as S
+_K, _DIM = 16, 64
 
-    _K, _DIM = 16, 64
 
-    @register(
-        "q225_jl_projection",
-        f"""
+@register(
+    "q225_jl_projection",
+    f"""
         WITH {S.jl_project_cells_sql(_K, _DIM).lstrip()},
         pv AS (
             SELECT vec_id, list(p ORDER BY j) AS proj
@@ -10147,159 +9833,138 @@ def _init_q225() -> None:
                    / {_K} AS distortion
         FROM pairs
         """,
-        doc="Johnson-Lindenstrauss ±1 sign projection "
-            "(functions/similarity.py jl_project, Achlioptas 2003) "
-            "gated through its OWN guarantee: for a deterministic "
-            "chain of vector pairs (vec_id, vec_id+1), projected "
-            "squared distance ≈ k × original squared distance. Both "
-            "distances are exact BIGINTs on the 1e-6 grid; the sign "
-            "matrix is md5-parity-derived, re-computed in-engine by "
-            "the oracle. Projection itself is k row-local fold "
-            "expressions — zero shuffles, the 4× narrowing (64 "
-            "floats → 16 longs) a 100 TB LSH stage wants upstream.",
+    doc="Johnson-Lindenstrauss ±1 sign projection "
+        "(functions/similarity.py jl_project, Achlioptas 2003) "
+        "gated through its OWN guarantee: for a deterministic "
+        "chain of vector pairs (vec_id, vec_id+1), projected "
+        "squared distance ≈ k × original squared distance. Both "
+        "distances are exact BIGINTs on the 1e-6 grid; the sign "
+        "matrix is md5-parity-derived, re-computed in-engine by "
+        "the oracle. Projection itself is k row-local fold "
+        "expressions — zero shuffles, the 4× narrowing (64 "
+        "floats → 16 longs) a 100 TB LSH stage wants upstream.",
+)
+def q225_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    qx = F.transform(
+        F.slice(F.col("embedding"), 1, _DIM),
+        lambda x: F.floor(
+            x.cast("double") * F.lit(1e6) + F.lit(0.5)
+        ).cast("bigint"),
     )
-    def q225_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = table(spark, sf_dir, "embeddings")
-        qx = F.transform(
-            F.slice(F.col("embedding"), 1, _DIM),
-            lambda x: F.floor(
-                x.cast("double") * F.lit(1e6) + F.lit(0.5)
-            ).cast("bigint"),
+    base = emb.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", qx.alias("qx")
+    )
+    proj = S.jl_project(emb, k=_K, dim=_DIM)
+    joined = (
+        base.alias("a")
+        .join(
+            base.alias("b"),
+            F.col("b.vec_id") == F.col("a.vec_id") + 1,
         )
-        base = emb.filter(F.col("embedding").isNotNull()).select(
-            "vec_id", qx.alias("qx")
+        .join(
+            proj.alias("ap"),
+            F.col("ap.vec_id") == F.col("a.vec_id"),
         )
-        proj = S.jl_project(emb, k=_K, dim=_DIM)
-        joined = (
-            base.alias("a")
-            .join(
-                base.alias("b"),
-                F.col("b.vec_id") == F.col("a.vec_id") + 1,
-            )
-            .join(
-                proj.alias("ap"),
-                F.col("ap.vec_id") == F.col("a.vec_id"),
-            )
-            .join(
-                proj.alias("bp"),
-                F.col("bp.vec_id") == F.col("b.vec_id"),
-            )
+        .join(
+            proj.alias("bp"),
+            F.col("bp.vec_id") == F.col("b.vec_id"),
         )
+    )
 
-        def sq_dist(x: Column, y: Column) -> Column:
-            return F.aggregate(
-                F.zip_with(x, y, lambda p, q: (p - q) * (p - q)),
-                F.lit(0).cast("bigint"),
-                lambda acc, t: acc + t,
-            )
-
-        return joined.select(
-            F.col("a.vec_id").alias("vec_id_a"),
-            F.col("b.vec_id").alias("vec_id_b"),
-            sq_dist(F.col("a.qx"), F.col("b.qx")).alias("orig_d2"),
-            sq_dist(F.col("ap.proj"), F.col("bp.proj")).alias("proj_d2"),
-        ).select(
-            "vec_id_a",
-            "vec_id_b",
-            "orig_d2",
-            "proj_d2",
-            (
-                F.col("proj_d2").cast("double")
-                / F.nullif(F.col("orig_d2").cast("double"), F.lit(0.0))
-                / F.lit(_K)
-            ).alias("distortion"),
+    def sq_dist(x: Column, y: Column) -> Column:
+        return F.aggregate(
+            F.zip_with(x, y, lambda p, q: (p - q) * (p - q)),
+            F.lit(0).cast("bigint"),
+            lambda acc, t: acc + t,
         )
 
-
-_init_q225()
+    return joined.select(
+        F.col("a.vec_id").alias("vec_id_a"),
+        F.col("b.vec_id").alias("vec_id_b"),
+        sq_dist(F.col("a.qx"), F.col("b.qx")).alias("orig_d2"),
+        sq_dist(F.col("ap.proj"), F.col("bp.proj")).alias("proj_d2"),
+    ).select(
+        "vec_id_a",
+        "vec_id_b",
+        "orig_d2",
+        "proj_d2",
+        (
+            F.col("proj_d2").cast("double")
+            / F.nullif(F.col("orig_d2").cast("double"), F.lit(0.0))
+            / F.lit(_K)
+        ).alias("distortion"),
+    )
 
 
 # --------------------------------------------------------------------
 # q226 — top principal direction (distributed power iteration)
 # --------------------------------------------------------------------
 
-def _init_q226() -> None:
-    from ..functions import similarity as S
-
-    @register(
-        "q226_top_pc_power",
-        S.power_iteration_oracle_sql(rounds=5, dim=64),
-        doc="Top principal direction of XᵀX by 5-round distributed "
-            "power iteration (functions/similarity.py "
-            "power_iteration_pc; Halko-Martinsson-Tropp 2011 §4): "
-            "per round one row-local dot with the broadcast v, one "
-            "hash aggregate onto 64 rows (DECIMAL(38,0) exact), L∞ "
-            "re-normalization on the 1e-6 grid. No Gram matrix, no "
-            "joins; per-round state is 64 numbers — the embedding-QA "
-            "axis check (batch effects / collapsed encoder) priced "
-            "for a 1000-executor scan. Oracle: the iteration "
-            "unrolled into CTEs, bit-exact by integer/decimal grids.",
+@register(
+    "q226_top_pc_power",
+    S.power_iteration_oracle_sql(rounds=5, dim=64),
+    doc="Top principal direction of XᵀX by 5-round distributed "
+        "power iteration (functions/similarity.py "
+        "power_iteration_pc; Halko-Martinsson-Tropp 2011 §4): "
+        "per round one row-local dot with the broadcast v, one "
+        "hash aggregate onto 64 rows (DECIMAL(38,0) exact), L∞ "
+        "re-normalization on the 1e-6 grid. No Gram matrix, no "
+        "joins; per-round state is 64 numbers — the embedding-QA "
+        "axis check (batch effects / collapsed encoder) priced "
+        "for a 1000-executor scan. Oracle: the iteration "
+        "unrolled into CTEs, bit-exact by integer/decimal grids.",
+)
+def q226_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return S.power_iteration_pc(
+        table(spark, sf_dir, "embeddings"), rounds=5, dim=64
     )
-    def q226_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return S.power_iteration_pc(
-            table(spark, sf_dir, "embeddings"), rounds=5, dim=64
-        )
-
-
-_init_q226()
 
 
 # --------------------------------------------------------------------
 # q227 — PMI collocation mining (phrase detection)
 # --------------------------------------------------------------------
 
-def _init_q227() -> None:
-    from ..functions import text as T
-
-    @register(
-        "q227_pmi_collocations",
-        T.pmi_collocations_sql("documents", "text", min_support=5),
-        doc="Collocation mining by pointwise mutual information "
-            "(functions/text.py pmi_collocations; Church-Hanks 1990 "
-            "— the word2vec phrase-pass statistic): adjacent bigrams "
-            "from a row-local shifted arrays_zip (no self-join), one "
-            "hash aggregate to support-filtered cells, vocab-sized "
-            "broadcast margins, quantized-log2 PMI. q128 ranks by "
-            "raw support; PMI normalizes by marginals so rare-but-"
-            "bound pairs outrank frequent-word noise.",
+@register(
+    "q227_pmi_collocations",
+    T.pmi_collocations_sql("documents", "text", min_support=5),
+    doc="Collocation mining by pointwise mutual information "
+        "(functions/text.py pmi_collocations; Church-Hanks 1990 "
+        "— the word2vec phrase-pass statistic): adjacent bigrams "
+        "from a row-local shifted arrays_zip (no self-join), one "
+        "hash aggregate to support-filtered cells, vocab-sized "
+        "broadcast margins, quantized-log2 PMI. q128 ranks by "
+        "raw support; PMI normalizes by marginals so rare-but-"
+        "bound pairs outrank frequent-word noise.",
+)
+def q227_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return T.pmi_collocations(
+        table(spark, sf_dir, "documents"), "text", min_support=5
     )
-    def q227_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return T.pmi_collocations(
-            table(spark, sf_dir, "documents"), "text", min_support=5
-        )
-
-
-_init_q227()
 
 
 # --------------------------------------------------------------------
 # q228 — tokenizer fertility audit (per-language BPE compression)
 # --------------------------------------------------------------------
 
-def _init_q228() -> None:
-    from ..functions import text as T
-
-    @register(
-        "q228_tokenizer_fertility",
-        T.tokenizer_fertility_oracle_sql(k=8),
-        doc="Tokenizer fertility audit (functions/text.py "
-            "tokenizer_fertility): train q221's first 8 BPE merges "
-            "on the corpus, then per language measure tokens/word "
-            "and chars/token — the multilingual-tokenizer health "
-            "check (XLM-R/NLLB-style fertility tables). Corpus "
-            "collapses to per-(lang, word) counts once; the trained "
-            "vocab joins back broadcast. Integer sums, two final "
-            "double divisions — exact.",
+@register(
+    "q228_tokenizer_fertility",
+    T.tokenizer_fertility_oracle_sql(k=8),
+    doc="Tokenizer fertility audit (functions/text.py "
+        "tokenizer_fertility): train q221's first 8 BPE merges "
+        "on the corpus, then per language measure tokens/word "
+        "and chars/token — the multilingual-tokenizer health "
+        "check (XLM-R/NLLB-style fertility tables). Corpus "
+        "collapses to per-(lang, word) counts once; the trained "
+        "vocab joins back broadcast. Integer sums, two final "
+        "double divisions — exact.",
+)
+def q228_tokenizer_fertility(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return T.tokenizer_fertility(
+        table(spark, sf_dir, "documents"), k=8
     )
-    def q228_tokenizer_fertility(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        return T.tokenizer_fertility(
-            table(spark, sf_dir, "documents"), k=8
-        )
-
-
-_init_q228()
 
 
 # --------------------------------------------------------------------
@@ -10312,355 +9977,310 @@ _HITS_EDGES_SQL = """
 """
 
 
-def _init_q229() -> None:
-    from ..functions.graph import hits, hits_oracle_sql
+from ..functions.graph import hits, hits_oracle_sql
 
-    @register(
-        "q229_hits_hubs_authorities",
-        hits_oracle_sql(_HITS_EDGES_SQL, rounds=4),
-        doc="HITS hubs & authorities (functions/graph.py hits; "
-            "Kleinberg 1999) over the bipartite customer→part "
-            "purchase graph: 4 rounds of two shuffle-join + "
-            "hash-aggregate half-steps (the pagerank cost shape), "
-            "scores on the 1e-6 BIGINT grid with L∞ renormalization "
-            "riding a 1-row broadcast — the dual centrality "
-            "(broad buyers vs widely-bought parts) PageRank's "
-            "single score conflates. Oracle: half-rounds unrolled "
-            "into CTEs, bit-exact.",
+
+@register(
+    "q229_hits_hubs_authorities",
+    hits_oracle_sql(_HITS_EDGES_SQL, rounds=4),
+    doc="HITS hubs & authorities (functions/graph.py hits; "
+        "Kleinberg 1999) over the bipartite customer→part "
+        "purchase graph: 4 rounds of two shuffle-join + "
+        "hash-aggregate half-steps (the pagerank cost shape), "
+        "scores on the 1e-6 BIGINT grid with L∞ renormalization "
+        "riding a 1-row broadcast — the dual centrality "
+        "(broad buyers vs widely-bought parts) PageRank's "
+        "single score conflates. Oracle: half-rounds unrolled "
+        "into CTEs, bit-exact.",
+)
+def q229_hits_hubs_authorities(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    orders = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
+    edges = orders.join(
+        li, li.l_orderkey == orders.o_orderkey
+    ).select(
+        F.col("o_custkey").alias("src"),
+        F.col("l_partkey").alias("dst"),
     )
-    def q229_hits_hubs_authorities(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        orders = table(spark, sf_dir, "orders")
-        li = table(spark, sf_dir, "lineitem")
-        edges = orders.join(
-            li, li.l_orderkey == orders.o_orderkey
-        ).select(
-            F.col("o_custkey").alias("src"),
-            F.col("l_partkey").alias("dst"),
-        )
-        return hits(edges, rounds=4)
-
-
-_init_q229()
+    return hits(edges, rounds=4)
 
 
 # --------------------------------------------------------------------
 # q230 — cross-source score calibration (quantile normalization)
 # --------------------------------------------------------------------
 
-def _init_q230() -> None:
-    from ..functions import sampling as SA2
+_q230_rows_sql = (
+    "SELECT doc_id, source, CAST(length(text) AS BIGINT) AS score"
+    " FROM documents WHERE text IS NOT NULL"
+)
 
-    rows_sql = (
-        "SELECT doc_id, source, CAST(length(text) AS BIGINT) AS score"
-        " FROM documents WHERE text IS NOT NULL"
-    )
 
-    @register(
-        "q230_quantile_calibrate",
-        SA2.quantile_calibrate_sql(
-            rows_sql, score="score", group="source", id_="doc_id"
-        ),
-        doc="Cross-source score calibration by quantile "
-            "normalization (functions/sampling.py quantile_calibrate; "
-            "the microarray construct applied to corpus mixing): each "
-            "doc's within-source midrank percentile maps to the "
-            "global score at that quantile, in exact BIGINT "
-            "floor-division — so thresholds compare across sources "
-            "whose scorers drift. Group window is source-parallel; "
-            "global rank via util.global_row_index (range partition, "
-            "no single-partition window); one integer-rank join.",
-    )
-    def q230_quantile_calibrate(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        docs = (
-            table(spark, sf_dir, "documents")
-            .filter(F.col("text").isNotNull())
-            .select(
-                "doc_id",
-                "source",
-                F.length("text").cast("bigint").alias("score"),
-            )
+@register(
+    "q230_quantile_calibrate",
+    SA.quantile_calibrate_sql(
+        _q230_rows_sql, score="score", group="source", id_="doc_id"
+    ),
+    doc="Cross-source score calibration by quantile "
+        "normalization (functions/sampling.py quantile_calibrate; "
+        "the microarray construct applied to corpus mixing): each "
+        "doc's within-source midrank percentile maps to the "
+        "global score at that quantile, in exact BIGINT "
+        "floor-division — so thresholds compare across sources "
+        "whose scorers drift. Group window is source-parallel; "
+        "global rank via util.global_row_index (range partition, "
+        "no single-partition window); one integer-rank join.",
+)
+def q230_quantile_calibrate(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select(
+            "doc_id",
+            "source",
+            F.length("text").cast("bigint").alias("score"),
         )
-        return SA2.quantile_calibrate(
-            docs, score_col="score", group_col="source", id_col="doc_id"
-        )
-
-
-_init_q230()
+    )
+    return SA.quantile_calibrate(
+        docs, score_col="score", group_col="source", id_col="doc_id"
+    )
 
 
 # --------------------------------------------------------------------
 # q231 — exponentially-decayed trending scores
 # --------------------------------------------------------------------
 
-def _init_q231() -> None:
-    from ..functions import profile as P2
 
-    @register(
-        "q231_decayed_trending",
-        P2.decayed_trending_sql("events", halflife_days=1),
-        doc="Half-life-decayed activity scores per event type "
-            "(functions/profile.py decayed_trending): each event "
-            "weighs 2^-(age_days) — recent bursts outrank stale "
-            "volume, the trending monitor raw counts and fixed "
-            "windows cannot express. Exact despite the floats: "
-            "calendar-day ages, power-of-two weights (never libm), "
-            "one IEEE multiply, DECIMAL(28,12)-quantized sums. One "
-            "scan, one |keys|-row aggregate, 1-row broadcast T.",
+@register(
+    "q231_decayed_trending",
+    P.decayed_trending_sql("events", halflife_days=1),
+    doc="Half-life-decayed activity scores per event type "
+        "(functions/profile.py decayed_trending): each event "
+        "weighs 2^-(age_days) — recent bursts outrank stale "
+        "volume, the trending monitor raw counts and fixed "
+        "windows cannot express. Exact despite the floats: "
+        "calendar-day ages, power-of-two weights (never libm), "
+        "one IEEE multiply, DECIMAL(28,12)-quantized sums. One "
+        "scan, one |keys|-row aggregate, 1-row broadcast T.",
+)
+def q231_decayed_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return P.decayed_trending(
+        table(spark, sf_dir, "events"), halflife_days=1
     )
-    def q231_decayed_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return P2.decayed_trending(
-            table(spark, sf_dir, "events"), halflife_days=1
-        )
-
-
-_init_q231()
 
 
 # --------------------------------------------------------------------
 # q232 — hard-negative mining for retrieval training
 # --------------------------------------------------------------------
 
-def _init_q232() -> None:
-    from ..functions.search import hard_negatives, hard_negatives_oracle_sql
+from ..functions.search import hard_negatives, hard_negatives_oracle_sql
 
-    @register(
-        "q232_hard_negatives",
-        hard_negatives_oracle_sql(
-            "documents", _Q212_QUERIES, k=5, rel_min=3
-        ),
-        doc="Hard-negative mining (functions/search.py "
-            "hard_negatives; the DPR/ANCE contrastive-training "
-            "recipe): per query, the top-5 BM25-ranked documents "
-            "that are NOT relevant (grade < 3 distinct terms) — the "
-            "negatives a retrieval model actually learns from. Same "
-            "one-scan batch BM25 as q212 (shared _bm25_matches_cte "
-            "oracle prefix), per-query window cut over term-matched "
-            "docs only, deterministic via the round-12 decimal "
-            "score sums.",
+
+@register(
+    "q232_hard_negatives",
+    hard_negatives_oracle_sql(
+        "documents", _Q212_QUERIES, k=5, rel_min=3
+    ),
+    doc="Hard-negative mining (functions/search.py "
+        "hard_negatives; the DPR/ANCE contrastive-training "
+        "recipe): per query, the top-5 BM25-ranked documents "
+        "that are NOT relevant (grade < 3 distinct terms) — the "
+        "negatives a retrieval model actually learns from. Same "
+        "one-scan batch BM25 as q212 (shared _bm25_matches_cte "
+        "oracle prefix), per-query window cut over term-matched "
+        "docs only, deterministic via the round-12 decimal "
+        "score sums.",
+)
+def q232_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return hard_negatives(
+        table(spark, sf_dir, "documents"), _Q212_QUERIES, k=5, rel_min=3
     )
-    def q232_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return hard_negatives(
-            table(spark, sf_dir, "documents"), _Q212_QUERIES, k=5, rel_min=3
-        )
-
-
-_init_q232()
 
 
 # --------------------------------------------------------------------
 # q233 — kNN label-prediction eval (embedding quality probe)
 # --------------------------------------------------------------------
 
-def _init_q233() -> None:
-    @register(
-        "q233_knn_label_eval",
-        S.knn_label_eval_oracle_sql(k=5, query_pred="vec_id < 100"),
-        doc="kNN label-prediction confusion matrix (functions/"
-            "similarity.py knn_label_eval; the SentEval/MTEB-style "
-            "embedding probe): 100 probe vectors, top-5 cosine "
-            "neighbors via the blocked GEMM (q26's plan), majority "
-            "vote with (count desc, label asc) tie-break, "
-            "(true_label, pred_label, n) counts. Off-diagonal mass "
-            "= collapsed or batch-effected space. Probe-bounded "
-            "|Q|·N·d flops — the eval you run sampled, never "
-            "all-pairs.",
-    )
-    def q233_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = table(spark, sf_dir, "embeddings")
-        return S.knn_label_eval(emb, emb.filter("vec_id < 100"), k=5)
-
-
-_init_q233()
+@register(
+    "q233_knn_label_eval",
+    S.knn_label_eval_oracle_sql(k=5, query_pred="vec_id < 100"),
+    doc="kNN label-prediction confusion matrix (functions/"
+        "similarity.py knn_label_eval; the SentEval/MTEB-style "
+        "embedding probe): 100 probe vectors, top-5 cosine "
+        "neighbors via the blocked GEMM (q26's plan), majority "
+        "vote with (count desc, label asc) tie-break, "
+        "(true_label, pred_label, n) counts. Off-diagonal mass "
+        "= collapsed or batch-effected space. Probe-bounded "
+        "|Q|·N·d flops — the eval you run sampled, never "
+        "all-pairs.",
+)
+def q233_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    return S.knn_label_eval(emb, emb.filter("vec_id < 100"), k=5)
 
 
 # --------------------------------------------------------------------
 # q234 — temporal leakage-safe split
 # --------------------------------------------------------------------
 
-def _init_q234() -> None:
-    from ..functions import sampling as SA3
 
-    @register(
-        "q234_temporal_split",
-        f"""
-        WITH s AS ({SA3.temporal_split_sql("events", test_frac_pct=20)})
+@register(
+    "q234_temporal_split",
+    f"""
+        WITH s AS ({SA.temporal_split_sql("events", test_frac_pct=20)})
         SELECT user_id, event_id, split FROM s
         """,
-        doc="Temporal leakage-safe split (functions/sampling.py "
-            "temporal_split): per entity the most recent 20% of "
-            "events (by event time, exact integer rank rule r*100 > "
-            "n*80) become test — the split sequence/recommendation "
-            "training requires, where q55's hash split would leak "
-            "future behavior into train. One entity-partitioned "
-            "window, parallel across entities.",
+    doc="Temporal leakage-safe split (functions/sampling.py "
+        "temporal_split): per entity the most recent 20% of "
+        "events (by event time, exact integer rank rule r*100 > "
+        "n*80) become test — the split sequence/recommendation "
+        "training requires, where q55's hash split would leak "
+        "future behavior into train. One entity-partitioned "
+        "window, parallel across entities.",
+)
+def q234_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id"
     )
-    def q234_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id"
-        )
-        return SA3.temporal_split(ev, test_frac_pct=20).select(
-            "user_id", "event_id", "split"
-        )
-
-
-_init_q234()
+    return SA.temporal_split(ev, test_frac_pct=20).select(
+        "user_id", "event_id", "split"
+    )
 
 
 # --------------------------------------------------------------------
 # q235 — leave-one-out target encoding
 # --------------------------------------------------------------------
 
-def _init_q235() -> None:
-    from ..functions import profile as P3
+_q235_rows_sql = (
+    "SELECT o_orderkey AS id, o_orderpriority AS cat,"
+    " CAST(round(o_totalprice * 100) AS BIGINT) AS y FROM orders"
+)
 
-    rows_sql = (
-        "SELECT o_orderkey AS id, o_orderpriority AS cat,"
-        " CAST(round(o_totalprice * 100) AS BIGINT) AS y FROM orders"
+
+@register(
+    "q235_target_encoding",
+    P.target_encode_loo_sql(_q235_rows_sql),
+    doc="Leave-one-out target encoding with additive smoothing "
+        "(functions/profile.py target_encode_loo; Micci-Barreca "
+        "2001, the CatBoost-family encoder): order priority "
+        "encoded against total price in exact integer cents — "
+        "enc = (sum_cat − y_i + 10·ȳ)/(n_cat − 1 + 10). LOO "
+        "kills the self-leakage of naive mean encoding; the "
+        "prior tames rare categories. One category-row "
+        "aggregate broadcast back; encoding row-local.",
+)
+def q235_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("id"),
+        F.col("o_orderpriority").alias("cat"),
+        F.round(F.col("o_totalprice") * 100)
+        .cast("bigint")
+        .alias("y"),
     )
-
-    @register(
-        "q235_target_encoding",
-        P3.target_encode_loo_sql(rows_sql),
-        doc="Leave-one-out target encoding with additive smoothing "
-            "(functions/profile.py target_encode_loo; Micci-Barreca "
-            "2001, the CatBoost-family encoder): order priority "
-            "encoded against total price in exact integer cents — "
-            "enc = (sum_cat − y_i + 10·ȳ)/(n_cat − 1 + 10). LOO "
-            "kills the self-leakage of naive mean encoding; the "
-            "prior tames rare categories. One category-row "
-            "aggregate broadcast back; encoding row-local.",
-    )
-    def q235_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-        orders = table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("id"),
-            F.col("o_orderpriority").alias("cat"),
-            F.round(F.col("o_totalprice") * 100)
-            .cast("bigint")
-            .alias("y"),
-        )
-        return P3.target_encode_loo(orders, "cat", "y", "id")
-
-
-_init_q235()
+    return P.target_encode_loo(orders, "cat", "y", "id")
 
 
 # --------------------------------------------------------------------
 # q236 — skip-gram pair extraction (sequence-embedding prep)
 # --------------------------------------------------------------------
 
-def _init_q236() -> None:
-    from ..functions import sampling as SA4
 
-    @register(
-        "q236_skipgram_pairs",
-        f"""
-        WITH pr AS ({SA4.skipgram_pairs_sql("events", window=2)})
+@register(
+    "q236_skipgram_pairs",
+    f"""
+        WITH pr AS ({SA.skipgram_pairs_sql("events", window=2)})
         SELECT entity, center, context, rel_pos,
                CAST(COUNT(*) AS BIGINT) AS n
         FROM pr GROUP BY 1, 2, 3, 4
         """,
-        doc="Skip-gram (center, context, rel_pos) pair extraction "
-            "from per-user event timelines (functions/sampling.py "
-            "skipgram_pairs; the prod2vec/item2vec data prep, "
-            "Grbovic KDD'15): window LAG columns over ONE "
-            "entity-partitioned sort — never collect_list (power-"
-            "user arrays), never a range self-join. Rolled up to "
-            "(entity, pair, offset) counts for the gate.",
+    doc="Skip-gram (center, context, rel_pos) pair extraction "
+        "from per-user event timelines (functions/sampling.py "
+        "skipgram_pairs; the prod2vec/item2vec data prep, "
+        "Grbovic KDD'15): window LAG columns over ONE "
+        "entity-partitioned sort — never collect_list (power-"
+        "user arrays), never a range self-join. Rolled up to "
+        "(entity, pair, offset) counts for the gate.",
+)
+def q236_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pr = SA.skipgram_pairs(
+        table(spark, sf_dir, "events"), window=2
     )
-    def q236_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        pr = SA4.skipgram_pairs(
-            table(spark, sf_dir, "events"), window=2
-        )
-        return pr.groupBy("entity", "center", "context", "rel_pos").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n")
-        )
-
-
-_init_q236()
+    return pr.groupBy("entity", "center", "context", "rel_pos").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
 
 
 # --------------------------------------------------------------------
 # q237 — pairwise source divergence (mixing audit)
 # --------------------------------------------------------------------
 
-def _init_q237() -> None:
-    from ..functions import text as T2
 
-    @register(
-        "q237_source_divergence",
-        T2.source_js_divergence_sql("documents", top_k_tokens=200),
-        doc="Pairwise Jensen-Shannon divergence between source "
-            "unigram distributions (functions/text.py "
-            "source_js_divergence): the which-sources-are-"
-            "distributionally-close audit behind mixing decisions — "
-            "symmetric bounded companion to q117 PSI (numeric) and "
-            "q168 MI (categorical). Vocab capped at global-df top "
-            "200, so the probability grid is |groups|·k rows at any "
-            "corpus size; absent tokens densify through the grid "
-            "join (an inner join would drop their ½·p mass).",
+@register(
+    "q237_source_divergence",
+    T.source_js_divergence_sql("documents", top_k_tokens=200),
+    doc="Pairwise Jensen-Shannon divergence between source "
+        "unigram distributions (functions/text.py "
+        "source_js_divergence): the which-sources-are-"
+        "distributionally-close audit behind mixing decisions — "
+        "symmetric bounded companion to q117 PSI (numeric) and "
+        "q168 MI (categorical). Vocab capped at global-df top "
+        "200, so the probability grid is |groups|·k rows at any "
+        "corpus size; absent tokens densify through the grid "
+        "join (an inner join would drop their ½·p mass).",
+)
+def q237_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return T.source_js_divergence(
+        table(spark, sf_dir, "documents"), top_k_tokens=200
     )
-    def q237_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return T2.source_js_divergence(
-            table(spark, sf_dir, "documents"), top_k_tokens=200
-        )
-
-
-_init_q237()
 
 
 # --------------------------------------------------------------------
 # q238 — Wilson lower-bound ranking (sample-size-aware rates)
 # --------------------------------------------------------------------
 
-def _init_q238() -> None:
-    from ..functions import profile as P4
+_q238_rows_sql = (
+    "SELECT l_partkey AS k,"
+    " CASE WHEN l_returnflag <> 'R' THEN 1 ELSE 0 END AS s"
+    " FROM lineitem"
+)
 
-    rows_sql = (
-        "SELECT l_partkey AS k,"
-        " CASE WHEN l_returnflag <> 'R' THEN 1 ELSE 0 END AS s"
-        " FROM lineitem"
+
+@register(
+    "q238_wilson_ranking",
+    P.wilson_rank_sql(_q238_rows_sql, min_trials=5),
+    doc="Wilson score lower-bound ranking (functions/profile.py "
+        "wilson_rank; Wilson 1927 — 'how not to sort by average "
+        "rating'): parts ranked by the lower confidence bound of "
+        "their non-return rate, so 2/2 never outranks 98/100. "
+        "Exact WITHOUT quantization: BIGINT counts into one "
+        "fixed-shape double expression whose only non-arithmetic "
+        "op is sqrt — correctly rounded by IEEE mandate, unlike "
+        "the libm transcendentals the module quantizes. One "
+        "keys-row aggregate, row-local math.",
+)
+def q238_wilson_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem").select(
+        F.col("l_partkey").alias("k"),
+        F.when(F.col("l_returnflag") != "R", F.lit(1))
+        .otherwise(F.lit(0))
+        .alias("s"),
     )
-
-    @register(
-        "q238_wilson_ranking",
-        P4.wilson_rank_sql(rows_sql, min_trials=5),
-        doc="Wilson score lower-bound ranking (functions/profile.py "
-            "wilson_rank; Wilson 1927 — 'how not to sort by average "
-            "rating'): parts ranked by the lower confidence bound of "
-            "their non-return rate, so 2/2 never outranks 98/100. "
-            "Exact WITHOUT quantization: BIGINT counts into one "
-            "fixed-shape double expression whose only non-arithmetic "
-            "op is sqrt — correctly rounded by IEEE mandate, unlike "
-            "the libm transcendentals the module quantizes. One "
-            "keys-row aggregate, row-local math.",
-    )
-    def q238_wilson_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = table(spark, sf_dir, "lineitem").select(
-            F.col("l_partkey").alias("k"),
-            F.when(F.col("l_returnflag") != "R", F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("s"),
-        )
-        return P4.wilson_rank(li, "k", "s", min_trials=5)
-
-
-_init_q238()
+    return P.wilson_rank(li, "k", "s", min_trials=5)
 
 
 # --------------------------------------------------------------------
 # q239 — funnel subsequence counting (linear DP vs the oracle's joins)
 # --------------------------------------------------------------------
 
-def _init_q239() -> None:
-    _P1, _P2, _P3 = "view", "click", "purchase"
+_P1, _P2, _P3 = "view", "click", "purchase"
 
-    @register(
-        "q239_funnel_count",
-        f"""
+
+@register(
+    "q239_funnel_count",
+    f"""
         WITH p1 AS (SELECT user_id, ts, event_id FROM events
                     WHERE event_type = '{_P1}'),
         p2 AS (SELECT user_id, ts, event_id FROM events
@@ -10676,70 +10296,64 @@ def _init_q239() -> None:
                  AND (c.ts, c.event_id) > (b.ts, b.event_id)
         GROUP BY 1
         """,
-        doc="Funnel SUBSEQUENCE counting — how many distinct "
-            "view→click→purchase orderings (with any gaps) each "
-            "user's timeline contains, the weighted-funnel metric "
-            "q97's reached-stage form cannot express. Spark runs the "
-            "LINEAR DP fold over each user's sorted event array "
-            "(c3 += c2; c2 += c1; c1 += 1 — one aggregate, one "
-            "shuffle, O(events) work); the ORACLE deliberately "
-            "computes it the O(n³)-join way — the two agree only if "
-            "the DP is exactly right, which is the strongest check "
-            "the gate can make. At 100 TB the DP is the only viable "
-            "shape (position joins explode on power users).",
-    )
-    def q239_funnel_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        arr = ev.groupBy("user_id").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("ts", "event_id", "event_type")
-                    )
-                ),
-                lambda s: s["event_type"],
-            ).alias("seq")
-        )
-        zero = F.struct(
-            F.lit(0).cast("bigint").alias("c1"),
-            F.lit(0).cast("bigint").alias("c2"),
-            F.lit(0).cast("bigint").alias("c3"),
-        )
-        dp = F.aggregate(
-            F.col("seq"),
-            zero,
-            lambda acc, e: F.struct(
-                (
-                    acc["c1"]
-                    + F.when(e == _P1, F.lit(1)).otherwise(F.lit(0))
-                ).alias("c1"),
-                (
-                    acc["c2"]
-                    + F.when(e == _P2, acc["c1"]).otherwise(F.lit(0))
-                ).alias("c2"),
-                (
-                    acc["c3"]
-                    + F.when(e == _P3, acc["c2"]).otherwise(F.lit(0))
-                ).alias("c3"),
+    doc="Funnel SUBSEQUENCE counting — how many distinct "
+        "view→click→purchase orderings (with any gaps) each "
+        "user's timeline contains, the weighted-funnel metric "
+        "q97's reached-stage form cannot express. Spark runs the "
+        "LINEAR DP fold over each user's sorted event array "
+        "(c3 += c2; c2 += c1; c1 += 1 — one aggregate, one "
+        "shuffle, O(events) work); the ORACLE deliberately "
+        "computes it the O(n³)-join way — the two agree only if "
+        "the DP is exactly right, which is the strongest check "
+        "the gate can make. At 100 TB the DP is the only viable "
+        "shape (position joins explode on power users).",
+)
+def q239_funnel_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    arr = ev.groupBy("user_id").agg(
+        F.transform(
+            F.array_sort(
+                F.collect_list(
+                    F.struct("ts", "event_id", "event_type")
+                )
             ),
-        )
-        return (
-            arr.select("user_id", dp["c3"].alias("n_funnels"))
-            .filter(F.col("n_funnels") > 0)
-        )
-
-
-_init_q239()
+            lambda s: s["event_type"],
+        ).alias("seq")
+    )
+    zero = F.struct(
+        F.lit(0).cast("bigint").alias("c1"),
+        F.lit(0).cast("bigint").alias("c2"),
+        F.lit(0).cast("bigint").alias("c3"),
+    )
+    dp = F.aggregate(
+        F.col("seq"),
+        zero,
+        lambda acc, e: F.struct(
+            (
+                acc["c1"]
+                + F.when(e == _P1, F.lit(1)).otherwise(F.lit(0))
+            ).alias("c1"),
+            (
+                acc["c2"]
+                + F.when(e == _P2, acc["c1"]).otherwise(F.lit(0))
+            ).alias("c2"),
+            (
+                acc["c3"]
+                + F.when(e == _P3, acc["c2"]).otherwise(F.lit(0))
+            ).alias("c3"),
+        ),
+    )
+    return (
+        arr.select("user_id", dp["c3"].alias("n_funnels"))
+        .filter(F.col("n_funnels") > 0)
+    )
 
 
 # --------------------------------------------------------------------
 # q240 — Theil-Sen robust trend (robust twin of q144's OLS)
 # --------------------------------------------------------------------
 
-def _init_q240() -> None:
-    from ..functions import profile as P5
-
-    pts_sql = """
+_q240_pts_sql = """
         SELECT p.p_brand,
                CAST(date_diff('day', DATE '1970-01-01', l.l_shipdate)
                     AS BIGINT) // 7 AS x,
@@ -10748,179 +10362,160 @@ def _init_q240() -> None:
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         GROUP BY 1, 2"""
 
-    @register(
-        "q240_theil_sen_trend",
-        P5.theil_sen_oracle_sql(pts_sql, ["p_brand"]),
-        doc="Per-brand Theil-Sen robust trend (functions/profile.py "
-            "theil_sen_trend; Sen 1968) over the same weekly-revenue "
-            "points as q144's OLS — the median of pairwise slopes "
-            "that ~29% contaminated weeks cannot move, where one bad "
-            "week drags OLS arbitrarily. Pairs are O(weeks²) per "
-            "group over PRE-AGGREGATED points, group key rides the "
-            "self-join; slope candidates carry exact (dy, dx) BIGINT "
-            "components and the lower median is picked by one "
-            "group window with an exact tiebreak.",
+
+@register(
+    "q240_theil_sen_trend",
+    P.theil_sen_oracle_sql(_q240_pts_sql, ["p_brand"]),
+    doc="Per-brand Theil-Sen robust trend (functions/profile.py "
+        "theil_sen_trend; Sen 1968) over the same weekly-revenue "
+        "points as q144's OLS — the median of pairwise slopes "
+        "that ~29% contaminated weeks cannot move, where one bad "
+        "week drags OLS arbitrarily. Pairs are O(weeks²) per "
+        "group over PRE-AGGREGATED points, group key rides the "
+        "self-join; slope candidates carry exact (dy, dx) BIGINT "
+        "components and the lower median is picked by one "
+        "group window with an exact tiebreak.",
+)
+def q240_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_partkey",
+        F.expr(
+            "CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)"
+            " DIV 7"
+        ).alias("x"),
+        F.expr(
+            "CAST(round(l_extendedprice * 100) AS BIGINT)"
+        ).alias("cents"),
     )
-    def q240_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_partkey",
-            F.expr(
-                "CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)"
-                " DIV 7"
-            ).alias("x"),
-            F.expr(
-                "CAST(round(l_extendedprice * 100) AS BIGINT)"
-            ).alias("cents"),
-        )
-        part = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        weekly = (
-            li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-            .groupBy("p_brand", "x")
-            .agg(F.sum("cents").cast("bigint").alias("y"))
-        )
-        return P5.theil_sen_trend(weekly, ["p_brand"], "x", "y")
-
-
-_init_q240()
+    part = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    weekly = (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .groupBy("p_brand", "x")
+        .agg(F.sum("cents").cast("bigint").alias("y"))
+    )
+    return P.theil_sen_trend(weekly, ["p_brand"], "x", "y")
 
 
 # --------------------------------------------------------------------
 # q241 — lead-lag cross-correlation between daily series
 # --------------------------------------------------------------------
 
-def _init_q241() -> None:
-    from ..functions import profile as P6
-
-    a_sql = """
+_q241_a_sql = """
         SELECT CAST(date_diff('day', DATE '1970-01-01', o_orderdate)
                     AS BIGINT) AS t,
                CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
                     AS BIGINT) AS v
         FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY 1"""
-    b_sql = """
+_q241_b_sql = """
         SELECT CAST(date_diff('day', DATE '1970-01-01', o_orderdate)
                     AS BIGINT) AS t,
                CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
                     AS BIGINT) AS v
         FROM orders WHERE o_orderpriority = '5-LOW' GROUP BY 1"""
 
-    @register(
-        "q241_lead_lag_corr",
-        P6.lead_lag_corr_sql(a_sql, b_sql, max_lag=7),
-        doc="Lead-lag cross-correlation (functions/profile.py "
-            "lead_lag_corr): Pearson corr of urgent-priority daily "
-            "revenue against low-priority revenue at every lag in "
-            "±7 days — the alignment scan that tells you whether A "
-            "LEADS B, which q127's same-day correlation hides. Five "
-            "exact DECIMAL(38,0) sufficient statistics per lag; the "
-            "only floats are one multiply, one IEEE sqrt, one "
-            "divide, rounded at ≤1 magnitude. Series pre-aggregate "
-            "upstream; the lag explode is (2k+1)·days rows.",
-    )
-    def q241_lead_lag_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-        orders = table(spark, sf_dir, "orders")
 
-        def daily(prio: str) -> DataFrame:
-            return (
-                orders.filter(F.col("o_orderpriority") == prio)
-                .select(
-                    F.expr(
-                        "CAST(datediff(o_orderdate, DATE '1970-01-01')"
-                        " AS BIGINT)"
-                    ).alias("t"),
-                    F.expr(
-                        "CAST(round(o_totalprice * 100) AS BIGINT)"
-                    ).alias("cents"),
-                )
-                .groupBy("t")
-                .agg(F.sum("cents").cast("bigint").alias("v"))
+@register(
+    "q241_lead_lag_corr",
+    P.lead_lag_corr_sql(_q241_a_sql, _q241_b_sql, max_lag=7),
+    doc="Lead-lag cross-correlation (functions/profile.py "
+        "lead_lag_corr): Pearson corr of urgent-priority daily "
+        "revenue against low-priority revenue at every lag in "
+        "±7 days — the alignment scan that tells you whether A "
+        "LEADS B, which q127's same-day correlation hides. Five "
+        "exact DECIMAL(38,0) sufficient statistics per lag; the "
+        "only floats are one multiply, one IEEE sqrt, one "
+        "divide, rounded at ≤1 magnitude. Series pre-aggregate "
+        "upstream; the lag explode is (2k+1)·days rows.",
+)
+def q241_lead_lag_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = table(spark, sf_dir, "orders")
+
+    def daily(prio: str) -> DataFrame:
+        return (
+            orders.filter(F.col("o_orderpriority") == prio)
+            .select(
+                F.expr(
+                    "CAST(datediff(o_orderdate, DATE '1970-01-01')"
+                    " AS BIGINT)"
+                ).alias("t"),
+                F.expr(
+                    "CAST(round(o_totalprice * 100) AS BIGINT)"
+                ).alias("cents"),
             )
-
-        return P6.lead_lag_corr(
-            daily("1-URGENT"), daily("5-LOW"), max_lag=7
+            .groupBy("t")
+            .agg(F.sum("cents").cast("bigint").alias("v"))
         )
 
-
-_init_q241()
+    return P.lead_lag_corr(
+        daily("1-URGENT"), daily("5-LOW"), max_lag=7
+    )
 
 # --------------------------------------------------------------------
 # q242 — corpus-level exact line dedup, keep-first (RefinedWeb pass)
 # --------------------------------------------------------------------
 
-def _init_q242() -> None:
-    from ..functions import text as T7
 
-    @register(
-        "q242_line_dedup",
-        T7.line_dedup_sql("documents", words_per_line=3),
-        doc="Exact line-level dedup with document reconstruction "
-            "(functions/text.py line_dedup; RefinedWeb §3.3 / Dolma): "
-            "fixed 3-word lines, globally keep only the first "
-            "(doc_id, pos) occurrence of each line, reassemble docs "
-            "from survivors. The complement of q164's boilerplate "
-            "strip — one copy of every line survives, so no content "
-            "is lost, only repetition. Spark runs the skew-safe "
-            "groupBy(line)→min(struct) winner aggregate (map-side "
-            "partials absorb hot lines); the oracle runs the "
-            "equivalent row_number window — the gate proves the two "
-            "shapes agree including full reconstructed text.",
-    )
-    def q242_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        from ..functions.text import line_dedup
+@register(
+    "q242_line_dedup",
+    T.line_dedup_sql("documents", words_per_line=3),
+    doc="Exact line-level dedup with document reconstruction "
+        "(functions/text.py line_dedup; RefinedWeb §3.3 / Dolma): "
+        "fixed 3-word lines, globally keep only the first "
+        "(doc_id, pos) occurrence of each line, reassemble docs "
+        "from survivors. The complement of q164's boilerplate "
+        "strip — one copy of every line survives, so no content "
+        "is lost, only repetition. Spark runs the skew-safe "
+        "groupBy(line)→min(struct) winner aggregate (map-side "
+        "partials absorb hot lines); the oracle runs the "
+        "equivalent row_number window — the gate proves the two "
+        "shapes agree including full reconstructed text.",
+)
+def q242_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    from ..functions.text import line_dedup
 
-        return line_dedup(docs, words_per_line=3)
-
-
-_init_q242()
+    return line_dedup(docs, words_per_line=3)
 
 # --------------------------------------------------------------------
 # q243 — dense HyperLogLog audience rollup on the exact gate
 # --------------------------------------------------------------------
 
-def _init_q243() -> None:
-    from ..functions import sketch as SK3
 
-    @register(
-        "q243_hll_cardinality",
-        SK3.hll_oracle_sql("events", "event_type", "user_id", p=10),
-        doc="Dense HyperLogLog distinct-user estimation per event "
-            "type PLUS the merged total row (functions/sketch.py "
-            "hll_distinct; Flajolet 2007): 1024 md5-derived "
-            "registers, rank via integer bit-length (no float log2), "
-            "exact dyadic BIGINT harmonic sum, linear-counting "
-            "branch. The '*' row is computed by max-merging the "
-            "per-group REGISTER STATES, never by rescanning — the "
-            "mergeability contract a 100 TB per-day/per-shard rollup "
-            "relies on. Complements q161's KMV (bottom-k) and q42's "
-            "approx_count_distinct (rows-only): this one is a pure "
-            "deterministic data function, so the full estimator "
-            "sits on the exact cross-engine gate.",
-    )
-    def q243_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        from ..functions.sketch import hll_distinct
+@register(
+    "q243_hll_cardinality",
+    SK.hll_oracle_sql("events", "event_type", "user_id", p=10),
+    doc="Dense HyperLogLog distinct-user estimation per event "
+        "type PLUS the merged total row (functions/sketch.py "
+        "hll_distinct; Flajolet 2007): 1024 md5-derived "
+        "registers, rank via integer bit-length (no float log2), "
+        "exact dyadic BIGINT harmonic sum, linear-counting "
+        "branch. The '*' row is computed by max-merging the "
+        "per-group REGISTER STATES, never by rescanning — the "
+        "mergeability contract a 100 TB per-day/per-shard rollup "
+        "relies on. Complements q161's KMV (bottom-k) and q42's "
+        "approx_count_distinct (rows-only): this one is a pure "
+        "deterministic data function, so the full estimator "
+        "sits on the exact cross-engine gate.",
+)
+def q243_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    from ..functions.sketch import hll_distinct
 
-        return hll_distinct(ev, "event_type", "user_id", p=10)
-
-
-_init_q243()
+    return hll_distinct(ev, "event_type", "user_id", p=10)
 
 # --------------------------------------------------------------------
 # q244 — rendezvous-hash sharding + minimal-movement reshard audit
 # --------------------------------------------------------------------
 
-def _init_q244() -> None:
-    from ..functions import sampling as SA7
+_q244_s8 = SA.rendezvous_shard_sql("doc_id", 8)
+_q244_s9 = SA.rendezvous_shard_sql("doc_id", 9)
 
-    _s8 = SA7.rendezvous_shard_sql("doc_id", 8)
-    _s9 = SA7.rendezvous_shard_sql("doc_id", 9)
 
-    @register(
-        "q244_rendezvous_shards",
-        f"""
+@register(
+    "q244_rendezvous_shards",
+    f"""
         WITH assigned AS (
-            SELECT doc_id, {_s8} AS shard, {_s9} AS shard_next
+            SELECT doc_id, {_q244_s8} AS shard, {_q244_s9} AS shard_next
             FROM documents)
         SELECT shard,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -10932,125 +10527,112 @@ def _init_q244() -> None:
                    AS n_moved_wrong
         FROM assigned GROUP BY 1
         """,
-        doc="Rendezvous/HRW shard placement with a grow-by-one "
-            "reshard audit (functions/sampling.py rendezvous_shard; "
-            "Thaler & Ravishankar 1998): assign every document to 8 "
-            "shards and to 9, then count per-shard movement. HRW's "
-            "contract — the reason a 100 TB ingest can grow its "
-            "shard count without rewriting the corpus — is that "
-            "moved keys land ONLY on the added shard (n_moved_wrong "
-            "= 0 everywhere, ~1/9 of keys move in total), vs "
-            "hash%n which reshuffles ~8/9 of everything. The argmax "
-            "is one narrow zero-shuffle projection per row.",
+    doc="Rendezvous/HRW shard placement with a grow-by-one "
+        "reshard audit (functions/sampling.py rendezvous_shard; "
+        "Thaler & Ravishankar 1998): assign every document to 8 "
+        "shards and to 9, then count per-shard movement. HRW's "
+        "contract — the reason a 100 TB ingest can grow its "
+        "shard count without rewriting the corpus — is that "
+        "moved keys land ONLY on the added shard (n_moved_wrong "
+        "= 0 everywhere, ~1/9 of keys move in total), vs "
+        "hash%n which reshuffles ~8/9 of everything. The argmax "
+        "is one narrow zero-shuffle projection per row.",
+)
+def q244_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    from ..functions.sampling import rendezvous_shard
+
+    a = docs.select(
+        rendezvous_shard(F.col("doc_id"), 8).alias("shard"),
+        rendezvous_shard(F.col("doc_id"), 9).alias("shard_next"),
     )
-    def q244_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        from ..functions.sampling import rendezvous_shard
-
-        a = docs.select(
-            rendezvous_shard(F.col("doc_id"), 8).alias("shard"),
-            rendezvous_shard(F.col("doc_id"), 9).alias("shard_next"),
-        )
-        moved = (F.col("shard_next") != F.col("shard")).cast("int")
-        wrong = (
-            (F.col("shard_next") != F.col("shard"))
-            & (F.col("shard_next") != F.lit(8))
-        ).cast("int")
-        return a.groupBy("shard").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(moved).cast("bigint").alias("n_moved"),
-            F.sum(wrong).cast("bigint").alias("n_moved_wrong"),
-        )
-
-
-_init_q244()
+    moved = (F.col("shard_next") != F.col("shard")).cast("int")
+    wrong = (
+        (F.col("shard_next") != F.col("shard"))
+        & (F.col("shard_next") != F.lit(8))
+    ).cast("int")
+    return a.groupBy("shard").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(moved).cast("bigint").alias("n_moved"),
+        F.sum(wrong).cast("bigint").alias("n_moved_wrong"),
+    )
 
 # --------------------------------------------------------------------
 # q245 — multi-touch revenue attribution (first/last/linear at once)
 # --------------------------------------------------------------------
 
-def _init_q245() -> None:
-    from ..functions import profile as P7
-
-    _p_sql = """
+_q245_p_sql = """
         SELECT user_id, ts, event_id,
                CAST(round(value * 100) AS BIGINT) AS cents
         FROM events WHERE event_type = 'purchase'"""
-    _t_sql = """
+_q245_t_sql = """
         SELECT user_id, ts, event_id, event_type
         FROM events WHERE event_type IN ('view', 'click')"""
 
-    @register(
-        "q245_attribution",
-        P7.attribution_sql(_p_sql, _t_sql, lookback_days=7),
-        doc="Multi-touch revenue attribution (functions/profile.py "
-            "attribution): every purchase's exact cents credited to "
-            "the user's view/click touches in a 7-day lookback under "
-            "first-touch, last-touch, and linear models "
-            "simultaneously — the marketing-path aggregate q97's "
-            "funnel and q115's paths don't express. Integer "
-            "remainder-to-first split conserves cents exactly "
-            "(each model column sums to the same attributed total, "
-            "unit-tested), which is what keeps a float-free exact "
-            "gate possible. Per-user range join bounded by touch "
-            "density; the ranking window shuffles on the unique "
-            "purchase key — no skew.",
+
+@register(
+    "q245_attribution",
+    P.attribution_sql(_q245_p_sql, _q245_t_sql, lookback_days=7),
+    doc="Multi-touch revenue attribution (functions/profile.py "
+        "attribution): every purchase's exact cents credited to "
+        "the user's view/click touches in a 7-day lookback under "
+        "first-touch, last-touch, and linear models "
+        "simultaneously — the marketing-path aggregate q97's "
+        "funnel and q115's paths don't express. Integer "
+        "remainder-to-first split conserves cents exactly "
+        "(each model column sums to the same attributed total, "
+        "unit-tested), which is what keeps a float-free exact "
+        "gate possible. Per-user range join bounded by touch "
+        "density; the ranking window shuffles on the unique "
+        "purchase key — no skew.",
+)
+def q245_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    from ..functions.profile import attribution
+
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
     )
-    def q245_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        from ..functions.profile import attribution
-
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-        )
-        touches = ev.filter(
-            F.col("event_type").isin("view", "click")
-        ).select("user_id", "ts", "event_id", "event_type")
-        return attribution(purchases, touches, lookback_days=7)
-
-
-_init_q245()
+    touches = ev.filter(
+        F.col("event_type").isin("view", "click")
+    ).select("user_id", "ts", "event_id", "event_type")
+    return attribution(purchases, touches, lookback_days=7)
 
 # --------------------------------------------------------------------
 # q246 — exact-budget largest-remainder quota sampling
 # --------------------------------------------------------------------
 
-def _init_q246() -> None:
-    from ..functions import sampling as SA8
 
-    @register(
-        "q246_quota_sample",
-        SA8.quota_sample_sql(
-            "(SELECT lang, source, doc_id FROM documents)",
-            ["lang", "source"],
-            "doc_id",
-            budget=120,
-        ),
-        doc="Exact-budget stratified sampling by largest-remainder "
-            "(Hamilton) apportionment (functions/sampling.py "
-            "quota_sample): floor(B*n_g/N) slots per (lang, source) "
-            "stratum, leftovers to the largest integer remainders, "
-            "winners = smallest md5 within stratum. Returns EXACTLY "
-            "B=120 documents (q56's per-stratum fraction rounding "
-            "cannot promise that), fully integer apportionment on "
-            "the exact gate. One count agg + dimension-sized "
-            "apportionment + broadcast join + rank window.",
+@register(
+    "q246_quota_sample",
+    SA.quota_sample_sql(
+        "(SELECT lang, source, doc_id FROM documents)",
+        ["lang", "source"],
+        "doc_id",
+        budget=120,
+    ),
+    doc="Exact-budget stratified sampling by largest-remainder "
+        "(Hamilton) apportionment (functions/sampling.py "
+        "quota_sample): floor(B*n_g/N) slots per (lang, source) "
+        "stratum, leftovers to the largest integer remainders, "
+        "winners = smallest md5 within stratum. Returns EXACTLY "
+        "B=120 documents (q56's per-stratum fraction rounding "
+        "cannot promise that), fully integer apportionment on "
+        "the exact gate. One count agg + dimension-sized "
+        "apportionment + broadcast join + rank window.",
+)
+def q246_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "lang", "source", "doc_id"
     )
-    def q246_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "lang", "source", "doc_id"
-        )
-        from ..functions.sampling import quota_sample
+    from ..functions.sampling import quota_sample
 
-        return quota_sample(
-            docs, ["lang", "source"], "doc_id", budget=120
-        )
-
-
-_init_q246()
+    return quota_sample(
+        docs, ["lang", "source"], "doc_id", budget=120
+    )
 
 # --------------------------------------------------------------------
 # q247 — percolation: stored-query registry matches the corpus
@@ -11065,39 +10647,33 @@ _Q247_RULES: list[tuple[str, list[str]]] = [
 ]
 
 
-def _init_q247() -> None:
-    from ..functions import search as SE2
-
-    @register(
-        "q247_percolate",
-        SE2.percolate_oracle_sql("documents", _Q247_RULES),
-        doc="Percolation / reverse search (functions/search.py "
-            "percolate; the Elasticsearch-percolator primitive): a "
-            "broadcast registry of conjunctive keyword rules matches "
-            "the document stream — a doc fires a rule iff it "
-            "contains ALL its terms. Inverts q119's access path "
-            "(ad-hoc query vs prebuilt index); one corpus scan "
-            "regardless of rule count, tokens filtered to registry "
-            "terms before the first shuffle. Dead rules report "
-            "n_docs = 0 rather than vanishing.",
-    )
-    def q247_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        from ..functions.search import percolate
-
-        return percolate(docs, _Q247_RULES)
+from ..functions import search as SE2
 
 
-_init_q247()
+@register(
+    "q247_percolate",
+    SE2.percolate_oracle_sql("documents", _Q247_RULES),
+    doc="Percolation / reverse search (functions/search.py "
+        "percolate; the Elasticsearch-percolator primitive): a "
+        "broadcast registry of conjunctive keyword rules matches "
+        "the document stream — a doc fires a rule iff it "
+        "contains ALL its terms. Inverts q119's access path "
+        "(ad-hoc query vs prebuilt index); one corpus scan "
+        "regardless of rule count, tokens filtered to registry "
+        "terms before the first shuffle. Dead rules report "
+        "n_docs = 0 rather than vanishing.",
+)
+def q247_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    from ..functions.search import percolate
+
+    return percolate(docs, _Q247_RULES)
 
 # --------------------------------------------------------------------
 # q248 — Spearman rank correlation between daily metrics
 # --------------------------------------------------------------------
 
-def _init_q248() -> None:
-    from ..functions import profile as P8
-
-    _series_sql = """
+_q248_series_sql = """
         SELECT m.metric, m.t, m.v FROM (
             SELECT 'revenue' AS metric,
                    CAST(date_diff('day', DATE '1970-01-01', l_shipdate)
@@ -11118,87 +10694,77 @@ def _init_q248() -> None:
                    CAST(COUNT(*) AS BIGINT)
             FROM lineitem GROUP BY 2) m"""
 
-    @register(
-        "q248_spearman_corr",
-        P8.spearman_oracle_sql(_series_sql),
-        doc="Pairwise Spearman rank correlation between daily "
-            "revenue, quantity, and item-count series "
-            "(functions/profile.py spearman_corr) — the robust, "
-            "monotone-invariant twin of q127's Pearson matrix. "
-            "Average-tie ranks are held exact as doubled-rank "
-            "BIGINTs, so every sufficient statistic is integer and "
-            "the float tail is two sqrts, one multiply, one divide, "
-            "round(6). Rank windows run on PRE-AGGREGATED days; the "
-            "pair join is dimension-sized.",
+
+@register(
+    "q248_spearman_corr",
+    P.spearman_oracle_sql(_q248_series_sql),
+    doc="Pairwise Spearman rank correlation between daily "
+        "revenue, quantity, and item-count series "
+        "(functions/profile.py spearman_corr) — the robust, "
+        "monotone-invariant twin of q127's Pearson matrix. "
+        "Average-tie ranks are held exact as doubled-rank "
+        "BIGINTs, so every sufficient statistic is integer and "
+        "the float tail is two sqrts, one multiply, one divide, "
+        "round(6). Rank windows run on PRE-AGGREGATED days; the "
+        "pair join is dimension-sized.",
+)
+def q248_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem").select(
+        F.expr(
+            "CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)"
+        ).alias("t"),
+        F.expr(
+            "CAST(round(l_extendedprice * 100) AS BIGINT)"
+        ).alias("cents"),
+        F.expr("CAST(round(l_quantity) AS BIGINT)").alias("qty"),
     )
-    def q248_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = table(spark, sf_dir, "lineitem").select(
-            F.expr(
-                "CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)"
-            ).alias("t"),
-            F.expr(
-                "CAST(round(l_extendedprice * 100) AS BIGINT)"
-            ).alias("cents"),
-            F.expr("CAST(round(l_quantity) AS BIGINT)").alias("qty"),
-        )
-        daily = li.groupBy("t").agg(
-            F.sum("cents").cast("bigint").alias("revenue"),
-            F.sum("qty").cast("bigint").alias("quantity"),
-            F.count(F.lit(1)).cast("bigint").alias("items"),
-        )
-        series = daily.selectExpr(
-            "stack(3, 'revenue', revenue, 'quantity', quantity,"
-            " 'items', items) AS (metric, v)",
-            "t",
-        ).select("metric", "t", "v")
-        from ..functions.profile import spearman_corr
+    daily = li.groupBy("t").agg(
+        F.sum("cents").cast("bigint").alias("revenue"),
+        F.sum("qty").cast("bigint").alias("quantity"),
+        F.count(F.lit(1)).cast("bigint").alias("items"),
+    )
+    series = daily.selectExpr(
+        "stack(3, 'revenue', revenue, 'quantity', quantity,"
+        " 'items', items) AS (metric, v)",
+        "t",
+    ).select("metric", "t", "v")
+    from ..functions.profile import spearman_corr
 
-        return spearman_corr(series)
-
-
-_init_q248()
+    return spearman_corr(series)
 
 # --------------------------------------------------------------------
 # q249 — frequent sequential patterns (length 2 and 3)
 # --------------------------------------------------------------------
 
-def _init_q249() -> None:
-    from ..functions import profile as P9
 
-    @register(
-        "q249_sequence_mining",
-        P9.sequence_mining_sql(
-            "SELECT user_id, event_type, ts, event_id FROM events",
-            min_support=5,
-        ),
-        doc="Frequent sequential patterns of length 2/3 over user "
-            "timelines (functions/profile.py sequence_mining; GSP, "
-            "Srikant & Agrawal 1996): support = distinct users whose "
-            "timeline contains the subsequence, any gap. Spark runs "
-            "the bounds reduction (a>b iff min_pos(a) < max_pos(b); "
-            "a>b>c iff a b-event lies strictly between — linear in "
-            "events with a |types|^2 constant); the ORACLE runs the "
-            "naive O(n^3)-per-user subsequence joins, so agreement "
-            "proves the reduction exactly (q239's adversarial-shape "
-            "pattern). Generalizes q102's adjacent transitions.",
-    )
-    def q249_sequence_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        from ..functions.profile import sequence_mining
+@register(
+    "q249_sequence_mining",
+    P.sequence_mining_sql(
+        "SELECT user_id, event_type, ts, event_id FROM events",
+        min_support=5,
+    ),
+    doc="Frequent sequential patterns of length 2/3 over user "
+        "timelines (functions/profile.py sequence_mining; GSP, "
+        "Srikant & Agrawal 1996): support = distinct users whose "
+        "timeline contains the subsequence, any gap. Spark runs "
+        "the bounds reduction (a>b iff min_pos(a) < max_pos(b); "
+        "a>b>c iff a b-event lies strictly between — linear in "
+        "events with a |types|^2 constant); the ORACLE runs the "
+        "naive O(n^3)-per-user subsequence joins, so agreement "
+        "proves the reduction exactly (q239's adversarial-shape "
+        "pattern). Generalizes q102's adjacent transitions.",
+)
+def q249_sequence_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    from ..functions.profile import sequence_mining
 
-        return sequence_mining(ev, min_support=5)
-
-
-_init_q249()
+    return sequence_mining(ev, min_support=5)
 
 # --------------------------------------------------------------------
 # q250 — isotonic calibration of value-score vs purchase rate
 # --------------------------------------------------------------------
 
-def _init_q250() -> None:
-    from ..functions import profile as P10
-
-    _bins_sql = """
+_q250_bins_sql = """
         SELECT CAST(least(39, CAST(floor(value / 10) AS BIGINT))
                     AS BIGINT) AS bin,
                CAST(SUM(CASE WHEN event_type = 'purchase'
@@ -11206,373 +10772,332 @@ def _init_q250() -> None:
                CAST(COUNT(*) AS BIGINT) AS c
         FROM events GROUP BY 1"""
 
-    @register(
-        "q250_isotonic_fit",
-        P10.isotonic_oracle_sql(_bins_sql),
-        doc="Isotonic calibration (functions/profile.py isotonic_fit; "
-            "Zadrozny-Elkan 2002): monotone purchase-rate fit over 40 "
-            "value bins via the minimax characterization of PAV "
-            "(RWD 1988) — no sequential pooling loop, just two "
-            "dimension-sized joins over the bin frame after one "
-            "corpus-scale count aggregate. Interval means are single "
-            "divides of exact BIGINT prefix sums, so cross-engine "
-            "min/max selection is portable. The monotone + "
-            "mass-conserving properties are unit-tested; q230 "
-            "aligns distributions, this calibrates PROBABILITIES.",
-    )
-    def q250_isotonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        bins = ev.groupBy(
-            F.least(
-                F.lit(39), F.floor(F.col("value") / 10).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("bin")
-        ).agg(
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("y"),
-            F.count(F.lit(1)).cast("bigint").alias("c"),
+
+@register(
+    "q250_isotonic_fit",
+    P.isotonic_oracle_sql(_q250_bins_sql),
+    doc="Isotonic calibration (functions/profile.py isotonic_fit; "
+        "Zadrozny-Elkan 2002): monotone purchase-rate fit over 40 "
+        "value bins via the minimax characterization of PAV "
+        "(RWD 1988) — no sequential pooling loop, just two "
+        "dimension-sized joins over the bin frame after one "
+        "corpus-scale count aggregate. Interval means are single "
+        "divides of exact BIGINT prefix sums, so cross-engine "
+        "min/max selection is portable. The monotone + "
+        "mass-conserving properties are unit-tested; q230 "
+        "aligns distributions, this calibrates PROBABILITIES.",
+)
+def q250_isotonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    bins = ev.groupBy(
+        F.least(
+            F.lit(39), F.floor(F.col("value") / 10).cast("bigint")
         )
-        from ..functions.profile import isotonic_fit
+        .cast("bigint")
+        .alias("bin")
+    ).agg(
+        F.sum(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("y"),
+        F.count(F.lit(1)).cast("bigint").alias("c"),
+    )
+    from ..functions.profile import isotonic_fit
 
-        return isotonic_fit(bins)
-
-
-_init_q250()
+    return isotonic_fit(bins)
 
 # --------------------------------------------------------------------
 # q251 — position-bias-corrected CTR (COEC) from the clickstream
 # --------------------------------------------------------------------
 
-def _init_q251() -> None:
-    from ..functions import profile as P11
-
-    _views_sql = """
+_q251_views_sql = """
         SELECT user_id, CAST(props->>'k' AS BIGINT) AS item, ts,
                event_id
         FROM events WHERE event_type = 'view'"""
-    _clicks_sql = """
+_q251_clicks_sql = """
         SELECT user_id, CAST(props->>'k' AS BIGINT) AS item, ts
         FROM events WHERE event_type = 'click'"""
 
-    @register(
-        "q251_coec_ctr",
-        P11.coec_oracle_sql(_views_sql, _clicks_sql),
-        doc="Clicks-over-expected-clicks item ranking "
-            "(functions/profile.py coec_ctr; Zhang-Jones 2007): "
-            "impressions = view events on item props.k, converted "
-            "if the same user clicks the same item within 30 min; "
-            "position = view's rank in its user-day (feed-order "
-            "proxy). Naive CTR is divided by the clicks expected "
-            "from the item's actual positions under the global "
-            "per-position prior — the de-biasing every ranking "
-            "pipeline needs before CTR becomes a label. Priors sum "
-            "as round-12 DECIMAL (PSI idiom) so float order cannot "
-            "split engines; interval join bounded by click density.",
+
+@register(
+    "q251_coec_ctr",
+    P.coec_oracle_sql(_q251_views_sql, _q251_clicks_sql),
+    doc="Clicks-over-expected-clicks item ranking "
+        "(functions/profile.py coec_ctr; Zhang-Jones 2007): "
+        "impressions = view events on item props.k, converted "
+        "if the same user clicks the same item within 30 min; "
+        "position = view's rank in its user-day (feed-order "
+        "proxy). Naive CTR is divided by the clicks expected "
+        "from the item's actual positions under the global "
+        "per-position prior — the de-biasing every ranking "
+        "pipeline needs before CTR becomes a label. Priors sum "
+        "as round-12 DECIMAL (PSI idiom) so float order cannot "
+        "split engines; interval join bounded by click density.",
+)
+def q251_coec_ctr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    item = F.get_json_object("props", "$.k").cast("bigint")
+    views = ev.filter(F.col("event_type") == "view").select(
+        "user_id", item.alias("item"), "ts", "event_id"
     )
-    def q251_coec_ctr(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        item = F.get_json_object("props", "$.k").cast("bigint")
-        views = ev.filter(F.col("event_type") == "view").select(
-            "user_id", item.alias("item"), "ts", "event_id"
-        )
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "user_id", item.alias("item"), "ts"
-        )
-        from ..functions.profile import coec_ctr
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", item.alias("item"), "ts"
+    )
+    from ..functions.profile import coec_ctr
 
-        return coec_ctr(views, clicks)
-
-
-_init_q251()
+    return coec_ctr(views, clicks)
 
 # --------------------------------------------------------------------
 # q252 — Adamic-Adar link prediction over the co-purchase graph
 # --------------------------------------------------------------------
 
-def _init_q252() -> None:
-    from ..functions.graph import adamic_adar_oracle_sql
-
-    @register(
-        "q252_adamic_adar",
-        adamic_adar_oracle_sql(_PART_EDGES2_SQL, max_degree=1000, top_n=100),
-        doc="Adamic-Adar link prediction (functions/graph.py "
-            "adamic_adar; Adamic-Adar 2003): top-100 NON-adjacent "
-            "part pairs ranked by sum(1/ln(deg z)) over common "
-            "co-purchase neighbors. The wedge self-join is bounded "
-            "by excluding common neighbors of degree > 1000 (a hub "
-            "carries ~no AA signal and its wedge fan-out is the one "
-            "quadratic hazard); existing edges leave via anti-join. "
-            "Each wedge weight rides the round-12 DECIMAL sum so "
-            "accumulation order cannot split engines.",
-    )
-    def q252_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.graph import adamic_adar
-
-        edges = _part_cooccur(spark, sf_dir, min_cnt=2).select("src", "dst")
-        return adamic_adar(edges, max_degree=1000, top_n=100)
+from ..functions.graph import adamic_adar_oracle_sql
 
 
-_init_q252()
+@register(
+    "q252_adamic_adar",
+    adamic_adar_oracle_sql(_PART_EDGES2_SQL, max_degree=1000, top_n=100),
+    doc="Adamic-Adar link prediction (functions/graph.py "
+        "adamic_adar; Adamic-Adar 2003): top-100 NON-adjacent "
+        "part pairs ranked by sum(1/ln(deg z)) over common "
+        "co-purchase neighbors. The wedge self-join is bounded "
+        "by excluding common neighbors of degree > 1000 (a hub "
+        "carries ~no AA signal and its wedge fan-out is the one "
+        "quadratic hazard); existing edges leave via anti-join. "
+        "Each wedge weight rides the round-12 DECIMAL sum so "
+        "accumulation order cannot split engines.",
+)
+def q252_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.graph import adamic_adar
+
+    edges = _part_cooccur(spark, sf_dir, min_cnt=2).select("src", "dst")
+    return adamic_adar(edges, max_degree=1000, top_n=100)
 
 
 # --------------------------------------------------------------------
 # q253 — multinomial Naive Bayes language classifier, held-out
 # --------------------------------------------------------------------
 
-def _init_q253() -> None:
-    from ..functions.text import naive_bayes_oracle_sql
-
-    @register(
-        "q253_naive_bayes",
-        naive_bayes_oracle_sql("SELECT * FROM documents"),
-        doc="Multinomial Naive Bayes train + held-out confusion "
-            "matrix (functions/text.py naive_bayes_confusion; "
-            "McCallum-Nigam 1998): md5-bucket 80/20 split, "
-            "Laplace-smoothed per-(word, lang) log-probs over "
-            "lowercase tokens, argmax with smallest-label "
-            "tie-break. Every ln rides the round-12 DECIMAL(38,12) "
-            "sum; the model is one (word, class) aggregate and "
-            "scoring fans tokens out |C| ways then reduces "
-            "map-side — no window over the corpus, no driver loop "
-            "beyond two scalar counts (V, n_docs).",
-    )
-    def q253_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.text import naive_bayes_confusion
-
-        docs = table(spark, sf_dir, "documents")
-        return naive_bayes_confusion(docs)
+from ..functions.text import naive_bayes_oracle_sql
 
 
-_init_q253()
+@register(
+    "q253_naive_bayes",
+    naive_bayes_oracle_sql("SELECT * FROM documents"),
+    doc="Multinomial Naive Bayes train + held-out confusion "
+        "matrix (functions/text.py naive_bayes_confusion; "
+        "McCallum-Nigam 1998): md5-bucket 80/20 split, "
+        "Laplace-smoothed per-(word, lang) log-probs over "
+        "lowercase tokens, argmax with smallest-label "
+        "tie-break. Every ln rides the round-12 DECIMAL(38,12) "
+        "sum; the model is one (word, class) aggregate and "
+        "scoring fans tokens out |C| ways then reduces "
+        "map-side — no window over the corpus, no driver loop "
+        "beyond two scalar counts (V, n_docs).",
+)
+def q253_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.text import naive_bayes_confusion
+
+    docs = table(spark, sf_dir, "documents")
+    return naive_bayes_confusion(docs)
 
 
 # --------------------------------------------------------------------
 # q254 — split-conformal prediction intervals with coverage audit
 # --------------------------------------------------------------------
 
-def _init_q254() -> None:
-    from ..functions import profile as P12
+_q254_rows_sql = "SELECT event_type, value, event_id FROM events"
 
-    _rows_sql = "SELECT event_type, value, event_id FROM events"
 
-    @register(
-        "q254_conformal_coverage",
-        P12.conformal_oracle_sql(_rows_sql),
-        doc="Split-conformal intervals + honest coverage "
-            "(functions/profile.py conformal_coverage; Vovk 2005 / "
-            "Lei JASA 2018): 80/10/10 md5 split of events per "
-            "event_type; nonconformity |value - train mean|, "
-            "threshold = the exact ceil((n+1)(1-alpha)) order "
-            "statistic of the calibration slice (interpolated "
-            "quantiles would void the finite-sample guarantee), "
-            "coverage measured on the untouched test slice. The "
-            "only window runs over the 10% calibration slice; "
-            "thresholds broadcast back. Complements q250 (isotonic "
-            "calibrates probabilities; this wraps point predictions "
-            "in validity-guaranteed intervals).",
+@register(
+    "q254_conformal_coverage",
+    P.conformal_oracle_sql(_q254_rows_sql),
+    doc="Split-conformal intervals + honest coverage "
+        "(functions/profile.py conformal_coverage; Vovk 2005 / "
+        "Lei JASA 2018): 80/10/10 md5 split of events per "
+        "event_type; nonconformity |value - train mean|, "
+        "threshold = the exact ceil((n+1)(1-alpha)) order "
+        "statistic of the calibration slice (interpolated "
+        "quantiles would void the finite-sample guarantee), "
+        "coverage measured on the untouched test slice. The "
+        "only window runs over the 10% calibration slice; "
+        "thresholds broadcast back. Complements q250 (isotonic "
+        "calibrates probabilities; this wraps point predictions "
+        "in validity-guaranteed intervals).",
+)
+def q254_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.profile import conformal_coverage
+
+    ev = table(spark, sf_dir, "events").select(
+        "event_type", "value", "event_id"
     )
-    def q254_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.profile import conformal_coverage
-
-        ev = table(spark, sf_dir, "events").select(
-            "event_type", "value", "event_id"
-        )
-        return conformal_coverage(ev)
-
-
-_init_q254()
+    return conformal_coverage(ev)
 
 
 # --------------------------------------------------------------------
 # q255 — differentially-private histogram release (seeded Laplace)
 # --------------------------------------------------------------------
 
-def _init_q255() -> None:
-    from ..functions import profile as P13
 
-    @register(
-        "q255_dp_histogram",
-        P13.dp_histogram_oracle_sql(
-            "SELECT event_type, CAST(ts AS DATE) AS day FROM events",
-            ["event_type", "day"],
-            epsilon=1.0,
-        ),
-        doc="Laplace-mechanism DP histogram (functions/profile.py "
-            "dp_histogram; Dwork TCC 2006): per-(event_type, day) "
-            "counts + Laplace(1/eps) noise from the inverse CDF of "
-            "a SEEDED md5 uniform (48 exact bits), released as "
-            "max(0, count + noise) — reproducible noise makes the "
-            "release cross-engine testable; a production run keys a "
-            "DRBG per release through identical plumbing. Pure "
-            "row-local math over one aggregate; noise rounded to 6 "
-            "so libm ULP cannot split engines.",
+@register(
+    "q255_dp_histogram",
+    P.dp_histogram_oracle_sql(
+        "SELECT event_type, CAST(ts AS DATE) AS day FROM events",
+        ["event_type", "day"],
+        epsilon=1.0,
+    ),
+    doc="Laplace-mechanism DP histogram (functions/profile.py "
+        "dp_histogram; Dwork TCC 2006): per-(event_type, day) "
+        "counts + Laplace(1/eps) noise from the inverse CDF of "
+        "a SEEDED md5 uniform (48 exact bits), released as "
+        "max(0, count + noise) — reproducible noise makes the "
+        "release cross-engine testable; a production run keys a "
+        "DRBG per release through identical plumbing. Pure "
+        "row-local math over one aggregate; noise rounded to 6 "
+        "so libm ULP cannot split engines.",
+)
+def q255_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.profile import dp_histogram
+
+    ev = table(spark, sf_dir, "events").select(
+        "event_type", F.to_date("ts").alias("day")
     )
-    def q255_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.profile import dp_histogram
-
-        ev = table(spark, sf_dir, "events").select(
-            "event_type", F.to_date("ts").alias("day")
-        )
-        return dp_histogram(ev, ["event_type", "day"], epsilon=1.0)
-
-
-_init_q255()
+    return dp_histogram(ev, ["event_type", "day"], epsilon=1.0)
 
 
 # --------------------------------------------------------------------
 # q256 — water-filling token budget across sources
 # --------------------------------------------------------------------
 
-def _init_q256() -> None:
-    from ..functions import sampling as S6
 
-    @register(
-        "q256_waterfill_budget",
-        S6.waterfill_oracle_sql("SELECT source, n_chars FROM documents"),
-        doc="Max-min fair (water-filling) corpus budget "
-            "(functions/sampling.py waterfill_budget; Bertsekas-"
-            "Gallager §6.5.2, the Dolma/FineWeb domain-cap shape): "
-            "each source keeps min(cap, L) chars where the water "
-            "level L solves sum min(cap_i, L) = 50% of the corpus — "
-            "small sources survive whole, the level truncates the "
-            "giants. Closed form via one prefix-sum window over the "
-            "SOURCE aggregate (dimension-sized; the corpus-scale "
-            "work is one groupBy) — no iteration, integer until the "
-            "final divide. q220 caps each domain independently; "
-            "this solves the coupled fair-division problem.",
-    )
-    def q256_waterfill_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.sampling import waterfill_budget
+@register(
+    "q256_waterfill_budget",
+    SA.waterfill_oracle_sql("SELECT source, n_chars FROM documents"),
+    doc="Max-min fair (water-filling) corpus budget "
+        "(functions/sampling.py waterfill_budget; Bertsekas-"
+        "Gallager §6.5.2, the Dolma/FineWeb domain-cap shape): "
+        "each source keeps min(cap, L) chars where the water "
+        "level L solves sum min(cap_i, L) = 50% of the corpus — "
+        "small sources survive whole, the level truncates the "
+        "giants. Closed form via one prefix-sum window over the "
+        "SOURCE aggregate (dimension-sized; the corpus-scale "
+        "work is one groupBy) — no iteration, integer until the "
+        "final divide. q220 caps each domain independently; "
+        "this solves the coupled fair-division problem.",
+)
+def q256_waterfill_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.sampling import waterfill_budget
 
-        docs = table(spark, sf_dir, "documents").select("source", "n_chars")
-        return waterfill_budget(docs)
-
-
-_init_q256()
+    docs = table(spark, sf_dir, "documents").select("source", "n_chars")
+    return waterfill_budget(docs)
 
 
 # --------------------------------------------------------------------
 # q257 — IPS / SNIPS off-policy evaluation of the clickstream
 # --------------------------------------------------------------------
 
-def _init_q257() -> None:
-    from ..functions import profile as P14
-
-    _views_sql = """
+_q257_views_sql = """
         SELECT user_id, CAST(props->>'k' AS BIGINT) AS item, ts,
                event_id
         FROM events WHERE event_type = 'view'"""
-    _clicks_sql = """
+_q257_clicks_sql = """
         SELECT user_id, CAST(props->>'k' AS BIGINT) AS item, ts
         FROM events WHERE event_type = 'click'"""
 
-    @register(
-        "q257_offpolicy_eval",
-        P14.offpolicy_oracle_sql(_views_sql, _clicks_sql),
-        doc="Counterfactual replay evaluation (functions/profile.py "
-            "offpolicy_eval; Horvitz-Thompson 1952, Li WSDM'11, "
-            "SNIPS NeurIPS'15): estimates the CTR a UNIFORM "
-            "recommendation policy would achieve from logged "
-            "feedback only — w = min(pi/mu, 10) with mu the "
-            "empirical item-given-position propensity, IPS = "
-            "sum(wr)/N, SNIPS = sum(wr)/sum(w), plus the clipped-"
-            "mass diagnostic. Weights ride round-9 DECIMAL(28,9) "
-            "sums; propensities are one (pos, item) aggregate "
-            "joined back by key. Completes the q251 clickstream "
-            "family: COEC de-biases the LABEL, this evaluates a "
-            "POLICY.",
+
+@register(
+    "q257_offpolicy_eval",
+    P.offpolicy_oracle_sql(_q257_views_sql, _q257_clicks_sql),
+    doc="Counterfactual replay evaluation (functions/profile.py "
+        "offpolicy_eval; Horvitz-Thompson 1952, Li WSDM'11, "
+        "SNIPS NeurIPS'15): estimates the CTR a UNIFORM "
+        "recommendation policy would achieve from logged "
+        "feedback only — w = min(pi/mu, 10) with mu the "
+        "empirical item-given-position propensity, IPS = "
+        "sum(wr)/N, SNIPS = sum(wr)/sum(w), plus the clipped-"
+        "mass diagnostic. Weights ride round-9 DECIMAL(28,9) "
+        "sums; propensities are one (pos, item) aggregate "
+        "joined back by key. Completes the q251 clickstream "
+        "family: COEC de-biases the LABEL, this evaluates a "
+        "POLICY.",
+)
+def q257_offpolicy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    item = F.get_json_object("props", "$.k").cast("bigint")
+    views = ev.filter(F.col("event_type") == "view").select(
+        "user_id", item.alias("item"), "ts", "event_id"
     )
-    def q257_offpolicy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        item = F.get_json_object("props", "$.k").cast("bigint")
-        views = ev.filter(F.col("event_type") == "view").select(
-            "user_id", item.alias("item"), "ts", "event_id"
-        )
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "user_id", item.alias("item"), "ts"
-        )
-        from ..functions.profile import offpolicy_eval
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", item.alias("item"), "ts"
+    )
+    from ..functions.profile import offpolicy_eval
 
-        return offpolicy_eval(views, clicks)
-
-
-_init_q257()
+    return offpolicy_eval(views, clicks)
 
 # --------------------------------------------------------------------
 # q258 — k-fold ridge regression from fold-additive moments
 # --------------------------------------------------------------------
 
-def _init_q258() -> None:
-    from ..functions import profile as P15
 
-    @register(
-        "q258_ridge_cv",
-        P15.ridge_cv_oracle_sql(
-            "SELECT l_quantity, l_discount, l_extendedprice,"
-            " l_orderkey * 8 + l_linenumber AS rid FROM lineitem",
-            "l_quantity", "l_discount", "l_extendedprice", "rid",
-        ),
-        doc="5-fold cross-validated ridge regression "
-            "(functions/profile.py ridge_cv; Chu NIPS'06 sufficient-"
-            "statistics pattern): extendedprice ~ quantity + discount "
-            "+ intercept. ONE corpus scan computes per-fold moment "
-            "rows; each fold's train moments are total - fold "
-            "(additivity), the 3x3 ridge system solves by Cramer on "
-            "the k-row frame, and test MSE joins coefficients back "
-            "by fold. Moments ride round-9 DECIMAL(38,9) sums; both "
-            "engines then run the identical fixed-order IEEE double "
-            "arithmetic, so coefficients match bit-for-bit.",
+@register(
+    "q258_ridge_cv",
+    P.ridge_cv_oracle_sql(
+        "SELECT l_quantity, l_discount, l_extendedprice,"
+        " l_orderkey * 8 + l_linenumber AS rid FROM lineitem",
+        "l_quantity", "l_discount", "l_extendedprice", "rid",
+    ),
+    doc="5-fold cross-validated ridge regression "
+        "(functions/profile.py ridge_cv; Chu NIPS'06 sufficient-"
+        "statistics pattern): extendedprice ~ quantity + discount "
+        "+ intercept. ONE corpus scan computes per-fold moment "
+        "rows; each fold's train moments are total - fold "
+        "(additivity), the 3x3 ridge system solves by Cramer on "
+        "the k-row frame, and test MSE joins coefficients back "
+        "by fold. Moments ride round-9 DECIMAL(38,9) sums; both "
+        "engines then run the identical fixed-order IEEE double "
+        "arithmetic, so coefficients match bit-for-bit.",
+)
+def q258_ridge_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.profile import ridge_cv
+
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_quantity",
+        "l_discount",
+        "l_extendedprice",
+        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("rid"),
     )
-    def q258_ridge_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.profile import ridge_cv
-
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_quantity",
-            "l_discount",
-            "l_extendedprice",
-            (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("rid"),
-        )
-        return ridge_cv(
-            li, "l_quantity", "l_discount", "l_extendedprice", "rid"
-        )
-
-
-_init_q258()
+    return ridge_cv(
+        li, "l_quantity", "l_discount", "l_extendedprice", "rid"
+    )
 
 
 # --------------------------------------------------------------------
 # q259 — TextTiling topic segmentation over the corpus
 # --------------------------------------------------------------------
 
-def _init_q259() -> None:
-    from ..functions.text import topic_segments_sql
-
-    @register(
-        "q259_topic_segments",
-        topic_segments_sql("documents"),
-        doc="TextTiling topic segmentation (functions/text.py "
-            "topic_segments; Hearst CL 1997 block comparison): "
-            "adjacent 30-token blocks compared by token-set Jaccard; "
-            "a gap is a topic boundary when its similarity drops "
-            "more than one std below the document's mean gap "
-            "similarity. The adjacent-block intersection is a "
-            "(doc, token)-keyed shifted self-join — bounded by block "
-            "vocabulary, never corpus^2 — and the z-gate uses exact "
-            "decimal sums of round-6 sims. The chunking complement "
-            "to q50: q50 cuts by SIZE, this finds SEMANTIC cuts.",
-    )
-    def q259_topic_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        from ..functions.text import topic_segments
-
-        return topic_segments(docs)
+from ..functions.text import topic_segments_sql
 
 
-_init_q259()
+@register(
+    "q259_topic_segments",
+    topic_segments_sql("documents"),
+    doc="TextTiling topic segmentation (functions/text.py "
+        "topic_segments; Hearst CL 1997 block comparison): "
+        "adjacent 30-token blocks compared by token-set Jaccard; "
+        "a gap is a topic boundary when its similarity drops "
+        "more than one std below the document's mean gap "
+        "similarity. The adjacent-block intersection is a "
+        "(doc, token)-keyed shifted self-join — bounded by block "
+        "vocabulary, never corpus^2 — and the z-gate uses exact "
+        "decimal sums of round-6 sims. The chunking complement "
+        "to q50: q50 cuts by SIZE, this finds SEMANTIC cuts.",
+)
+def q259_topic_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    from ..functions.text import topic_segments
+
+    return topic_segments(docs)
 
 # --------------------------------------------------------------------
 # q260 — FDR-controlled return-rate screening across brands
@@ -11580,12 +11105,9 @@ _init_q259()
 
 
 
-def _init_q260() -> None:
-    from ..functions import profile as P16
-
-    # brand-level aggregation of the per-part rows happens in the
-    # hypothesis SQL below (rewritten flat for DuckDB)
-    hyp_sql = """
+# brand-level aggregation of the per-part rows happens in the
+# hypothesis SQL below (rewritten flat for DuckDB)
+_q260_hyp_sql = """
         SELECT b.key,
                least(1.0, round(exp(-(
                    CASE WHEN g.p0 * (1.0 - g.p0) = 0 THEN 0.0
@@ -11608,432 +11130,384 @@ def _init_q260() -> None:
             FROM lineitem
         ) g"""
 
-    @register(
-        "q260_bh_fdr_screen",
-        P16.bh_fdr_sql(hyp_sql, "key", "p", q=0.05),
-        doc="FDR-controlled anomaly screen (functions/profile.py "
-            "bh_fdr; Benjamini-Hochberg JRSS-B 1995): every brand's "
-            "return rate is tested against the global rate with a "
-            "two-proportion z-squared statistic converted to a "
-            "CHERNOFF-BOUND p-value (exp(-z^2/2) — a valid tail "
-            "upper bound computable without erf on either engine; "
-            "the step-up machinery is the operator, the p-value "
-            "generator is pluggable), then the BH step-up picks the "
-            "largest rank k with p_(k) <= 0.05 k/m. Hypothesis frame "
-            "is brand-sized; the corpus-scale work is one lineitem "
-            "aggregate. Guards the q117/q163-style drift dashboards "
-            "against the multiple-testing flood.",
+
+@register(
+    "q260_bh_fdr_screen",
+    P.bh_fdr_sql(_q260_hyp_sql, "key", "p", q=0.05),
+    doc="FDR-controlled anomaly screen (functions/profile.py "
+        "bh_fdr; Benjamini-Hochberg JRSS-B 1995): every brand's "
+        "return rate is tested against the global rate with a "
+        "two-proportion z-squared statistic converted to a "
+        "CHERNOFF-BOUND p-value (exp(-z^2/2) — a valid tail "
+        "upper bound computable without erf on either engine; "
+        "the step-up machinery is the operator, the p-value "
+        "generator is pluggable), then the BH step-up picks the "
+        "largest rank k with p_(k) <= 0.05 k/m. Hypothesis frame "
+        "is brand-sized; the corpus-scale work is one lineitem "
+        "aggregate. Guards the q117/q163-style drift dashboards "
+        "against the multiple-testing flood.",
+)
+def q260_bh_fdr_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.profile import bh_fdr
+
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_partkey", "l_returnflag"
     )
-    def q260_bh_fdr_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.profile import bh_fdr
-
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_partkey", "l_returnflag"
-        )
-        pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        per_brand = (
-            li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
-            .groupBy(F.col("p_brand").alias("key"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.sum(
-                    F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("x"),
+    pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    per_brand = (
+        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
+        .groupBy(F.col("p_brand").alias("key"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(
+                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
             )
+            .cast("bigint")
+            .alias("x"),
         )
-        glob = li.agg(
-            (
-                F.sum(
-                    F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-                ).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("p0")
-        )
-        hyp = per_brand.crossJoin(F.broadcast(glob)).select(
-            "key",
-            F.least(
-                F.lit(1.0),
-                F.round(
-                    F.exp(
-                        -F.when(
-                            F.col("p0") * (F.lit(1.0) - F.col("p0")) == 0,
-                            F.lit(0.0),
-                        ).otherwise(
-                            F.pow(
-                                F.col("x").cast("double")
-                                / F.col("n").cast("double")
-                                - F.col("p0"),
-                                F.lit(2.0),
-                            )
-                            / (
-                                F.col("p0")
-                                * (F.lit(1.0) - F.col("p0"))
-                                / F.col("n").cast("double")
-                            )
+    )
+    glob = li.agg(
+        (
+            F.sum(
+                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+            ).cast("double")
+            / F.count(F.lit(1)).cast("double")
+        ).alias("p0")
+    )
+    hyp = per_brand.crossJoin(F.broadcast(glob)).select(
+        "key",
+        F.least(
+            F.lit(1.0),
+            F.round(
+                F.exp(
+                    -F.when(
+                        F.col("p0") * (F.lit(1.0) - F.col("p0")) == 0,
+                        F.lit(0.0),
+                    ).otherwise(
+                        F.pow(
+                            F.col("x").cast("double")
+                            / F.col("n").cast("double")
+                            - F.col("p0"),
+                            F.lit(2.0),
                         )
-                        / F.lit(2.0)
-                    ),
-                    9,
+                        / (
+                            F.col("p0")
+                            * (F.lit(1.0) - F.col("p0"))
+                            / F.col("n").cast("double")
+                        )
+                    )
+                    / F.lit(2.0)
                 ),
-            ).alias("p"),
-        )
-        return bh_fdr(hyp, "key", "p", q=0.05)
-
-
-_init_q260()
+                9,
+            ),
+        ).alias("p"),
+    )
+    return bh_fdr(hyp, "key", "p", q=0.05)
 
 # --------------------------------------------------------------------
 # q261 — Mahalanobis outliers per order-priority group
 # --------------------------------------------------------------------
 
-def _init_q261() -> None:
-    from ..functions import profile as P17
 
-    @register(
-        "q261_mahalanobis_outliers",
-        P17.mahalanobis_oracle_sql(
-            "SELECT l_returnflag, l_quantity, l_extendedprice,"
-            " l_orderkey * 8 + l_linenumber AS rid FROM lineitem",
-            "l_returnflag", "l_quantity", "l_extendedprice", "rid",
-        ),
-        doc="Covariance-aware outliers (functions/profile.py "
-            "mahalanobis_outliers; Mahalanobis 1936): top-5 rows per "
-            "returnflag group by squared Mahalanobis distance on "
-            "(quantity, extendedprice) — catches points far off the "
-            "group's correlation ridge that per-axis screens (q112 "
-            "MAD) miss. One scan builds round-9 decimal moment "
-            "vectors; the 2x2 covariance inverts in closed form on "
-            "the group frame and d^2 is row-local after a broadcast "
-            "join. Singular-covariance groups drop by contract.",
+@register(
+    "q261_mahalanobis_outliers",
+    P.mahalanobis_oracle_sql(
+        "SELECT l_returnflag, l_quantity, l_extendedprice,"
+        " l_orderkey * 8 + l_linenumber AS rid FROM lineitem",
+        "l_returnflag", "l_quantity", "l_extendedprice", "rid",
+    ),
+    doc="Covariance-aware outliers (functions/profile.py "
+        "mahalanobis_outliers; Mahalanobis 1936): top-5 rows per "
+        "returnflag group by squared Mahalanobis distance on "
+        "(quantity, extendedprice) — catches points far off the "
+        "group's correlation ridge that per-axis screens (q112 "
+        "MAD) miss. One scan builds round-9 decimal moment "
+        "vectors; the 2x2 covariance inverts in closed form on "
+        "the group frame and d^2 is row-local after a broadcast "
+        "join. Singular-covariance groups drop by contract.",
+)
+def q261_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.profile import mahalanobis_outliers
+
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_returnflag",
+        "l_quantity",
+        "l_extendedprice",
+        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("rid"),
     )
-    def q261_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.profile import mahalanobis_outliers
-
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_returnflag",
-            "l_quantity",
-            "l_extendedprice",
-            (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("rid"),
-        )
-        return mahalanobis_outliers(
-            li, "l_returnflag", "l_quantity", "l_extendedprice", "rid"
-        )
-
-
-_init_q261()
+    return mahalanobis_outliers(
+        li, "l_returnflag", "l_quantity", "l_extendedprice", "rid"
+    )
 
 
 # --------------------------------------------------------------------
 # q262 — Wald SPRT sequential monitor over daily purchase conversion
 # --------------------------------------------------------------------
 
-def _init_q262() -> None:
-    from ..functions import profile as P18
-
-    _daily_sql = """
+_q262_daily_sql = """
         SELECT event_type AS grp, CAST(ts AS DATE) AS day,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(CASE WHEN value >= 300 THEN 1 ELSE 0 END)
                     AS BIGINT) AS x
         FROM events GROUP BY 1, 2"""
 
-    @register(
-        "q262_sprt_monitor",
-        P18.sprt_oracle_sql(_daily_sql),
-        doc="Wald SPRT sequential monitor (functions/profile.py "
-            "sprt_monitor; Wald 1945): replays each event_type's "
-            "daily high-value rate (value >= 300) as a log-"
-            "likelihood-ratio walk testing p1=0.12 vs p0=0.10, "
-            "boundaries ln((1-b)/a), ln(b/(1-a)) — the always-valid "
-            "peek-every-morning protocol that q238/q260's fixed-"
-            "horizon tests are not. Both log constants are computed "
-            "once in Python and inlined identically in both "
-            "engines; daily terms ride round-9 decimal cumulative "
-            "sums over a per-group window (days, not corpus).",
+
+@register(
+    "q262_sprt_monitor",
+    P.sprt_oracle_sql(_q262_daily_sql),
+    doc="Wald SPRT sequential monitor (functions/profile.py "
+        "sprt_monitor; Wald 1945): replays each event_type's "
+        "daily high-value rate (value >= 300) as a log-"
+        "likelihood-ratio walk testing p1=0.12 vs p0=0.10, "
+        "boundaries ln((1-b)/a), ln(b/(1-a)) — the always-valid "
+        "peek-every-morning protocol that q238/q260's fixed-"
+        "horizon tests are not. Both log constants are computed "
+        "once in Python and inlined identically in both "
+        "engines; daily terms ride round-9 decimal cumulative "
+        "sums over a per-group window (days, not corpus).",
+)
+def q262_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.profile import sprt_monitor
+
+    ev = table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        F.col("event_type").alias("grp"),
+        F.to_date("ts").alias("day"),
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.when(F.col("value") >= 300, 1).otherwise(0))
+        .cast("bigint")
+        .alias("x"),
     )
-    def q262_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.profile import sprt_monitor
-
-        ev = table(spark, sf_dir, "events")
-        daily = ev.groupBy(
-            F.col("event_type").alias("grp"),
-            F.to_date("ts").alias("day"),
-        ).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("value") >= 300, 1).otherwise(0))
-            .cast("bigint")
-            .alias("x"),
-        )
-        return sprt_monitor(daily, "grp", "day", "n", "x")
-
-
-_init_q262()
+    return sprt_monitor(daily, "grp", "day", "n", "x")
 
 # --------------------------------------------------------------------
 # q263 — Chao1 unseen-vocabulary estimate per language
 # --------------------------------------------------------------------
 
-def _init_q263() -> None:
-    from ..functions.text import chao1_vocab_sql
-
-    @register(
-        "q263_chao1_vocab",
-        chao1_vocab_sql("documents"),
-        doc="Chao1 vocabulary-richness estimate (functions/text.py "
-            "chao1_vocab; Chao 1984 capture-recapture): per "
-            "language, total vocabulary >= V + F1^2/(2 F2) from the "
-            "frequency-of-frequencies (bias-corrected form when no "
-            "doubletons); coverage = V/chao1 is the sampling-"
-            "adequacy number to read before claiming a corpus has "
-            "'seen the language'. Two narrow hash aggregates over "
-            "the token stream; q111 tracks OBSERVED vocab growth, "
-            "this bounds what remains UNSEEN.",
-    )
-    def q263_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        from ..functions.text import chao1_vocab
-
-        return chao1_vocab(docs)
+from ..functions.text import chao1_vocab_sql
 
 
-_init_q263()
+@register(
+    "q263_chao1_vocab",
+    chao1_vocab_sql("documents"),
+    doc="Chao1 vocabulary-richness estimate (functions/text.py "
+        "chao1_vocab; Chao 1984 capture-recapture): per "
+        "language, total vocabulary >= V + F1^2/(2 F2) from the "
+        "frequency-of-frequencies (bias-corrected form when no "
+        "doubletons); coverage = V/chao1 is the sampling-"
+        "adequacy number to read before claiming a corpus has "
+        "'seen the language'. Two narrow hash aggregates over "
+        "the token stream; q111 tracks OBSERVED vocab growth, "
+        "this bounds what remains UNSEEN.",
+)
+def q263_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    from ..functions.text import chao1_vocab
+
+    return chao1_vocab(docs)
 
 
 # --------------------------------------------------------------------
 # q264 — weekly seasonal indices + deseasonalized trend
 # --------------------------------------------------------------------
 
-def _init_q264() -> None:
-    from ..functions import profile as P19
 
-    @register(
-        "q264_seasonal_decompose",
-        P19.seasonal_oracle_sql(
-            "SELECT event_type, ts, value FROM events",
-            "event_type", "ts", "value",
-        ),
-        doc="Classical multiplicative seasonal decomposition "
-            "(functions/profile.py seasonal_decompose; ratio-to-"
-            "mean family, Makridakis ch.3): per event_type, day-of-"
-            "week indices (weekday mean over group mean) and the "
-            "OLS trend of the DESEASONALIZED daily series — "
-            "separates 'Tuesdays are slow' from 'everything is "
-            "slowing', which the raw-value fits (q120/q144) "
-            "confound. One corpus aggregate to days; everything "
-            "after is dimension-sized decimal-moment math.",
+@register(
+    "q264_seasonal_decompose",
+    P.seasonal_oracle_sql(
+        "SELECT event_type, ts, value FROM events",
+        "event_type", "ts", "value",
+    ),
+    doc="Classical multiplicative seasonal decomposition "
+        "(functions/profile.py seasonal_decompose; ratio-to-"
+        "mean family, Makridakis ch.3): per event_type, day-of-"
+        "week indices (weekday mean over group mean) and the "
+        "OLS trend of the DESEASONALIZED daily series — "
+        "separates 'Tuesdays are slow' from 'everything is "
+        "slowing', which the raw-value fits (q120/q144) "
+        "confound. One corpus aggregate to days; everything "
+        "after is dimension-sized decimal-moment math.",
+)
+def q264_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events").select(
+        "event_type", "ts", "value"
     )
-    def q264_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events").select(
-            "event_type", "ts", "value"
-        )
-        from ..functions.profile import seasonal_decompose
+    from ..functions.profile import seasonal_decompose
 
-        return seasonal_decompose(ev, "event_type", "ts", "value")
-
-
-_init_q264()
+    return seasonal_decompose(ev, "event_type", "ts", "value")
 
 # --------------------------------------------------------------------
 # q265 — EWMA anomaly walk over daily event volumes
 # --------------------------------------------------------------------
 
-def _init_q265() -> None:
-    from ..functions import profile as P20
 
-    @register(
-        "q265_ewma_anomalies",
-        P20.ewma_oracle_sql(
-            "SELECT event_type, ts, value FROM events",
-            "event_type", "ts", "value",
-        ),
-        doc="EWMA (alpha=1/4) anomaly walk (functions/profile.py "
-            "ewma_anomalies): per event_type the daily value total "
-            "is folded through an integer fixed-point forecast — "
-            "s' = (v + 3s + 2) DIV 4 on BIGINT micros — flagging "
-            "days that double or halve the smoothed level. The "
-            "inherently-sequential recursion runs as a Catalyst "
-            "higher-order aggregate over each group's sorted day "
-            "array (JVM-side, days-sized); the oracle replays the "
-            "identical integer walk as a recursive CTE, so a "
-            "GENUINELY order-dependent computation sits on the "
-            "exact gate. Complements q156 (CUSUM drift) with the "
-            "level-tracking spike rule ops monitors actually run.",
+@register(
+    "q265_ewma_anomalies",
+    P.ewma_oracle_sql(
+        "SELECT event_type, ts, value FROM events",
+        "event_type", "ts", "value",
+    ),
+    doc="EWMA (alpha=1/4) anomaly walk (functions/profile.py "
+        "ewma_anomalies): per event_type the daily value total "
+        "is folded through an integer fixed-point forecast — "
+        "s' = (v + 3s + 2) DIV 4 on BIGINT micros — flagging "
+        "days that double or halve the smoothed level. The "
+        "inherently-sequential recursion runs as a Catalyst "
+        "higher-order aggregate over each group's sorted day "
+        "array (JVM-side, days-sized); the oracle replays the "
+        "identical integer walk as a recursive CTE, so a "
+        "GENUINELY order-dependent computation sits on the "
+        "exact gate. Complements q156 (CUSUM drift) with the "
+        "level-tracking spike rule ops monitors actually run.",
+)
+def q265_ewma_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events").select(
+        "event_type", "ts", "value"
     )
-    def q265_ewma_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events").select(
-            "event_type", "ts", "value"
-        )
-        from ..functions.profile import ewma_anomalies
+    from ..functions.profile import ewma_anomalies
 
-        return ewma_anomalies(ev, "event_type", "ts", "value")
-
-
-_init_q265()
+    return ewma_anomalies(ev, "event_type", "ts", "value")
 
 
 # --------------------------------------------------------------------
 # q266 — HLL set algebra: viewer/purchaser audience overlap
 # --------------------------------------------------------------------
 
-def _init_q266() -> None:
-    from ..functions import sketch as SK2
+_Q266_A_SQL = "SELECT user_id AS e FROM events WHERE event_type = 'view'"
+_Q266_B_SQL = (
+    "SELECT user_id AS e FROM events WHERE event_type = 'purchase'"
+)
 
-    _A_SQL = "SELECT user_id AS e FROM events WHERE event_type = 'view'"
-    _B_SQL = (
-        "SELECT user_id AS e FROM events WHERE event_type = 'purchase'"
+
+@register(
+    "q266_hll_set_algebra",
+    SK.hll_set_algebra_sql(_Q266_A_SQL, _Q266_B_SQL),
+    doc="HLL sketch algebra (functions/sketch.py "
+        "hll_set_algebra): viewers vs purchasers as two q243 "
+        "register states — union by max-merge (the one exact "
+        "HLL operation), intersection by inclusion-exclusion, "
+        "Jaccard from the estimates, with the exact overlap "
+        "computed alongside to self-report estimator error. "
+        "q151 answers this EXACTLY with a corpus shuffle; two "
+        "2^10-row sketches answer it from state that per-shard "
+        "rollups can keep merging without rescans.",
+)
+def q266_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    a = ev.filter(F.col("event_type") == "view").select(
+        F.col("user_id").alias("e")
     )
-
-    @register(
-        "q266_hll_set_algebra",
-        SK2.hll_set_algebra_sql(_A_SQL, _B_SQL),
-        doc="HLL sketch algebra (functions/sketch.py "
-            "hll_set_algebra): viewers vs purchasers as two q243 "
-            "register states — union by max-merge (the one exact "
-            "HLL operation), intersection by inclusion-exclusion, "
-            "Jaccard from the estimates, with the exact overlap "
-            "computed alongside to self-report estimator error. "
-            "q151 answers this EXACTLY with a corpus shuffle; two "
-            "2^10-row sketches answer it from state that per-shard "
-            "rollups can keep merging without rescans.",
+    b = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("e")
     )
-    def q266_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        a = ev.filter(F.col("event_type") == "view").select(
-            F.col("user_id").alias("e")
-        )
-        b = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("user_id").alias("e")
-        )
-        from ..functions.sketch import hll_set_algebra
+    from ..functions.sketch import hll_set_algebra
 
-        return hll_set_algebra(a, b, "e")
-
-
-_init_q266()
+    return hll_set_algebra(a, b, "e")
 
 # --------------------------------------------------------------------
 # q267 — leave-one-source-out ablation scorecard
 # --------------------------------------------------------------------
 
-def _init_q267() -> None:
-    from ..functions import sampling as S7
 
-    @register(
-        "q267_source_ablation",
-        S7.source_ablation_sql("SELECT source, n_chars FROM documents"),
-        doc="Leave-one-out source ablation (functions/sampling.py "
-            "source_ablation): for every source at once, the corpus "
-            "mean doc length WITHOUT it via the subtraction trick "
-            "(total - part over one aggregate — the additive-metric "
-            "answer to 'which source drags the corpus', no k "
-            "passes). Positive delta = removing the source raises "
-            "the mean. Exact BIGINT sums; the q268 Shapley refines "
-            "this for the NON-additive coverage game.",
-    )
-    def q267_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("source", "n_chars")
-        from ..functions.sampling import source_ablation
+@register(
+    "q267_source_ablation",
+    SA.source_ablation_sql("SELECT source, n_chars FROM documents"),
+    doc="Leave-one-out source ablation (functions/sampling.py "
+        "source_ablation): for every source at once, the corpus "
+        "mean doc length WITHOUT it via the subtraction trick "
+        "(total - part over one aggregate — the additive-metric "
+        "answer to 'which source drags the corpus', no k "
+        "passes). Positive delta = removing the source raises "
+        "the mean. Exact BIGINT sums; the q268 Shapley refines "
+        "this for the NON-additive coverage game.",
+)
+def q267_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("source", "n_chars")
+    from ..functions.sampling import source_ablation
 
-        return source_ablation(docs)
-
-
-_init_q267()
+    return source_ablation(docs)
 
 
 # --------------------------------------------------------------------
 # q268 — exact Shapley valuation of sources (vocabulary coverage)
 # --------------------------------------------------------------------
 
-def _init_q268() -> None:
-    from ..functions import sampling as S8
 
-    @register(
-        "q268_shapley_vocab",
-        S8.shapley_vocab_sql("documents"),
-        doc="EXACT Shapley data valuation (functions/sampling.py "
-            "shapley_vocab_coverage; Shapley 1953, Ghorbani-Zou "
-            "ICML'19 framing) on the vocabulary-coverage game: "
-            "v(S) = distinct tokens covered by coalition S, top-5 "
-            "sources play individually + 'other'. Coverage games "
-            "dodge the Monte-Carlo that general Shapley needs: one "
-            "scan folds the corpus to a (membership-mask -> count) "
-            "table, the 64-subset lattice is pure BIGINT arithmetic "
-            "(factorial weights inlined, ONE division by k!), and "
-            "efficiency sum(phi) = total vocab is unit-tested.",
-    )
-    def q268_shapley_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        from ..functions.sampling import shapley_vocab_coverage
+@register(
+    "q268_shapley_vocab",
+    SA.shapley_vocab_sql("documents"),
+    doc="EXACT Shapley data valuation (functions/sampling.py "
+        "shapley_vocab_coverage; Shapley 1953, Ghorbani-Zou "
+        "ICML'19 framing) on the vocabulary-coverage game: "
+        "v(S) = distinct tokens covered by coalition S, top-5 "
+        "sources play individually + 'other'. Coverage games "
+        "dodge the Monte-Carlo that general Shapley needs: one "
+        "scan folds the corpus to a (membership-mask -> count) "
+        "table, the 64-subset lattice is pure BIGINT arithmetic "
+        "(factorial weights inlined, ONE division by k!), and "
+        "efficiency sum(phi) = total vocab is unit-tested.",
+)
+def q268_shapley_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    from ..functions.sampling import shapley_vocab_coverage
 
-        return shapley_vocab_coverage(docs)
-
-
-_init_q268()
+    return shapley_vocab_coverage(docs)
 
 
 # --------------------------------------------------------------------
 # q269 — Hill tail-index audit of order values
 # --------------------------------------------------------------------
 
-def _init_q269() -> None:
-    from ..functions import profile as P21
 
-    @register(
-        "q269_hill_tail_index",
-        P21.hill_oracle_sql(
-            "SELECT o_orderpriority, o_totalprice FROM orders",
-            "o_orderpriority", "o_totalprice",
-        ),
-        doc="Hill tail-index audit (functions/profile.py "
-            "hill_tail_index; Hill 1975): per order priority, "
-            "alpha = 1/mean(ln(x_(i)/x_(k+1))) over the top-200 "
-            "order values — alpha <= 2 means infinite variance and "
-            "every mean-based dashboard (q80, q91) is lying. "
-            "Top-(k+1) window per group, threshold row broadcast "
-            "back, round-12 decimal log sums.",
+@register(
+    "q269_hill_tail_index",
+    P.hill_oracle_sql(
+        "SELECT o_orderpriority, o_totalprice FROM orders",
+        "o_orderpriority", "o_totalprice",
+    ),
+    doc="Hill tail-index audit (functions/profile.py "
+        "hill_tail_index; Hill 1975): per order priority, "
+        "alpha = 1/mean(ln(x_(i)/x_(k+1))) over the top-200 "
+        "order values — alpha <= 2 means infinite variance and "
+        "every mean-based dashboard (q80, q91) is lying. "
+        "Top-(k+1) window per group, threshold row broadcast "
+        "back, round-12 decimal log sums.",
+)
+def q269_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = table(spark, sf_dir, "orders").select(
+        "o_orderpriority", "o_totalprice"
     )
-    def q269_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-        o = table(spark, sf_dir, "orders").select(
-            "o_orderpriority", "o_totalprice"
-        )
-        from ..functions.profile import hill_tail_index
+    from ..functions.profile import hill_tail_index
 
-        return hill_tail_index(o, "o_orderpriority", "o_totalprice")
-
-
-_init_q269()
+    return hill_tail_index(o, "o_orderpriority", "o_totalprice")
 
 # --------------------------------------------------------------------
 # q270 — Gonzalez k-center coreset over the embedding table
 # --------------------------------------------------------------------
 
-def _init_q270() -> None:
-    from ..functions.similarity import kcenter_oracle_sql
-
-    @register(
-        "q270_kcenter_coreset",
-        kcenter_oracle_sql("embeddings", k=8),
-        doc="Greedy k-center coreset selection (functions/"
-            "similarity.py kcenter_select; Gonzalez 1985 farthest-"
-            "point 2-approximation): 8 maximally-spread embedding "
-            "rows as seeds/probes/diversity slices. Squared "
-            "distances are pure BIGINT sums on the 1e6 integer "
-            "grid — no float in the argmax — each round one "
-            "row-local zip-fold against the newest center inlined "
-            "as a literal array (no join) plus one max reduction; "
-            "ties break on the smaller id. Oracle unrolls the same "
-            "walk as long-form CTEs.",
-    )
-    def q270_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = table(spark, sf_dir, "embeddings")
-        from ..functions.similarity import kcenter_select
-
-        return kcenter_select(emb, k=8)
+from ..functions.similarity import kcenter_oracle_sql
 
 
-_init_q270()
+@register(
+    "q270_kcenter_coreset",
+    kcenter_oracle_sql("embeddings", k=8),
+    doc="Greedy k-center coreset selection (functions/"
+        "similarity.py kcenter_select; Gonzalez 1985 farthest-"
+        "point 2-approximation): 8 maximally-spread embedding "
+        "rows as seeds/probes/diversity slices. Squared "
+        "distances are pure BIGINT sums on the 1e6 integer "
+        "grid — no float in the argmax — each round one "
+        "row-local zip-fold against the newest center inlined "
+        "as a literal array (no join) plus one max reduction; "
+        "ties break on the smaller id. Oracle unrolls the same "
+        "walk as long-form CTEs.",
+)
+def q270_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    from ..functions.similarity import kcenter_select
+
+    return kcenter_select(emb, k=8)
 
 # --------------------------------------------------------------------
 # q271 — matched ATT: does purchasing associate with higher spend?
@@ -12049,51 +11523,42 @@ _Q271_UNITS_SQL = """
         FROM events GROUP BY 1"""
 
 
-def _init_q271() -> None:
-    from ..functions import profile as P22
-
-    @register(
-        "q271_matched_att",
-        P22.matched_att_sql(_Q271_UNITS_SQL),
-        doc="Nearest-neighbor matching ATT (functions/profile.py "
-            "matched_att; Rubin 1973): per-user outcome (total value "
-            "cents) of purchasers vs activity-matched non-purchasers "
-            "— the observational answer to 'what does purchasing "
-            "add, net of being active'. Matching runs on the "
-            "DISTINCT-SCORE axis (controls collapse to a min-struct "
-            "representative per activity level; the LOCF prev/next "
-            "carry is over thousands of score rows at any corpus "
-            "size), treated units re-join by score broadcast.",
-    )
-    def q271_matched_att(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        units = ev.groupBy(F.col("user_id").alias("uid")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("score"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("y"),
-            F.max(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            .cast("int")
-            .alias("treated"),
+@register(
+    "q271_matched_att",
+    P.matched_att_sql(_Q271_UNITS_SQL),
+    doc="Nearest-neighbor matching ATT (functions/profile.py "
+        "matched_att; Rubin 1973): per-user outcome (total value "
+        "cents) of purchasers vs activity-matched non-purchasers "
+        "— the observational answer to 'what does purchasing "
+        "add, net of being active'. Matching runs on the "
+        "DISTINCT-SCORE axis (controls collapse to a min-struct "
+        "representative per activity level; the LOCF prev/next "
+        "carry is over thousands of score rows at any corpus "
+        "size), treated units re-join by score broadcast.",
+)
+def q271_matched_att(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    units = ev.groupBy(F.col("user_id").alias("uid")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("score"),
+        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("y"),
+        F.max(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         )
-        from ..functions.profile import matched_att
+        .cast("int")
+        .alias("treated"),
+    )
+    from ..functions.profile import matched_att
 
-        return matched_att(units)
-
-
-_init_q271()
+    return matched_att(units)
 
 
 # --------------------------------------------------------------------
 # q272 — difference-in-differences on early signups
 # --------------------------------------------------------------------
 
-def _init_q272() -> None:
-    from ..functions import profile as P23
-
-    _rows_sql = """
+_q272_rows_sql = """
         SELECT e.user_id AS u,
                CASE WHEN s.user_id IS NOT NULL THEN 1 ELSE 0 END
                    AS treated,
@@ -12106,185 +11571,164 @@ def _init_q272() -> None:
                      AND CAST(ts AS DATE) < DATE '2024-01-16') s
           ON s.user_id = e.user_id"""
 
-    @register(
-        "q272_diff_in_diff",
-        P23.diff_in_diff_sql(_rows_sql),
-        doc="Two-period difference-in-differences (functions/"
-            "profile.py diff_in_diff; Card-Krueger 1994 design): "
-            "users who signed up in the first half of January are "
-            "the treated cohort; DiD = (T_post - T_pre) - (C_post - "
-            "C_pre) over per-user-period value totals (exact cents) "
-            "— the parallel-trends subtraction that q98-style "
-            "before/after cohort reads skip. Three aggregates, all "
-            "dimension-sized after the first.",
+
+@register(
+    "q272_diff_in_diff",
+    P.diff_in_diff_sql(_q272_rows_sql),
+    doc="Two-period difference-in-differences (functions/"
+        "profile.py diff_in_diff; Card-Krueger 1994 design): "
+        "users who signed up in the first half of January are "
+        "the treated cohort; DiD = (T_post - T_pre) - (C_post - "
+        "C_pre) over per-user-period value totals (exact cents) "
+        "— the parallel-trends subtraction that q98-style "
+        "before/after cohort reads skip. Three aggregates, all "
+        "dimension-sized after the first.",
+)
+def q272_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    signups = (
+        ev.filter(
+            (F.col("event_type") == "signup")
+            & (F.to_date("ts") < F.lit("2024-01-16"))
+        )
+        .select("user_id")
+        .distinct()
+        .withColumn("__t", F.lit(1))
     )
-    def q272_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        signups = (
-            ev.filter(
-                (F.col("event_type") == "signup")
-                & (F.to_date("ts") < F.lit("2024-01-16"))
-            )
-            .select("user_id")
-            .distinct()
-            .withColumn("__t", F.lit(1))
-        )
-        rows = ev.join(F.broadcast(signups), "user_id", "left").select(
-            F.col("user_id").alias("u"),
-            F.coalesce("__t", F.lit(0)).alias("treated"),
-            (F.to_date("ts") >= F.lit("2024-01-16")).cast("int").alias(
-                "post"
-            ),
-            F.round(F.col("value") * 100).cast("bigint").alias("v"),
-        )
-        from ..functions.profile import diff_in_diff
+    rows = ev.join(F.broadcast(signups), "user_id", "left").select(
+        F.col("user_id").alias("u"),
+        F.coalesce("__t", F.lit(0)).alias("treated"),
+        (F.to_date("ts") >= F.lit("2024-01-16")).cast("int").alias(
+            "post"
+        ),
+        F.round(F.col("value") * 100).cast("bigint").alias("v"),
+    )
+    from ..functions.profile import diff_in_diff
 
-        return diff_in_diff(rows, "u", "treated", "post", "v")
-
-
-_init_q272()
+    return diff_in_diff(rows, "u", "treated", "post", "v")
 
 # --------------------------------------------------------------------
 # q273 — Poisson bootstrap CI for per-type mean event value
 # --------------------------------------------------------------------
 
-def _init_q273() -> None:
-    from ..functions import profile as P24
 
-    @register(
-        "q273_bootstrap_ci",
-        P24.poisson_bootstrap_sql(
-            "SELECT event_type, value, event_id FROM events",
-            "event_type", "value", "event_id",
-        ),
-        doc="Poisson bootstrap CI (functions/profile.py "
-            "poisson_bootstrap_ci; Hanley-MacGibbon 2006, the "
-            "resampling built for data that cannot sit on one "
-            "machine): every row draws a seeded Poisson(1) "
-            "multiplicity per replicate, so ONE scan with a 100-way "
-            "explode yields all resampled means — no with-"
-            "replacement sampling over a shuffled corpus. "
-            "Conservative order-statistic percentile CI; thresholds "
-            "and weights inlined from Python like q255's noise. "
-            "Puts uncertainty bars on every mean this catalog "
-            "reports.",
+@register(
+    "q273_bootstrap_ci",
+    P.poisson_bootstrap_sql(
+        "SELECT event_type, value, event_id FROM events",
+        "event_type", "value", "event_id",
+    ),
+    doc="Poisson bootstrap CI (functions/profile.py "
+        "poisson_bootstrap_ci; Hanley-MacGibbon 2006, the "
+        "resampling built for data that cannot sit on one "
+        "machine): every row draws a seeded Poisson(1) "
+        "multiplicity per replicate, so ONE scan with a 100-way "
+        "explode yields all resampled means — no with-"
+        "replacement sampling over a shuffled corpus. "
+        "Conservative order-statistic percentile CI; thresholds "
+        "and weights inlined from Python like q255's noise. "
+        "Puts uncertainty bars on every mean this catalog "
+        "reports.",
+)
+def q273_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events").select(
+        "event_type", "value", "event_id"
     )
-    def q273_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events").select(
-            "event_type", "value", "event_id"
-        )
-        from ..functions.profile import poisson_bootstrap_ci
+    from ..functions.profile import poisson_bootstrap_ci
 
-        return poisson_bootstrap_ci(ev, "event_type", "value", "event_id")
-
-
-_init_q273()
+    return poisson_bootstrap_ci(ev, "event_type", "value", "event_id")
 
 # --------------------------------------------------------------------
 # q274 — uplift by activity decile (qini-style targeting audit)
 # --------------------------------------------------------------------
 
-def _init_q274() -> None:
-    from ..functions import profile as P25
 
-    @register(
-        "q274_uplift_deciles",
-        P25.uplift_oracle_sql(_Q271_UNITS_SQL),
-        doc="Cumulative uplift curve (functions/profile.py "
-            "uplift_deciles; Radcliffe 2007 qini family): the q271 "
-            "cohorts ranked by activity score and cut into deciles "
-            "from the SCORE HISTOGRAM (never an ntile window over "
-            "the unit axis; equal scores share a decile by "
-            "contract), reporting cumulative treated-minus-control "
-            "mean outcome at each depth — does the q271 average "
-            "effect concentrate where the targeting score says.",
-    )
-    def q274_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        units = ev.groupBy(F.col("user_id").alias("uid")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("score"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("y"),
-            F.max(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            .cast("int")
-            .alias("treated"),
+@register(
+    "q274_uplift_deciles",
+    P.uplift_oracle_sql(_Q271_UNITS_SQL),
+    doc="Cumulative uplift curve (functions/profile.py "
+        "uplift_deciles; Radcliffe 2007 qini family): the q271 "
+        "cohorts ranked by activity score and cut into deciles "
+        "from the SCORE HISTOGRAM (never an ntile window over "
+        "the unit axis; equal scores share a decile by "
+        "contract), reporting cumulative treated-minus-control "
+        "mean outcome at each depth — does the q271 average "
+        "effect concentrate where the targeting score says.",
+)
+def q274_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    units = ev.groupBy(F.col("user_id").alias("uid")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("score"),
+        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("y"),
+        F.max(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         )
-        from ..functions.profile import uplift_deciles
+        .cast("int")
+        .alias("treated"),
+    )
+    from ..functions.profile import uplift_deciles
 
-        return uplift_deciles(units)
-
-
-_init_q274()
+    return uplift_deciles(units)
 
 
 # --------------------------------------------------------------------
 # q275 — per-part local clustering coefficients
 # --------------------------------------------------------------------
 
-def _init_q275() -> None:
-    from ..functions.graph import local_clustering_oracle_sql
-
-    @register(
-        "q275_local_clustering",
-        local_clustering_oracle_sql(_PART_EDGES2_SQL),
-        doc="Per-node local clustering (functions/graph.py "
-            "local_clustering; Watts-Strogatz 1998): top-50 parts "
-            "by neighborhood density on the co-purchase graph — the "
-            "node-level refinement of q160's one global number. "
-            "Each triangle is found ONCE at its lowest-degree "
-            "corner (the same Cohen'09 orientation that bounds hub "
-            "skew) and credited to all three corners by an integer "
-            "unpivot; lcc = 2*tri/(deg*(deg-1)) exact-ratio.",
-    )
-    def q275_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.graph import local_clustering
-
-        edges = _part_cooccur(spark, sf_dir, min_cnt=2).select("src", "dst")
-        return local_clustering(edges)
+from ..functions.graph import local_clustering_oracle_sql
 
 
-_init_q275()
+@register(
+    "q275_local_clustering",
+    local_clustering_oracle_sql(_PART_EDGES2_SQL),
+    doc="Per-node local clustering (functions/graph.py "
+        "local_clustering; Watts-Strogatz 1998): top-50 parts "
+        "by neighborhood density on the co-purchase graph — the "
+        "node-level refinement of q160's one global number. "
+        "Each triangle is found ONCE at its lowest-degree "
+        "corner (the same Cohen'09 orientation that bounds hub "
+        "skew) and credited to all three corners by an integer "
+        "unpivot; lcc = 2*tri/(deg*(deg-1)) exact-ratio.",
+)
+def q275_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.graph import local_clustering
+
+    edges = _part_cooccur(spark, sf_dir, min_cnt=2).select("src", "dst")
+    return local_clustering(edges)
 
 
 # --------------------------------------------------------------------
 # q276 — RAKE corpus keyphrases
 # --------------------------------------------------------------------
 
-def _init_q276() -> None:
-    from ..functions.text import rake_oracle_sql
-
-    @register(
-        "q276_rake_keyphrases",
-        rake_oracle_sql("documents"),
-        doc="RAKE keyphrase extraction (functions/text.py "
-            "rake_keyphrases; Rose 2010): maximal stopword-free "
-            "token runs scored by summed word degree/frequency — "
-            "the multi-word phrases q126's unigram TF-IDF cannot "
-            "surface. Phrase ids from a per-document cumulative "
-            "break window; word stats are two hash aggregates; "
-            "phrase text assembled by position-sorted structs "
-            "(collect_list alone guarantees no order).",
-    )
-    def q276_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        from ..functions.text import rake_keyphrases
-
-        return rake_keyphrases(docs)
+from ..functions.text import rake_oracle_sql
 
 
-_init_q276()
+@register(
+    "q276_rake_keyphrases",
+    rake_oracle_sql("documents"),
+    doc="RAKE keyphrase extraction (functions/text.py "
+        "rake_keyphrases; Rose 2010): maximal stopword-free "
+        "token runs scored by summed word degree/frequency — "
+        "the multi-word phrases q126's unigram TF-IDF cannot "
+        "surface. Phrase ids from a per-document cumulative "
+        "break window; word stats are two hash aggregates; "
+        "phrase text assembled by position-sorted structs "
+        "(collect_list alone guarantees no order).",
+)
+def q276_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    from ..functions.text import rake_keyphrases
+
+    return rake_keyphrases(docs)
 
 # --------------------------------------------------------------------
 # q277 — expected calibration error of a propensity proxy
 # --------------------------------------------------------------------
 
-def _init_q277() -> None:
-    from ..functions import profile as P26
-
-    _rows_sql = """
+_q277_rows_sql = """
         SELECT CAST(SUM(CASE WHEN event_type = 'purchase'
                               AND CAST(ts AS DATE) < DATE '2024-01-16'
                              THEN 1 ELSE 0 END) + 1 AS DOUBLE)
@@ -12295,58 +11739,53 @@ def _init_q277() -> None:
                         THEN 1 ELSE 0 END) AS label
         FROM events GROUP BY user_id"""
 
-    @register(
-        "q277_calibration_error",
-        P26.ece_oracle_sql(_rows_sql, "conf", "label"),
-        doc="Expected calibration error (functions/profile.py "
-            "expected_calibration_error; Naeini AAAI'15): a "
-            "Laplace-smoothed first-half purchase propensity per "
-            "user scored against second-half reality, bucketed into "
-            "10 confidence bins; ECE = sum n_b/N |acc_b - conf_b|. "
-            "The MEASUREMENT next to the calibration fixers (q230 "
-            "aligns distributions, q250 fits monotone rates): one "
-            "user aggregate, one bin aggregate, exact decimal "
-            "confidence sums.",
-    )
-    def q277_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        pre = F.to_date("ts") < F.lit("2024-01-16")
-        units = ev.groupBy("user_id").agg(
+
+@register(
+    "q277_calibration_error",
+    P.ece_oracle_sql(_q277_rows_sql, "conf", "label"),
+    doc="Expected calibration error (functions/profile.py "
+        "expected_calibration_error; Naeini AAAI'15): a "
+        "Laplace-smoothed first-half purchase propensity per "
+        "user scored against second-half reality, bucketed into "
+        "10 confidence bins; ECE = sum n_b/N |acc_b - conf_b|. "
+        "The MEASUREMENT next to the calibration fixers (q230 "
+        "aligns distributions, q250 fits monotone rates): one "
+        "user aggregate, one bin aggregate, exact decimal "
+        "confidence sums.",
+)
+def q277_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    pre = F.to_date("ts") < F.lit("2024-01-16")
+    units = ev.groupBy("user_id").agg(
+        (
             (
-                (
-                    F.sum(
-                        F.when(
-                            (F.col("event_type") == "purchase") & pre, 1
-                        ).otherwise(0)
-                    )
-                    + 1
-                ).cast("double")
-                / (
-                    F.sum(F.when(pre, 1).otherwise(0)) + 2
-                ).cast("double")
-            ).alias("conf"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & ~pre, 1
-                ).otherwise(0)
-            ).alias("label"),
-        )
-        from ..functions.profile import expected_calibration_error
+                F.sum(
+                    F.when(
+                        (F.col("event_type") == "purchase") & pre, 1
+                    ).otherwise(0)
+                )
+                + 1
+            ).cast("double")
+            / (
+                F.sum(F.when(pre, 1).otherwise(0)) + 2
+            ).cast("double")
+        ).alias("conf"),
+        F.max(
+            F.when(
+                (F.col("event_type") == "purchase") & ~pre, 1
+            ).otherwise(0)
+        ).alias("label"),
+    )
+    from ..functions.profile import expected_calibration_error
 
-        return expected_calibration_error(units, "conf", "label")
-
-
-_init_q277()
+    return expected_calibration_error(units, "conf", "label")
 
 
 # --------------------------------------------------------------------
 # q278 — CUPED variance reduction on user value
 # --------------------------------------------------------------------
 
-def _init_q278() -> None:
-    from ..functions import profile as P27
-
-    _rows_sql = """
+_q278_rows_sql = """
         SELECT user_id AS u,
                SUM(CASE WHEN CAST(ts AS DATE) < DATE '2024-01-16'
                         THEN value ELSE 0 END) AS x,
@@ -12354,74 +11793,64 @@ def _init_q278() -> None:
                         THEN value ELSE 0 END) AS y
         FROM events GROUP BY 1"""
 
-    @register(
-        "q278_cuped_adjust",
-        P27.cuped_oracle_sql(_rows_sql),
-        doc="CUPED variance reduction (functions/profile.py "
-            "cuped_adjust; Deng WSDM'13): theta = cov/var of each "
-            "user's pre-period value against post-period value, "
-            "reporting var(Y - theta X) and the percent reduction "
-            "(1 - rho^2) — how much smaller an experiment the same "
-            "power needs once the pre-period covariate is used. "
-            "Five round-9 decimal moments from one unit aggregate; "
-            "fixed-order double closed forms.",
+
+@register(
+    "q278_cuped_adjust",
+    P.cuped_oracle_sql(_q278_rows_sql),
+    doc="CUPED variance reduction (functions/profile.py "
+        "cuped_adjust; Deng WSDM'13): theta = cov/var of each "
+        "user's pre-period value against post-period value, "
+        "reporting var(Y - theta X) and the percent reduction "
+        "(1 - rho^2) — how much smaller an experiment the same "
+        "power needs once the pre-period covariate is used. "
+        "Five round-9 decimal moments from one unit aggregate; "
+        "fixed-order double closed forms.",
+)
+def q278_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    pre = F.to_date("ts") < F.lit("2024-01-16")
+    units = ev.groupBy(F.col("user_id").alias("u")).agg(
+        F.sum(F.when(pre, F.col("value")).otherwise(0.0)).alias("x"),
+        F.sum(F.when(~pre, F.col("value")).otherwise(0.0)).alias("y"),
     )
-    def q278_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        pre = F.to_date("ts") < F.lit("2024-01-16")
-        units = ev.groupBy(F.col("user_id").alias("u")).agg(
-            F.sum(F.when(pre, F.col("value")).otherwise(0.0)).alias("x"),
-            F.sum(F.when(~pre, F.col("value")).otherwise(0.0)).alias("y"),
-        )
-        from ..functions.profile import cuped_adjust
+    from ..functions.profile import cuped_adjust
 
-        return cuped_adjust(units, "u", "x", "y")
-
-
-_init_q278()
+    return cuped_adjust(units, "u", "x", "y")
 
 
 # --------------------------------------------------------------------
 # q279 — median-of-means robust value estimate
 # --------------------------------------------------------------------
 
-def _init_q279() -> None:
-    from ..functions import profile as P28
 
-    @register(
-        "q279_median_of_means",
-        P28.median_of_means_sql(
-            "SELECT event_type, value, event_id FROM events",
-            "event_type", "value", "event_id",
-        ),
-        doc="Median-of-means robust location (functions/profile.py "
-            "median_of_means; Nemirovski-Yudin): 32 md5 buckets per "
-            "event_type, estimate = median of the bucket means — "
-            "sub-Gaussian concentration under finite variance where "
-            "the plain mean is hostage to one outlier; the "
-            "estimator to reach for when q269's Hill index says the "
-            "tail is heavy. Exact micro-integer sums; median as an "
-            "exact order statistic of the 32-row frame.",
+@register(
+    "q279_median_of_means",
+    P.median_of_means_sql(
+        "SELECT event_type, value, event_id FROM events",
+        "event_type", "value", "event_id",
+    ),
+    doc="Median-of-means robust location (functions/profile.py "
+        "median_of_means; Nemirovski-Yudin): 32 md5 buckets per "
+        "event_type, estimate = median of the bucket means — "
+        "sub-Gaussian concentration under finite variance where "
+        "the plain mean is hostage to one outlier; the "
+        "estimator to reach for when q269's Hill index says the "
+        "tail is heavy. Exact micro-integer sums; median as an "
+        "exact order statistic of the 32-row frame.",
+)
+def q279_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events").select(
+        "event_type", "value", "event_id"
     )
-    def q279_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events").select(
-            "event_type", "value", "event_id"
-        )
-        from ..functions.profile import median_of_means
+    from ..functions.profile import median_of_means
 
-        return median_of_means(ev, "event_type", "value", "event_id")
-
-
-_init_q279()
+    return median_of_means(ev, "event_type", "value", "event_id")
 
 # --------------------------------------------------------------------
 # q280 — covariate balance audit of the q271 match design
 # --------------------------------------------------------------------
 
-def _init_q280() -> None:
-    from ..functions import profile as P29
-
-    _units_sql = """
+_q280_units_sql = """
         SELECT CAST(MAX(CASE WHEN event_type = 'purchase'
                              THEN 1 ELSE 0 END) AS INTEGER) AS treated,
                CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -12431,182 +11860,162 @@ def _init_q280() -> None:
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_errors
         FROM events GROUP BY user_id"""
 
-    @register(
-        "q280_balance_smd",
-        P29.balance_smd_sql(
-            _units_sql, ["n_events", "active_days", "n_errors"]
-        ),
-        doc="Covariate balance audit (functions/profile.py "
-            "balance_smd; Rosenbaum-Rubin diagnostics): standardized "
-            "mean differences between q271's purchaser/non-purchaser "
-            "arms on activity covariates — |SMD| < 0.1 is the "
-            "conventional balance line, and an ATT over imbalanced "
-            "covariates is confounding wearing a suit. Covariates "
-            "unpivot into one aggregate (adding a column is a "
-            "constant, not a pass); round-9 decimal moments.",
+
+@register(
+    "q280_balance_smd",
+    P.balance_smd_sql(
+        _q280_units_sql, ["n_events", "active_days", "n_errors"]
+    ),
+    doc="Covariate balance audit (functions/profile.py "
+        "balance_smd; Rosenbaum-Rubin diagnostics): standardized "
+        "mean differences between q271's purchaser/non-purchaser "
+        "arms on activity covariates — |SMD| < 0.1 is the "
+        "conventional balance line, and an ATT over imbalanced "
+        "covariates is confounding wearing a suit. Covariates "
+        "unpivot into one aggregate (adding a column is a "
+        "constant, not a pass); round-9 decimal moments.",
+)
+def q280_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    units = ev.groupBy("user_id").agg(
+        F.max(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        )
+        .cast("int")
+        .alias("treated"),
+        F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        F.countDistinct(F.to_date("ts"))
+        .cast("bigint")
+        .alias("active_days"),
+        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_errors"),
     )
-    def q280_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        units = ev.groupBy("user_id").agg(
-            F.max(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            .cast("int")
-            .alias("treated"),
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.countDistinct(F.to_date("ts"))
-            .cast("bigint")
-            .alias("active_days"),
-            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_errors"),
-        )
-        from ..functions.profile import balance_smd
+    from ..functions.profile import balance_smd
 
-        return balance_smd(
-            units, "treated", ["n_events", "active_days", "n_errors"]
-        )
-
-
-_init_q280()
+    return balance_smd(
+        units, "treated", ["n_events", "active_days", "n_errors"]
+    )
 
 
 # --------------------------------------------------------------------
 # q281 — RFM segmentation of the user base
 # --------------------------------------------------------------------
 
-def _init_q281() -> None:
-    from ..functions import profile as P30
 
-    @register(
-        "q281_rfm_segments",
-        P30.rfm_oracle_sql(
-            "SELECT user_id, ts, value FROM events",
-            "user_id", "ts", "value", "2024-01-31",
-        ),
-        doc="RFM segmentation (functions/profile.py rfm_segments; "
-            "Hughes 1994): quintile scores on recency (days to "
-            "2024-01-31, lower better), frequency and monetary "
-            "(exact cents) via the q274 histogram-quintile rule "
-            "(distinct-value frames, ties share a bucket — no "
-            "corpus-axis ntile); one row per RFM cell with size and "
-            "average spend. The classic CRM cut as three broadcast "
-            "joins over one user aggregate.",
-    )
-    def q281_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events").select("user_id", "ts", "value")
-        from ..functions.profile import rfm_segments
+@register(
+    "q281_rfm_segments",
+    P.rfm_oracle_sql(
+        "SELECT user_id, ts, value FROM events",
+        "user_id", "ts", "value", "2024-01-31",
+    ),
+    doc="RFM segmentation (functions/profile.py rfm_segments; "
+        "Hughes 1994): quintile scores on recency (days to "
+        "2024-01-31, lower better), frequency and monetary "
+        "(exact cents) via the q274 histogram-quintile rule "
+        "(distinct-value frames, ties share a bucket — no "
+        "corpus-axis ntile); one row per RFM cell with size and "
+        "average spend. The classic CRM cut as three broadcast "
+        "joins over one user aggregate.",
+)
+def q281_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events").select("user_id", "ts", "value")
+    from ..functions.profile import rfm_segments
 
-        return rfm_segments(ev, "user_id", "ts", "value", "2024-01-31")
-
-
-_init_q281()
+    return rfm_segments(ev, "user_id", "ts", "value", "2024-01-31")
 
 
 # --------------------------------------------------------------------
 # q282 — fixed-effects within estimator vs pooled OLS
 # --------------------------------------------------------------------
 
-def _init_q282() -> None:
-    from ..functions import profile as P31
-
-    _rows_sql = """
+_q282_rows_sql = """
         SELECT user_id AS u, CAST(ts AS DATE) AS d,
                CAST(COUNT(*) AS BIGINT) AS x,
                CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
                    AS y
         FROM events GROUP BY 1, 2"""
 
-    @register(
-        "q282_within_estimator",
-        P31.within_oracle_sql(_rows_sql),
-        doc="Panel fixed-effects slope (functions/profile.py "
-            "within_estimator; the within transformation): daily "
-            "value-cents regressed on daily event count, demeaned "
-            "WITHIN each user so every time-invariant user "
-            "confounder drops out algebraically; the pooled OLS "
-            "slope is reported next to it — the gap IS the "
-            "selection diagnostic. Integer moment five-tuples "
-            "reduce map-side; only the per-user demeaning divides.",
+
+@register(
+    "q282_within_estimator",
+    P.within_oracle_sql(_q282_rows_sql),
+    doc="Panel fixed-effects slope (functions/profile.py "
+        "within_estimator; the within transformation): daily "
+        "value-cents regressed on daily event count, demeaned "
+        "WITHIN each user so every time-invariant user "
+        "confounder drops out algebraically; the pooled OLS "
+        "slope is reported next to it — the gap IS the "
+        "selection diagnostic. Integer moment five-tuples "
+        "reduce map-side; only the per-user demeaning divides.",
+)
+def q282_within_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    panel = ev.groupBy(
+        F.col("user_id").alias("u"), F.to_date("ts").alias("d")
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("x"),
+        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("y"),
     )
-    def q282_within_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        panel = ev.groupBy(
-            F.col("user_id").alias("u"), F.to_date("ts").alias("d")
-        ).agg(
-            F.count(F.lit(1)).cast("bigint").alias("x"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("y"),
-        )
-        from ..functions.profile import within_estimator
+    from ..functions.profile import within_estimator
 
-        return within_estimator(panel, "u", "x", "y")
-
-
-_init_q282()
+    return within_estimator(panel, "u", "x", "y")
 
 # --------------------------------------------------------------------
 # q283 — streaming EWMA anomaly monitor (stream/batch parity)
 # --------------------------------------------------------------------
 
-def _init_q283() -> None:
-    from ..functions import profile as P32
 
-    @register(
-        "q283_stream_ewma",
-        P32.ewma_oracle_sql(
-            "SELECT event_type, ts, value FROM events",
-            "event_type", "ts", "value",
-        ),
-        doc="Streaming EWMA anomaly monitor (streaming/stream.py "
-            "ewma_stream): q265's integer fixed-point walk carried "
-            "in applyInPandasWithState GroupState across micro-"
-            "batches, replayed through a real availableNow stream — "
-            "and gated against the SAME recursive-CTE oracle as the "
-            "batch operator, so stream and batch answers must agree "
-            "bit-for-bit (the stream/batch-parity guarantee, here "
-            "for a CUSTOM stateful op, not just the built-in "
-            "windowed aggregations q105 proves).",
+@register(
+    "q283_stream_ewma",
+    P.ewma_oracle_sql(
+        "SELECT event_type, ts, value FROM events",
+        "event_type", "ts", "value",
+    ),
+    doc="Streaming EWMA anomaly monitor (streaming/stream.py "
+        "ewma_stream): q265's integer fixed-point walk carried "
+        "in applyInPandasWithState GroupState across micro-"
+        "batches, replayed through a real availableNow stream — "
+        "and gated against the SAME recursive-CTE oracle as the "
+        "batch operator, so stream and batch answers must agree "
+        "bit-for-bit (the stream/batch-parity guarantee, here "
+        "for a CUSTOM stateful op, not just the built-in "
+        "windowed aggregations q105 proves).",
+)
+def q283_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..streaming.stream import ewma_stream
+
+    def build(source):
+        return ewma_stream(source())
+
+    sink = _replay_events(
+        spark,
+        sf_dir,
+        ["event_id", "ts", "event_type", "value"],
+        build,
+        mode="update",
+        sink_prefix="q283",
     )
-    def q283_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..streaming.stream import ewma_stream
-
-        def build(source):
-            return ewma_stream(source())
-
-        sink = _replay_events(
-            spark,
-            sf_dir,
-            ["event_id", "ts", "event_type", "value"],
-            build,
-            mode="update",
-            sink_prefix="q283",
-        )
-        # pick each group's FRESHEST emission by the state function's
-        # monotonic seq counter — n_days alone ties when a later
-        # micro-batch merely extends the still-pending day, and the
-        # tied rows carry different walk values
-        w = Window.partitionBy("grp").orderBy(
-            F.col("seq").desc(), F.col("n_days").desc()
-        )
-        return (
-            sink.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("grp", "n_days", "final_ewma", "n_anomalies")
-        )
-
-
-_init_q283()
+    # pick each group's FRESHEST emission by the state function's
+    # monotonic seq counter — n_days alone ties when a later
+    # micro-batch merely extends the still-pending day, and the
+    # tied rows carry different walk values
+    w = Window.partitionBy("grp").orderBy(
+        F.col("seq").desc(), F.col("n_days").desc()
+    )
+    return (
+        sink.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("grp", "n_days", "final_ewma", "n_anomalies")
+    )
 
 # --------------------------------------------------------------------
 # q284 — log-rank test: early vs late signups' time-to-purchase
 # --------------------------------------------------------------------
 
-def _init_q284() -> None:
-    from ..functions import profile as P33
-
-    _subjects_sql = """
+_q284_subjects_sql = """
         SELECT CASE WHEN MIN(CASE WHEN event_type = 'signup'
                                   THEN CAST(ts AS DATE) END)
                          < DATE '2024-01-10' THEN 1 ELSE 0 END AS g,
@@ -12621,52 +12030,47 @@ def _init_q284() -> None:
                     THEN 1 ELSE 0 END AS e
         FROM events GROUP BY user_id"""
 
-    @register(
-        "q284_logrank_test",
-        P33.logrank_oracle_sql(_subjects_sql),
-        doc="Two-sample log-rank test (functions/profile.py "
-            "logrank_test; Mantel 1966): do early signups (first "
-            "signup before Jan 10) reach their first purchase "
-            "FASTER than the rest, with non-purchasers censored at "
-            "month end — the hypothesis test q198's Kaplan-Meier "
-            "curves only eyeball. Risk sets are suffix sums over "
-            "the distinct-time frame; hypergeometric E/V terms ride "
-            "round-9 decimal sums.",
+
+@register(
+    "q284_logrank_test",
+    P.logrank_oracle_sql(_q284_subjects_sql),
+    doc="Two-sample log-rank test (functions/profile.py "
+        "logrank_test; Mantel 1966): do early signups (first "
+        "signup before Jan 10) reach their first purchase "
+        "FASTER than the rest, with non-purchasers censored at "
+        "month end — the hypothesis test q198's Kaplan-Meier "
+        "curves only eyeball. Risk sets are suffix sums over "
+        "the distinct-time frame; hypergeometric E/V terms ride "
+        "round-9 decimal sums.",
+)
+def q284_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    sd = F.min(
+        F.when(F.col("event_type") == "signup", F.to_date("ts"))
     )
-    def q284_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        sd = F.min(
-            F.when(F.col("event_type") == "signup", F.to_date("ts"))
+    pd_ = F.min(
+        F.when(F.col("event_type") == "purchase", F.to_date("ts"))
+    )
+    subj = ev.groupBy("user_id").agg(
+        F.when(sd < F.lit("2024-01-10"), 1).otherwise(0).alias("g"),
+        F.coalesce(
+            F.datediff(pd_, F.min(F.to_date("ts"))),
+            F.datediff(F.lit("2024-01-31"), F.min(F.to_date("ts"))),
         )
-        pd_ = F.min(
-            F.when(F.col("event_type") == "purchase", F.to_date("ts"))
-        )
-        subj = ev.groupBy("user_id").agg(
-            F.when(sd < F.lit("2024-01-10"), 1).otherwise(0).alias("g"),
-            F.coalesce(
-                F.datediff(pd_, F.min(F.to_date("ts"))),
-                F.datediff(F.lit("2024-01-31"), F.min(F.to_date("ts"))),
-            )
-            .cast("bigint")
-            .alias("t"),
-            F.when(pd_.isNotNull(), 1).otherwise(0).alias("e"),
-        )
-        from ..functions.profile import logrank_test
+        .cast("bigint")
+        .alias("t"),
+        F.when(pd_.isNotNull(), 1).otherwise(0).alias("e"),
+    )
+    from ..functions.profile import logrank_test
 
-        return logrank_test(subj, "g", "t", "e")
-
-
-_init_q284()
+    return logrank_test(subj, "g", "t", "e")
 
 
 # --------------------------------------------------------------------
 # q285 — quantile treatment effects for the q271 design
 # --------------------------------------------------------------------
 
-def _init_q285() -> None:
-    from ..functions import profile as P34
-
-    _units_sql = """
+_q285_units_sql = """
         SELECT CAST(MAX(CASE WHEN event_type = 'purchase'
                              THEN 1 ELSE 0 END) AS INTEGER) AS treated,
                CAST(SUM(CASE WHEN event_type <> 'purchase'
@@ -12674,50 +12078,45 @@ def _init_q285() -> None:
                              ELSE 0 END) AS BIGINT) AS y
         FROM events GROUP BY user_id"""
 
-    @register(
-        "q285_quantile_effects",
-        P34.quantile_effects_sql(_units_sql),
-        doc="Quantile treatment effects (functions/profile.py "
-            "quantile_effects; Doksum 1974): purchaser vs non-"
-            "purchaser NON-purchase spend compared at the 10/25/50/"
-            "75/90th percentiles — a mean effect (q271) can sit "
-            "still while the tails move, and only the QTE profile "
-            "shows where the distribution shifts. Exact order "
-            "statistics off per-arm outcome histograms (cumulative "
-            "windows over distinct values, never the unit axis).",
-    )
-    def q285_quantile_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        units = ev.groupBy("user_id").agg(
-            F.max(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            .cast("int")
-            .alias("treated"),
-            F.sum(
-                F.when(
-                    F.col("event_type") != "purchase",
-                    F.round(F.col("value") * 100).cast("bigint"),
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("y"),
+
+@register(
+    "q285_quantile_effects",
+    P.quantile_effects_sql(_q285_units_sql),
+    doc="Quantile treatment effects (functions/profile.py "
+        "quantile_effects; Doksum 1974): purchaser vs non-"
+        "purchaser NON-purchase spend compared at the 10/25/50/"
+        "75/90th percentiles — a mean effect (q271) can sit "
+        "still while the tails move, and only the QTE profile "
+        "shows where the distribution shifts. Exact order "
+        "statistics off per-arm outcome histograms (cumulative "
+        "windows over distinct values, never the unit axis).",
+)
+def q285_quantile_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    units = ev.groupBy("user_id").agg(
+        F.max(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         )
-        from ..functions.profile import quantile_effects
+        .cast("int")
+        .alias("treated"),
+        F.sum(
+            F.when(
+                F.col("event_type") != "purchase",
+                F.round(F.col("value") * 100).cast("bigint"),
+            ).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("y"),
+    )
+    from ..functions.profile import quantile_effects
 
-        return quantile_effects(units)
-
-
-_init_q285()
+    return quantile_effects(units)
 
 # --------------------------------------------------------------------
 # q286 — Mann-Kendall trend significance per brand
 # --------------------------------------------------------------------
 
-def _init_q286() -> None:
-    from ..functions import profile as P35
-
-    _rows_sql = """
+_q286_rows_sql = """
         SELECT p.p_brand AS grp,
                CAST(date_diff('day', DATE '1992-01-01',
                     date_trunc('week', l.l_shipdate)) AS BIGINT) // 7
@@ -12727,89 +12126,83 @@ def _init_q286() -> None:
         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
         GROUP BY 1, 2"""
 
-    @register(
-        "q286_mann_kendall",
-        P35.mann_kendall_sql(_rows_sql, "grp", "wk", "cents"),
-        doc="Mann-Kendall trend test (functions/profile.py "
-            "mann_kendall; Mann 1945): non-parametric monotone-trend "
-            "significance for each brand's weekly revenue — q240's "
-            "Theil-Sen says HOW STEEP, this says WHETHER (S = sum "
-            "of pair signs, tie-corrected variance, continuity-"
-            "corrected z). S and both variance terms are exact "
-            "integers over the pre-aggregated week frame; pairs are "
-            "weeks^2 per group, invariant to corpus rows.",
+
+@register(
+    "q286_mann_kendall",
+    P.mann_kendall_sql(_q286_rows_sql, "grp", "wk", "cents"),
+    doc="Mann-Kendall trend test (functions/profile.py "
+        "mann_kendall; Mann 1945): non-parametric monotone-trend "
+        "significance for each brand's weekly revenue — q240's "
+        "Theil-Sen says HOW STEEP, this says WHETHER (S = sum "
+        "of pair signs, tie-corrected variance, continuity-"
+        "corrected z). S and both variance terms are exact "
+        "integers over the pre-aggregated week frame; pairs are "
+        "weeks^2 per group, invariant to corpus rows.",
+)
+def q286_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_partkey", "l_shipdate", "l_extendedprice"
     )
-    def q286_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = table(spark, sf_dir, "lineitem").select(
-            "l_partkey", "l_shipdate", "l_extendedprice"
-        )
-        pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        pts = (
-            li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
-            .groupBy(
-                F.col("p_brand").alias("grp"),
-                (
-                    F.datediff(
-                        F.date_trunc("week", "l_shipdate"),
-                        F.lit("1992-01-01"),
-                    )
-                    / 7
+    pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    pts = (
+        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
+        .groupBy(
+            F.col("p_brand").alias("grp"),
+            (
+                F.datediff(
+                    F.date_trunc("week", "l_shipdate"),
+                    F.lit("1992-01-01"),
                 )
-                .cast("bigint")
-                .alias("wk"),
+                / 7
             )
-            .agg(
-                F.sum(
-                    F.round(F.col("l_extendedprice") * 100).cast("bigint")
-                )
-                .cast("bigint")
-                .alias("cents")
-            )
+            .cast("bigint")
+            .alias("wk"),
         )
-        from ..functions.profile import mann_kendall
+        .agg(
+            F.sum(
+                F.round(F.col("l_extendedprice") * 100).cast("bigint")
+            )
+            .cast("bigint")
+            .alias("cents")
+        )
+    )
+    from ..functions.profile import mann_kendall
 
-        return mann_kendall(pts, "grp", "wk", "cents")
-
-
-_init_q286()
+    return mann_kendall(pts, "grp", "wk", "cents")
 
 
 # --------------------------------------------------------------------
 # q287 — Moore-Lewis in-domain data selection
 # --------------------------------------------------------------------
 
-def _init_q287() -> None:
-    from ..functions.text import moore_lewis_sql
-
-    @register(
-        "q287_moore_lewis",
-        moore_lewis_sql("documents", "lang = 'en'"),
-        doc="Moore-Lewis cross-entropy selection (functions/text.py "
-            "moore_lewis_select; Moore-Lewis ACL 2010): English "
-            "docs as the in-domain seed, every document scored by "
-            "the per-token log-likelihood ratio between the seed "
-            "unigram LM and the out-of-domain complement, top-200 "
-            "kept. The likelihood-ratio ORIGINAL next to q219's "
-            "hashed-ngram DSIR; one (word -> two log-probs) join, "
-            "round-12 decimal sums, two scalar counts.",
-    )
-    def q287_moore_lewis(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        from ..functions.text import moore_lewis_select
-
-        return moore_lewis_select(docs, F.col("lang") == "en")
+from ..functions.text import moore_lewis_sql
 
 
-_init_q287()
+@register(
+    "q287_moore_lewis",
+    moore_lewis_sql("documents", "lang = 'en'"),
+    doc="Moore-Lewis cross-entropy selection (functions/text.py "
+        "moore_lewis_select; Moore-Lewis ACL 2010): English "
+        "docs as the in-domain seed, every document scored by "
+        "the per-token log-likelihood ratio between the seed "
+        "unigram LM and the out-of-domain complement, top-200 "
+        "kept. The likelihood-ratio ORIGINAL next to q219's "
+        "hashed-ngram DSIR; one (word -> two log-probs) join, "
+        "round-12 decimal sums, two scalar counts.",
+)
+def q287_moore_lewis(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    from ..functions.text import moore_lewis_select
+
+    return moore_lewis_select(docs, F.col("lang") == "en")
 
 # --------------------------------------------------------------------
 # q288 — association rules with confidence and lift
 # --------------------------------------------------------------------
 
-def _init_q288() -> None:
-    @register(
-        "q288_association_rules",
-        """
+@register(
+    "q288_association_rules",
+    """
         WITH ar_b AS (
             SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         ar_n AS (
@@ -12843,101 +12236,96 @@ def _init_q288() -> None:
         ORDER BY lift DESC, confidence DESC, ante, cons
         LIMIT 50
         """,
-        doc="Association rules over co-purchase baskets (Agrawal-"
-            "Srikant 1994 support/confidence/lift on the q128 pair "
-            "stream — q128 stops at support; rules are DIRECTED: "
-            "confidence = P(cons|ante), lift = confidence over the "
-            "consequent's base rate): min support 3, confidence "
-            ">= 0.5, lift > 1, deterministic top-50 by (lift, ante, "
-            "cons). Item supports broadcast back onto the pair "
-            "aggregate; integer ratios to doubles at the end.",
+    doc="Association rules over co-purchase baskets (Agrawal-"
+        "Srikant 1994 support/confidence/lift on the q128 pair "
+        "stream — q128 stops at support; rules are DIRECTED: "
+        "confidence = P(cons|ante), lift = confidence over the "
+        "consequent's base rate): min support 3, confidence "
+        ">= 0.5, lift > 1, deterministic top-50 by (lift, ante, "
+        "cons). Item supports broadcast back onto the pair "
+        "aggregate; integer ratios to doubles at the end.",
+)
+def q288_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = (
+        table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
     )
-    def q288_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-        li = (
-            table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
+    n = li.select("l_orderkey").distinct().count()
+    sup = li.groupBy("l_partkey").agg(
+        F.count(F.lit(1)).cast("bigint").alias("sup")
+    )
+    a, b = li.alias("a"), li.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
         )
-        n = li.select("l_orderkey").distinct().count()
-        sup = li.groupBy("l_partkey").agg(
-            F.count(F.lit(1)).cast("bigint").alias("sup")
+        .groupBy(
+            F.col("a.l_partkey").alias("ante"),
+            F.col("b.l_partkey").alias("cons"),
         )
-        a, b = li.alias("a"), li.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-            )
-            .groupBy(
-                F.col("a.l_partkey").alias("ante"),
-                F.col("b.l_partkey").alias("cons"),
-            )
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_both"))
-            .filter(F.col("n_both") >= 2)
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_both"))
+        .filter(F.col("n_both") >= 2)
+    )
+    rules = (
+        pairs.join(
+            F.broadcast(
+                sup.select(
+                    F.col("l_partkey").alias("ante"),
+                    F.col("sup").alias("sup_a"),
+                )
+            ),
+            "ante",
         )
-        rules = (
-            pairs.join(
-                F.broadcast(
-                    sup.select(
-                        F.col("l_partkey").alias("ante"),
-                        F.col("sup").alias("sup_a"),
-                    )
-                ),
-                "ante",
-            )
-            .join(
-                F.broadcast(
-                    sup.select(
-                        F.col("l_partkey").alias("cons"),
-                        F.col("sup").alias("sup_c"),
-                    )
-                ),
-                "cons",
-            )
-            .select(
-                "ante",
-                "cons",
-                "n_both",
-                F.round(
-                    F.col("n_both").cast("double") / F.col("sup_a").cast("double"),
-                    6,
-                ).alias("confidence"),
-                F.round(
-                    F.col("n_both").cast("double")
-                    * F.lit(float(n))
-                    / (F.col("sup_a") * F.col("sup_c")).cast("double"),
-                    6,
-                ).alias("lift"),
-            )
-            .filter(F.col("lift") > 1.0)
+        .join(
+            F.broadcast(
+                sup.select(
+                    F.col("l_partkey").alias("cons"),
+                    F.col("sup").alias("sup_c"),
+                )
+            ),
+            "cons",
         )
-        return rules.orderBy(
-            F.col("lift").desc(),
-            F.col("confidence").desc(),
-            F.col("ante").asc(),
-            F.col("cons").asc(),
-        ).limit(50)
-
-
-_init_q288()
+        .select(
+            "ante",
+            "cons",
+            "n_both",
+            F.round(
+                F.col("n_both").cast("double") / F.col("sup_a").cast("double"),
+                6,
+            ).alias("confidence"),
+            F.round(
+                F.col("n_both").cast("double")
+                * F.lit(float(n))
+                / (F.col("sup_a") * F.col("sup_c")).cast("double"),
+                6,
+            ).alias("lift"),
+        )
+        .filter(F.col("lift") > 1.0)
+    )
+    return rules.orderBy(
+        F.col("lift").desc(),
+        F.col("confidence").desc(),
+        F.col("ante").asc(),
+        F.col("cons").asc(),
+    ).limit(50)
 
 
 # --------------------------------------------------------------------
 # q289 — Markov next-event model with held-out accuracy
 # --------------------------------------------------------------------
 
-def _init_q289() -> None:
-    from ..functions.sampling import hash_bucket_sql
+_q289_bkt = hash_bucket_sql("user_id", seed=42, buckets=10)
 
-    _bkt = hash_bucket_sql("user_id", seed=42, buckets=10)
 
-    @register(
-        "q289_markov_accuracy",
-        f"""
+@register(
+    "q289_markov_accuracy",
+    f"""
         WITH mv_s AS (
             SELECT user_id, event_type, ts, event_id,
-                   {_bkt} < 8 AS is_train
+                   {_q289_bkt} < 8 AS is_train
             FROM events),
         mv_p AS (
             SELECT user_id, is_train, event_type AS cur,
@@ -12966,71 +12354,67 @@ def _init_q289() -> None:
         FROM mv_e
         GROUP BY 1
         """,
-        doc="First-order Markov next-event model with held-out "
-            "accuracy: transition counts from 80% of users (md5 "
-            "split), argmax next-event per current state "
-            "(smallest-label tie-break), top-1 accuracy measured on "
-            "the held-out 20% — the supervised EVAL q102's raw "
-            "transition counts never get. One lead() window per "
-            "user timeline, a states-sized model broadcast back.",
+    doc="First-order Markov next-event model with held-out "
+        "accuracy: transition counts from 80% of users (md5 "
+        "split), argmax next-event per current state "
+        "(smallest-label tie-break), top-1 accuracy measured on "
+        "the held-out 20% — the supervised EVAL q102's raw "
+        "transition counts never get. One lead() window per "
+        "user timeline, a states-sized model broadcast back.",
+)
+def q289_markov_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.sampling import hash_bucket
+
+    ev = table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    p = ev.select(
+        "user_id",
+        (hash_bucket(F.col("user_id"), seed=42, buckets=10) < 8).alias(
+            "is_train"
+        ),
+        F.col("event_type").alias("cur"),
+        F.lead("event_type").over(w).alias("nxt"),
     )
-    def q289_markov_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.sampling import hash_bucket
-
-        ev = table(spark, sf_dir, "events")
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        p = ev.select(
-            "user_id",
-            (hash_bucket(F.col("user_id"), seed=42, buckets=10) < 8).alias(
-                "is_train"
+    t = (
+        p.filter(F.col("is_train") & F.col("nxt").isNotNull())
+        .groupBy("cur", "nxt")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    m = (
+        t.withColumn(
+            "rk",
+            F.row_number().over(
+                Window.partitionBy("cur").orderBy(
+                    F.col("c").desc(), F.col("nxt").asc()
+                )
             ),
-            F.col("event_type").alias("cur"),
-            F.lead("event_type").over(w).alias("nxt"),
         )
-        t = (
-            p.filter(F.col("is_train") & F.col("nxt").isNotNull())
-            .groupBy("cur", "nxt")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        )
-        m = (
-            t.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("cur").orderBy(
-                        F.col("c").desc(), F.col("nxt").asc()
-                    )
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .select("cur", F.col("nxt").alias("pred"))
-        )
-        e = p.filter(~F.col("is_train") & F.col("nxt").isNotNull()).join(
-            F.broadcast(m), "cur"
-        )
-        return e.groupBy("cur").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_test"),
-            F.first("pred").alias("pred"),
-            F.round(
-                F.sum(
-                    F.when(F.col("nxt") == F.col("pred"), 1).otherwise(0)
-                ).cast("double")
-                / F.count(F.lit(1)).cast("double"),
-                6,
-            ).alias("acc"),
-        )
-
-
-_init_q289()
+        .filter(F.col("rk") == 1)
+        .select("cur", F.col("nxt").alias("pred"))
+    )
+    e = p.filter(~F.col("is_train") & F.col("nxt").isNotNull()).join(
+        F.broadcast(m), "cur"
+    )
+    return e.groupBy("cur").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_test"),
+        F.first("pred").alias("pred"),
+        F.round(
+            F.sum(
+                F.when(F.col("nxt") == F.col("pred"), 1).otherwise(0)
+            ).cast("double")
+            / F.count(F.lit(1)).cast("double"),
+            6,
+        ).alias("acc"),
+    )
 
 
 # --------------------------------------------------------------------
 # q290 — attribution-window sensitivity sweep in one pass
 # --------------------------------------------------------------------
 
-def _init_q290() -> None:
-    @register(
-        "q290_window_sweep",
-        """
+@register(
+    "q290_window_sweep",
+    """
         WITH ws_p AS (
             SELECT user_id, ts AS pts,
                    CAST(round(value * 100, 0) AS BIGINT) AS cents
@@ -13059,87 +12443,83 @@ def _init_q290() -> None:
         FROM ws_j
         GROUP BY 1
         """,
-        doc="Attribution-window sensitivity sweep: how much revenue "
-            "a click-touch attribution claims under 1/3/7/14-day "
-            "lookbacks, ALL WINDOWS IN ONE PASS — the widest window "
-            "bounds the interval join once, each purchase-touch "
-            "match is bucketed into every window it fits (a 4-row "
-            "explode on the matched pairs, not four scans). The "
-            "sensitivity table that decides q245's lookback instead "
-            "of inheriting it.",
+    doc="Attribution-window sensitivity sweep: how much revenue "
+        "a click-touch attribution claims under 1/3/7/14-day "
+        "lookbacks, ALL WINDOWS IN ONE PASS — the widest window "
+        "bounds the interval join once, each purchase-touch "
+        "match is bucketed into every window it fits (a 4-row "
+        "explode on the matched pairs, not four scans). The "
+        "sensitivity table that decides q245's lookback instead "
+        "of inheriting it.",
+)
+def q290_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        F.col("ts").alias("pts"),
+        F.col("event_id").alias("pid"),
+        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
-    def q290_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        p = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id",
-            F.col("ts").alias("pts"),
-            F.col("event_id").alias("pid"),
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+    t = ev.filter(F.col("event_type") == "click").select(
+        F.col("user_id").alias("t_user"), F.col("ts").alias("tts")
+    )
+    # one interval join bounded by the WIDEST window; keep the
+    # closest-touch gap per purchase, then explode the window
+    # list and compare gap <= window
+    # the LATEST touch decides every window (monotone in the
+    # lookback), so one widest-window interval join + max(tts)
+    # per purchase feeds all four buckets at full timestamp
+    # precision — no epoch casts, no per-window scans
+    joined = p.join(
+        t,
+        (F.col("t_user") == F.col("user_id"))
+        & (F.col("tts") < F.col("pts"))
+        & (F.col("tts") >= F.col("pts") - F.expr("INTERVAL 14 DAYS")),
+        "left",
+    ).groupBy("pid", "pts", "cents").agg(
+        F.max("tts").alias("last_tts")
+    )
+    wins = joined.select(
+        "pid",
+        "pts",
+        "cents",
+        "last_tts",
+        F.explode(F.array(*[F.lit(d) for d in (1, 3, 7, 14)])).alias(
+            "win"
+        ),
+    ).withColumn(
+        "attributed",
+        F.when(
+            F.col("last_tts")
+            >= F.col("pts")
+            - F.col("win").cast("int")
+            * F.expr("INTERVAL 1 DAY"),
+            1,
         )
-        t = ev.filter(F.col("event_type") == "click").select(
-            F.col("user_id").alias("t_user"), F.col("ts").alias("tts")
+        .otherwise(0),
+    )
+    return wins.groupBy("win").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_purchases"),
+        F.sum("attributed").cast("bigint").alias("n_attributed"),
+        F.round(
+            F.sum("attributed").cast("double")
+            / F.count(F.lit(1)).cast("double"),
+            6,
+        ).alias("attr_rate"),
+        F.sum(
+            F.when(F.col("attributed") == 1, F.col("cents")).otherwise(0)
         )
-        # one interval join bounded by the WIDEST window; keep the
-        # closest-touch gap per purchase, then explode the window
-        # list and compare gap <= window
-        # the LATEST touch decides every window (monotone in the
-        # lookback), so one widest-window interval join + max(tts)
-        # per purchase feeds all four buckets at full timestamp
-        # precision — no epoch casts, no per-window scans
-        joined = p.join(
-            t,
-            (F.col("t_user") == F.col("user_id"))
-            & (F.col("tts") < F.col("pts"))
-            & (F.col("tts") >= F.col("pts") - F.expr("INTERVAL 14 DAYS")),
-            "left",
-        ).groupBy("pid", "pts", "cents").agg(
-            F.max("tts").alias("last_tts")
-        )
-        wins = joined.select(
-            "pid",
-            "pts",
-            "cents",
-            "last_tts",
-            F.explode(F.array(*[F.lit(d) for d in (1, 3, 7, 14)])).alias(
-                "win"
-            ),
-        ).withColumn(
-            "attributed",
-            F.when(
-                F.col("last_tts")
-                >= F.col("pts")
-                - F.col("win").cast("int")
-                * F.expr("INTERVAL 1 DAY"),
-                1,
-            )
-            .otherwise(0),
-        )
-        return wins.groupBy("win").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_purchases"),
-            F.sum("attributed").cast("bigint").alias("n_attributed"),
-            F.round(
-                F.sum("attributed").cast("double")
-                / F.count(F.lit(1)).cast("double"),
-                6,
-            ).alias("attr_rate"),
-            F.sum(
-                F.when(F.col("attributed") == 1, F.col("cents")).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("attr_cents"),
-        )
-
-
-_init_q290()
+        .cast("bigint")
+        .alias("attr_cents"),
+    )
 
 # --------------------------------------------------------------------
 # q291 — rolling-origin backtest of a seasonal-naive forecaster
 # --------------------------------------------------------------------
 
-def _init_q291() -> None:
-    @register(
-        "q291_forecast_backtest",
-        """
+@register(
+    "q291_forecast_backtest",
+    """
         WITH fb_d AS (
             SELECT event_type AS grp, CAST(ts AS DATE) AS day,
                    CAST(SUM(CAST(round(value * 100, 0) AS BIGINT))
@@ -13165,69 +12545,65 @@ def _init_q291() -> None:
         WHERE cents > 0
         GROUP BY 1
         """,
-        doc="Rolling-origin forecast backtest (Tashman 2000 "
-            "evaluation-on-a-rolling-origin): the seasonal-naive "
-            "forecaster (same weekday last week — the baseline any "
-            "q76-style model must beat) evaluated at EVERY origin "
-            "of each event_type's daily series at once via one "
-            "lag(7) window; MAE in currency units and MAPE over "
-            "positive-actual days, per-fold ratios on the round-9 "
-            "decimal grid. The eval harness q76 never had: one "
-            "window, no per-origin refits.",
+    doc="Rolling-origin forecast backtest (Tashman 2000 "
+        "evaluation-on-a-rolling-origin): the seasonal-naive "
+        "forecaster (same weekday last week — the baseline any "
+        "q76-style model must beat) evaluated at EVERY origin "
+        "of each event_type's daily series at once via one "
+        "lag(7) window; MAE in currency units and MAPE over "
+        "positive-actual days, per-fold ratios on the round-9 "
+        "decimal grid. The eval harness q76 never had: one "
+        "window, no per-origin refits.",
+)
+def q291_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    d = ev.groupBy(
+        F.col("event_type").alias("grp"), F.to_date("ts").alias("day")
+    ).agg(
+        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("cents")
     )
-    def q291_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        d = ev.groupBy(
-            F.col("event_type").alias("grp"), F.to_date("ts").alias("day")
-        ).agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
+    w = Window.partitionBy("grp").orderBy("day")
+    e = (
+        d.withColumn("pred", F.lag("cents", 7).over(w))
+        .filter(F.col("pred").isNotNull() & (F.col("cents") > 0))
+        .select(
+            "grp",
+            F.abs(F.col("cents") - F.col("pred")).alias("ae"),
+            "cents",
         )
-        w = Window.partitionBy("grp").orderBy("day")
-        e = (
-            d.withColumn("pred", F.lag("cents", 7).over(w))
-            .filter(F.col("pred").isNotNull() & (F.col("cents") > 0))
-            .select(
-                "grp",
-                F.abs(F.col("cents") - F.col("pred")).alias("ae"),
-                "cents",
-            )
-        )
-        return e.groupBy("grp").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_folds"),
-            F.round(
-                F.sum("ae").cast("double")
-                / F.count(F.lit(1)).cast("double")
-                / 100.0,
-                2,
-            ).alias("mae"),
-            F.round(
-                F.sum(
-                    F.round(
-                        F.col("ae").cast("double")
-                        / F.col("cents").cast("double"),
-                        9,
-                    ).cast("decimal(28,9)")
-                ).cast("double")
-                / F.count(F.lit(1)).cast("double")
-                * 100,
-                2,
-            ).alias("mape_pct"),
-        )
-
-
-_init_q291()
+    )
+    return e.groupBy("grp").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_folds"),
+        F.round(
+            F.sum("ae").cast("double")
+            / F.count(F.lit(1)).cast("double")
+            / 100.0,
+            2,
+        ).alias("mae"),
+        F.round(
+            F.sum(
+                F.round(
+                    F.col("ae").cast("double")
+                    / F.col("cents").cast("double"),
+                    9,
+                ).cast("decimal(28,9)")
+            ).cast("double")
+            / F.count(F.lit(1)).cast("double")
+            * 100,
+            2,
+        ).alias("mape_pct"),
+    )
 
 
 # --------------------------------------------------------------------
 # q292 — cold-start coverage audit of the temporal split
 # --------------------------------------------------------------------
 
-def _init_q292() -> None:
-    @register(
-        "q292_coldstart_audit",
-        """
+@register(
+    "q292_coldstart_audit",
+    """
         WITH cs_s AS (
             SELECT user_id,
                    CAST(props->>'k' AS BIGINT) AS item,
@@ -13259,69 +12635,65 @@ def _init_q292() -> None:
                    AS cold_frac
         FROM (SELECT * FROM cs_u UNION ALL SELECT * FROM cs_i)
         """,
-        doc="Cold-start coverage audit: after a temporal split (last "
-            "week = test), what fraction of test users and items "
-            "never appear in train — the number that decides whether "
-            "an offline eval (q212, q289) measures the MODEL or the "
-            "cold-start policy; a recsys eval with 40% cold items is "
-            "measuring the fallback. One per-entity flag aggregate "
-            "per axis over the once-parsed frame (max(is_test)/"
-            "max(is_train) — no distinct+anti-join pairs, no "
-            "repeated JSON parse); the oracle keeps the NOT IN "
-            "shape as the adversarial cross-check.",
+    doc="Cold-start coverage audit: after a temporal split (last "
+        "week = test), what fraction of test users and items "
+        "never appear in train — the number that decides whether "
+        "an offline eval (q212, q289) measures the MODEL or the "
+        "cold-start policy; a recsys eval with 40% cold items is "
+        "measuring the fallback. One per-entity flag aggregate "
+        "per axis over the once-parsed frame (max(is_test)/"
+        "max(is_train) — no distinct+anti-join pairs, no "
+        "repeated JSON parse); the oracle keeps the NOT IN "
+        "shape as the adversarial cross-check.",
+)
+def q292_coldstart_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("view", "click")
     )
-    def q292_coldstart_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events").filter(
-            F.col("event_type").isin("view", "click")
+    # parsed once; each axis is then ONE per-entity aggregate
+    # (any_test/any_train flags), not distinct+anti-join pairs —
+    # the first cut recomputed the JSON parse four times and ran
+    # 29x super-linear at the decade
+    s = ev.select(
+        "user_id",
+        F.get_json_object("props", "$.k").cast("bigint").alias("item"),
+        (F.to_date("ts") >= F.lit("2024-01-25")).cast("int").alias(
+            "is_test"
+        ),
+    ).localCheckpoint(eager=True)
+
+    def axis(col: str, label: str) -> DataFrame:
+        flags = s.groupBy(col).agg(
+            F.max("is_test").alias("any_test"),
+            F.max(1 - F.col("is_test")).alias("any_train"),
         )
-        # parsed once; each axis is then ONE per-entity aggregate
-        # (any_test/any_train flags), not distinct+anti-join pairs —
-        # the first cut recomputed the JSON parse four times and ran
-        # 29x super-linear at the decade
-        s = ev.select(
-            "user_id",
-            F.get_json_object("props", "$.k").cast("bigint").alias("item"),
-            (F.to_date("ts") >= F.lit("2024-01-25")).cast("int").alias(
-                "is_test"
-            ),
-        ).localCheckpoint(eager=True)
-
-        def axis(col: str, label: str) -> DataFrame:
-            flags = s.groupBy(col).agg(
-                F.max("is_test").alias("any_test"),
-                F.max(1 - F.col("is_test")).alias("any_train"),
+        return flags.agg(
+            F.sum(F.col("any_test")).cast("bigint").alias("n_test"),
+            F.sum(
+                F.col("any_test") * (1 - F.col("any_train"))
             )
-            return flags.agg(
-                F.sum(F.col("any_test")).cast("bigint").alias("n_test"),
-                F.sum(
-                    F.col("any_test") * (1 - F.col("any_train"))
-                )
-                .cast("bigint")
-                .alias("n_cold"),
-            ).select(
-                F.lit(label).alias("entity"),
-                "n_test",
-                "n_cold",
-                F.round(
-                    F.col("n_cold").cast("double")
-                    / F.col("n_test").cast("double"),
-                    6,
-                ).alias("cold_frac"),
-            )
+            .cast("bigint")
+            .alias("n_cold"),
+        ).select(
+            F.lit(label).alias("entity"),
+            "n_test",
+            "n_cold",
+            F.round(
+                F.col("n_cold").cast("double")
+                / F.col("n_test").cast("double"),
+                6,
+            ).alias("cold_frac"),
+        )
 
-        return axis("user_id", "user").unionByName(axis("item", "item"))
-
-
-_init_q292()
+    return axis("user_id", "user").unionByName(axis("item", "item"))
 
 # --------------------------------------------------------------------
 # q293 — inter-event burstiness per user cohort
 # --------------------------------------------------------------------
 
-def _init_q293() -> None:
-    @register(
-        "q293_burstiness",
-        """
+@register(
+    "q293_burstiness",
+    """
         WITH bu_g AS (
             SELECT user_id,
                    epoch_us(ts) - lag(epoch_us(ts)) OVER (
@@ -13357,90 +12729,86 @@ def _init_q293() -> None:
         FROM bu_s
         GROUP BY 1
         """,
-        doc="Inter-event burstiness (Goh-Barabasi EPL 2008: B = "
-            "(sigma - mu)/(sigma + mu) of a user's inter-arrival "
-            "gaps — -1 periodic, 0 Poisson, ->1 bursty), averaged "
-            "by activity band: the temporal-signature audit behind "
-            "bot screens and session-gap choices (q57's 30-min gap "
-            "presumes a burst structure this measures). One lag "
-            "window per user timeline, exact integer gap moments, "
-            "per-user B on the round-9 decimal grid.",
+    doc="Inter-event burstiness (Goh-Barabasi EPL 2008: B = "
+        "(sigma - mu)/(sigma + mu) of a user's inter-arrival "
+        "gaps — -1 periodic, 0 Poisson, ->1 bursty), averaged "
+        "by activity band: the temporal-signature audit behind "
+        "bot screens and session-gap choices (q57's 30-min gap "
+        "presumes a burst structure this measures). One lag "
+        "window per user timeline, exact integer gap moments, "
+        "per-user B on the round-9 decimal grid.",
+)
+def q293_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    # epoch-microsecond gaps: date_diff(SECOND) truncates in Spark
+    # but counts boundary crossings in DuckDB — sub-second parts
+    # split the engines (caught at the sf0.01 gate)
+    g = ev.select(
+        "user_id",
+        F.expr(
+            "unix_micros(CAST(ts AS TIMESTAMP))"
+            " - lag(unix_micros(CAST(ts AS TIMESTAMP))) OVER "
+            "(PARTITION BY user_id ORDER BY ts, event_id)"
+        ).alias("gap"),
     )
-    def q293_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        # epoch-microsecond gaps: date_diff(SECOND) truncates in Spark
-        # but counts boundary crossings in DuckDB — sub-second parts
-        # split the engines (caught at the sf0.01 gate)
-        g = ev.select(
-            "user_id",
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP))"
-                " - lag(unix_micros(CAST(ts AS TIMESTAMP))) OVER "
-                "(PARTITION BY user_id ORDER BY ts, event_id)"
-            ).alias("gap"),
+    u = (
+        g.filter(F.col("gap").isNotNull())
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("gap").cast("bigint").alias("s"),
+            F.sum(
+                F.expr("CAST(gap AS DECIMAL(38,0)) * gap")
+            ).alias("ss"),
         )
-        u = (
-            g.filter(F.col("gap").isNotNull())
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.sum("gap").cast("bigint").alias("s"),
-                F.sum(
-                    F.expr("CAST(gap AS DECIMAL(38,0)) * gap")
-                ).alias("ss"),
+        .filter(F.col("n") >= 5)
+    )
+    b = u.select(
+        "user_id",
+        "n",
+        F.expr("CAST(s AS DOUBLE) / CAST(n AS DOUBLE)").alias("mu"),
+        F.sqrt(
+            F.greatest(
+                F.lit(0.0),
+                F.expr(
+                    "(CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)"
+                    " - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))"
+                    " / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))"
+                ),
             )
-            .filter(F.col("n") >= 5)
-        )
-        b = u.select(
-            "user_id",
-            "n",
-            F.expr("CAST(s AS DOUBLE) / CAST(n AS DOUBLE)").alias("mu"),
-            F.sqrt(
-                F.greatest(
-                    F.lit(0.0),
-                    F.expr(
-                        "(CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)"
-                        " - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))"
-                        " / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))"
-                    ),
-                )
-            ).alias("sigma"),
-        ).select(
-            "user_id",
-            "n",
-            F.when(
-                F.col("sigma") + F.col("mu") > 0,
-                F.round(
-                    (F.col("sigma") - F.col("mu"))
-                    / (F.col("sigma") + F.col("mu")),
-                    9,
-                ).cast("decimal(18,9)"),
-            ).alias("b"),
-        )
-        return b.groupBy(
-            F.least(F.lit(4), F.expr("n DIV 20")).cast("int").alias(
-                "activity_band"
-            )
-        ).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_users"),
+        ).alias("sigma"),
+    ).select(
+        "user_id",
+        "n",
+        F.when(
+            F.col("sigma") + F.col("mu") > 0,
             F.round(
-                F.sum("b").cast("double") / F.count("b").cast("double"), 6
-            ).alias("avg_burstiness"),
+                (F.col("sigma") - F.col("mu"))
+                / (F.col("sigma") + F.col("mu")),
+                9,
+            ).cast("decimal(18,9)"),
+        ).alias("b"),
+    )
+    return b.groupBy(
+        F.least(F.lit(4), F.expr("n DIV 20")).cast("int").alias(
+            "activity_band"
         )
-
-
-_init_q293()
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_users"),
+        F.round(
+            F.sum("b").cast("double") / F.count("b").cast("double"), 6
+        ).alias("avg_burstiness"),
+    )
 
 
 # --------------------------------------------------------------------
 # q294 — readability profile per source (Flesch-style)
 # --------------------------------------------------------------------
 
-def _init_q294() -> None:
-    @register(
-        "q294_readability",
-        r"""
+@register(
+    "q294_readability",
+    r"""
         WITH rd_d AS (
             SELECT source,
                    CAST(len(list_filter(string_split_regex(lower(text),
@@ -13470,73 +12838,70 @@ def _init_q294() -> None:
         FROM rd_f
         GROUP BY 1
         """,
-        doc="Readability profile per source (Flesch 1948 reading "
-            "ease with a vowel-group syllable PROXY — the proxy is "
-            "the standard hack when no dictionary ships; both "
-            "engines count the identical regexp so the proxy is "
-            "exact cross-engine): words/sentence, syllables/word, "
-            "mean FRE per source. The style axis q24's "
-            "length/punct/stopword profile lacks; row-local regexp "
-            "counts, one aggregate — rides the scan.",
+    doc="Readability profile per source (Flesch 1948 reading "
+        "ease with a vowel-group syllable PROXY — the proxy is "
+        "the standard hack when no dictionary ships; both "
+        "engines count the identical regexp so the proxy is "
+        "exact cross-engine): words/sentence, syllables/word, "
+        "mean FRE per source. The style axis q24's "
+        "length/punct/stopword profile lacks; row-local regexp "
+        "counts, one aggregate — rides the scan.",
+)
+def q294_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents")
+    d = docs.select(
+        "source",
+        F.size(
+            F.filter(
+                F.split(F.lower("text"), r"\s+"), lambda t: t != ""
+            )
+        )
+        .cast("bigint")
+        .alias("words"),
+        F.greatest(
+            F.lit(1), F.size(F.split("text", r"[.!?]+")) - 1
+        )
+        .cast("bigint")
+        .alias("sents"),
+        F.size(
+            F.expr(r"regexp_extract_all(lower(text), '[aeiouy]+', 0)")
+        )
+        .cast("bigint")
+        .alias("syl"),
+    ).filter(F.col("words") > 0)
+    f = d.select(
+        "source",
+        "words",
+        "sents",
+        "syl",
+        F.round(
+            F.lit(206.835)
+            - F.lit(1.015)
+            * F.col("words").cast("double")
+            / F.col("sents").cast("double")
+            - F.lit(84.6)
+            * F.col("syl").cast("double")
+            / F.col("words").cast("double"),
+            6,
+        )
+        .cast("decimal(18,6)")
+        .alias("fre"),
     )
-    def q294_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        d = docs.select(
-            "source",
-            F.size(
-                F.filter(
-                    F.split(F.lower("text"), r"\s+"), lambda t: t != ""
-                )
-            )
-            .cast("bigint")
-            .alias("words"),
-            F.greatest(
-                F.lit(1), F.size(F.split("text", r"[.!?]+")) - 1
-            )
-            .cast("bigint")
-            .alias("sents"),
-            F.size(
-                F.expr(r"regexp_extract_all(lower(text), '[aeiouy]+', 0)")
-            )
-            .cast("bigint")
-            .alias("syl"),
-        ).filter(F.col("words") > 0)
-        f = d.select(
-            "source",
-            "words",
-            "sents",
-            "syl",
-            F.round(
-                F.lit(206.835)
-                - F.lit(1.015)
-                * F.col("words").cast("double")
-                / F.col("sents").cast("double")
-                - F.lit(84.6)
-                * F.col("syl").cast("double")
-                / F.col("words").cast("double"),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("fre"),
-        )
-        return f.groupBy("source").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.round(
-                F.sum("words").cast("double") / F.sum("sents").cast("double"),
-                2,
-            ).alias("words_per_sentence"),
-            F.round(
-                F.sum("syl").cast("double") / F.sum("words").cast("double"),
-                4,
-            ).alias("syllables_per_word"),
-            F.round(
-                F.sum("fre").cast("double") / F.count(F.lit(1)).cast("double"),
-                2,
-            ).alias("avg_flesch"),
-        )
-
-
-_init_q294()
+    return f.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.round(
+            F.sum("words").cast("double") / F.sum("sents").cast("double"),
+            2,
+        ).alias("words_per_sentence"),
+        F.round(
+            F.sum("syl").cast("double") / F.sum("words").cast("double"),
+            4,
+        ).alias("syllables_per_word"),
+        F.round(
+            F.sum("fre").cast("double") / F.count(F.lit(1)).cast("double"),
+            2,
+        ).alias("avg_flesch"),
+    )
 
 # --------------------------------------------------------------------
 # q295 — REAL image decode round-trip (BMP, pure stdlib) — r7 verdict
@@ -13544,12 +12909,9 @@ _init_q294()
 # stubbed digest
 # --------------------------------------------------------------------
 
-def _init_q295() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q295_bmp_decode",
-        """
+@register(
+    "q295_bmp_decode",
+    """
         WITH bd AS (
             SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
             FROM documents),
@@ -13568,66 +12930,63 @@ def _init_q295() -> None:
                    AS sum_b
         FROM bp GROUP BY 1, 2, 3, 4
         """,
-        doc="Real image decode on the exact gate (functions/"
-            "multimodal.py decode_bmp24, pure stdlib): per document, "
-            "a deterministic pixel grid (value = (doc_id*7 + y*31 + "
-            "x*13 + channel*97) % 256, width 4-8, height 3-6 so every "
-            "BMP row-padding case occurs) is ENCODED to a standard "
-            "24-bit BMP executor-side, then DECODED back through the "
-            "extract_image_features Arrow hook; the hashed columns "
-            "are the decoded dimensions and per-channel pixel sums, "
-            "which the oracle recomputes from the same formula in "
-            "SQL — any header/padding/BGR/bottom-up bug breaks the "
-            "match. The batch shape is the production one: opaque "
-            "binary column in, typed features out, no shuffle added "
-            "by decode.",
-    )
-    def q295_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
+    doc="Real image decode on the exact gate (functions/"
+        "multimodal.py decode_bmp24, pure stdlib): per document, "
+        "a deterministic pixel grid (value = (doc_id*7 + y*31 + "
+        "x*13 + channel*97) % 256, width 4-8, height 3-6 so every "
+        "BMP row-padding case occurs) is ENCODED to a standard "
+        "24-bit BMP executor-side, then DECODED back through the "
+        "extract_image_features Arrow hook; the hashed columns "
+        "are the decoded dimensions and per-channel pixel sums, "
+        "which the oracle recomputes from the same formula in "
+        "SQL — any header/padding/BGR/bottom-up bug breaks the "
+        "match. The batch shape is the production one: opaque "
+        "binary column in, typed features out, no shuffle added "
+        "by decode.",
+)
+def q295_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                paths, blobs = [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    w, h = 4 + d % 5, 3 + d % 4
-                    rows = [
-                        [
-                            tuple(
-                                (d * 7 + y * 31 + x * 13 + c * 97) % 256
-                                for c in range(3)
-                            )
-                            for x in range(w)
-                        ]
-                        for y in range(h)
+        for pdf in it:
+            paths, blobs = [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                w, h = 4 + d % 5, 3 + d % 4
+                rows = [
+                    [
+                        tuple(
+                            (d * 7 + y * 31 + x * 13 + c * 97) % 256
+                            for c in range(3)
+                        )
+                        for x in range(w)
                     ]
-                    paths.append(str(d))
-                    blobs.append(M.encode_bmp24(w, h, rows))
-                yield _pd.DataFrame({"path": paths, "content": blobs})
+                    for y in range(h)
+                ]
+                paths.append(str(d))
+                blobs.append(M.encode_bmp24(w, h, rows))
+            yield _pd.DataFrame({"path": paths, "content": blobs})
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q295_bmp_decode", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="path string, content binary"
-            ),
-        )
-        feats = M.extract_image_features(
-            binaries, decode_fn=M.decode_bmp_features
-        )
-        return feats.select(
-            F.col("path").cast("bigint").alias("doc_id"),
-            "width",
-            "height",
-            (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
-            F.element_at("features", 1).cast("bigint").alias("sum_r"),
-            F.element_at("features", 2).cast("bigint").alias("sum_g"),
-            F.element_at("features", 3).cast("bigint").alias("sum_b"),
-        )
-
-
-_init_q295()
+    binaries = _codec_fixture(
+        spark, sf_dir, "q295_bmp_decode", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="path string, content binary"
+        ),
+    )
+    feats = M.extract_image_features(
+        binaries, decode_fn=M.decode_bmp_features
+    )
+    return feats.select(
+        F.col("path").cast("bigint").alias("doc_id"),
+        "width",
+        "height",
+        (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
+        F.element_at("features", 1).cast("bigint").alias("sum_r"),
+        F.element_at("features", 2).cast("bigint").alias("sum_g"),
+        F.element_at("features", 3).cast("bigint").alias("sum_b"),
+    )
 
 
 # --------------------------------------------------------------------
@@ -13689,12 +13048,9 @@ def q296_folder_glob_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # all five scanline filters; the r8 twin of q295's BMP path)
 # --------------------------------------------------------------------
 
-def _init_q297() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q297_png_decode",
-        """
+@register(
+    "q297_png_decode",
+    """
         WITH pd AS (
             SELECT doc_id, 3 + doc_id % 7 AS w, 3 + doc_id % 5 AS h
             FROM documents),
@@ -13713,73 +13069,70 @@ def _init_q297() -> None:
                    AS sum_b
         FROM pp GROUP BY 1, 2, 3, 4
         """,
-        doc="Real PNG decode on the exact gate (functions/"
-            "multimodal.py decode_png24, pure stdlib: zlib inflate, "
-            "per-chunk CRC32, None/Sub/Up/Average/Paeth unfilters): "
-            "per document a deterministic pixel grid (value = "
-            "(doc_id*11 + y*23 + x*17 + channel*89) % 256, width 3-9, "
-            "height 3-7) is ENCODED to a standard 8-bit truecolor "
-            "PNG executor-side with a (doc_id + y) % 5 filter "
-            "schedule — so every scanline filter type appears across "
-            "the corpus — then DECODED back through the "
-            "extract_image_features Arrow hook; the hashed columns "
-            "are the decoded dims and per-channel pixel sums, which "
-            "the oracle recomputes from the formula in SQL. Any "
-            "chunk/CRC/inflate/unfilter bug breaks the match. Same "
-            "production batch shape as q295: binary column in, typed "
-            "features out, no shuffle added by decode.",
-    )
-    def q297_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
+    doc="Real PNG decode on the exact gate (functions/"
+        "multimodal.py decode_png24, pure stdlib: zlib inflate, "
+        "per-chunk CRC32, None/Sub/Up/Average/Paeth unfilters): "
+        "per document a deterministic pixel grid (value = "
+        "(doc_id*11 + y*23 + x*17 + channel*89) % 256, width 3-9, "
+        "height 3-7) is ENCODED to a standard 8-bit truecolor "
+        "PNG executor-side with a (doc_id + y) % 5 filter "
+        "schedule — so every scanline filter type appears across "
+        "the corpus — then DECODED back through the "
+        "extract_image_features Arrow hook; the hashed columns "
+        "are the decoded dims and per-channel pixel sums, which "
+        "the oracle recomputes from the formula in SQL. Any "
+        "chunk/CRC/inflate/unfilter bug breaks the match. Same "
+        "production batch shape as q295: binary column in, typed "
+        "features out, no shuffle added by decode.",
+)
+def q297_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                paths, blobs = [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    w, h = 3 + d % 7, 3 + d % 5
-                    rows = [
-                        [
-                            tuple(
-                                (d * 11 + y * 23 + x * 17 + c * 89) % 256
-                                for c in range(3)
-                            )
-                            for x in range(w)
-                        ]
-                        for y in range(h)
-                    ]
-                    paths.append(str(d))
-                    blobs.append(
-                        M.encode_png24(
-                            w, h, rows,
-                            filters=[(d + y) % 5 for y in range(h)],
+        for pdf in it:
+            paths, blobs = [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                w, h = 3 + d % 7, 3 + d % 5
+                rows = [
+                    [
+                        tuple(
+                            (d * 11 + y * 23 + x * 17 + c * 89) % 256
+                            for c in range(3)
                         )
+                        for x in range(w)
+                    ]
+                    for y in range(h)
+                ]
+                paths.append(str(d))
+                blobs.append(
+                    M.encode_png24(
+                        w, h, rows,
+                        filters=[(d + y) % 5 for y in range(h)],
                     )
-                yield _pd.DataFrame({"path": paths, "content": blobs})
+                )
+            yield _pd.DataFrame({"path": paths, "content": blobs})
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q297_png_decode", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="path string, content binary"
-            ),
-        )
-        feats = M.extract_image_features(
-            binaries, decode_fn=M.decode_png_features
-        )
-        return feats.select(
-            F.col("path").cast("bigint").alias("doc_id"),
-            "width",
-            "height",
-            (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
-            F.element_at("features", 1).cast("bigint").alias("sum_r"),
-            F.element_at("features", 2).cast("bigint").alias("sum_g"),
-            F.element_at("features", 3).cast("bigint").alias("sum_b"),
-        )
-
-
-_init_q297()
+    binaries = _codec_fixture(
+        spark, sf_dir, "q297_png_decode", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="path string, content binary"
+        ),
+    )
+    feats = M.extract_image_features(
+        binaries, decode_fn=M.decode_png_features
+    )
+    return feats.select(
+        F.col("path").cast("bigint").alias("doc_id"),
+        "width",
+        "height",
+        (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
+        F.element_at("features", 1).cast("bigint").alias("sum_r"),
+        F.element_at("features", 2).cast("bigint").alias("sum_g"),
+        F.element_at("features", 3).cast("bigint").alias("sum_b"),
+    )
 
 
 # --------------------------------------------------------------------
@@ -13787,12 +13140,9 @@ _init_q297()
 # (r8 audio twin of q295/q297: real RIFF chunk walking, real math)
 # --------------------------------------------------------------------
 
-def _init_q298() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q298_wav_energy",
-        """
+@register(
+    "q298_wav_energy",
+    """
         WITH wd AS (
             SELECT doc_id, 192 + doc_id % 200 AS n,
                    CAST(8000 + (doc_id % 3) * 4000 AS INT) AS sample_rate
@@ -13807,56 +13157,53 @@ def _init_q298() -> None:
                CAST(SUM(s * s) AS BIGINT) AS energy
         FROM ws GROUP BY 1, 2, 3
         """,
-        doc="Real WAV container parse on the exact gate (functions/"
-            "multimodal.py decode_wav16, pure stdlib RIFF chunk "
-            "walker: magic, unknown-chunk skip, odd-size pad bytes, "
-            "PCM16 fmt validation): per document a deterministic "
-            "mono PCM16 signal (s_i = (doc_id*31 + i*17) % 4096 - "
-            "2048, 192-391 samples, rate 8/12/16 kHz) is ENCODED to "
-            "a standard WAV executor-side — with an odd-size LIST "
-            "junk chunk planted between fmt and data, so naive "
-            "fmt-then-data parsers break — then parsed back and "
-            "reduced to per-64-sample-window integer energies "
-            "(wav_window_energy, Arrow 1:N, zero shuffles), which "
-            "the oracle recomputes from the formula in SQL. The "
-            "encoder is independently validated against the stdlib "
-            "wave module in unit tests.",
-    )
-    def q298_wav_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
+    doc="Real WAV container parse on the exact gate (functions/"
+        "multimodal.py decode_wav16, pure stdlib RIFF chunk "
+        "walker: magic, unknown-chunk skip, odd-size pad bytes, "
+        "PCM16 fmt validation): per document a deterministic "
+        "mono PCM16 signal (s_i = (doc_id*31 + i*17) % 4096 - "
+        "2048, 192-391 samples, rate 8/12/16 kHz) is ENCODED to "
+        "a standard WAV executor-side — with an odd-size LIST "
+        "junk chunk planted between fmt and data, so naive "
+        "fmt-then-data parsers break — then parsed back and "
+        "reduced to per-64-sample-window integer energies "
+        "(wav_window_energy, Arrow 1:N, zero shuffles), which "
+        "the oracle recomputes from the formula in SQL. The "
+        "encoder is independently validated against the stdlib "
+        "wave module in unit tests.",
+)
+def q298_wav_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                ids, blobs = [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    n = 192 + d % 200
-                    samples = [
-                        (d * 31 + i * 17) % 4096 - 2048 for i in range(n)
-                    ]
-                    ids.append(d)
-                    blobs.append(
-                        M.encode_wav16(8000 + (d % 3) * 4000, samples)
-                    )
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _pd.Series(ids, dtype="int64"),
-                        "content": blobs,
-                    }
+        for pdf in it:
+            ids, blobs = [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                n = 192 + d % 200
+                samples = [
+                    (d * 31 + i * 17) % 4096 - 2048 for i in range(n)
+                ]
+                ids.append(d)
+                blobs.append(
+                    M.encode_wav16(8000 + (d % 3) * 4000, samples)
                 )
+            yield _pd.DataFrame(
+                {
+                    "doc_id": _pd.Series(ids, dtype="int64"),
+                    "content": blobs,
+                }
+            )
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q298_wav_energy", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, content binary"
-            ),
-        )
-        return M.wav_window_energy(binaries, id_col="doc_id", window=64)
-
-
-_init_q298()
+    binaries = _codec_fixture(
+        spark, sf_dir, "q298_wav_energy", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, content binary"
+        ),
+    )
+    return M.wav_window_energy(binaries, id_col="doc_id", window=64)
 
 
 # --------------------------------------------------------------------
@@ -13865,12 +13212,9 @@ _init_q298()
 # stubbed image codec next to q295 BMP / q297 PNG)
 # --------------------------------------------------------------------
 
-def _init_q299() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q299_jpeg_decode",
-        """
+@register(
+    "q299_jpeg_decode",
+    """
         WITH jd AS (
             SELECT doc_id, 1 + doc_id % 3 AS bw, 1 + doc_id % 2 AS bh
             FROM documents),
@@ -13886,74 +13230,71 @@ def _init_q299() -> None:
                CAST(SUM(64 * v) AS BIGINT) AS sum_gray
         FROM jb GROUP BY 1, 2, 3, 4
         """,
-        doc="Real baseline JPEG decode on the exact gate (functions/"
-            "multimodal.py decode_jpeg_gray, pure stdlib+numpy: marker "
-            "walk, DQT/DHT/SOF0/DRI/SOS parse, canonical Huffman "
-            "entropy decode with 0xFF un-stuffing and RSTn predictor "
-            "resets, dequant, inverse zigzag, 8x8 IDCT). Per document "
-            "a constant-per-8x8-block gray image (block value = "
-            "2*((doc_id*7 + bx*13 + by*19) % 128), 1-3 x 1-2 blocks) "
-            "is ENCODED executor-side to a standard JFIF baseline "
-            "JPEG — real DCT, standard Annex-K luminance quant and "
-            "Huffman tables, a planted COM segment, and a doc_id%4 "
-            "restart interval so RSTn markers appear — then DECODED "
-            "back through the extract_image_features Arrow hook. "
-            "Constant blocks with even-valued levels are the one "
-            "input class the lossy pipeline reproduces EXACTLY (the "
-            "DC quantizer step 16 divides 8*level with no rounding; "
-            "all ACs quantize to zero), so the decoded per-image "
-            "pixel sums hash-match a plain SQL oracle; any marker/"
-            "Huffman/stuffing/restart/IDCT bug breaks the match. The "
-            "general lossy path (nonzero ACs, ZRL/EOB runs) is "
-            "exactness-tested at the coefficient layer in unit tests. "
-            "Same production batch shape as q295/q297: binary column "
-            "in, typed features out, no shuffle added by decode.",
-    )
-    def q299_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
+    doc="Real baseline JPEG decode on the exact gate (functions/"
+        "multimodal.py decode_jpeg_gray, pure stdlib+numpy: marker "
+        "walk, DQT/DHT/SOF0/DRI/SOS parse, canonical Huffman "
+        "entropy decode with 0xFF un-stuffing and RSTn predictor "
+        "resets, dequant, inverse zigzag, 8x8 IDCT). Per document "
+        "a constant-per-8x8-block gray image (block value = "
+        "2*((doc_id*7 + bx*13 + by*19) % 128), 1-3 x 1-2 blocks) "
+        "is ENCODED executor-side to a standard JFIF baseline "
+        "JPEG — real DCT, standard Annex-K luminance quant and "
+        "Huffman tables, a planted COM segment, and a doc_id%4 "
+        "restart interval so RSTn markers appear — then DECODED "
+        "back through the extract_image_features Arrow hook. "
+        "Constant blocks with even-valued levels are the one "
+        "input class the lossy pipeline reproduces EXACTLY (the "
+        "DC quantizer step 16 divides 8*level with no rounding; "
+        "all ACs quantize to zero), so the decoded per-image "
+        "pixel sums hash-match a plain SQL oracle; any marker/"
+        "Huffman/stuffing/restart/IDCT bug breaks the match. The "
+        "general lossy path (nonzero ACs, ZRL/EOB runs) is "
+        "exactness-tested at the coefficient layer in unit tests. "
+        "Same production batch shape as q295/q297: binary column "
+        "in, typed features out, no shuffle added by decode.",
+)
+def q299_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                paths, blobs = [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    bw, bh = 1 + d % 3, 1 + d % 2
-                    img = [
-                        [
-                            2 * ((d * 7 + (x // 8) * 13 + (y // 8) * 19) % 128)
-                            for x in range(8 * bw)
-                        ]
-                        for y in range(8 * bh)
+        for pdf in it:
+            paths, blobs = [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                bw, bh = 1 + d % 3, 1 + d % 2
+                img = [
+                    [
+                        2 * ((d * 7 + (x // 8) * 13 + (y // 8) * 19) % 128)
+                        for x in range(8 * bw)
                     ]
-                    paths.append(str(d))
-                    blobs.append(
-                        M.encode_jpeg_gray(
-                            8 * bw, 8 * bh, img, restart_interval=d % 4
-                        )
+                    for y in range(8 * bh)
+                ]
+                paths.append(str(d))
+                blobs.append(
+                    M.encode_jpeg_gray(
+                        8 * bw, 8 * bh, img, restart_interval=d % 4
                     )
-                yield _pd.DataFrame({"path": paths, "content": blobs})
+                )
+            yield _pd.DataFrame({"path": paths, "content": blobs})
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q299_jpeg_decode", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="path string, content binary"
-            ),
-        )
-        feats = M.extract_image_features(
-            binaries, decode_fn=M.decode_jpeg_features
-        )
-        return feats.select(
-            F.col("path").cast("bigint").alias("doc_id"),
-            "width",
-            "height",
-            (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
-            F.element_at("features", 1).cast("bigint").alias("sum_gray"),
-        )
-
-
-_init_q299()
+    binaries = _codec_fixture(
+        spark, sf_dir, "q299_jpeg_decode", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="path string, content binary"
+        ),
+    )
+    feats = M.extract_image_features(
+        binaries, decode_fn=M.decode_jpeg_features
+    )
+    return feats.select(
+        F.col("path").cast("bigint").alias("doc_id"),
+        "width",
+        "height",
+        (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
+        F.element_at("features", 1).cast("bigint").alias("sum_gray"),
+    )
 
 
 # --------------------------------------------------------------------
@@ -13962,12 +13303,9 @@ _init_q299()
 # multi-frame container, real LZW, lossless => exact)
 # --------------------------------------------------------------------
 
-def _init_q300() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q300_gif_frames",
-        """
+@register(
+    "q300_gif_frames",
+    """
         WITH gd AS (
             SELECT doc_id, 3 + doc_id % 5 AS w, 2 + doc_id % 4 AS h,
                    2 + doc_id % 3 AS nf, 1 + doc_id % 2 AS k
@@ -13993,83 +13331,80 @@ def _init_q300() -> None:
                CAST(SUM((v * 37 + 11) % 256) AS BIGINT) AS sum_r
         FROM gpx WHERE f % k = 0 GROUP BY 1, 2, 3, 4
         """,
-        doc="Real animated-GIF decode + frame sampling on the exact "
-            "gate (functions/multimodal.py decode_gif + "
-            "gif_frame_stats, pure stdlib: GIF89a block walk with "
-            "extension skipping, global color table, and a full LZW "
-            "decoder — variable 3..12-bit LSB-first codes, CLEAR/EOI, "
-            "the KwKwK corner case, 4096-entry dictionary reset, "
-            "255-byte sub-block framing). Per document a "
-            "deterministic 2-4-frame animation (index = (doc_id + "
-            "f*5 + y*7 + x*3) % 8, 8-color palette with r = "
-            "(i*37+11) % 256, per-frame centisecond delays) is "
-            "ENCODED executor-side — with NETSCAPE-loop and comment "
-            "extensions planted so naive block walkers break — then "
-            "DECODED back and sampled every (1 + doc_id % 2) frames "
-            "with exact per-frame stats: cumulative timestamp from "
-            "the GCE delays, index sum, palette-mapped red sum. GIF "
-            "is lossless, so the oracle recomputes everything in "
-            "plain SQL; any LZW/width-growth/sub-block/extension bug "
-            "breaks the match. This is the real-decode twin of the "
-            "sample_frames stub (reference parity: opaque Buffer "
-            "media columns through Thru/Mapper, lib/etl.js) — same "
-            "1:N Arrow batch explosion, zero shuffles added.",
-    )
-    def q300_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
-        palette = [((i * 37 + 11) % 256, (i * 53) % 256, (i * 91) % 256)
-                   for i in range(8)]
+    doc="Real animated-GIF decode + frame sampling on the exact "
+        "gate (functions/multimodal.py decode_gif + "
+        "gif_frame_stats, pure stdlib: GIF89a block walk with "
+        "extension skipping, global color table, and a full LZW "
+        "decoder — variable 3..12-bit LSB-first codes, CLEAR/EOI, "
+        "the KwKwK corner case, 4096-entry dictionary reset, "
+        "255-byte sub-block framing). Per document a "
+        "deterministic 2-4-frame animation (index = (doc_id + "
+        "f*5 + y*7 + x*3) % 8, 8-color palette with r = "
+        "(i*37+11) % 256, per-frame centisecond delays) is "
+        "ENCODED executor-side — with NETSCAPE-loop and comment "
+        "extensions planted so naive block walkers break — then "
+        "DECODED back and sampled every (1 + doc_id % 2) frames "
+        "with exact per-frame stats: cumulative timestamp from "
+        "the GCE delays, index sum, palette-mapped red sum. GIF "
+        "is lossless, so the oracle recomputes everything in "
+        "plain SQL; any LZW/width-growth/sub-block/extension bug "
+        "breaks the match. This is the real-decode twin of the "
+        "sample_frames stub (reference parity: opaque Buffer "
+        "media columns through Thru/Mapper, lib/etl.js) — same "
+        "1:N Arrow batch explosion, zero shuffles added.",
+)
+def q300_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
+    palette = [((i * 37 + 11) % 256, (i * 53) % 256, (i * 91) % 256)
+               for i in range(8)]
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                ids, blobs = [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    w, h, nf = 3 + d % 5, 2 + d % 4, 2 + d % 3
-                    frames = [
-                        [
-                            [(d + f * 5 + y * 7 + x * 3) % 8
-                             for x in range(w)]
-                            for y in range(h)
-                        ]
-                        for f in range(nf)
+        for pdf in it:
+            ids, blobs = [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                w, h, nf = 3 + d % 5, 2 + d % 4, 2 + d % 3
+                frames = [
+                    [
+                        [(d + f * 5 + y * 7 + x * 3) % 8
+                         for x in range(w)]
+                        for y in range(h)
                     ]
-                    delays = [3 + ((d + f) % 6) for f in range(nf)]
-                    ids.append(d)
-                    blobs.append(
-                        M.encode_gif(w, h, frames, palette, delays)
-                    )
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _pd.Series(ids, dtype="int64"),
-                        "content": blobs,
-                    }
+                    for f in range(nf)
+                ]
+                delays = [3 + ((d + f) % 6) for f in range(nf)]
+                ids.append(d)
+                blobs.append(
+                    M.encode_gif(w, h, frames, palette, delays)
                 )
+            yield _pd.DataFrame(
+                {
+                    "doc_id": _pd.Series(ids, dtype="int64"),
+                    "content": blobs,
+                }
+            )
 
-        binaries = _codec_fixture(
-            # v2: LZW encoder EOI-width boundary fix (r10) can shift
-            # output bytes for dictionary sizes landing on 1<<width
-            spark, sf_dir, "q300_gif_frames", 2,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, content binary"
-            ),
-        )
-        # every_k varies per doc, so sample in two branches and union:
-        # k=1 docs keep every frame, k=2 docs keep even frames. Both
-        # branches are the same 1:N decode stage; the union is
-        # partition-local (no shuffle).
-        k1 = M.gif_frame_stats(
-            binaries.where(F.col("doc_id") % 2 == 0), every_k=1
-        )
-        k2 = M.gif_frame_stats(
-            binaries.where(F.col("doc_id") % 2 == 1), every_k=2
-        )
-        return k1.unionByName(k2)
-
-
-_init_q300()
+    binaries = _codec_fixture(
+        # v2: LZW encoder EOI-width boundary fix (r10) can shift
+        # output bytes for dictionary sizes landing on 1<<width
+        spark, sf_dir, "q300_gif_frames", 2,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, content binary"
+        ),
+    )
+    # every_k varies per doc, so sample in two branches and union:
+    # k=1 docs keep every frame, k=2 docs keep even frames. Both
+    # branches are the same 1:N decode stage; the union is
+    # partition-local (no shuffle).
+    k1 = M.gif_frame_stats(
+        binaries.where(F.col("doc_id") % 2 == 0), every_k=1
+    )
+    k2 = M.gif_frame_stats(
+        binaries.where(F.col("doc_id") % 2 == 1), every_k=2
+    )
+    return k1.unionByName(k2)
 
 
 # --------------------------------------------------------------------
@@ -14078,12 +13413,9 @@ _init_q300()
 # shards whose members group into samples by filename prefix)
 # --------------------------------------------------------------------
 
-def _init_q301_q302() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q301_webdataset_shard",
-        """
+@register(
+    "q301_webdataset_shard",
+    """
         SELECT doc_id, doc_id || '.txt' AS member_name,
                CAST(octet_length(encode(text)) AS BIGINT) AS member_size,
                md5(text) AS member_md5
@@ -14094,69 +13426,70 @@ def _init_q301_q302() -> None:
                md5(lang) AS member_md5
         FROM documents
         """,
-        doc="WebDataset tar-shard explode on the exact gate "
-            "(functions/multimodal.py encode_tar_shard / "
-            "explode_tar_members, pure stdlib tarfile+gzip): per "
-            "document a DETERMINISTIC ustar shard (fixed mtime/uid/"
-            "mode — content-addressable) holding '<id>.txt' = the "
-            "document text and '<id>.cls' = its language tag is "
-            "built executor-side — gzip-compressed for odd doc_ids, "
-            "so the r:* compression sniff is exercised — then "
-            "EXPLODED back 1:N and hashed as (member_name, size, "
-            "md5), which the oracle recomputes from the documents "
-            "table (DuckDB md5/octet_length over the same UTF-8 "
-            "bytes). Zero shuffles added: shard explode is "
-            "partition-local (plan-asserted). Reference parity: the "
-            "reference's folder/binary ingestion (job-reader-*.js) "
-            "never had an archive path; this is the Spark-first "
-            "ingestion surface a 100 TB multimodal corpus ships as.",
+    doc="WebDataset tar-shard explode on the exact gate "
+        "(functions/multimodal.py encode_tar_shard / "
+        "explode_tar_members, pure stdlib tarfile+gzip): per "
+        "document a DETERMINISTIC ustar shard (fixed mtime/uid/"
+        "mode — content-addressable) holding '<id>.txt' = the "
+        "document text and '<id>.cls' = its language tag is "
+        "built executor-side — gzip-compressed for odd doc_ids, "
+        "so the r:* compression sniff is exercised — then "
+        "EXPLODED back 1:N and hashed as (member_name, size, "
+        "md5), which the oracle recomputes from the documents "
+        "table (DuckDB md5/octet_length over the same UTF-8 "
+        "bytes). Zero shuffles added: shard explode is "
+        "partition-local (plan-asserted). Reference parity: the "
+        "reference's folder/binary ingestion (job-reader-*.js) "
+        "never had an archive path; this is the Spark-first "
+        "ingestion surface a 100 TB multimodal corpus ships as.",
+)
+def q301_webdataset_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang"
     )
-    def q301_webdataset_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang"
-        )
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                ids, blobs = [], []
-                for d, text, lang in zip(
-                    pdf["doc_id"], pdf["text"], pdf["lang"]
-                ):
-                    d = int(d)
-                    members = [
-                        (f"{d}.txt", str(text).encode("utf-8")),
-                        (f"{d}.cls", str(lang).encode("utf-8")),
-                    ]
-                    ids.append(d)
-                    blobs.append(
-                        M.encode_tar_shard(members, compress=bool(d % 2))
-                    )
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _pd.Series(ids, dtype="int64"),
-                        "content": blobs,
-                    }
+        for pdf in it:
+            ids, blobs = [], []
+            for d, text, lang in zip(
+                pdf["doc_id"], pdf["text"], pdf["lang"]
+            ):
+                d = int(d)
+                members = [
+                    (f"{d}.txt", str(text).encode("utf-8")),
+                    (f"{d}.cls", str(lang).encode("utf-8")),
+                ]
+                ids.append(d)
+                blobs.append(
+                    M.encode_tar_shard(members, compress=bool(d % 2))
                 )
+            yield _pd.DataFrame(
+                {
+                    "doc_id": _pd.Series(ids, dtype="int64"),
+                    "content": blobs,
+                }
+            )
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q301_webdataset_shard", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, content binary"
-            ),
-        )
-        members = M.explode_tar_members(binaries)
-        return members.select(
-            "doc_id",
-            "member_name",
-            "member_size",
-            F.lower(F.md5("member_bytes")).alias("member_md5"),
-        )
+    binaries = _codec_fixture(
+        spark, sf_dir, "q301_webdataset_shard", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, content binary"
+        ),
+    )
+    members = M.explode_tar_members(binaries)
+    return members.select(
+        "doc_id",
+        "member_name",
+        "member_size",
+        F.lower(F.md5("member_bytes")).alias("member_md5"),
+    )
 
-    @register(
-        "q302_webdataset_samples",
-        """
+
+@register(
+    "q302_webdataset_samples",
+    """
         SELECT doc_id, doc_id || '-0' AS sample_key,
                CAST(2 AS INT) AS n_parts, md5(text) AS txt_md5,
                CAST(octet_length(encode('{"lang":"' || lang || '"}')) AS BIGINT)
@@ -14169,75 +13502,72 @@ def _init_q301_q302() -> None:
                    AS meta_size
         FROM documents
         """,
-        doc="WebDataset sample grouping on the exact gate "
-            "(functions/multimodal.py webdataset_samples): members "
-            "group into samples by the basename prefix before the "
-            "FIRST dot, using member ADJACENCY within the shard (the "
-            "WebDataset contract) — so grouping is partition-local "
-            "with ZERO shuffles, where a naive groupBy(sample_key) "
-            "would shuffle the whole corpus. Per document the shard "
-            "holds two samples ('<id>-0', '<id>-1'), each with a "
-            "'.txt' part (text / source) and a multi-dot "
-            "'.meta.json' part (the extension must stay whole); the "
-            "emitted (sample_key, n_parts, md5(txt), meta size) rows "
-            "are recomputed by the oracle from the documents table. "
-            "Samples come out as one row with a map<ext, binary> "
-            "parts column — the typed, Spark-native representation "
-            "downstream decode stages consume.",
+    doc="WebDataset sample grouping on the exact gate "
+        "(functions/multimodal.py webdataset_samples): members "
+        "group into samples by the basename prefix before the "
+        "FIRST dot, using member ADJACENCY within the shard (the "
+        "WebDataset contract) — so grouping is partition-local "
+        "with ZERO shuffles, where a naive groupBy(sample_key) "
+        "would shuffle the whole corpus. Per document the shard "
+        "holds two samples ('<id>-0', '<id>-1'), each with a "
+        "'.txt' part (text / source) and a multi-dot "
+        "'.meta.json' part (the extension must stay whole); the "
+        "emitted (sample_key, n_parts, md5(txt), meta size) rows "
+        "are recomputed by the oracle from the documents table. "
+        "Samples come out as one row with a map<ext, binary> "
+        "parts column — the typed, Spark-native representation "
+        "downstream decode stages consume.",
+)
+def q302_webdataset_samples(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source"
     )
-    def q302_webdataset_samples(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source"
-        )
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                ids, blobs = [], []
-                for d, text, lang, source in zip(
-                    pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
-                ):
-                    d = int(d)
-                    meta = ('{"lang":"%s"}' % lang).encode("utf-8")
-                    members = [
-                        (f"{d}-0.txt", str(text).encode("utf-8")),
-                        (f"{d}-0.meta.json", meta),
-                        (f"{d}-1.txt", str(source).encode("utf-8")),
-                        (f"{d}-1.meta.json", meta),
-                    ]
-                    ids.append(d)
-                    blobs.append(
-                        M.encode_tar_shard(members, compress=bool(d % 2))
-                    )
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _pd.Series(ids, dtype="int64"),
-                        "content": blobs,
-                    }
+        for pdf in it:
+            ids, blobs = [], []
+            for d, text, lang, source in zip(
+                pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
+            ):
+                d = int(d)
+                meta = ('{"lang":"%s"}' % lang).encode("utf-8")
+                members = [
+                    (f"{d}-0.txt", str(text).encode("utf-8")),
+                    (f"{d}-0.meta.json", meta),
+                    (f"{d}-1.txt", str(source).encode("utf-8")),
+                    (f"{d}-1.meta.json", meta),
+                ]
+                ids.append(d)
+                blobs.append(
+                    M.encode_tar_shard(members, compress=bool(d % 2))
                 )
+            yield _pd.DataFrame(
+                {
+                    "doc_id": _pd.Series(ids, dtype="int64"),
+                    "content": blobs,
+                }
+            )
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q302_webdataset_samples", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, content binary"
-            ),
-        )
-        samples = M.webdataset_samples(binaries)
-        return samples.select(
-            "doc_id",
-            "sample_key",
-            F.size("parts").cast("int").alias("n_parts"),
-            F.lower(F.md5(F.element_at("parts", "txt"))).alias("txt_md5"),
-            F.octet_length(F.element_at("parts", "meta.json"))
-            .cast("bigint")
-            .alias("meta_size"),
-        )
-
-
-_init_q301_q302()
+    binaries = _codec_fixture(
+        spark, sf_dir, "q302_webdataset_samples", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, content binary"
+        ),
+    )
+    samples = M.webdataset_samples(binaries)
+    return samples.select(
+        "doc_id",
+        "sample_key",
+        F.size("parts").cast("int").alias("n_parts"),
+        F.lower(F.md5(F.element_at("parts", "txt"))).alias("txt_md5"),
+        F.octet_length(F.element_at("parts", "meta.json"))
+        .cast("bigint")
+        .alias("meta_size"),
+    )
 
 
 # --------------------------------------------------------------------
@@ -14245,10 +13575,9 @@ _init_q301_q302()
 # accent stripping; web text mixes composed and decomposed graphemes)
 # --------------------------------------------------------------------
 
-def _init_q303() -> None:
-    @register(
-        "q303_unicode_normalize",
-        """
+@register(
+    "q303_unicode_normalize",
+    """
         WITH r AS (
             SELECT doc_id,
                    replace(replace(text, 'e', 'e' || chr(769)),
@@ -14261,50 +13590,47 @@ def _init_q303() -> None:
                md5(strip_accents(nfc_normalize(raw))) AS stripped_md5
         FROM r
         """,
-        doc="Unicode canonicalization on the exact gate (functions/"
-            "text.py unicode_normalize, stdlib unicodedata via an "
-            "Arrow-batched pandas_udf): the corpus is ASCII, so the "
-            "plan first injects DECOMPOSED grapheme sequences "
-            "deterministically (every 'e' gains a combining acute "
-            "U+0301, every 'a' a combining grave U+0300 — the same "
-            "literal replace in both engines), then NFC-composes and "
-            "accent-strips. Hashed columns: codepoint counts before/"
-            "after composition (every injected pair must compose: "
-            "raw_chars - nfc_chars = injected marks) plus md5 of the "
-            "NFC and stripped strings, which the oracle recomputes "
-            "with DuckDB's ICU-backed nfc_normalize/strip_accents — "
-            "two INDEPENDENT Unicode implementations agreeing "
-            "byte-for-byte. Dedup fingerprints, BPE merges and "
-            "n-gram stats silently fragment when composed and "
-            "decomposed forms of the same grapheme coexist; this "
-            "pass rides the existing text scan (no shuffle, "
-            "plan-asserted zero Exchange).",
+    doc="Unicode canonicalization on the exact gate (functions/"
+        "text.py unicode_normalize, stdlib unicodedata via an "
+        "Arrow-batched pandas_udf): the corpus is ASCII, so the "
+        "plan first injects DECOMPOSED grapheme sequences "
+        "deterministically (every 'e' gains a combining acute "
+        "U+0301, every 'a' a combining grave U+0300 — the same "
+        "literal replace in both engines), then NFC-composes and "
+        "accent-strips. Hashed columns: codepoint counts before/"
+        "after composition (every injected pair must compose: "
+        "raw_chars - nfc_chars = injected marks) plus md5 of the "
+        "NFC and stripped strings, which the oracle recomputes "
+        "with DuckDB's ICU-backed nfc_normalize/strip_accents — "
+        "two INDEPENDENT Unicode implementations agreeing "
+        "byte-for-byte. Dedup fingerprints, BPE merges and "
+        "n-gram stats silently fragment when composed and "
+        "decomposed forms of the same grapheme coexist; this "
+        "pass rides the existing text scan (no shuffle, "
+        "plan-asserted zero Exchange).",
+)
+def q303_unicode_normalize(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    raw = F.regexp_replace(
+        F.regexp_replace(F.col("text"), "e", "e\u0301"),
+        "a",
+        "a\u0300",
     )
-    def q303_unicode_normalize(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        raw = F.regexp_replace(
-            F.regexp_replace(F.col("text"), "e", "e\u0301"),
-            "a",
-            "a\u0300",
-        )
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", raw.alias("raw")
-        )
-        nfc = T.unicode_normalize("raw", "NFC")
-        stripped = T.unicode_normalize("raw", "NFC", strip_accents=True)
-        return docs.select(
-            "doc_id",
-            F.length("raw").cast("bigint").alias("raw_chars"),
-            F.length(nfc).cast("bigint").alias("nfc_chars"),
-            F.lower(F.md5(F.encode(nfc, "UTF-8"))).alias("nfc_md5"),
-            F.lower(F.md5(F.encode(stripped, "UTF-8"))).alias(
-                "stripped_md5"
-            ),
-        )
-
-
-_init_q303()
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", raw.alias("raw")
+    )
+    nfc = T.unicode_normalize("raw", "NFC")
+    stripped = T.unicode_normalize("raw", "NFC", strip_accents=True)
+    return docs.select(
+        "doc_id",
+        F.length("raw").cast("bigint").alias("raw_chars"),
+        F.length(nfc).cast("bigint").alias("nfc_chars"),
+        F.lower(F.md5(F.encode(nfc, "UTF-8"))).alias("nfc_md5"),
+        F.lower(F.md5(F.encode(stripped, "UTF-8"))).alias(
+            "stripped_md5"
+        ),
+    )
 
 
 # --------------------------------------------------------------------
@@ -14313,12 +13639,9 @@ _init_q303()
 # pattern for text corpora)
 # --------------------------------------------------------------------
 
-def _init_q304() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q304_compressed_text",
-        """
+@register(
+    "q304_compressed_text",
+    """
         SELECT doc_id,
                CASE doc_id % 4 WHEN 0 THEN 'gzip' WHEN 1 THEN 'zlib'
                     WHEN 2 THEN 'bz2' ELSE 'lzma' END AS codec,
@@ -14326,62 +13649,59 @@ def _init_q304() -> None:
                md5(text) AS text_md5
         FROM documents
         """,
-        doc="Compressed text columns on the exact gate (functions/"
-            "multimodal.py compress_text / decompress_text, all-stdlib "
-            "gzip/zlib/bz2/lzma, deterministic encodes): each "
-            "document's text is compressed executor-side with a codec "
-            "chosen by doc_id % 4, then decompressed back through the "
-            "MAGIC-SNIFFING auto path (real lakes mix codecs across "
-            "files and eras — the RFC1950 zlib FCHECK rule, gzip/xz/"
-            "bzip2 magics all exercised) and hashed as (codec, "
-            "codepoint count, md5), which the oracle recomputes from "
-            "the raw documents table. Both pandas_udf crossings are "
-            "Arrow-batched and the plan adds zero Exchange. zstd/"
-            "snappy need absent libraries: the sniff returns unknown "
-            "and the value becomes NULL (warn-and-skip), never "
-            "garbage — unit-tested.",
+    doc="Compressed text columns on the exact gate (functions/"
+        "multimodal.py compress_text / decompress_text, all-stdlib "
+        "gzip/zlib/bz2/lzma, deterministic encodes): each "
+        "document's text is compressed executor-side with a codec "
+        "chosen by doc_id % 4, then decompressed back through the "
+        "MAGIC-SNIFFING auto path (real lakes mix codecs across "
+        "files and eras — the RFC1950 zlib FCHECK rule, gzip/xz/"
+        "bzip2 magics all exercised) and hashed as (codec, "
+        "codepoint count, md5), which the oracle recomputes from "
+        "the raw documents table. Both pandas_udf crossings are "
+        "Arrow-batched and the plan adds zero Exchange. zstd/"
+        "snappy need absent libraries: the sniff returns unknown "
+        "and the value becomes NULL (warn-and-skip), never "
+        "garbage — unit-tested.",
+)
+def q304_compressed_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    codec = (
+        F.when(F.col("doc_id") % 4 == 0, F.lit("gzip"))
+        .when(F.col("doc_id") % 4 == 1, F.lit("zlib"))
+        .when(F.col("doc_id") % 4 == 2, F.lit("bz2"))
+        .otherwise(F.lit("lzma"))
     )
-    def q304_compressed_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        codec = (
-            F.when(F.col("doc_id") % 4 == 0, F.lit("gzip"))
-            .when(F.col("doc_id") % 4 == 1, F.lit("zlib"))
-            .when(F.col("doc_id") % 4 == 2, F.lit("bz2"))
-            .otherwise(F.lit("lzma"))
-        )
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                blobs = [
-                    M.compress_bytes(str(t).encode("utf-8"), c)
-                    for t, c in zip(pdf["text"], pdf["codec"])
-                ]
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "codec": pdf["codec"],
-                        "blob": blobs,
-                    }
-                )
+        for pdf in it:
+            blobs = [
+                M.compress_bytes(str(t).encode("utf-8"), c)
+                for t, c in zip(pdf["text"], pdf["codec"])
+            ]
+            yield _pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "codec": pdf["codec"],
+                    "blob": blobs,
+                }
+            )
 
-        packed = _codec_fixture(
-            spark, sf_dir, "q304_compressed_text", 1,
-            lambda: docs.withColumn("codec", codec).mapInPandas(
-                gen, schema="doc_id bigint, codec string, blob binary"
-            ),
-        )
-        text = M.decompress_text("blob", codec="auto")
-        return packed.select(
-            "doc_id",
-            "codec",
-            F.length(text).cast("bigint").alias("n_chars"),
-            F.lower(F.md5(F.encode(text, "UTF-8"))).alias("text_md5"),
-        )
-
-
-_init_q304()
+    packed = _codec_fixture(
+        spark, sf_dir, "q304_compressed_text", 1,
+        lambda: docs.withColumn("codec", codec).mapInPandas(
+            gen, schema="doc_id bigint, codec string, blob binary"
+        ),
+    )
+    text = M.decompress_text("blob", codec="auto")
+    return packed.select(
+        "doc_id",
+        "codec",
+        F.length(text).cast("bigint").alias("n_chars"),
+        F.lower(F.md5(F.encode(text, "UTF-8"))).alias("text_md5"),
+    )
 
 
 # --------------------------------------------------------------------
@@ -14390,21 +13710,21 @@ _init_q304()
 # zero vocabulary broadcast — pure whole-stage codegen)
 # --------------------------------------------------------------------
 
-def _init_q305() -> None:
-    from ..functions.text import hashed_linear_score, hashed_linear_score_sql
+from ..functions.text import hashed_linear_score, hashed_linear_score_sql
 
-    score_sql = hashed_linear_score_sql("text", seed=7, buckets=512)
+_q305_score_sql = hashed_linear_score_sql("text", seed=7, buckets=512)
 
-    @register(
-        "q305_quality_classifier",
-        f"""
+
+@register(
+    "q305_quality_classifier",
+    f"""
         WITH s AS (
             SELECT doc_id, lang,
                    CAST(length(string_split(text, ' ')) -
                         length(list_filter(string_split(text, ' '),
                                            t -> t = '')) AS BIGINT)
                        AS n_terms,
-                   CAST({score_sql} AS BIGINT) AS score
+                   CAST({_q305_score_sql} AS BIGINT) AS score
             FROM documents)
         SELECT lang,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -14416,50 +13736,47 @@ def _init_q305() -> None:
                CAST(SUM(n_terms) AS BIGINT) AS sum_terms
         FROM s GROUP BY lang
         """,
-        doc="Linear-classifier inference via the hashing trick on the "
-            "exact gate (functions/text.py hashed_linear_score): per "
-            "token a portable md5 bucket (512 buckets, seed 7) maps "
-            "through a Knuth-mix integer weight, summed per document "
-            "— the fastText-style quality-scorer SHAPE with surrogate "
-            "weights (production swaps the weight expression for a "
-            "literal array of trained coefficients; identical plan). "
-            "The whole expression is split/filter/transform/aggregate "
-            "higher-order functions — whole-stage codegen, no Python "
-            "crossing, no vocabulary broadcast, no shuffle before the "
-            "final per-language rollup (plan-asserted). Exact integer "
-            "arithmetic end-to-end; the oracle recomputes the same "
-            "score with DuckDB list functions. Complements "
-            "q129_hashed_features, which exports the (doc, feature, "
-            "weight) TRAINING matrix; this is the inference pass that "
-            "scores 100 TB in one scan.",
+    doc="Linear-classifier inference via the hashing trick on the "
+        "exact gate (functions/text.py hashed_linear_score): per "
+        "token a portable md5 bucket (512 buckets, seed 7) maps "
+        "through a Knuth-mix integer weight, summed per document "
+        "— the fastText-style quality-scorer SHAPE with surrogate "
+        "weights (production swaps the weight expression for a "
+        "literal array of trained coefficients; identical plan). "
+        "The whole expression is split/filter/transform/aggregate "
+        "higher-order functions — whole-stage codegen, no Python "
+        "crossing, no vocabulary broadcast, no shuffle before the "
+        "final per-language rollup (plan-asserted). Exact integer "
+        "arithmetic end-to-end; the oracle recomputes the same "
+        "score with DuckDB list functions. Complements "
+        "q129_hashed_features, which exports the (doc, feature, "
+        "weight) TRAINING matrix; this is the inference pass that "
+        "scores 100 TB in one scan.",
+)
+def q305_quality_classifier(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "text"
     )
-    def q305_quality_classifier(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "text"
-        )
-        toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-        scored = docs.select(
-            "lang",
-            F.size(toks).cast("bigint").alias("n_terms"),
-            hashed_linear_score("text", seed=7, buckets=512).alias(
-                "score"
-            ),
-        )
-        return scored.groupBy("lang").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum((F.col("score") > 0).cast("bigint"))
-            .cast("bigint")
-            .alias("n_kept"),
-            F.sum("score").cast("bigint").alias("sum_score"),
-            F.min("score").cast("bigint").alias("min_score"),
-            F.max("score").cast("bigint").alias("max_score"),
-            F.sum("n_terms").cast("bigint").alias("sum_terms"),
-        )
-
-
-_init_q305()
+    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+    scored = docs.select(
+        "lang",
+        F.size(toks).cast("bigint").alias("n_terms"),
+        hashed_linear_score("text", seed=7, buckets=512).alias(
+            "score"
+        ),
+    )
+    return scored.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum((F.col("score") > 0).cast("bigint"))
+        .cast("bigint")
+        .alias("n_kept"),
+        F.sum("score").cast("bigint").alias("sum_score"),
+        F.min("score").cast("bigint").alias("min_score"),
+        F.max("score").cast("bigint").alias("max_score"),
+        F.sum("n_terms").cast("bigint").alias("sum_terms"),
+    )
 
 
 # --------------------------------------------------------------------
@@ -14470,12 +13787,9 @@ _init_q305()
 # the decode cost — the scale argument for sampled video featurize.)
 # --------------------------------------------------------------------
 
-def _init_q306() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q306_video_frames",
-        """
+@register(
+    "q306_video_frames",
+    """
         WITH vd AS (
             SELECT doc_id, 1 + doc_id % 3 AS bw, 1 + doc_id % 2 AS bh,
                    2 + doc_id % 3 AS nf, 1 + doc_id % 2 AS k,
@@ -14497,85 +13811,82 @@ def _init_q306() -> None:
                CAST(SUM(64 * v) AS BIGINT) AS sum_gray
         FROM vb GROUP BY 1, 2, 3, 4
         """,
-        doc="Real VIDEO decode + frame sampling on the exact gate "
-            "(functions/multimodal.py decode_avi_mjpeg + "
-            "video_frame_stats): pure-stdlib RIFF/AVI container parse "
-            "— nested LIST walk with odd-size pad bytes, avih timing/"
-            "dimensions, strh fourcc validation, '00dc' frame chunks, "
-            "planted JUNK chunk as the adversary — then each sampled "
-            "frame's payload through the REAL baseline JPEG decoder "
-            "(q299's marker/Huffman/IDCT path). Per document a "
-            "deterministic 2-4-frame MJPEG clip of constant-per-8x8-"
-            "block gray frames (block value = 2*((doc_id*7 + f*11 + "
-            "bx*13 + by*19) % 128) — the input class the lossy JPEG "
-            "pipeline reproduces EXACTLY, as q299 proves) is ENCODED "
-            "executor-side at 20-24 ms/frame timing, then DECODED "
-            "back and sampled every (1 + doc_id % 2) frames with "
-            "exact per-frame stats (container-derived ms timestamp, "
-            "pixel count, gray sum). Skipped frames are never "
-            "entropy-decoded — MJPEG has no inter-frame prediction, "
-            "so sampling divides decode cost by k at 100 TB. Same "
-            "1:N mapInPandas shape as q300, zero Exchange "
-            "(plan-asserted); modern inter-predicted codecs remain a "
-            "documented ffmpeg deployment dependency behind the same "
-            "hook (PARITY.md).",
-    )
-    def q306_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
+    doc="Real VIDEO decode + frame sampling on the exact gate "
+        "(functions/multimodal.py decode_avi_mjpeg + "
+        "video_frame_stats): pure-stdlib RIFF/AVI container parse "
+        "— nested LIST walk with odd-size pad bytes, avih timing/"
+        "dimensions, strh fourcc validation, '00dc' frame chunks, "
+        "planted JUNK chunk as the adversary — then each sampled "
+        "frame's payload through the REAL baseline JPEG decoder "
+        "(q299's marker/Huffman/IDCT path). Per document a "
+        "deterministic 2-4-frame MJPEG clip of constant-per-8x8-"
+        "block gray frames (block value = 2*((doc_id*7 + f*11 + "
+        "bx*13 + by*19) % 128) — the input class the lossy JPEG "
+        "pipeline reproduces EXACTLY, as q299 proves) is ENCODED "
+        "executor-side at 20-24 ms/frame timing, then DECODED "
+        "back and sampled every (1 + doc_id % 2) frames with "
+        "exact per-frame stats (container-derived ms timestamp, "
+        "pixel count, gray sum). Skipped frames are never "
+        "entropy-decoded — MJPEG has no inter-frame prediction, "
+        "so sampling divides decode cost by k at 100 TB. Same "
+        "1:N mapInPandas shape as q300, zero Exchange "
+        "(plan-asserted); modern inter-predicted codecs remain a "
+        "documented ffmpeg deployment dependency behind the same "
+        "hook (PARITY.md).",
+)
+def q306_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                ids, ks, blobs = [], [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    bw, bh, nf = 1 + d % 3, 1 + d % 2, 2 + d % 3
-                    jpegs = [
-                        M.encode_jpeg_gray(
-                            8 * bw,
-                            8 * bh,
+        for pdf in it:
+            ids, ks, blobs = [], [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                bw, bh, nf = 1 + d % 3, 1 + d % 2, 2 + d % 3
+                jpegs = [
+                    M.encode_jpeg_gray(
+                        8 * bw,
+                        8 * bh,
+                        [
                             [
-                                [
-                                    2 * ((d * 7 + f * 11 + (x // 8) * 13
-                                          + (y // 8) * 19) % 128)
-                                    for x in range(8 * bw)
-                                ]
-                                for y in range(8 * bh)
-                            ],
-                            restart_interval=(d + f) % 3,
-                        )
-                        for f in range(nf)
-                    ]
-                    ids.append(d)
-                    ks.append(1 + d % 2)
-                    blobs.append(
-                        M.encode_avi_mjpeg(
-                            8 * bw, 8 * bh, jpegs,
-                            ms_per_frame=20 + d % 5,
-                        )
+                                2 * ((d * 7 + f * 11 + (x // 8) * 13
+                                      + (y // 8) * 19) % 128)
+                                for x in range(8 * bw)
+                            ]
+                            for y in range(8 * bh)
+                        ],
+                        restart_interval=(d + f) % 3,
                     )
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _pd.Series(ids, dtype="int64"),
-                        "k": _pd.Series(ks, dtype="int32"),
-                        "content": blobs,
-                    }
+                    for f in range(nf)
+                ]
+                ids.append(d)
+                ks.append(1 + d % 2)
+                blobs.append(
+                    M.encode_avi_mjpeg(
+                        8 * bw, 8 * bh, jpegs,
+                        ms_per_frame=20 + d % 5,
+                    )
                 )
+            yield _pd.DataFrame(
+                {
+                    "doc_id": _pd.Series(ids, dtype="int64"),
+                    "k": _pd.Series(ks, dtype="int32"),
+                    "content": blobs,
+                }
+            )
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q306_video_frames", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, k int, content binary"
-            ),
-        )
-        # per-document stride (1 + doc_id % 2) goes in as a COLUMN —
-        # the operator's per-row every_k mode — so skipped frames are
-        # genuinely never entropy-decoded, matching the 1/k cost claim
-        return M.video_frame_stats(binaries, every_k="k")
-
-
-_init_q306()
+    binaries = _codec_fixture(
+        spark, sf_dir, "q306_video_frames", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, k int, content binary"
+        ),
+    )
+    # per-document stride (1 + doc_id % 2) goes in as a COLUMN —
+    # the operator's per-row every_k mode — so skipped frames are
+    # genuinely never entropy-decoded, matching the 1/k cost claim
+    return M.video_frame_stats(binaries, every_k="k")
 
 
 # --------------------------------------------------------------------
@@ -14585,12 +13896,9 @@ _init_q306()
 # video remain, as documented deployment dependencies in PARITY.md)
 # --------------------------------------------------------------------
 
-def _init_q307() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q307_progressive_jpeg",
-        """
+@register(
+    "q307_progressive_jpeg",
+    """
         WITH jd AS (
             SELECT doc_id, 1 + doc_id % 4 AS bw, 1 + doc_id % 3 AS bh
             FROM documents),
@@ -14606,83 +13914,80 @@ def _init_q307() -> None:
                CAST(SUM(64 * v) AS BIGINT) AS sum_gray
         FROM jb GROUP BY 1, 2, 3, 4
         """,
-        doc="PROGRESSIVE JPEG (SOF2) decode on the exact gate "
-            "(functions/multimodal.py encode_jpeg_progressive_gray + "
-            "decode_jpeg_gray, pure stdlib+numpy per T.81 Annex G): "
-            "spectral selection (two AC bands, per-doc split point), "
-            "successive approximation (per-doc DC/AC precision "
-            "ladders), DC first/refine scans, AC first scans with "
-            "EOB-run accumulation, and the AC refinement correction-"
-            "bit algorithm — the classically bug-prone interleaving "
-            "of newly-significant coefficients, buffered correction "
-            "bits, and EOB runs. Per document a constant-per-8x8-"
-            "block gray image (the class the lossy pipeline "
-            "reproduces EXACTLY, as q299 proves for baseline) is "
-            "ENCODED executor-side with a doc-dependent scan script "
-            "(dc_al = doc_id%3, ac_al = doc_id%4, split in "
-            "{1,5,20,62}, restart interval doc_id%4 planting RSTn "
-            "markers inside every scan — EOB runs must flush at "
-            "restart boundaries), then DECODED back through the same "
-            "extract_image_features Arrow hook as q299. Any scan-"
-            "script/EOB-run/refinement/restart bug breaks the hash. "
-            "General lossy inputs are covered by the progressive==  "
-            "baseline decode-equality test over random images "
-            "(tests/test_multimodal.py). Zero Exchange added "
-            "(plan-asserted).",
-    )
-    def q307_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
-        splits = (1, 5, 20, 62)
+    doc="PROGRESSIVE JPEG (SOF2) decode on the exact gate "
+        "(functions/multimodal.py encode_jpeg_progressive_gray + "
+        "decode_jpeg_gray, pure stdlib+numpy per T.81 Annex G): "
+        "spectral selection (two AC bands, per-doc split point), "
+        "successive approximation (per-doc DC/AC precision "
+        "ladders), DC first/refine scans, AC first scans with "
+        "EOB-run accumulation, and the AC refinement correction-"
+        "bit algorithm — the classically bug-prone interleaving "
+        "of newly-significant coefficients, buffered correction "
+        "bits, and EOB runs. Per document a constant-per-8x8-"
+        "block gray image (the class the lossy pipeline "
+        "reproduces EXACTLY, as q299 proves for baseline) is "
+        "ENCODED executor-side with a doc-dependent scan script "
+        "(dc_al = doc_id%3, ac_al = doc_id%4, split in "
+        "{1,5,20,62}, restart interval doc_id%4 planting RSTn "
+        "markers inside every scan — EOB runs must flush at "
+        "restart boundaries), then DECODED back through the same "
+        "extract_image_features Arrow hook as q299. Any scan-"
+        "script/EOB-run/refinement/restart bug breaks the hash. "
+        "General lossy inputs are covered by the progressive==  "
+        "baseline decode-equality test over random images "
+        "(tests/test_multimodal.py). Zero Exchange added "
+        "(plan-asserted).",
+)
+def q307_progressive_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
+    splits = (1, 5, 20, 62)
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                paths, blobs = [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    bw, bh = 1 + d % 4, 1 + d % 3
-                    img = [
-                        [
-                            2 * ((d * 5 + (x // 8) * 17 + (y // 8) * 23)
-                                 % 128)
-                            for x in range(8 * bw)
-                        ]
-                        for y in range(8 * bh)
+        for pdf in it:
+            paths, blobs = [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                bw, bh = 1 + d % 4, 1 + d % 3
+                img = [
+                    [
+                        2 * ((d * 5 + (x // 8) * 17 + (y // 8) * 23)
+                             % 128)
+                        for x in range(8 * bw)
                     ]
-                    paths.append(str(d))
-                    blobs.append(
-                        M.encode_jpeg_progressive_gray(
-                            8 * bw,
-                            8 * bh,
-                            img,
-                            restart_interval=d % 4,
-                            dc_al=d % 3,
-                            ac_al=d % 4,
-                            spectral_split=splits[d % 4],
-                        )
+                    for y in range(8 * bh)
+                ]
+                paths.append(str(d))
+                blobs.append(
+                    M.encode_jpeg_progressive_gray(
+                        8 * bw,
+                        8 * bh,
+                        img,
+                        restart_interval=d % 4,
+                        dc_al=d % 3,
+                        ac_al=d % 4,
+                        spectral_split=splits[d % 4],
                     )
-                yield _pd.DataFrame({"path": paths, "content": blobs})
+                )
+            yield _pd.DataFrame({"path": paths, "content": blobs})
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q307_progressive_jpeg", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="path string, content binary"
-            ),
-        )
-        feats = M.extract_image_features(
-            binaries, decode_fn=M.decode_jpeg_features
-        )
-        return feats.select(
-            F.col("path").cast("bigint").alias("doc_id"),
-            "width",
-            "height",
-            (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
-            F.element_at("features", 1).cast("bigint").alias("sum_gray"),
-        )
-
-
-_init_q307()
+    binaries = _codec_fixture(
+        spark, sf_dir, "q307_progressive_jpeg", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="path string, content binary"
+        ),
+    )
+    feats = M.extract_image_features(
+        binaries, decode_fn=M.decode_jpeg_features
+    )
+    return feats.select(
+        F.col("path").cast("bigint").alias("doc_id"),
+        "width",
+        "height",
+        (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
+        F.element_at("features", 1).cast("bigint").alias("sum_gray"),
+    )
 
 
 # --------------------------------------------------------------------
@@ -14694,12 +13999,9 @@ _init_q307()
 # dependency narrows to progressive COLOR + arithmetic coding.)
 # --------------------------------------------------------------------
 
-def _init_q308() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q308_color_jpeg",
-        """
+@register(
+    "q308_color_jpeg",
+    """
         WITH cd AS (
             SELECT doc_id,
                    CASE doc_id % 3 WHEN 0 THEN 8 ELSE 16 END AS mw,
@@ -14730,89 +14032,86 @@ def _init_q308() -> None:
                CAST(SUM(vcr) AS BIGINT) AS sum_cr
         FROM v GROUP BY 1, 2, 3, 4
         """,
-        doc="Baseline COLOR JPEG decode on the exact gate (functions/"
-            "multimodal.py encode_jpeg_color + decode_jpeg_ycbcr): "
-            "three-component SOF0 with per-doc chroma subsampling "
-            "(4:4:4 / 4:2:2 / 4:2:0 by doc_id%3), K.1 luma + K.2 "
-            "chroma quantization tables, interleaved MCU entropy "
-            "coding with three DC predictors, RSTn restarts resetting "
-            "all of them (doc_id%3 interval), box-filter chroma "
-            "downsampling on encode and nearest-neighbor upsampling "
-            "on decode. Per document constant-per-MCU YCbCr planes "
-            "(Y-128 even so the step-16 luma DC quantizer is exact; "
-            "Cb/Cr offsets multiples of 17, the K.2 DC step) at "
-            "non-MCU-aligned dims (edge MCUs exercise padding) are "
-            "ENCODED then DECODED back through the extract_image_"
-            "features Arrow hook; per-plane pixel sums hash against "
-            "plain SQL. Any MCU-interleave/predictor/subsample/"
-            "padding bug breaks the match. General lossy inputs: the "
-            "4:4:4 luma path is pinned to the oracle-gated grayscale "
-            "pipeline on random images (tests/test_multimodal.py). "
-            "Zero Exchange added (plan-asserted).",
-    )
-    def q308_color_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
-        modes = ("444", "422", "420")
+    doc="Baseline COLOR JPEG decode on the exact gate (functions/"
+        "multimodal.py encode_jpeg_color + decode_jpeg_ycbcr): "
+        "three-component SOF0 with per-doc chroma subsampling "
+        "(4:4:4 / 4:2:2 / 4:2:0 by doc_id%3), K.1 luma + K.2 "
+        "chroma quantization tables, interleaved MCU entropy "
+        "coding with three DC predictors, RSTn restarts resetting "
+        "all of them (doc_id%3 interval), box-filter chroma "
+        "downsampling on encode and nearest-neighbor upsampling "
+        "on decode. Per document constant-per-MCU YCbCr planes "
+        "(Y-128 even so the step-16 luma DC quantizer is exact; "
+        "Cb/Cr offsets multiples of 17, the K.2 DC step) at "
+        "non-MCU-aligned dims (edge MCUs exercise padding) are "
+        "ENCODED then DECODED back through the extract_image_"
+        "features Arrow hook; per-plane pixel sums hash against "
+        "plain SQL. Any MCU-interleave/predictor/subsample/"
+        "padding bug breaks the match. General lossy inputs: the "
+        "4:4:4 luma path is pinned to the oracle-gated grayscale "
+        "pipeline on random images (tests/test_multimodal.py). "
+        "Zero Exchange added (plan-asserted).",
+)
+def q308_color_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
+    modes = ("444", "422", "420")
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                paths, blobs = [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    mode = modes[d % 3]
-                    mw = 8 if d % 3 == 0 else 16
-                    mh = 16 if d % 3 == 2 else 8
-                    w, h = mw + d % 7, mh + d % 5
-                    Y = [
-                        [128 + 2 * (((d * 3 + (x // mw) * 7
-                                      + (y // mh) * 11) % 60) - 30)
-                         for x in range(w)]
-                        for y in range(h)
-                    ]
-                    Cb = [
-                        [128 + 17 * (((d + (x // mw) * 5
-                                       + (y // mh) * 3) % 5) - 2)
-                         for x in range(w)]
-                        for y in range(h)
-                    ]
-                    Cr = [
-                        [128 + 17 * (((d * 2 + (x // mw) * 3
-                                       + (y // mh) * 7) % 5) - 2)
-                         for x in range(w)]
-                        for y in range(h)
-                    ]
-                    paths.append(str(d))
-                    blobs.append(
-                        M.encode_jpeg_color(
-                            w, h, Y, Cb, Cr, subsampling=mode,
-                            restart_interval=d % 3,
-                        )
+        for pdf in it:
+            paths, blobs = [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                mode = modes[d % 3]
+                mw = 8 if d % 3 == 0 else 16
+                mh = 16 if d % 3 == 2 else 8
+                w, h = mw + d % 7, mh + d % 5
+                Y = [
+                    [128 + 2 * (((d * 3 + (x // mw) * 7
+                                  + (y // mh) * 11) % 60) - 30)
+                     for x in range(w)]
+                    for y in range(h)
+                ]
+                Cb = [
+                    [128 + 17 * (((d + (x // mw) * 5
+                                   + (y // mh) * 3) % 5) - 2)
+                     for x in range(w)]
+                    for y in range(h)
+                ]
+                Cr = [
+                    [128 + 17 * (((d * 2 + (x // mw) * 3
+                                   + (y // mh) * 7) % 5) - 2)
+                     for x in range(w)]
+                    for y in range(h)
+                ]
+                paths.append(str(d))
+                blobs.append(
+                    M.encode_jpeg_color(
+                        w, h, Y, Cb, Cr, subsampling=mode,
+                        restart_interval=d % 3,
                     )
-                yield _pd.DataFrame({"path": paths, "content": blobs})
+                )
+            yield _pd.DataFrame({"path": paths, "content": blobs})
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q308_color_jpeg", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="path string, content binary"
-            ),
-        )
-        feats = M.extract_image_features(
-            binaries, decode_fn=M.decode_jpeg_color_features
-        )
-        return feats.select(
-            F.col("path").cast("bigint").alias("doc_id"),
-            "width",
-            "height",
-            (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
-            F.element_at("features", 1).cast("bigint").alias("sum_y"),
-            F.element_at("features", 2).cast("bigint").alias("sum_cb"),
-            F.element_at("features", 3).cast("bigint").alias("sum_cr"),
-        )
-
-
-_init_q308()
+    binaries = _codec_fixture(
+        spark, sf_dir, "q308_color_jpeg", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="path string, content binary"
+        ),
+    )
+    feats = M.extract_image_features(
+        binaries, decode_fn=M.decode_jpeg_color_features
+    )
+    return feats.select(
+        F.col("path").cast("bigint").alias("doc_id"),
+        "width",
+        "height",
+        (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
+        F.element_at("features", 1).cast("bigint").alias("sum_y"),
+        F.element_at("features", 2).cast("bigint").alias("sum_cb"),
+        F.element_at("features", 3).cast("bigint").alias("sum_cr"),
+    )
 
 
 # --------------------------------------------------------------------
@@ -14823,13 +14122,10 @@ _init_q308()
 # decoders existed; now the whole pipeline is real AND exact.)
 # --------------------------------------------------------------------
 
-def _init_q309() -> None:
-    from ..functions import dedup as DD
-    from ..functions import multimodal as M
 
-    @register(
-        "q309_image_neardup",
-        """
+@register(
+    "q309_image_neardup",
+    """
         WITH cells AS (
             SELECT doc_id, i, j,
                    (CAST(('0x' || substring(md5(
@@ -14866,94 +14162,91 @@ def _init_q309() -> None:
         SELECT d1, d2, CAST(bit_count(xor(h1, h2)) AS INT) AS hamming
         FROM cand WHERE bit_count(xor(h1, h2)) <= 4
         """,
-        doc="REAL-pixel perceptual near-dup pairs on the exact gate "
-            "(functions/multimodal.py image_ahash + functions/dedup.py "
-            "simhash_band_pairs): per document an 80x48 gray BMP of "
-            "8x8 constant cells (cell (i,j) value = the engine's "
-            "portable md5 bucket of (base,i,j) — distinct base "
-            "images land ~60 random bits apart so banding buckets "
-            "stay sparse: cross-base pairs measured ZERO at 500 "
-            "docs, where a first-cut linear-congruence pattern "
-            "saturated the sketch space with 53k pairs; groups of "
-            "three documents share a base image, variants perturbing "
-            "0-2 cells by +61) is ENCODED executor-side, REALLY "
-            "DECODED back "
-            "(decode_bmp24 -> integer gray), aHashed over a 6x10 cell "
-            "grid with the cross-multiplied integer mean rule (no "
-            "float thresholds -> DuckDB recomputes the identical "
-            "60-bit fingerprint WITHOUT decoding, because the whole "
-            "pixel pipeline is deterministic), then paired by Manku "
-            "combination banding (agree on >=1 of the 15 two-block "
-            "combos, exact popcount <= 4 verifies). The SQL oracle "
-            "mirrors the banding join — complete by the same "
-            "pigeonhole argument, so both sides enumerate exactly "
-            "the hamming<=4 pairs. Scale shape: bucket join over "
-            "20-bit combo keys, never all-pairs (same plan family as "
-            "q215/q216, plan-asserted no cartesian).",
-    )
-    def q309_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
+    doc="REAL-pixel perceptual near-dup pairs on the exact gate "
+        "(functions/multimodal.py image_ahash + functions/dedup.py "
+        "simhash_band_pairs): per document an 80x48 gray BMP of "
+        "8x8 constant cells (cell (i,j) value = the engine's "
+        "portable md5 bucket of (base,i,j) — distinct base "
+        "images land ~60 random bits apart so banding buckets "
+        "stay sparse: cross-base pairs measured ZERO at 500 "
+        "docs, where a first-cut linear-congruence pattern "
+        "saturated the sketch space with 53k pairs; groups of "
+        "three documents share a base image, variants perturbing "
+        "0-2 cells by +61) is ENCODED executor-side, REALLY "
+        "DECODED back "
+        "(decode_bmp24 -> integer gray), aHashed over a 6x10 cell "
+        "grid with the cross-multiplied integer mean rule (no "
+        "float thresholds -> DuckDB recomputes the identical "
+        "60-bit fingerprint WITHOUT decoding, because the whole "
+        "pixel pipeline is deterministic), then paired by Manku "
+        "combination banding (agree on >=1 of the 15 two-block "
+        "combos, exact popcount <= 4 verifies). The SQL oracle "
+        "mirrors the banding join — complete by the same "
+        "pigeonhole argument, so both sides enumerate exactly "
+        "the hamming<=4 pairs. Scale shape: bucket join over "
+        "20-bit combo keys, never all-pairs (same plan family as "
+        "q215/q216, plan-asserted no cartesian).",
+)
+def q309_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
 
-        def gen(it):
-            import hashlib
+    def gen(it):
+        import hashlib
 
-            import pandas as _pd
+        import pandas as _pd
 
-            for pdf in it:
-                ids, blobs = [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    base, var = d // 3, d % 3
-                    # 60 md5 calls per doc (one per CELL), then expand
-                    # to pixels — not one per pixel
-                    cells = [
-                        [
-                            (
-                                int(
-                                    hashlib.md5(
-                                        f"{base * 60 + i * 10 + j}:9"
-                                        .encode()
-                                    ).hexdigest()[:8],
-                                    16,
-                                )
-                                % 256
-                                + (61 if i == 0 and j < var else 0)
-                            ) % 256
-                            for j in range(10)
-                        ]
-                        for i in range(6)
+        for pdf in it:
+            ids, blobs = [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                base, var = d // 3, d % 3
+                # 60 md5 calls per doc (one per CELL), then expand
+                # to pixels — not one per pixel
+                cells = [
+                    [
+                        (
+                            int(
+                                hashlib.md5(
+                                    f"{base * 60 + i * 10 + j}:9"
+                                    .encode()
+                                ).hexdigest()[:8],
+                                16,
+                            )
+                            % 256
+                            + (61 if i == 0 and j < var else 0)
+                        ) % 256
+                        for j in range(10)
                     ]
-                    pixels = []
-                    for y in range(48):
-                        crow = cells[y // 8]
-                        row = []
-                        for j in range(10):
-                            row.extend([(crow[j],) * 3] * 8)
-                        pixels.append(row)
-                    ids.append(d)
-                    blobs.append(M.encode_bmp24(80, 48, pixels))
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _pd.Series(ids, dtype="int64"),
-                        "content": blobs,
-                    }
-                )
+                    for i in range(6)
+                ]
+                pixels = []
+                for y in range(48):
+                    crow = cells[y // 8]
+                    row = []
+                    for j in range(10):
+                        row.extend([(crow[j],) * 3] * 8)
+                    pixels.append(row)
+                ids.append(d)
+                blobs.append(M.encode_bmp24(80, 48, pixels))
+            yield _pd.DataFrame(
+                {
+                    "doc_id": _pd.Series(ids, dtype="int64"),
+                    "content": blobs,
+                }
+            )
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q309_image_neardup", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, content binary"
-            ),
-        )
-        sigs = M.image_ahash(binaries).select(
-            "doc_id", F.col("phash").alias("simhash")
-        )
-        return DD.simhash_band_pairs(sigs, max_hamming=4).select(
-            "d1", "d2", "hamming"
-        )
-
-
-_init_q309()
+    binaries = _codec_fixture(
+        spark, sf_dir, "q309_image_neardup", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, content binary"
+        ),
+    )
+    sigs = M.image_ahash(binaries).select(
+        "doc_id", F.col("phash").alias("simhash")
+    )
+    return D.simhash_band_pairs(sigs, max_hamming=4).select(
+        "d1", "d2", "hamming"
+    )
 
 
 # --------------------------------------------------------------------
@@ -14964,12 +14257,9 @@ _init_q309()
 # now the only library-bound codec; PARITY.md codec closure.)
 # --------------------------------------------------------------------
 
-def _init_q310() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q310_snappy_roundtrip",
-        """
+@register(
+    "q310_snappy_roundtrip",
+    """
         SELECT doc_id,
                doc_id % 5 <> 0 AS ok,
                CASE WHEN doc_id % 5 = 0 THEN NULL
@@ -14978,67 +14268,64 @@ def _init_q310() -> None:
                     ELSE md5(text) END AS text_md5
         FROM documents
         """,
-        doc="Snappy compressed text columns on the exact gate "
-            "(functions/multimodal.py _snappy_frame_compress / "
-            "_snappy_raw_decompress via compress_bytes/"
-            "decompress_bytes): per document the text is compressed "
-            "executor-side to the FRAMED snappy container (sNaPpY "
-            "magic, 64 KiB chunks, masked CRC-32C — the pure-stdlib "
-            "table-driven Castagnoli implementation, not zlib's "
-            "ISO-HDLC crc32), one in five blobs gets its last "
-            "payload byte flipped, then everything goes back through "
-            "the MAGIC-SNIFFING decompress path. Corrupt blobs fail "
-            "the chunk checksum deterministically and become NULL "
-            "(warn-and-skip, never garbage); intact blobs round-trip "
-            "bit-exactly, hashed as (length, md5) against plain SQL "
-            "over the original text. The raw (unframed) format, all "
-            "three copy-tag widths, overlapping copies, and public "
-            "CRC-32C test vectors are unit-tested "
-            "(tests/test_multimodal.py). Same zero-Exchange Arrow "
-            "shape as q304 (plan-asserted).",
-    )
-    def q310_snappy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    doc="Snappy compressed text columns on the exact gate "
+        "(functions/multimodal.py _snappy_frame_compress / "
+        "_snappy_raw_decompress via compress_bytes/"
+        "decompress_bytes): per document the text is compressed "
+        "executor-side to the FRAMED snappy container (sNaPpY "
+        "magic, 64 KiB chunks, masked CRC-32C — the pure-stdlib "
+        "table-driven Castagnoli implementation, not zlib's "
+        "ISO-HDLC crc32), one in five blobs gets its last "
+        "payload byte flipped, then everything goes back through "
+        "the MAGIC-SNIFFING decompress path. Corrupt blobs fail "
+        "the chunk checksum deterministically and become NULL "
+        "(warn-and-skip, never garbage); intact blobs round-trip "
+        "bit-exactly, hashed as (length, md5) against plain SQL "
+        "over the original text. The raw (unframed) format, all "
+        "three copy-tag widths, overlapping copies, and public "
+        "CRC-32C test vectors are unit-tested "
+        "(tests/test_multimodal.py). Same zero-Exchange Arrow "
+        "shape as q304 (plan-asserted).",
+)
+def q310_snappy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                ids, blobs = [], []
-                for d, t in zip(pdf["doc_id"], pdf["text"]):
-                    d = int(d)
-                    blob = bytearray(
-                        M.compress_bytes(t.encode("utf-8"), "snappy")
-                    )
-                    if d % 5 == 0:
-                        blob[-1] ^= 0xFF  # breaks the chunk CRC
-                    ids.append(d)
-                    blobs.append(bytes(blob))
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _pd.Series(ids, dtype="int64"),
-                        "blob": blobs,
-                    }
+        for pdf in it:
+            ids, blobs = [], []
+            for d, t in zip(pdf["doc_id"], pdf["text"]):
+                d = int(d)
+                blob = bytearray(
+                    M.compress_bytes(t.encode("utf-8"), "snappy")
                 )
+                if d % 5 == 0:
+                    blob[-1] ^= 0xFF  # breaks the chunk CRC
+                ids.append(d)
+                blobs.append(bytes(blob))
+            yield _pd.DataFrame(
+                {
+                    "doc_id": _pd.Series(ids, dtype="int64"),
+                    "blob": blobs,
+                }
+            )
 
-        packed = _codec_fixture(
-            # v2: framed compressor now emits uncompressed (0x01)
-            # chunks when compression does not shrink (ADVICE r9)
-            spark, sf_dir, "q310_snappy_roundtrip", 2,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, blob binary"
-            ),
-        )
-        text2 = M.decompress_text("blob", codec="auto")
-        return packed.select(
-            "doc_id",
-            text2.isNotNull().alias("ok"),
-            F.length(text2).cast("bigint").alias("n_chars"),
-            F.md5(F.encode(text2, "utf-8")).alias("text_md5"),
-        )
-
-
-_init_q310()
+    packed = _codec_fixture(
+        # v2: framed compressor now emits uncompressed (0x01)
+        # chunks when compression does not shrink (ADVICE r9)
+        spark, sf_dir, "q310_snappy_roundtrip", 2,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, blob binary"
+        ),
+    )
+    text2 = M.decompress_text("blob", codec="auto")
+    return packed.select(
+        "doc_id",
+        text2.isNotNull().alias("ok"),
+        F.length(text2).cast("bigint").alias("n_chars"),
+        F.md5(F.encode(text2, "utf-8")).alias("text_md5"),
+    )
 
 # --------------------------------------------------------------------
 # q311/q312 — zstd compressed columns on the exact gate (r10: the LAST
@@ -15049,12 +14336,9 @@ _init_q310()
 # cross-validated against real libzstd output.)
 # --------------------------------------------------------------------
 
-def _init_q311_q312() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q311_zstd_roundtrip",
-        """
+@register(
+    "q311_zstd_roundtrip",
+    """
         SELECT doc_id,
                doc_id % 5 <> 0 AS ok,
                CASE WHEN doc_id % 5 = 0 THEN NULL
@@ -15063,138 +14347,136 @@ def _init_q311_q312() -> None:
                     ELSE md5(text) END AS text_md5
         FROM documents
         """,
-        doc="Zstd compressed text columns on the exact gate (functions/"
-            "multimodal.py compress_bytes/decompress_bytes, codec "
-            "'zstd'): per document the text is compressed executor-side "
-            "to a REAL entropy-coded zstd frame (the system libzstd "
-            "through a pure-stdlib ctypes binding — level 3, content "
-            "size + XXH64 checksum; deployments without the shared "
-            "library fall back to the raw-block stored-frame writer, "
-            "valid zstd either way), one in five blobs gets its last "
-            "byte flipped (breaks the XXH64 content checksum "
-            "deterministically), then everything goes back through the "
-            "MAGIC-SNIFFING decompress path. Corrupt blobs become NULL "
-            "(warn-and-skip, never garbage); intact blobs round-trip "
-            "bit-exactly, hashed as (length, md5) against plain SQL "
-            "over the original text. Same zero-Exchange Arrow shape as "
-            "q304/q310 (plan-asserted). The r9 PARITY note called zstd "
-            "the one library-bound codec; the ctypes binding closes it "
-            "without any new package.",
-    )
-    def q311_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    doc="Zstd compressed text columns on the exact gate (functions/"
+        "multimodal.py compress_bytes/decompress_bytes, codec "
+        "'zstd'): per document the text is compressed executor-side "
+        "to a REAL entropy-coded zstd frame (the system libzstd "
+        "through a pure-stdlib ctypes binding — level 3, content "
+        "size + XXH64 checksum; deployments without the shared "
+        "library fall back to the raw-block stored-frame writer, "
+        "valid zstd either way), one in five blobs gets its last "
+        "byte flipped (breaks the XXH64 content checksum "
+        "deterministically), then everything goes back through the "
+        "MAGIC-SNIFFING decompress path. Corrupt blobs become NULL "
+        "(warn-and-skip, never garbage); intact blobs round-trip "
+        "bit-exactly, hashed as (length, md5) against plain SQL "
+        "over the original text. Same zero-Exchange Arrow shape as "
+        "q304/q310 (plan-asserted). The r9 PARITY note called zstd "
+        "the one library-bound codec; the ctypes binding closes it "
+        "without any new package.",
+)
+def q311_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                ids, blobs = [], []
-                for d, t in zip(pdf["doc_id"], pdf["text"]):
-                    d = int(d)
-                    blob = bytearray(
-                        M.compress_bytes(t.encode("utf-8"), "zstd")
-                    )
-                    if d % 5 == 0:
-                        blob[-1] ^= 0xFF  # breaks the XXH64 checksum
-                    ids.append(d)
-                    blobs.append(bytes(blob))
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _pd.Series(ids, dtype="int64"),
-                        "blob": blobs,
-                    }
+        for pdf in it:
+            ids, blobs = [], []
+            for d, t in zip(pdf["doc_id"], pdf["text"]):
+                d = int(d)
+                blob = bytearray(
+                    M.compress_bytes(t.encode("utf-8"), "zstd")
                 )
+                if d % 5 == 0:
+                    blob[-1] ^= 0xFF  # breaks the XXH64 checksum
+                ids.append(d)
+                blobs.append(bytes(blob))
+            yield _pd.DataFrame(
+                {
+                    "doc_id": _pd.Series(ids, dtype="int64"),
+                    "blob": blobs,
+                }
+            )
 
-        packed = _codec_fixture(
-            spark, sf_dir, "q311_zstd_roundtrip", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, blob binary"
-            ),
-        )
-        text2 = M.decompress_text("blob", codec="auto")
-        return packed.select(
-            "doc_id",
-            text2.isNotNull().alias("ok"),
-            F.length(text2).cast("bigint").alias("n_chars"),
-            F.md5(F.encode(text2, "utf-8")).alias("text_md5"),
-        )
+    packed = _codec_fixture(
+        spark, sf_dir, "q311_zstd_roundtrip", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, blob binary"
+        ),
+    )
+    text2 = M.decompress_text("blob", codec="auto")
+    return packed.select(
+        "doc_id",
+        text2.isNotNull().alias("ok"),
+        F.length(text2).cast("bigint").alias("n_chars"),
+        F.md5(F.encode(text2, "utf-8")).alias("text_md5"),
+    )
 
-    @register(
-        "q312_zstd_pure_decode",
-        """
+
+@register(
+    "q312_zstd_pure_decode",
+    """
         SELECT doc_id,
                CAST(length(text) AS BIGINT) AS n_chars,
                md5(text) AS text_md5
         FROM documents WHERE doc_id % 10 = 0
         """,
-        doc="The PURE-STDLIB zstd decoder on the exact gate (functions/"
-            "multimodal.py _zstd_py_decompress — a complete RFC 8878 "
-            "frame decoder: FSE normalized-count headers, predefined/"
-            "RLE/described/repeat sequence tables, canonical Huffman "
-            "literals incl. FSE-compressed weights and the 4-stream "
-            "split, interleaved backward bitstream, repeat-offset "
-            "history, XXH64 content checksum). Real entropy-coded "
-            "frames (written by the system libzstd) decode through the "
-            "Python engine and hash as (length, md5) against plain SQL "
-            "over the original text. Deliberately SAMPLED to a "
-            "deterministic 10% of documents (doc_id % 10 = 0): the "
-            "pure decoder is the library-less fallback engine, graded "
-            "for correctness here, not throughput — q311 benches the "
-            "production ctypes path on the full corpus. Zero Exchange "
-            "added; generation pruned the scan to the sample before "
-            "the fixture was built.",
+    doc="The PURE-STDLIB zstd decoder on the exact gate (functions/"
+        "multimodal.py _zstd_py_decompress — a complete RFC 8878 "
+        "frame decoder: FSE normalized-count headers, predefined/"
+        "RLE/described/repeat sequence tables, canonical Huffman "
+        "literals incl. FSE-compressed weights and the 4-stream "
+        "split, interleaved backward bitstream, repeat-offset "
+        "history, XXH64 content checksum). Real entropy-coded "
+        "frames (written by the system libzstd) decode through the "
+        "Python engine and hash as (length, md5) against plain SQL "
+        "over the original text. Deliberately SAMPLED to a "
+        "deterministic 10% of documents (doc_id % 10 = 0): the "
+        "pure decoder is the library-less fallback engine, graded "
+        "for correctness here, not throughput — q311 benches the "
+        "production ctypes path on the full corpus. Zero Exchange "
+        "added; generation pruned the scan to the sample before "
+        "the fixture was built.",
+)
+def q312_zstd_pure_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.functions import pandas_udf
+
+    docs = (
+        table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .where(F.col("doc_id") % 10 == 0)
     )
-    def q312_zstd_pure_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql.functions import pandas_udf
 
-        docs = (
-            table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .where(F.col("doc_id") % 10 == 0)
-        )
+    def gen(it):
+        import pandas as _pd
 
-        def gen(it):
-            import pandas as _pd
+        for pdf in it:
+            blobs = [
+                M.compress_bytes(str(t).encode("utf-8"), "zstd")
+                for t in pdf["text"]
+            ]
+            yield _pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "blob": blobs}
+            )
 
-            for pdf in it:
-                blobs = [
-                    M.compress_bytes(str(t).encode("utf-8"), "zstd")
-                    for t in pdf["text"]
-                ]
-                yield _pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "blob": blobs}
-                )
+    packed = _codec_fixture(
+        spark, sf_dir, "q312_zstd_pure_decode", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, blob binary"
+        ),
+    )
 
-        packed = _codec_fixture(
-            spark, sf_dir, "q312_zstd_pure_decode", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, blob binary"
-            ),
-        )
+    @pandas_udf("string")
+    def dec(s):
+        import pandas as _pd
 
-        @pandas_udf("string")
-        def dec(s):
-            import pandas as _pd
+        def one(v):
+            if v is None:
+                return None
+            try:
+                return M._zstd_py_decompress(bytes(v)).decode("utf-8")
+            except (ValueError, UnicodeDecodeError):
+                return None
 
-            def one(v):
-                if v is None:
-                    return None
-                try:
-                    return M._zstd_py_decompress(bytes(v)).decode("utf-8")
-                except (ValueError, UnicodeDecodeError):
-                    return None
+        return s.map(one)
 
-            return s.map(one)
-
-        text2 = dec(F.col("blob"))
-        return packed.select(
-            "doc_id",
-            F.length(text2).cast("bigint").alias("n_chars"),
-            F.md5(F.encode(text2, "utf-8")).alias("text_md5"),
-        )
-
-
-_init_q311_q312()
+    text2 = dec(F.col("blob"))
+    return packed.select(
+        "doc_id",
+        F.length(text2).cast("bigint").alias("n_chars"),
+        F.md5(F.encode(text2, "utf-8")).alias("text_md5"),
+    )
 
 # --------------------------------------------------------------------
 # q313/q314 — Common Crawl-style ingestion on the exact gate (r10):
@@ -15204,12 +14486,9 @@ _init_q311_q312()
 # crawl-curation pipeline: .warc.gz -> HTML -> text -> filters.
 # --------------------------------------------------------------------
 
-def _init_q313_q314() -> None:
-    from ..functions import web as W
-
-    @register(
-        "q313_warc_records",
-        """
+@register(
+    "q313_warc_records",
+    """
         SELECT doc_id, CAST(0 AS INT) AS record_idx,
                'warcinfo' AS warc_type,
                CAST(NULL AS VARCHAR) AS target_uri,
@@ -15229,89 +14508,90 @@ def _init_q313_q314() -> None:
                md5(text)
         FROM documents
         """,
-        doc="WARC shard ingestion on the exact gate (functions/web.py "
-            "encode_warc_gz / explode_warc_records, pure stdlib): per "
-            "document a deterministic WARC/1.0 shard holding a "
-            "warcinfo record and an HTTP `response` record (the "
-            "Common Crawl shape) is built executor-side — odd doc_ids "
-            "use the gzip-MEMBER-PER-RECORD framing crawls actually "
-            "ship (concatenated members, range-fetchable), even ones "
-            "plain bytes — then EXPLODED back 1:N with the HTTP "
-            "payload split into (status, content-type, body). Hashed "
-            "columns (record order, types, URIs, body size + md5) are "
-            "recomputed by the oracle from the documents table. "
-            "Framing adversaries: folded headers, case-insensitive "
-            "names, CRLF padding between records — all unit-tested; "
-            "corrupt shards yield no rows (warn-and-skip). Zero "
-            "shuffles added (plan-asserted). Reference parity: the "
-            "reference reads raw file/HTTP bytes (job-reader*.js); "
-            "archive-of-records shards are the Spark-first surface a "
-            "crawl-scale corpus ships as, same argument as the "
-            "WebDataset tar path (q301).",
+    doc="WARC shard ingestion on the exact gate (functions/web.py "
+        "encode_warc_gz / explode_warc_records, pure stdlib): per "
+        "document a deterministic WARC/1.0 shard holding a "
+        "warcinfo record and an HTTP `response` record (the "
+        "Common Crawl shape) is built executor-side — odd doc_ids "
+        "use the gzip-MEMBER-PER-RECORD framing crawls actually "
+        "ship (concatenated members, range-fetchable), even ones "
+        "plain bytes — then EXPLODED back 1:N with the HTTP "
+        "payload split into (status, content-type, body). Hashed "
+        "columns (record order, types, URIs, body size + md5) are "
+        "recomputed by the oracle from the documents table. "
+        "Framing adversaries: folded headers, case-insensitive "
+        "names, CRLF padding between records — all unit-tested; "
+        "corrupt shards yield no rows (warn-and-skip). Zero "
+        "shuffles added (plan-asserted). Reference parity: the "
+        "reference reads raw file/HTTP bytes (job-reader*.js); "
+        "archive-of-records shards are the Spark-first surface a "
+        "crawl-scale corpus ships as, same argument as the "
+        "WebDataset tar path (q301).",
+)
+def q313_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
     )
-    def q313_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                ids, blobs = [], []
-                for d, s, t in zip(
-                    pdf["doc_id"], pdf["source"], pdf["text"]
-                ):
-                    d = int(d)
-                    recs = [
-                        (
-                            "warcinfo",
-                            None,
-                            b"software: node-etl-spark\r\n",
-                            "application/warc-fields",
+        for pdf in it:
+            ids, blobs = [], []
+            for d, s, t in zip(
+                pdf["doc_id"], pdf["source"], pdf["text"]
+            ):
+                d = int(d)
+                recs = [
+                    (
+                        "warcinfo",
+                        None,
+                        b"software: node-etl-spark\r\n",
+                        "application/warc-fields",
+                    ),
+                    (
+                        "response",
+                        f"https://example.com/{s}/{d}",
+                        W.http_response_bytes(
+                            str(t).encode("utf-8"),
+                            content_type="text/plain; charset=utf-8",
                         ),
-                        (
-                            "response",
-                            f"https://example.com/{s}/{d}",
-                            W.http_response_bytes(
-                                str(t).encode("utf-8"),
-                                content_type="text/plain; charset=utf-8",
-                            ),
-                            "application/http; msgtype=response",
-                        ),
-                    ]
-                    ids.append(d)
-                    blobs.append(
-                        W.encode_warc_gz(recs, per_record_gzip=bool(d % 2))
-                    )
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _pd.Series(ids, dtype="int64"),
-                        "content": blobs,
-                    }
+                        "application/http; msgtype=response",
+                    ),
+                ]
+                ids.append(d)
+                blobs.append(
+                    W.encode_warc_gz(recs, per_record_gzip=bool(d % 2))
                 )
+            yield _pd.DataFrame(
+                {
+                    "doc_id": _pd.Series(ids, dtype="int64"),
+                    "content": blobs,
+                }
+            )
 
-        binaries = _codec_fixture(
-            spark, sf_dir, "q313_warc_records", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="doc_id bigint, content binary"
-            ),
-        )
-        recs = W.explode_warc_records(binaries)
-        return recs.select(
-            "doc_id",
-            "record_idx",
-            "warc_type",
-            "target_uri",
-            "content_type",
-            "http_status",
-            F.octet_length("body").cast("bigint").alias("n_bytes"),
-            F.lower(F.md5("body")).alias("body_md5"),
-        )
+    binaries = _codec_fixture(
+        spark, sf_dir, "q313_warc_records", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="doc_id bigint, content binary"
+        ),
+    )
+    recs = W.explode_warc_records(binaries)
+    return recs.select(
+        "doc_id",
+        "record_idx",
+        "warc_type",
+        "target_uri",
+        "content_type",
+        "http_status",
+        F.octet_length("body").cast("bigint").alias("n_bytes"),
+        F.lower(F.md5("body")).alias("body_md5"),
+    )
 
-    @register(
-        "q314_html_extract",
-        """
+
+@register(
+    "q314_html_extract",
+    """
         WITH h AS (
             SELECT doc_id, source,
                    trim(regexp_replace(source || ' ' || text || ' & more',
@@ -15322,59 +14602,56 @@ def _init_q313_q314() -> None:
                md5(body) AS body_md5
         FROM h
         """,
-        doc="HTML text extraction on the exact gate (functions/web.py "
-            "html_to_text / html_text, stdlib html.parser): each "
-            "document is wrapped JVM-side (zero generation cost, no "
-            "fixture needed) into an HTML page whose title and h1 "
-            "carry the source, whose paragraph carries the text plus "
-            "an &amp; entity, and which plants style and script "
-            "subtrees that MUST be dropped. The extractor returns "
-            "(title, whitespace-normalized body); the oracle "
-            "recomputes both from the raw columns with the identical "
-            "regexp_replace('\\s+',' ') normalization — entity "
-            "decoding, subtree exclusion, and head/title routing all "
-            "hash-checked. One Arrow-batched pandas_udf (Catalyst "
-            "dedups the struct expression), zero Exchange "
-            "(plan-asserted). This is the cheap deterministic pass "
-            "that runs before line-level boilerplate stripping "
-            "(q164) in a crawl-curation pipeline.",
+    doc="HTML text extraction on the exact gate (functions/web.py "
+        "html_to_text / html_text, stdlib html.parser): each "
+        "document is wrapped JVM-side (zero generation cost, no "
+        "fixture needed) into an HTML page whose title and h1 "
+        "carry the source, whose paragraph carries the text plus "
+        "an &amp; entity, and which plants style and script "
+        "subtrees that MUST be dropped. The extractor returns "
+        "(title, whitespace-normalized body); the oracle "
+        "recomputes both from the raw columns with the identical "
+        "regexp_replace('\\s+',' ') normalization — entity "
+        "decoding, subtree exclusion, and head/title routing all "
+        "hash-checked. One Arrow-batched pandas_udf (Catalyst "
+        "dedups the struct expression), zero Exchange "
+        "(plan-asserted). This is the cheap deterministic pass "
+        "that runs before line-level boilerplate stripping "
+        "(q164) in a crawl-curation pipeline.",
+)
+def q314_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
     )
-    def q314_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
 
-        def esc(col):
-            # JVM-side HTML escaping (ADVICE r10): raw corpus text may
-            # contain markup characters; escaping here means the
-            # extractor's entity-DECODED output equals the raw column
-            # the oracle hashes, for any corpus
-            c = F.col(col)
-            c = F.replace(c, F.lit("&"), F.lit("&amp;"))
-            c = F.replace(c, F.lit("<"), F.lit("&lt;"))
-            return F.replace(c, F.lit(">"), F.lit("&gt;"))
+    def esc(col):
+        # JVM-side HTML escaping (ADVICE r10): raw corpus text may
+        # contain markup characters; escaping here means the
+        # extractor's entity-DECODED output equals the raw column
+        # the oracle hashes, for any corpus
+        c = F.col(col)
+        c = F.replace(c, F.lit("&"), F.lit("&amp;"))
+        c = F.replace(c, F.lit("<"), F.lit("&lt;"))
+        return F.replace(c, F.lit(">"), F.lit("&gt;"))
 
-        html = F.concat(
-            F.lit("<html><head><title>"),
-            esc("source"),
-            F.lit("</title><style>p{color:red}</style></head><body><h1>"),
-            esc("source"),
-            F.lit("</h1>\n<p>"),
-            esc("text"),
-            F.lit(" &amp; more</p><script>var x=1;</script></body></html>"),
-        )
-        parts = W.html_text(html)
-        return docs.select(
-            "doc_id",
-            parts["title"].alias("title"),
-            F.length(parts["body"]).cast("bigint").alias("body_chars"),
-            F.lower(F.md5(F.encode(parts["body"], "UTF-8"))).alias(
-                "body_md5"
-            ),
-        )
-
-
-_init_q313_q314()
+    html = F.concat(
+        F.lit("<html><head><title>"),
+        esc("source"),
+        F.lit("</title><style>p{color:red}</style></head><body><h1>"),
+        esc("source"),
+        F.lit("</h1>\n<p>"),
+        esc("text"),
+        F.lit(" &amp; more</p><script>var x=1;</script></body></html>"),
+    )
+    parts = W.html_text(html)
+    return docs.select(
+        "doc_id",
+        parts["title"].alias("title"),
+        F.length(parts["body"]).cast("bigint").alias("body_chars"),
+        F.lower(F.md5(F.encode(parts["body"], "UTF-8"))).alias(
+            "body_md5"
+        ),
+    )
 
 # --------------------------------------------------------------------
 # q315 — per-file-compressed NDJSON shards on the exact gate (r10):
@@ -15382,71 +14659,65 @@ _init_q313_q314()
 # Spark's JVM line reader cannot read here (no native Hadoop codecs).
 # --------------------------------------------------------------------
 
-def _init_q315() -> None:
-    from ..functions import multimodal as M
+@register(
+    "q315_zstd_ndjson_scan",
+    _ROUNDTRIP_ORACLE,
+    doc="Compressed-NDJSON folder scan on the exact gate (sources/"
+        "readers.py CompressedNdjsonSource, spec op 'ndjson_z'): "
+        "orders are written as a multi-file NDJSON folder, then "
+        "each shard is packaged the way a lake writer would — one "
+        "codec per file, MIXED across the folder (.jsonl.zst via "
+        "the new r10 zstd path, .jsonl.gz, and one left plain to "
+        "exercise the uncompressed fallback) — plus a non-data "
+        "decoy the glob must exclude. The scan is a distributed "
+        "binaryFile read feeding ONE magic-sniffing Arrow "
+        "decompress UDF; line explode and from_json stay "
+        "JVM-side, malformed lines drop PERMISSIVE-style. The "
+        "oracle aggregates the original parquet, so the hash "
+        "passes only if every shard decompressed, every line "
+        "parsed, and values were conserved end-to-end. Scale "
+        "shape: one file = one task (the non-splittable-codec "
+        "contract); parallelism = shard count, which is the "
+        "corpus layout's own knob.",
+)
+def q315_zstd_ndjson_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import glob as _glob
+    import os
 
-    @register(
-        "q315_zstd_ndjson_scan",
-        _ROUNDTRIP_ORACLE,
-        doc="Compressed-NDJSON folder scan on the exact gate (sources/"
-            "readers.py CompressedNdjsonSource, spec op 'ndjson_z'): "
-            "orders are written as a multi-file NDJSON folder, then "
-            "each shard is packaged the way a lake writer would — one "
-            "codec per file, MIXED across the folder (.jsonl.zst via "
-            "the new r10 zstd path, .jsonl.gz, and one left plain to "
-            "exercise the uncompressed fallback) — plus a non-data "
-            "decoy the glob must exclude. The scan is a distributed "
-            "binaryFile read feeding ONE magic-sniffing Arrow "
-            "decompress UDF; line explode and from_json stay "
-            "JVM-side, malformed lines drop PERMISSIVE-style. The "
-            "oracle aggregates the original parquet, so the hash "
-            "passes only if every shard decompressed, every line "
-            "parsed, and values were conserved end-to-end. Scale "
-            "shape: one file = one task (the non-splittable-codec "
-            "contract); parallelism = shard count, which is the "
-            "corpus layout's own knob.",
+    from ..sources import CompressedNdjsonSource, FrameSource, NdjsonSink
+
+    path = f"{_SCRATCH}/zndjson_scan"
+    Pipeline(
+        [
+            FrameSource(_roundtrip_frame(spark, sf_dir).repartition(3)),
+            NdjsonSink(path),
+        ]
+    ).run(spark)
+    codecs = [("zstd", ".zst"), ("gzip", ".gz"), (None, "")]
+    parts = sorted(
+        p
+        for p in _glob.glob(os.path.join(path, "part-*"))
+        if not p.endswith(".crc")
     )
-    def q315_zstd_ndjson_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import glob as _glob
-        import os
-
-        from ..sources import CompressedNdjsonSource, FrameSource, NdjsonSink
-
-        path = f"{_SCRATCH}/zndjson_scan"
-        Pipeline(
-            [
-                FrameSource(_roundtrip_frame(spark, sf_dir).repartition(3)),
-                NdjsonSink(path),
-            ]
-        ).run(spark)
-        codecs = [("zstd", ".zst"), ("gzip", ".gz"), (None, "")]
-        parts = sorted(
-            p
-            for p in _glob.glob(os.path.join(path, "part-*"))
-            if not p.endswith(".crc")
-        )
-        for i, p in enumerate(parts):
-            codec, suffix = codecs[i % 3]
-            with open(p, "rb") as f:
-                raw = f.read()
-            blob = M.compress_bytes(raw, codec) if codec else raw
-            with open(p + ".jsonl" + suffix, "wb") as f:
-                f.write(blob)
-            os.remove(p)
-        with open(os.path.join(path, "notes.txt"), "w") as f:
-            f.write("not data\n")
-        src = CompressedNdjsonSource(
-            path,
-            glob="part-*.jsonl*",
-            schema=(
-                "o_orderkey bigint, o_orderstatus string,"
-                " o_totalprice double"
-            ),
-        )
-        return _roundtrip_agg(Pipeline([src]), spark)
-
-
-_init_q315()
+    for i, p in enumerate(parts):
+        codec, suffix = codecs[i % 3]
+        with open(p, "rb") as f:
+            raw = f.read()
+        blob = M.compress_bytes(raw, codec) if codec else raw
+        with open(p + ".jsonl" + suffix, "wb") as f:
+            f.write(blob)
+        os.remove(p)
+    with open(os.path.join(path, "notes.txt"), "w") as f:
+        f.write("not data\n")
+    src = CompressedNdjsonSource(
+        path,
+        glob="part-*.jsonl*",
+        schema=(
+            "o_orderkey bigint, o_orderstatus string,"
+            " o_totalprice double"
+        ),
+    )
+    return _roundtrip_agg(Pipeline([src]), spark)
 
 # --------------------------------------------------------------------
 # q316 — packed token-shard export round-trip on the exact gate (r10):
@@ -15455,12 +14726,9 @@ _init_q315()
 # commit protocol (shards first, manifest last).
 # --------------------------------------------------------------------
 
-def _init_q316() -> None:
-    from ..functions.sampling import hash_bucket, hash_bucket_sql
-
-    @register(
-        "q316_token_shards_roundtrip",
-        f"""
+@register(
+    "q316_token_shards_roundtrip",
+    f"""
         WITH toks AS (
             SELECT doc_id, {hash_bucket_sql("t", seed=13, buckets=30000)}
                        AS tid
@@ -15474,62 +14742,59 @@ def _init_q316() -> None:
                CAST(MAX(tid) AS INT) AS max_id
         FROM toks GROUP BY doc_id
         """,
-        doc="Packed token-shard export on the exact gate (sources/"
-            "tokenshards.py write_token_shards/read_token_shards, spec "
-            "ops token_shards_sink/token_shards): documents tokenize "
-            "JVM-side (split + portable md5 bucket ids, 30k vocab), "
-            "export as uint16 binary shards — one self-describing file "
-            "per partition (magic, dtype, seq index, payload, crc32), "
-            "temp-write + atomic rename, manifest committed LAST — "
-            "then read back through a distributed binaryFile scan and "
-            "aggregated per sequence (count, sum, min, max of token "
-            "ids), which the oracle recomputes from the raw text with "
-            "the identical md5-bucket formula. Any index/payload/"
-            "dtype/crc framing bug breaks the hash; corrupt shards "
-            "and out-of-range vocab ids are separately unit-tested "
-            "(skip vs fail-the-export). Scale shape: one partition = "
-            "one shard = one sequential write, no shuffle on either "
-            "side; shard size is an upstream repartition knob.",
+    doc="Packed token-shard export on the exact gate (sources/"
+        "tokenshards.py write_token_shards/read_token_shards, spec "
+        "ops token_shards_sink/token_shards): documents tokenize "
+        "JVM-side (split + portable md5 bucket ids, 30k vocab), "
+        "export as uint16 binary shards — one self-describing file "
+        "per partition (magic, dtype, seq index, payload, crc32), "
+        "temp-write + atomic rename, manifest committed LAST — "
+        "then read back through a distributed binaryFile scan and "
+        "aggregated per sequence (count, sum, min, max of token "
+        "ids), which the oracle recomputes from the raw text with "
+        "the identical md5-bucket formula. Any index/payload/"
+        "dtype/crc framing bug breaks the hash; corrupt shards "
+        "and out-of-range vocab ids are separately unit-tested "
+        "(skip vs fail-the-export). Scale shape: one partition = "
+        "one shard = one sequential write, no shuffle on either "
+        "side; shard size is an upstream repartition knob.",
+)
+def q316_token_shards_roundtrip(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from ..sources.tokenshards import (
+        read_token_shards,
+        write_token_shards,
     )
-    def q316_token_shards_roundtrip(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        from ..sources.tokenshards import (
-            read_token_shards,
-            write_token_shards,
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    toks = F.transform(
+        F.filter(F.split(F.col("text"), " "), lambda t: t != ""),
+        lambda t: hash_bucket(t, seed=13, buckets=30000),
+    )
+    seqs = docs.select(
+        F.col("doc_id").alias("seq_id"), toks.alias("tokens")
+    ).repartition(4)
+    out_dir = f"{_SCRATCH}/token_shards"
+    import shutil
+
+    shutil.rmtree(out_dir, ignore_errors=True)
+    write_token_shards(seqs, out_dir, dtype="uint16")
+    back = read_token_shards(spark, out_dir)
+    return (
+        back.where(F.size("tokens") > 0)
+        .select(
+            "seq_id",
+            F.size("tokens").cast("bigint").alias("n_tokens"),
+            F.aggregate(
+                "tokens",
+                F.lit(0).cast("bigint"),
+                lambda acc, x: acc + x.cast("bigint"),
+            ).alias("sum_ids"),
+            F.array_min("tokens").cast("int").alias("min_id"),
+            F.array_max("tokens").cast("int").alias("max_id"),
         )
-
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        toks = F.transform(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != ""),
-            lambda t: hash_bucket(t, seed=13, buckets=30000),
-        )
-        seqs = docs.select(
-            F.col("doc_id").alias("seq_id"), toks.alias("tokens")
-        ).repartition(4)
-        out_dir = f"{_SCRATCH}/token_shards"
-        import shutil
-
-        shutil.rmtree(out_dir, ignore_errors=True)
-        write_token_shards(seqs, out_dir, dtype="uint16")
-        back = read_token_shards(spark, out_dir)
-        return (
-            back.where(F.size("tokens") > 0)
-            .select(
-                "seq_id",
-                F.size("tokens").cast("bigint").alias("n_tokens"),
-                F.aggregate(
-                    "tokens",
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x.cast("bigint"),
-                ).alias("sum_ids"),
-                F.array_min("tokens").cast("int").alias("min_id"),
-                F.array_max("tokens").cast("int").alias("max_id"),
-            )
-        )
-
-
-_init_q316()
+    )
 
 # --------------------------------------------------------------------
 # q317 — PNG variant decode on the exact gate (r10): the web's PNGs
@@ -15540,12 +14805,9 @@ _init_q316()
 # decodes bytes right fails the hash).
 # --------------------------------------------------------------------
 
-def _init_q317() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q317_png_variants",
-        """
+@register(
+    "q317_png_variants",
+    """
         WITH pd AS (
             SELECT doc_id, doc_id % 4 AS v,
                    4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
@@ -15578,116 +14840,113 @@ def _init_q317() -> None:
                CAST(SUM((y * w + x + 1) * (r + g + b)) AS BIGINT) AS wsum
         FROM px GROUP BY 1, 2, 3, 4
         """,
-        doc="PNG variant decode on the exact gate (functions/"
-            "multimodal.py encode_png/decode_png): per document one of "
-            "four REAL-WORLD pixel layouts by doc_id %% 4 — 2-bit "
-            "grayscale ADAM7-INTERLACED (exact 85x scaling), 4-bit "
-            "PALETTE Adam7-interlaced (PLTE lookup), 8-bit RGBA "
-            "non-interlaced (alpha dropped), 8-bit truecolor "
-            "Adam7-interlaced — encoded executor-side at 4-8 x 3-6 "
-            "dims (tiny images exercise EMPTY Adam7 passes and "
-            "sub-byte row padding; the filter schedule still cycles "
-            "all five types per pass), then decoded back through the "
-            "extract hook. Hashed columns: per-channel sums PLUS a "
-            "position-WEIGHTED checksum sum((y*w+x+1)*(r+g+b)) that "
-            "the oracle recomputes from the formulas — any Adam7 "
-            "pass-geometry, bit-unpacking, palette, or scaling bug "
-            "breaks the hash (channel sums alone are permutation-"
-            "invariant and would miss scrambled placement). Same "
-            "zero-Exchange Arrow shape as q295/q297.",
+    doc="PNG variant decode on the exact gate (functions/"
+        "multimodal.py encode_png/decode_png): per document one of "
+        "four REAL-WORLD pixel layouts by doc_id %% 4 — 2-bit "
+        "grayscale ADAM7-INTERLACED (exact 85x scaling), 4-bit "
+        "PALETTE Adam7-interlaced (PLTE lookup), 8-bit RGBA "
+        "non-interlaced (alpha dropped), 8-bit truecolor "
+        "Adam7-interlaced — encoded executor-side at 4-8 x 3-6 "
+        "dims (tiny images exercise EMPTY Adam7 passes and "
+        "sub-byte row padding; the filter schedule still cycles "
+        "all five types per pass), then decoded back through the "
+        "extract hook. Hashed columns: per-channel sums PLUS a "
+        "position-WEIGHTED checksum sum((y*w+x+1)*(r+g+b)) that "
+        "the oracle recomputes from the formulas — any Adam7 "
+        "pass-geometry, bit-unpacking, palette, or scaling bug "
+        "breaks the hash (channel sums alone are permutation-"
+        "invariant and would miss scrambled placement). Same "
+        "zero-Exchange Arrow shape as q295/q297.",
+)
+def q317_png_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id")
+    pal = [((i * 37 + 11) % 256, (i * 53) % 256, (i * 91) % 256)
+           for i in range(16)]
+
+    def gen(it):
+        import pandas as _pd
+
+        for pdf in it:
+            ids, blobs = [], []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                v, w, h = d % 4, 4 + d % 5, 3 + d % 4
+                if v == 0:
+                    px = [[(d + 3 * x + 5 * y) % 4 for x in range(w)]
+                          for y in range(h)]
+                    blob = M.encode_png(
+                        w, h, px, color_type=0, bit_depth=2,
+                        interlace=1,
+                    )
+                elif v == 1:
+                    px = [[(d + x + 2 * y) % 16 for x in range(w)]
+                          for y in range(h)]
+                    blob = M.encode_png(
+                        w, h, px, color_type=3, bit_depth=4,
+                        palette=pal, interlace=1,
+                    )
+                elif v == 2:
+                    px = [
+                        [
+                            (
+                                (d + 7 * x + 3 * y) % 256,
+                                (d + 11 * x + 5 * y) % 256,
+                                (d + 13 * x + 7 * y) % 256,
+                                (d + x + y) % 256,
+                            )
+                            for x in range(w)
+                        ]
+                        for y in range(h)
+                    ]
+                    blob = M.encode_png(w, h, px, color_type=6)
+                else:
+                    px = [
+                        [
+                            (
+                                (d + 7 * x + 3 * y) % 256,
+                                (d + 11 * x + 5 * y) % 256,
+                                (d + 13 * x + 7 * y) % 256,
+                            )
+                            for x in range(w)
+                        ]
+                        for y in range(h)
+                    ]
+                    blob = M.encode_png(
+                        w, h, px, color_type=2, interlace=1
+                    )
+                ids.append(str(d))
+                blobs.append(blob)
+            yield _pd.DataFrame({"path": ids, "content": blobs})
+
+    binaries = _codec_fixture(
+        spark, sf_dir, "q317_png_variants", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="path string, content binary"
+        ),
     )
-    def q317_png_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id")
-        pal = [((i * 37 + 11) % 256, (i * 53) % 256, (i * 91) % 256)
-               for i in range(16)]
 
-        def gen(it):
-            import pandas as _pd
+    def decode_weighted(content):
+        w, h, rows = M.decode_png(content)
+        sr = sg = sb = ws = 0
+        for y, row in enumerate(rows):
+            for x, (r, g, b) in enumerate(row):
+                sr += r
+                sg += g
+                sb += b
+                ws += (y * w + x + 1) * (r + g + b)
+        return w, h, 3, [float(sr), float(sg), float(sb), float(ws)]
 
-            for pdf in it:
-                ids, blobs = [], []
-                for d in pdf["doc_id"]:
-                    d = int(d)
-                    v, w, h = d % 4, 4 + d % 5, 3 + d % 4
-                    if v == 0:
-                        px = [[(d + 3 * x + 5 * y) % 4 for x in range(w)]
-                              for y in range(h)]
-                        blob = M.encode_png(
-                            w, h, px, color_type=0, bit_depth=2,
-                            interlace=1,
-                        )
-                    elif v == 1:
-                        px = [[(d + x + 2 * y) % 16 for x in range(w)]
-                              for y in range(h)]
-                        blob = M.encode_png(
-                            w, h, px, color_type=3, bit_depth=4,
-                            palette=pal, interlace=1,
-                        )
-                    elif v == 2:
-                        px = [
-                            [
-                                (
-                                    (d + 7 * x + 3 * y) % 256,
-                                    (d + 11 * x + 5 * y) % 256,
-                                    (d + 13 * x + 7 * y) % 256,
-                                    (d + x + y) % 256,
-                                )
-                                for x in range(w)
-                            ]
-                            for y in range(h)
-                        ]
-                        blob = M.encode_png(w, h, px, color_type=6)
-                    else:
-                        px = [
-                            [
-                                (
-                                    (d + 7 * x + 3 * y) % 256,
-                                    (d + 11 * x + 5 * y) % 256,
-                                    (d + 13 * x + 7 * y) % 256,
-                                )
-                                for x in range(w)
-                            ]
-                            for y in range(h)
-                        ]
-                        blob = M.encode_png(
-                            w, h, px, color_type=2, interlace=1
-                        )
-                    ids.append(str(d))
-                    blobs.append(blob)
-                yield _pd.DataFrame({"path": ids, "content": blobs})
-
-        binaries = _codec_fixture(
-            spark, sf_dir, "q317_png_variants", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="path string, content binary"
-            ),
-        )
-
-        def decode_weighted(content):
-            w, h, rows = M.decode_png(content)
-            sr = sg = sb = ws = 0
-            for y, row in enumerate(rows):
-                for x, (r, g, b) in enumerate(row):
-                    sr += r
-                    sg += g
-                    sb += b
-                    ws += (y * w + x + 1) * (r + g + b)
-            return w, h, 3, [float(sr), float(sg), float(sb), float(ws)]
-
-        feats = M.extract_image_features(binaries, decode_fn=decode_weighted)
-        return feats.select(
-            F.col("path").cast("bigint").alias("doc_id"),
-            "width",
-            "height",
-            (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
-            F.element_at("features", 1).cast("bigint").alias("sum_r"),
-            F.element_at("features", 2).cast("bigint").alias("sum_g"),
-            F.element_at("features", 3).cast("bigint").alias("sum_b"),
-            F.element_at("features", 4).cast("bigint").alias("wsum"),
-        )
-
-
-_init_q317()
+    feats = M.extract_image_features(binaries, decode_fn=decode_weighted)
+    return feats.select(
+        F.col("path").cast("bigint").alias("doc_id"),
+        "width",
+        "height",
+        (F.col("width").cast("bigint") * F.col("height")).alias("n_px"),
+        F.element_at("features", 1).cast("bigint").alias("sum_r"),
+        F.element_at("features", 2).cast("bigint").alias("sum_g"),
+        F.element_at("features", 3).cast("bigint").alias("sum_b"),
+        F.element_at("features", 4).cast("bigint").alias("wsum"),
+    )
 
 # --------------------------------------------------------------------
 # q318 — SPLITTABLE token-shard read on the exact gate (r11, verdict
@@ -15697,12 +14956,9 @@ _init_q317()
 # index — each task byte-range-reads only its payload slice.
 # --------------------------------------------------------------------
 
-def _init_q318() -> None:
-    from ..functions.sampling import hash_bucket, hash_bucket_sql
-
-    @register(
-        "q318_token_shards_ranged",
-        f"""
+@register(
+    "q318_token_shards_ranged",
+    f"""
         WITH toks AS (
             SELECT doc_id, {hash_bucket_sql("t", seed=13, buckets=30000)}
                        AS tid
@@ -15716,68 +14972,65 @@ def _init_q318() -> None:
                CAST(MAX(tid) AS INT) AS max_id
         FROM toks GROUP BY doc_id
         """,
-        doc="Splittable token-shard read on the exact gate (sources/"
-            "tokenshards.py read_token_shards rows_per_task, r11): the "
-            "same export as q316 but deliberately packed into TWO "
-            "oversized shards, then read back with rows_per_task=40 — "
-            "the manifest's per-shard seq counts become row-range "
-            "tasks, each serving one byte-range read of the payload "
-            "(header+index for offsets, then seek to exactly its "
-            "slice). The aggregate must reconstruct the identical "
-            "per-sequence (count, sum, min, max) the oracle recomputes "
-            "from raw text, so any offset arithmetic / index-slicing / "
-            "dtype bug breaks the hash. Scale shape: read parallelism "
-            "= rows/rows_per_task instead of the shard count; a 100 "
-            "TB export of 2 GiB shards scans at full cluster width "
-            "without a re-shard. Ranged tasks verify framing + total "
-            "file size (the whole-payload crc32 is not range-"
-            "decomposable; q316 keeps the crc-checked path on the "
-            "gate).",
+    doc="Splittable token-shard read on the exact gate (sources/"
+        "tokenshards.py read_token_shards rows_per_task, r11): the "
+        "same export as q316 but deliberately packed into TWO "
+        "oversized shards, then read back with rows_per_task=40 — "
+        "the manifest's per-shard seq counts become row-range "
+        "tasks, each serving one byte-range read of the payload "
+        "(header+index for offsets, then seek to exactly its "
+        "slice). The aggregate must reconstruct the identical "
+        "per-sequence (count, sum, min, max) the oracle recomputes "
+        "from raw text, so any offset arithmetic / index-slicing / "
+        "dtype bug breaks the hash. Scale shape: read parallelism "
+        "= rows/rows_per_task instead of the shard count; a 100 "
+        "TB export of 2 GiB shards scans at full cluster width "
+        "without a re-shard. Ranged tasks verify framing + total "
+        "file size (the whole-payload crc32 is not range-"
+        "decomposable; q316 keeps the crc-checked path on the "
+        "gate).",
+)
+def q318_token_shards_ranged(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from ..sources.tokenshards import (
+        read_token_shards,
+        write_token_shards,
     )
-    def q318_token_shards_ranged(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        from ..sources.tokenshards import (
-            read_token_shards,
-            write_token_shards,
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    toks = F.transform(
+        F.filter(F.split(F.col("text"), " "), lambda t: t != ""),
+        lambda t: hash_bucket(t, seed=13, buckets=30000),
+    )
+    seqs = docs.select(
+        F.col("doc_id").alias("seq_id"), toks.alias("tokens")
+    ).repartition(4)  # few BIG shards: the case ranged reads fix
+    out_dir = f"{_SCRATCH}/token_shards_ranged"
+    import shutil
+
+    shutil.rmtree(out_dir, ignore_errors=True)
+    entries = write_token_shards(seqs, out_dir, dtype="uint16")
+    # split every shard ~16 ways regardless of SF (floor 40 rows):
+    # the point is range tasks >> shard count, without drowning in
+    # per-task scheduling at large SFs
+    total = sum(e["n_seqs"] for e in entries)
+    rpt = max(40, -(-total // 64))
+    back = read_token_shards(spark, out_dir, rows_per_task=rpt)
+    return (
+        back.where(F.size("tokens") > 0)
+        .select(
+            "seq_id",
+            F.size("tokens").cast("bigint").alias("n_tokens"),
+            F.aggregate(
+                "tokens",
+                F.lit(0).cast("bigint"),
+                lambda acc, x: acc + x,
+            ).alias("sum_ids"),
+            F.array_min("tokens").cast("int").alias("min_id"),
+            F.array_max("tokens").cast("int").alias("max_id"),
         )
-
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        toks = F.transform(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != ""),
-            lambda t: hash_bucket(t, seed=13, buckets=30000),
-        )
-        seqs = docs.select(
-            F.col("doc_id").alias("seq_id"), toks.alias("tokens")
-        ).repartition(4)  # few BIG shards: the case ranged reads fix
-        out_dir = f"{_SCRATCH}/token_shards_ranged"
-        import shutil
-
-        shutil.rmtree(out_dir, ignore_errors=True)
-        entries = write_token_shards(seqs, out_dir, dtype="uint16")
-        # split every shard ~16 ways regardless of SF (floor 40 rows):
-        # the point is range tasks >> shard count, without drowning in
-        # per-task scheduling at large SFs
-        total = sum(e["n_seqs"] for e in entries)
-        rpt = max(40, -(-total // 64))
-        back = read_token_shards(spark, out_dir, rows_per_task=rpt)
-        return (
-            back.where(F.size("tokens") > 0)
-            .select(
-                "seq_id",
-                F.size("tokens").cast("bigint").alias("n_tokens"),
-                F.aggregate(
-                    "tokens",
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x,
-                ).alias("sum_ids"),
-                F.array_min("tokens").cast("int").alias("min_id"),
-                F.array_max("tokens").cast("int").alias("max_id"),
-            )
-        )
-
-
-_init_q318()
+    )
 
 # --------------------------------------------------------------------
 # q319 — streaming crawl refresh (r11, verdict r10 ask #8): WARC
@@ -15786,119 +15039,113 @@ _init_q318()
 # pages dedup by WARC-Record-ID before reaching the corpus.
 # --------------------------------------------------------------------
 
-def _init_q319() -> None:
-    from ..functions import web as W
-
-    @register(
-        "q319_stream_crawl_refresh",
-        """
+@register(
+    "q319_stream_crawl_refresh",
+    """
         SELECT doc_id,
                'https://crawl.example/' || source || '/' || doc_id AS url,
                CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
                md5(text) AS body_md5
         FROM documents
         """,
-        doc="Streaming crawl refresh on the exact gate (functions/"
-            "web.py explode_warc_records + streaming/stream.py "
-            "dedup_by_keys, r11): two crawl SNAPSHOTS (day 1 covers "
-            "doc_id%3!=2, day 2 covers doc_id%3!=0 — the overlap is "
-            "the re-crawl) are packed into WARC shards and replayed "
-            "through a real availableNow file stream; records explode "
-            "1:N per micro-batch (mapInPandas is stateless, so it "
-            "composes with streaming), then dropDuplicatesWithin"
-            "Watermark on WARC-Record-ID drops the re-fetched pages — "
-            "record IDs are content-derived (uri+payload md5), the "
-            "idempotency key a crawl pipeline actually has. The final "
-            "corpus must be EXACTLY one row per document (the oracle "
-            "recomputes url/bytes/md5 from the raw table): a dedup "
-            "miss double-counts the overlap band and fails on row "
-            "count, a wrong dedup key drops legitimate pages. State "
-            "is watermark-bounded (refresh horizon), the stream side "
-            "never shuffles before the dedup exchange. Batch/stream "
-            "parity is separately asserted in tests/test_streaming.py.",
+    doc="Streaming crawl refresh on the exact gate (functions/"
+        "web.py explode_warc_records + streaming/stream.py "
+        "dedup_by_keys, r11): two crawl SNAPSHOTS (day 1 covers "
+        "doc_id%3!=2, day 2 covers doc_id%3!=0 — the overlap is "
+        "the re-crawl) are packed into WARC shards and replayed "
+        "through a real availableNow file stream; records explode "
+        "1:N per micro-batch (mapInPandas is stateless, so it "
+        "composes with streaming), then dropDuplicatesWithin"
+        "Watermark on WARC-Record-ID drops the re-fetched pages — "
+        "record IDs are content-derived (uri+payload md5), the "
+        "idempotency key a crawl pipeline actually has. The final "
+        "corpus must be EXACTLY one row per document (the oracle "
+        "recomputes url/bytes/md5 from the raw table): a dedup "
+        "miss double-counts the overlap band and fails on row "
+        "count, a wrong dedup key drops legitimate pages. State "
+        "is watermark-bounded (refresh horizon), the stream side "
+        "never shuffles before the dedup exchange. Batch/stream "
+        "parity is separately asserted in tests/test_streaming.py.",
+)
+def q319_stream_crawl_refresh(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import os as _os
+    import uuid as _uuid
+
+    from ..streaming import stream as st
+
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
     )
-    def q319_stream_crawl_refresh(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import os as _os
-        import uuid as _uuid
 
-        from ..streaming import stream as st
+    def gen(it):
+        import pandas as _pd
 
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
+        snapshots = (
+            (_pd.Timestamp("2026-01-01"), lambda d: d % 3 != 2),
+            (_pd.Timestamp("2026-01-02"), lambda d: d % 3 != 0),
         )
-
-        def gen(it):
-            import pandas as _pd
-
-            snapshots = (
-                (_pd.Timestamp("2026-01-01"), lambda d: d % 3 != 2),
-                (_pd.Timestamp("2026-01-02"), lambda d: d % 3 != 0),
-            )
-            for pdf in it:
-                ts_out, blobs = [], []
-                for ts, keep in snapshots:
-                    recs = [
-                        (
-                            "response",
-                            f"https://crawl.example/{s}/{int(d)}",
-                            W.http_response_bytes(
-                                str(t).encode("utf-8"),
-                                content_type="text/plain; charset=utf-8",
-                            ),
-                            "application/http; msgtype=response",
-                        )
-                        for d, s, t in zip(
-                            pdf["doc_id"], pdf["source"], pdf["text"]
-                        )
-                        if keep(int(d))
-                    ]
-                    if recs:
-                        ts_out.append(ts)
-                        blobs.append(W.encode_warc_gz(recs))
-                yield _pd.DataFrame(
-                    {
-                        "crawl_ts": _pd.Series(
-                            ts_out, dtype="datetime64[us]"
+        for pdf in it:
+            ts_out, blobs = [], []
+            for ts, keep in snapshots:
+                recs = [
+                    (
+                        "response",
+                        f"https://crawl.example/{s}/{int(d)}",
+                        W.http_response_bytes(
+                            str(t).encode("utf-8"),
+                            content_type="text/plain; charset=utf-8",
                         ),
-                        "content": blobs,
-                    }
-                )
+                        "application/http; msgtype=response",
+                    )
+                    for d, s, t in zip(
+                        pdf["doc_id"], pdf["source"], pdf["text"]
+                    )
+                    if keep(int(d))
+                ]
+                if recs:
+                    ts_out.append(ts)
+                    blobs.append(W.encode_warc_gz(recs))
+            yield _pd.DataFrame(
+                {
+                    "crawl_ts": _pd.Series(
+                        ts_out, dtype="datetime64[us]"
+                    ),
+                    "content": blobs,
+                }
+            )
 
-        _codec_fixture(
-            spark, sf_dir, "q319_crawl_refresh", 1,
-            lambda: docs.mapInPandas(
-                gen, schema="crawl_ts timestamp, content binary"
-            ),
-        )
-        tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-        staged = f"{_SCRATCH}/fixtures/{tag}/q319_crawl_refresh_v1"
-        source = spark.readStream.schema(
-            "crawl_ts timestamp, content binary"
-        ).parquet(staged)
-        recs = W.explode_warc_records(source, id_col="crawl_ts")
-        fresh = st.dedup_by_keys(
-            recs.where(F.col("warc_type") == "response"),
-            keys=["record_id"],
-            ts_col="crawl_ts",
-            watermark="72 hours",
-        )
-        out = fresh.select(
-            F.regexp_extract("target_uri", r"/(\d+)$", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            F.col("target_uri").alias("url"),
-            F.octet_length("body").cast("bigint").alias("n_bytes"),
-            F.lower(F.md5("body")).alias("body_md5"),
-        )
-        sink = f"q319_{_uuid.uuid4().hex[:8]}"
-        with st.scaled_state_partitions(spark, st._dir_bytes(staged)):
-            st.run_to_memory(out, sink, mode="append")
-        return spark.table(sink)
-
-
-_init_q319()
+    _codec_fixture(
+        spark, sf_dir, "q319_crawl_refresh", 1,
+        lambda: docs.mapInPandas(
+            gen, schema="crawl_ts timestamp, content binary"
+        ),
+    )
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    staged = f"{_SCRATCH}/fixtures/{tag}/q319_crawl_refresh_v1"
+    source = spark.readStream.schema(
+        "crawl_ts timestamp, content binary"
+    ).parquet(staged)
+    recs = W.explode_warc_records(source, id_col="crawl_ts")
+    fresh = st.dedup_by_keys(
+        recs.where(F.col("warc_type") == "response"),
+        keys=["record_id"],
+        ts_col="crawl_ts",
+        watermark="72 hours",
+    )
+    out = fresh.select(
+        F.regexp_extract("target_uri", r"/(\d+)$", 1)
+        .cast("bigint")
+        .alias("doc_id"),
+        F.col("target_uri").alias("url"),
+        F.octet_length("body").cast("bigint").alias("n_bytes"),
+        F.lower(F.md5("body")).alias("body_md5"),
+    )
+    sink = f"q319_{_uuid.uuid4().hex[:8]}"
+    with st.scaled_state_partitions(spark, st._dir_bytes(staged)):
+        st.run_to_memory(out, sink, mode="append")
+    return spark.table(sink)
 
 # --------------------------------------------------------------------
 # q320 — FAST HTML extraction on the exact gate (r11, verdict r10
@@ -15908,12 +15155,9 @@ _init_q319()
 # asserted.
 # --------------------------------------------------------------------
 
-def _init_q320() -> None:
-    from ..functions import web as W
-
-    @register(
-        "q320_html_extract_fast",
-        """
+@register(
+    "q320_html_extract_fast",
+    """
         WITH h AS (
             SELECT doc_id, source,
                    trim(regexp_replace(source || ' ' || text || ' & more',
@@ -15924,52 +15168,49 @@ def _init_q320() -> None:
                md5(body) AS body_md5
         FROM h
         """,
-        doc="Fast-path HTML extraction on the exact gate (functions/"
-            "web.py html_to_text_fast / html_text(mode='fast'), r11): "
-            "the SAME escaped wrap and SAME oracle as q314, extracted "
-            "by the compiled-regex pipeline instead of the html.parser "
-            "state machine — agreement is hash-proven per document, "
-            "not sampled. Measured ~37 us/doc vs ~105 (exact, after "
-            "the r11 split/join norm) and ~188 (r10 exact): the "
-            "documented 100 TB lever for markup-clean corpora, with "
-            "the exact path kept for tag soup (scope contract in the "
-            "docstring; both paths also cross-checked on fixtures and "
-            "a seeded random page sweep in tests/test_web.py).",
+    doc="Fast-path HTML extraction on the exact gate (functions/"
+        "web.py html_to_text_fast / html_text(mode='fast'), r11): "
+        "the SAME escaped wrap and SAME oracle as q314, extracted "
+        "by the compiled-regex pipeline instead of the html.parser "
+        "state machine — agreement is hash-proven per document, "
+        "not sampled. Measured ~37 us/doc vs ~105 (exact, after "
+        "the r11 split/join norm) and ~188 (r10 exact): the "
+        "documented 100 TB lever for markup-clean corpora, with "
+        "the exact path kept for tag soup (scope contract in the "
+        "docstring; both paths also cross-checked on fixtures and "
+        "a seeded random page sweep in tests/test_web.py).",
+)
+def q320_html_extract_fast(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
     )
-    def q320_html_extract_fast(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
 
-        def esc(col):
-            c = F.col(col)
-            c = F.replace(c, F.lit("&"), F.lit("&amp;"))
-            c = F.replace(c, F.lit("<"), F.lit("&lt;"))
-            return F.replace(c, F.lit(">"), F.lit("&gt;"))
+    def esc(col):
+        c = F.col(col)
+        c = F.replace(c, F.lit("&"), F.lit("&amp;"))
+        c = F.replace(c, F.lit("<"), F.lit("&lt;"))
+        return F.replace(c, F.lit(">"), F.lit("&gt;"))
 
-        html = F.concat(
-            F.lit("<html><head><title>"),
-            esc("source"),
-            F.lit("</title><style>p{color:red}</style></head><body><h1>"),
-            esc("source"),
-            F.lit("</h1>\n<p>"),
-            esc("text"),
-            F.lit(" &amp; more</p><script>var x=1;</script></body></html>"),
-        )
-        parts = W.html_text(html, mode="fast")
-        return docs.select(
-            "doc_id",
-            parts["title"].alias("title"),
-            F.length(parts["body"]).cast("bigint").alias("body_chars"),
-            F.lower(F.md5(F.encode(parts["body"], "UTF-8"))).alias(
-                "body_md5"
-            ),
-        )
-
-
-_init_q320()
+    html = F.concat(
+        F.lit("<html><head><title>"),
+        esc("source"),
+        F.lit("</title><style>p{color:red}</style></head><body><h1>"),
+        esc("source"),
+        F.lit("</h1>\n<p>"),
+        esc("text"),
+        F.lit(" &amp; more</p><script>var x=1;</script></body></html>"),
+    )
+    parts = W.html_text(html, mode="fast")
+    return docs.select(
+        "doc_id",
+        parts["title"].alias("title"),
+        F.length(parts["body"]).cast("bigint").alias("body_chars"),
+        F.lower(F.md5(F.encode(parts["body"], "UTF-8"))).alias(
+            "body_md5"
+        ),
+    )
 
 # --------------------------------------------------------------------
 # q321 — CDX index + ranged fetch (r11): the Common Crawl ACCESS
@@ -15979,110 +15220,104 @@ _init_q320()
 # scan. This is what q313's per-record gzip framing exists FOR.
 # --------------------------------------------------------------------
 
-def _init_q321() -> None:
-    from ..functions import web as W
-
-    @register(
-        "q321_warc_cdx_fetch",
-        """
+@register(
+    "q321_warc_cdx_fetch",
+    """
         SELECT doc_id,
                'https://cdx.example/' || source || '/' || doc_id AS url,
                CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
                md5(text) AS body_md5
         FROM documents
         """,
-        doc="CDX index + random-access fetch on the exact gate "
-            "(functions/web.py iter_warc_members / build_cdx_index / "
-            "fetch_warc_records, r11): documents pack into REAL "
-            ".warc.gz files on disk (8 shards, per-record gzip "
-            "members, distributed writer with atomic dir publish), "
-            "then (1) build_cdx_index scans the shards once and emits "
-            "(path, offset, length, uri) rows — zero shuffles, ~60 "
-            "bytes/record — and (2) fetch_warc_records reads each "
-            "record back through open+seek+read of EXACTLY its "
-            "compressed member range and inflates just that member. "
-            "The oracle recomputes url/bytes/md5 from the raw table, "
-            "so an off-by-one in any offset/length breaks the gzip "
-            "decode and fails the hash — the index is proven by "
-            "using it, not by inspection. Scale shape: at 100 TB the "
-            "index (0.1% of the data) is the only full scan; fetch "
-            "parallelism is index partitioning, and executor memory "
-            "per fetch is one member. The same rows serve point "
-            "lookups (one uri -> one ranged read), which no "
-            "scan-shaped reader can do.",
+    doc="CDX index + random-access fetch on the exact gate "
+        "(functions/web.py iter_warc_members / build_cdx_index / "
+        "fetch_warc_records, r11): documents pack into REAL "
+        ".warc.gz files on disk (8 shards, per-record gzip "
+        "members, distributed writer with atomic dir publish), "
+        "then (1) build_cdx_index scans the shards once and emits "
+        "(path, offset, length, uri) rows — zero shuffles, ~60 "
+        "bytes/record — and (2) fetch_warc_records reads each "
+        "record back through open+seek+read of EXACTLY its "
+        "compressed member range and inflates just that member. "
+        "The oracle recomputes url/bytes/md5 from the raw table, "
+        "so an off-by-one in any offset/length breaks the gzip "
+        "decode and fails the hash — the index is proven by "
+        "using it, not by inspection. Scale shape: at 100 TB the "
+        "index (0.1% of the data) is the only full scan; fetch "
+        "parallelism is index partitioning, and executor memory "
+        "per fetch is one member. The same rows serve point "
+        "lookups (one uri -> one ranged read), which no "
+        "scan-shaped reader can do.",
+)
+def q321_warc_cdx_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os as _os
+    import shutil as _shutil
+    import uuid as _uuid
+
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
     )
-    def q321_warc_cdx_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-        import uuid as _uuid
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    final = f"{_SCRATCH}/fixtures/{tag}/q321_warc_files_v1"
+    if not _os.path.exists(_os.path.join(final, "_FILES_OK")):
+        tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
+        _os.makedirs(tmp, exist_ok=True)
 
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-        tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-        final = f"{_SCRATCH}/fixtures/{tag}/q321_warc_files_v1"
-        if not _os.path.exists(_os.path.join(final, "_FILES_OK")):
-            tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
-            _os.makedirs(tmp, exist_ok=True)
+        def write_shards(it):
+            import pandas as _pd
 
-            def write_shards(it):
-                import pandas as _pd
+            names = []
+            for pdf in it:
+                recs = [
+                    (
+                        "response",
+                        f"https://cdx.example/{s}/{int(d)}",
+                        W.http_response_bytes(
+                            str(t).encode("utf-8"),
+                            content_type="text/plain; charset=utf-8",
+                        ),
+                        "application/http; msgtype=response",
+                    )
+                    for d, s, t in zip(
+                        pdf["doc_id"], pdf["source"], pdf["text"]
+                    )
+                ]
+                if not recs:
+                    continue
+                blob = W.encode_warc_gz(recs, per_record_gzip=True)
+                name = f"seg-{_uuid.uuid4().hex}.warc.gz"
+                with open(_os.path.join(tmp, name), "wb") as f:
+                    f.write(blob)
+                names.append(name)
+            yield _pd.DataFrame({"shard": names})
 
-                names = []
-                for pdf in it:
-                    recs = [
-                        (
-                            "response",
-                            f"https://cdx.example/{s}/{int(d)}",
-                            W.http_response_bytes(
-                                str(t).encode("utf-8"),
-                                content_type="text/plain; charset=utf-8",
-                            ),
-                            "application/http; msgtype=response",
-                        )
-                        for d, s, t in zip(
-                            pdf["doc_id"], pdf["source"], pdf["text"]
-                        )
-                    ]
-                    if not recs:
-                        continue
-                    blob = W.encode_warc_gz(recs, per_record_gzip=True)
-                    name = f"seg-{_uuid.uuid4().hex}.warc.gz"
-                    with open(_os.path.join(tmp, name), "wb") as f:
-                        f.write(blob)
-                    names.append(name)
-                yield _pd.DataFrame({"shard": names})
+        docs.repartition(8).mapInPandas(
+            write_shards, schema="shard string"
+        ).collect()
+        with open(_os.path.join(tmp, "_FILES_OK"), "w") as f:
+            f.write("ok")
+        try:
+            _os.rename(tmp, final)
+        except OSError:  # lost the publish race
+            _shutil.rmtree(tmp, ignore_errors=True)
 
-            docs.repartition(8).mapInPandas(
-                write_shards, schema="shard string"
-            ).collect()
-            with open(_os.path.join(tmp, "_FILES_OK"), "w") as f:
-                f.write("ok")
-            try:
-                _os.rename(tmp, final)
-            except OSError:  # lost the publish race
-                _shutil.rmtree(tmp, ignore_errors=True)
-
-        binaries = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.warc.gz")
-            .load(final)
-        )
-        idx = W.build_cdx_index(binaries)
-        fetched = W.fetch_warc_records(
-            idx.where(F.col("warc_type") == "response").repartition(32)
-        )
-        return fetched.select(
-            F.regexp_extract("target_uri", r"/(\d+)$", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            F.col("target_uri").alias("url"),
-            F.octet_length("body").cast("bigint").alias("n_bytes"),
-            F.lower(F.md5("body")).alias("body_md5"),
-        )
-
-
-_init_q321()
+    binaries = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.warc.gz")
+        .load(final)
+    )
+    idx = W.build_cdx_index(binaries)
+    fetched = W.fetch_warc_records(
+        idx.where(F.col("warc_type") == "response").repartition(32)
+    )
+    return fetched.select(
+        F.regexp_extract("target_uri", r"/(\d+)$", 1)
+        .cast("bigint")
+        .alias("doc_id"),
+        F.col("target_uri").alias("url"),
+        F.octet_length("body").cast("bigint").alias("n_bytes"),
+        F.lower(F.md5("body")).alias("body_md5"),
+    )
 
 # --------------------------------------------------------------------
 # q322 — WARC -> WET conversion (r11): Common Crawl ships THREE
@@ -16092,12 +15327,9 @@ _init_q321()
 # one zero-Exchange partition-local chain.
 # --------------------------------------------------------------------
 
-def _init_q322() -> None:
-    from ..functions import web as W
-
-    @register(
-        "q322_wet_conversion",
-        """
+@register(
+    "q322_wet_conversion",
+    """
         WITH h AS (
             SELECT doc_id, source,
                    trim(regexp_replace(source || ' ' || text || ' & more',
@@ -16109,126 +15341,123 @@ def _init_q322() -> None:
                md5(body) AS body_md5
         FROM h
         """,
-        doc="WARC->WET conversion on the exact gate (functions/web.py, "
-            "r11): HTML response shards (escaped q314-style pages, "
-            "built once as a codec fixture) explode to records, "
-            "bodies extract through html_text(mode='fast'), and the "
-            "extracted text re-packs into WET shards — WARC "
-            "`conversion` records with text/plain payloads, the "
-            "artifact Common Crawl actually distributes for LLM "
-            "text — which are then exploded BACK and hashed, so the "
-            "whole conversion chain (gzip framing -> HTTP split -> "
-            "entity-decoding extraction -> conversion-record framing) "
-            "must round-trip bit-exactly against an oracle computed "
-            "from the raw table. Scale shape: scan -> explode -> "
-            "extract -> re-pack -> explode is ONE partition-local "
-            "pipeline, zero Exchange; WET shards inherit the "
-            "per-record gzip framing, so they are CDX-indexable "
-            "(q321) and range-fetchable like their WARC parents.",
+    doc="WARC->WET conversion on the exact gate (functions/web.py, "
+        "r11): HTML response shards (escaped q314-style pages, "
+        "built once as a codec fixture) explode to records, "
+        "bodies extract through html_text(mode='fast'), and the "
+        "extracted text re-packs into WET shards — WARC "
+        "`conversion` records with text/plain payloads, the "
+        "artifact Common Crawl actually distributes for LLM "
+        "text — which are then exploded BACK and hashed, so the "
+        "whole conversion chain (gzip framing -> HTTP split -> "
+        "entity-decoding extraction -> conversion-record framing) "
+        "must round-trip bit-exactly against an oracle computed "
+        "from the raw table. Scale shape: scan -> explode -> "
+        "extract -> re-pack -> explode is ONE partition-local "
+        "pipeline, zero Exchange; WET shards inherit the "
+        "per-record gzip framing, so they are CDX-indexable "
+        "(q321) and range-fetchable like their WARC parents.",
+)
+def q322_wet_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
     )
-    def q322_wet_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            def esc(s):
-                return (
-                    str(s)
-                    .replace("&", "&amp;")
-                    .replace("<", "&lt;")
-                    .replace(">", "&gt;")
+        def esc(s):
+            return (
+                str(s)
+                .replace("&", "&amp;")
+                .replace("<", "&lt;")
+                .replace(">", "&gt;")
+            )
+
+        for pdf in it:
+            recs = []
+            for d, s, t in zip(
+                pdf["doc_id"], pdf["source"], pdf["text"]
+            ):
+                page = (
+                    f"<html><head><title>{esc(s)}</title>"
+                    f"<style>p{{color:red}}</style></head><body>"
+                    f"<h1>{esc(s)}</h1>\n<p>{esc(t)} &amp; more</p>"
+                    f"<script>var x=1;</script></body></html>"
                 )
-
-            for pdf in it:
-                recs = []
-                for d, s, t in zip(
-                    pdf["doc_id"], pdf["source"], pdf["text"]
-                ):
-                    page = (
-                        f"<html><head><title>{esc(s)}</title>"
-                        f"<style>p{{color:red}}</style></head><body>"
-                        f"<h1>{esc(s)}</h1>\n<p>{esc(t)} &amp; more</p>"
-                        f"<script>var x=1;</script></body></html>"
-                    )
-                    recs.append(
-                        (
-                            "response",
-                            f"https://wet.example/{s}/{int(d)}",
-                            W.http_response_bytes(page.encode("utf-8")),
-                            "application/http; msgtype=response",
-                        )
-                    )
-                blob = W.encode_warc_gz(recs) if recs else None
-                yield _pd.DataFrame(
-                    {
-                        "shard_id": _pd.Series(
-                            [0] if blob else [], dtype="int64"
-                        ),
-                        "content": [blob] if blob else [],
-                    }
-                )
-
-        shards = _codec_fixture(
-            spark, sf_dir, "q322_wet_conversion", 1,
-            lambda: docs.repartition(8).mapInPandas(
-                gen, schema="shard_id bigint, content binary"
-            ),
-        )
-        pages = W.explode_warc_records(shards, id_col="shard_id").where(
-            F.col("warc_type") == "response"
-        )
-        parts = W.html_text(F.decode("body", "UTF-8"), mode="fast")
-        extracted = pages.select(
-            F.col("target_uri").alias("uri"),
-            parts["body"].alias("wet_text"),
-        )
-
-        def pack_wet(it):
-            import pandas as _pd
-
-            for pdf in it:
-                recs = [
+                recs.append(
                     (
-                        "conversion",
-                        str(u),
-                        str(t).encode("utf-8"),
-                        "text/plain",
+                        "response",
+                        f"https://wet.example/{s}/{int(d)}",
+                        W.http_response_bytes(page.encode("utf-8")),
+                        "application/http; msgtype=response",
                     )
-                    for u, t in zip(pdf["uri"], pdf["wet_text"])
-                    if u is not None and t is not None
-                ]
-                blob = W.encode_warc_gz(recs) if recs else None
-                yield _pd.DataFrame(
-                    {
-                        "shard_id": _pd.Series(
-                            [0] if blob else [], dtype="int64"
-                        ),
-                        "content": [blob] if blob else [],
-                    }
                 )
+            blob = W.encode_warc_gz(recs) if recs else None
+            yield _pd.DataFrame(
+                {
+                    "shard_id": _pd.Series(
+                        [0] if blob else [], dtype="int64"
+                    ),
+                    "content": [blob] if blob else [],
+                }
+            )
 
-        wet_shards = extracted.mapInPandas(
-            pack_wet, schema="shard_id bigint, content binary"
-        )
-        wet = W.explode_warc_records(
-            wet_shards, id_col="shard_id", parse_http=False
-        ).where(F.col("warc_type") == "conversion")
-        return wet.select(
-            F.regexp_extract("target_uri", r"/(\d+)$", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            F.col("target_uri").alias("url"),
-            F.length(F.decode("body", "UTF-8"))
-            .cast("bigint")
-            .alias("body_chars"),
-            F.lower(F.md5("body")).alias("body_md5"),
-        )
+    shards = _codec_fixture(
+        spark, sf_dir, "q322_wet_conversion", 1,
+        lambda: docs.repartition(8).mapInPandas(
+            gen, schema="shard_id bigint, content binary"
+        ),
+    )
+    pages = W.explode_warc_records(shards, id_col="shard_id").where(
+        F.col("warc_type") == "response"
+    )
+    parts = W.html_text(F.decode("body", "UTF-8"), mode="fast")
+    extracted = pages.select(
+        F.col("target_uri").alias("uri"),
+        parts["body"].alias("wet_text"),
+    )
 
+    def pack_wet(it):
+        import pandas as _pd
 
-_init_q322()
+        for pdf in it:
+            recs = [
+                (
+                    "conversion",
+                    str(u),
+                    str(t).encode("utf-8"),
+                    "text/plain",
+                )
+                for u, t in zip(pdf["uri"], pdf["wet_text"])
+                if u is not None and t is not None
+            ]
+            blob = W.encode_warc_gz(recs) if recs else None
+            yield _pd.DataFrame(
+                {
+                    "shard_id": _pd.Series(
+                        [0] if blob else [], dtype="int64"
+                    ),
+                    "content": [blob] if blob else [],
+                }
+            )
+
+    wet_shards = extracted.mapInPandas(
+        pack_wet, schema="shard_id bigint, content binary"
+    )
+    wet = W.explode_warc_records(
+        wet_shards, id_col="shard_id", parse_http=False
+    ).where(F.col("warc_type") == "conversion")
+    return wet.select(
+        F.regexp_extract("target_uri", r"/(\d+)$", 1)
+        .cast("bigint")
+        .alias("doc_id"),
+        F.col("target_uri").alias("url"),
+        F.length(F.decode("body", "UTF-8"))
+        .cast("bigint")
+        .alias("body_chars"),
+        F.lower(F.md5("body")).alias("body_md5"),
+    )
 
 # --------------------------------------------------------------------
 # q323 — WARC -> WAT metadata extraction (r11): the third Common
@@ -16238,12 +15467,9 @@ _init_q322()
 # 25x-larger WARC bytes.
 # --------------------------------------------------------------------
 
-def _init_q323() -> None:
-    from ..functions import web as W
-
-    @register(
-        "q323_wat_metadata",
-        """
+@register(
+    "q323_wat_metadata",
+    """
         SELECT doc_id,
                'https://wat.example/' || source || '/' || doc_id AS url,
                CAST(200 AS INT) AS status,
@@ -16252,130 +15478,127 @@ def _init_q323() -> None:
                md5(text) AS digest
         FROM documents
         """,
-        doc="WARC->WAT metadata extraction on the exact gate "
-            "(functions/web.py + JVM json, r11): response shards "
-            "(text/plain bodies, own codec fixture) explode to "
-            "records; per record a WAT JSON payload {uri, status, "
-            "content_type, payload_length, digest:md5(body)} is built "
-            "ENTIRELY JVM-side (to_json over a struct — the digest is "
-            "F.md5 on the binary body, no Python in the metadata "
-            "pass), packed into `metadata` WARC records, exploded "
-            "back, and parsed with from_json. The oracle recomputes "
-            "every field from the raw table, so the chain proves "
-            "header routing, JSON round-tripping, and digest "
-            "integrity at once. Scale shape: WAT is the 100 TB "
-            "frontier/link-graph input — ~4% of the WARC bytes — and "
-            "this plan is scan -> explode -> codegen JSON -> repack, "
-            "zero Exchange; the JSON build stays in whole-stage "
-            "codegen between the two Arrow passes.",
+    doc="WARC->WAT metadata extraction on the exact gate "
+        "(functions/web.py + JVM json, r11): response shards "
+        "(text/plain bodies, own codec fixture) explode to "
+        "records; per record a WAT JSON payload {uri, status, "
+        "content_type, payload_length, digest:md5(body)} is built "
+        "ENTIRELY JVM-side (to_json over a struct — the digest is "
+        "F.md5 on the binary body, no Python in the metadata "
+        "pass), packed into `metadata` WARC records, exploded "
+        "back, and parsed with from_json. The oracle recomputes "
+        "every field from the raw table, so the chain proves "
+        "header routing, JSON round-tripping, and digest "
+        "integrity at once. Scale shape: WAT is the 100 TB "
+        "frontier/link-graph input — ~4% of the WARC bytes — and "
+        "this plan is scan -> explode -> codegen JSON -> repack, "
+        "zero Exchange; the JSON build stays in whole-stage "
+        "codegen between the two Arrow passes.",
+)
+def q323_wat_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
     )
-    def q323_wat_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
 
-        def gen(it):
-            import pandas as _pd
+    def gen(it):
+        import pandas as _pd
 
-            for pdf in it:
-                recs = [
-                    (
-                        "response",
-                        f"https://wat.example/{s}/{int(d)}",
-                        W.http_response_bytes(
-                            str(t).encode("utf-8"),
-                            content_type="text/plain; charset=utf-8",
-                        ),
-                        "application/http; msgtype=response",
-                    )
-                    for d, s, t in zip(
-                        pdf["doc_id"], pdf["source"], pdf["text"]
-                    )
-                ]
-                blob = W.encode_warc_gz(recs) if recs else None
-                yield _pd.DataFrame(
-                    {
-                        "shard_id": _pd.Series(
-                            [0] if blob else [], dtype="int64"
-                        ),
-                        "content": [blob] if blob else [],
-                    }
+        for pdf in it:
+            recs = [
+                (
+                    "response",
+                    f"https://wat.example/{s}/{int(d)}",
+                    W.http_response_bytes(
+                        str(t).encode("utf-8"),
+                        content_type="text/plain; charset=utf-8",
+                    ),
+                    "application/http; msgtype=response",
                 )
-
-        shards = _codec_fixture(
-            spark, sf_dir, "q323_wat_metadata", 1,
-            lambda: docs.repartition(8).mapInPandas(
-                gen, schema="shard_id bigint, content binary"
-            ),
-        )
-        pages = W.explode_warc_records(shards, id_col="shard_id").where(
-            F.col("warc_type") == "response"
-        )
-        wat_json = F.to_json(
-            F.struct(
-                F.col("target_uri").alias("uri"),
-                F.col("http_status").alias("status"),
-                F.col("http_content_type").alias("content_type"),
-                F.octet_length("body").cast("bigint").alias(
-                    "payload_length"
-                ),
-                F.lower(F.md5("body")).alias("digest"),
+                for d, s, t in zip(
+                    pdf["doc_id"], pdf["source"], pdf["text"]
+                )
+            ]
+            blob = W.encode_warc_gz(recs) if recs else None
+            yield _pd.DataFrame(
+                {
+                    "shard_id": _pd.Series(
+                        [0] if blob else [], dtype="int64"
+                    ),
+                    "content": [blob] if blob else [],
+                }
             )
-        )
-        meta = pages.select(
+
+    shards = _codec_fixture(
+        spark, sf_dir, "q323_wat_metadata", 1,
+        lambda: docs.repartition(8).mapInPandas(
+            gen, schema="shard_id bigint, content binary"
+        ),
+    )
+    pages = W.explode_warc_records(shards, id_col="shard_id").where(
+        F.col("warc_type") == "response"
+    )
+    wat_json = F.to_json(
+        F.struct(
             F.col("target_uri").alias("uri"),
-            wat_json.alias("wat"),
+            F.col("http_status").alias("status"),
+            F.col("http_content_type").alias("content_type"),
+            F.octet_length("body").cast("bigint").alias(
+                "payload_length"
+            ),
+            F.lower(F.md5("body")).alias("digest"),
         )
+    )
+    meta = pages.select(
+        F.col("target_uri").alias("uri"),
+        wat_json.alias("wat"),
+    )
 
-        def pack_wat(it):
-            import pandas as _pd
+    def pack_wat(it):
+        import pandas as _pd
 
-            for pdf in it:
-                recs = [
-                    (
-                        "metadata",
-                        str(u),
-                        str(j).encode("utf-8"),
-                        "application/json",
-                    )
-                    for u, j in zip(pdf["uri"], pdf["wat"])
-                    if u is not None and j is not None
-                ]
-                blob = W.encode_warc_gz(recs) if recs else None
-                yield _pd.DataFrame(
-                    {
-                        "shard_id": _pd.Series(
-                            [0] if blob else [], dtype="int64"
-                        ),
-                        "content": [blob] if blob else [],
-                    }
+        for pdf in it:
+            recs = [
+                (
+                    "metadata",
+                    str(u),
+                    str(j).encode("utf-8"),
+                    "application/json",
                 )
+                for u, j in zip(pdf["uri"], pdf["wat"])
+                if u is not None and j is not None
+            ]
+            blob = W.encode_warc_gz(recs) if recs else None
+            yield _pd.DataFrame(
+                {
+                    "shard_id": _pd.Series(
+                        [0] if blob else [], dtype="int64"
+                    ),
+                    "content": [blob] if blob else [],
+                }
+            )
 
-        wat_shards = meta.mapInPandas(
-            pack_wat, schema="shard_id bigint, content binary"
-        )
-        wat = W.explode_warc_records(
-            wat_shards, id_col="shard_id", parse_http=False
-        ).where(F.col("warc_type") == "metadata")
-        parsed = wat.select(
-            F.from_json(
-                F.decode("body", "UTF-8"),
-                "uri string, status int, content_type string,"
-                " payload_length bigint, digest string",
-            ).alias("m")
-        )
-        return parsed.select(
-            F.regexp_extract("m.uri", r"/(\d+)$", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            F.col("m.uri").alias("url"),
-            F.col("m.status").alias("status"),
-            F.col("m.payload_length").alias("payload_length"),
-            F.col("m.digest").alias("digest"),
-        )
-
-
-_init_q323()
+    wat_shards = meta.mapInPandas(
+        pack_wat, schema="shard_id bigint, content binary"
+    )
+    wat = W.explode_warc_records(
+        wat_shards, id_col="shard_id", parse_http=False
+    ).where(F.col("warc_type") == "metadata")
+    parsed = wat.select(
+        F.from_json(
+            F.decode("body", "UTF-8"),
+            "uri string, status int, content_type string,"
+            " payload_length bigint, digest string",
+        ).alias("m")
+    )
+    return parsed.select(
+        F.regexp_extract("m.uri", r"/(\d+)$", 1)
+        .cast("bigint")
+        .alias("doc_id"),
+        F.col("m.uri").alias("url"),
+        F.col("m.status").alias("status"),
+        F.col("m.payload_length").alias("payload_length"),
+        F.col("m.digest").alias("digest"),
+    )
 
 # --------------------------------------------------------------------
 # q324 — robots.txt frontier filtering (r11): the politeness gate a
@@ -16384,12 +15607,9 @@ _init_q323()
 # broadcast-side table.
 # --------------------------------------------------------------------
 
-def _init_q324() -> None:
-    from ..functions import web as W
-
-    @register(
-        "q324_robots_filter",
-        """
+@register(
+    "q324_robots_filter",
+    """
         WITH u AS (
             SELECT doc_id, source,
                    'https://' || source || '.example'
@@ -16403,53 +15623,50 @@ def _init_q324() -> None:
                (NOT host_blocked) AND doc_id % 5 <> 0 AS allowed
         FROM u
         """,
-        doc="robots.txt URL filtering on the exact gate (functions/"
-            "web.py robots_allowed, stdlib urllib.robotparser, r11): "
-            "20 hosts get deterministic robots corpora — every host "
-            "disallows /private/, and hosts whose md5(source) hex "
-            "starts 0-7 disallow everything (the hard opt-out case) — "
-            "parsed ONCE per host per worker from a closure-broadcast "
-            "{host: robots.txt} dict; URLs route through can_fetch. "
-            "The oracle re-derives both rules in SQL (same md5, same "
-            "path prefix), so prefix matching, host routing, and the "
-            "default-open contract for unknown hosts are all "
-            "hash-checked. Scale shape: rules are host-cardinality-"
-            "sized (KB/host) -> broadcast, never joined; the check is "
-            "one Arrow pass, zero Exchange. At 100 TB this gates the "
-            "frontier BEFORE fetch cost, and at ingest it is the "
-            "retroactive opt-out filter.",
+    doc="robots.txt URL filtering on the exact gate (functions/"
+        "web.py robots_allowed, stdlib urllib.robotparser, r11): "
+        "20 hosts get deterministic robots corpora — every host "
+        "disallows /private/, and hosts whose md5(source) hex "
+        "starts 0-7 disallow everything (the hard opt-out case) — "
+        "parsed ONCE per host per worker from a closure-broadcast "
+        "{host: robots.txt} dict; URLs route through can_fetch. "
+        "The oracle re-derives both rules in SQL (same md5, same "
+        "path prefix), so prefix matching, host routing, and the "
+        "default-open contract for unknown hosts are all "
+        "hash-checked. Scale shape: rules are host-cardinality-"
+        "sized (KB/host) -> broadcast, never joined; the check is "
+        "one Arrow pass, zero Exchange. At 100 TB this gates the "
+        "frontier BEFORE fetch cost, and at ingest it is the "
+        "retroactive opt-out filter.",
+)
+def q324_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import hashlib as _hl
+
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "source"
     )
-    def q324_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import hashlib as _hl
-
-        docs = table(spark, sf_dir, "documents").select(
-            "doc_id", "source"
-        )
-        hosts = [
-            r[0] for r in docs.select("source").distinct().collect()
-        ]
-        robots = {}
-        for s in hosts:
-            rules = ["User-agent: *", "Disallow: /private/"]
-            if _hl.md5(s.encode()).hexdigest()[0] in "01234567":
-                rules = ["User-agent: *", "Disallow: /"]
-            robots[f"{s}.example"] = "\n".join(rules) + "\n"
-        url = F.concat(
-            F.lit("https://"),
-            F.col("source"),
-            F.lit(".example"),
-            F.when(F.col("doc_id") % 5 == 0, F.lit("/private/"))
-            .otherwise(F.lit("/public/")),
-            F.col("doc_id"),
-        )
-        return docs.select(
-            "doc_id",
-            url.alias("url"),
-            W.robots_allowed(url, robots).alias("allowed"),
-        )
-
-
-_init_q324()
+    hosts = [
+        r[0] for r in docs.select("source").distinct().collect()
+    ]
+    robots = {}
+    for s in hosts:
+        rules = ["User-agent: *", "Disallow: /private/"]
+        if _hl.md5(s.encode()).hexdigest()[0] in "01234567":
+            rules = ["User-agent: *", "Disallow: /"]
+        robots[f"{s}.example"] = "\n".join(rules) + "\n"
+    url = F.concat(
+        F.lit("https://"),
+        F.col("source"),
+        F.lit(".example"),
+        F.when(F.col("doc_id") % 5 == 0, F.lit("/private/"))
+        .otherwise(F.lit("/public/")),
+        F.col("doc_id"),
+    )
+    return docs.select(
+        "doc_id",
+        url.alias("url"),
+        W.robots_allowed(url, robots).alias("allowed"),
+    )
 
 # --------------------------------------------------------------------
 # q325 — zstd DICTIONARY compression for small records (r11): plain
@@ -16466,12 +15683,9 @@ _init_q324()
 # this extends the q311 codec seam, not a port of anything.
 # --------------------------------------------------------------------
 
-def _init_q325() -> None:
-    from ..functions import multimodal as M
-
-    @register(
-        "q325_zstd_dict_store",
-        """
+@register(
+    "q325_zstd_dict_store",
+    """
         WITH rec AS (
           SELECT o_orderkey,
                  'orderkey=' || o_orderkey || '|custkey=' || o_custkey
@@ -16489,120 +15703,117 @@ def _init_q325() -> None:
                     ELSE md5(rec) END AS rec_md5
         FROM rec
         """,
-        doc="Zstd DICTIONARY-compressed small-record store on the exact "
-            "gate (functions/multimodal.py zstd_train_dict / "
-            "zstd_compress_dict / zstd_decompress_dict via the q311 "
-            "ctypes libzstd binding — ZDICT_trainFromBuffer + "
-            "*_usingDict, zero new packages). Orders rows serialize to "
-            "~55-byte records; a 4 KiB dictionary is trained DRIVER-"
-            "SIDE on a bounded deterministic sample (o_orderkey %% 4 — "
-            "at 100 TB you'd TABLESAMPLE a few MB, the trainer wants "
-            "~100x dict-size of sample bytes), stored INSIDE the "
-            "fixture as its own row (self-describing, like the token-"
-            "shard manifest), and broadcast to executors for decode. "
-            "One in 13 blobs gets its last byte flipped at encode: "
-            "dict frames carry the dictID and the usingDict decoder "
-            "raises on corruption or dict mismatch, so corrupt rows "
-            "surface as NULL (warn-and-skip), intact rows round-trip "
-            "bit-exactly and hash as (length, md5) against plain SQL "
-            "over the reconstructed record string. Same zero-Exchange "
-            "fixture-scan -> mapInPandas shape as q311 (plan-asserted)."
-            " Library-less deployments degrade to plain frames (empty "
-            "dict sentinel) with identical row-level semantics. Size "
-            "win pinned by tests/test_multimodal (dict < plain < raw "
-            "on structured records); scale leg in SCALE_BENCH.md.",
+    doc="Zstd DICTIONARY-compressed small-record store on the exact "
+        "gate (functions/multimodal.py zstd_train_dict / "
+        "zstd_compress_dict / zstd_decompress_dict via the q311 "
+        "ctypes libzstd binding — ZDICT_trainFromBuffer + "
+        "*_usingDict, zero new packages). Orders rows serialize to "
+        "~55-byte records; a 4 KiB dictionary is trained DRIVER-"
+        "SIDE on a bounded deterministic sample (o_orderkey %% 4 — "
+        "at 100 TB you'd TABLESAMPLE a few MB, the trainer wants "
+        "~100x dict-size of sample bytes), stored INSIDE the "
+        "fixture as its own row (self-describing, like the token-"
+        "shard manifest), and broadcast to executors for decode. "
+        "One in 13 blobs gets its last byte flipped at encode: "
+        "dict frames carry the dictID and the usingDict decoder "
+        "raises on corruption or dict mismatch, so corrupt rows "
+        "surface as NULL (warn-and-skip), intact rows round-trip "
+        "bit-exactly and hash as (length, md5) against plain SQL "
+        "over the reconstructed record string. Same zero-Exchange "
+        "fixture-scan -> mapInPandas shape as q311 (plan-asserted)."
+        " Library-less deployments degrade to plain frames (empty "
+        "dict sentinel) with identical row-level semantics. Size "
+        "win pinned by tests/test_multimodal (dict < plain < raw "
+        "on structured records); scale leg in SCALE_BENCH.md.",
+)
+def q325_zstd_dict_store(spark: SparkSession, sf_dir: str) -> DataFrame:
+    rec_col = F.concat(
+        F.lit("orderkey="), F.col("o_orderkey").cast("string"),
+        F.lit("|custkey="), F.col("o_custkey").cast("string"),
+        F.lit("|status="), F.col("o_orderstatus"),
+        F.lit("|priority="), F.col("o_orderpriority"),
+        F.lit("|date="), F.date_format("o_orderdate", "yyyy-MM-dd"),
     )
-    def q325_zstd_dict_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-        rec_col = F.concat(
-            F.lit("orderkey="), F.col("o_orderkey").cast("string"),
-            F.lit("|custkey="), F.col("o_custkey").cast("string"),
-            F.lit("|status="), F.col("o_orderstatus"),
-            F.lit("|priority="), F.col("o_orderpriority"),
-            F.lit("|date="), F.date_format("o_orderdate", "yyyy-MM-dd"),
+
+    def build():
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", rec_col.alias("rec")
         )
+        sample = [
+            r["rec"].encode("utf-8")
+            for r in orders.where(F.col("o_orderkey") % 4 == 0)
+            .select("rec").collect()
+        ]
+        dict_bytes = M.zstd_train_dict(sample, 4096)
 
-        def build():
-            orders = table(spark, sf_dir, "orders").select(
-                "o_orderkey", rec_col.alias("rec")
-            )
-            sample = [
-                r["rec"].encode("utf-8")
-                for r in orders.where(F.col("o_orderkey") % 4 == 0)
-                .select("rec").collect()
-            ]
-            dict_bytes = M.zstd_train_dict(sample, 4096)
-
-            def gen(it):
-                import pandas as _pd
-
-                for pdf in it:
-                    keys, blobs = [], []
-                    for k, rec in zip(pdf["o_orderkey"], pdf["rec"]):
-                        k = int(k)
-                        blob = bytearray(
-                            M.zstd_compress_dict(
-                                rec.encode("utf-8"), dict_bytes
-                            )
-                        )
-                        if k % 13 == 0:
-                            blob[-1] ^= 0xFF
-                        keys.append(k)
-                        blobs.append(bytes(blob))
-                    yield _pd.DataFrame(
-                        {
-                            "o_orderkey": _pd.Series(keys, dtype="int64"),
-                            "blob": blobs,
-                            "is_dict": _pd.Series(
-                                [False] * len(keys), dtype="bool"
-                            ),
-                        }
-                    )
-
-            packed = orders.mapInPandas(
-                gen, schema="o_orderkey bigint, blob binary, is_dict boolean"
-            )
-            dict_row = spark.createDataFrame(
-                [(-1, bytearray(dict_bytes), True)],
-                schema="o_orderkey bigint, blob binary, is_dict boolean",
-            )
-            return packed.unionByName(dict_row)
-
-        store = _codec_fixture(
-            spark, sf_dir, "q325_zstd_dict_store", 1, build
-        )
-        dict_bytes = bytes(
-            store.where("is_dict").select("blob").collect()[0][0] or b""
-        )
-
-        def dec(it):
+        def gen(it):
             import pandas as _pd
 
             for pdf in it:
-                outs = []
-                for v in pdf["blob"]:
-                    try:
-                        outs.append(
-                            M.zstd_decompress_dict(
-                                bytes(v), dict_bytes
-                            ).decode("utf-8")
+                keys, blobs = [], []
+                for k, rec in zip(pdf["o_orderkey"], pdf["rec"]):
+                    k = int(k)
+                    blob = bytearray(
+                        M.zstd_compress_dict(
+                            rec.encode("utf-8"), dict_bytes
                         )
-                    except (ValueError, UnicodeDecodeError):
-                        outs.append(None)
+                    )
+                    if k % 13 == 0:
+                        blob[-1] ^= 0xFF
+                    keys.append(k)
+                    blobs.append(bytes(blob))
                 yield _pd.DataFrame(
-                    {"o_orderkey": pdf["o_orderkey"], "rec": outs}
+                    {
+                        "o_orderkey": _pd.Series(keys, dtype="int64"),
+                        "blob": blobs,
+                        "is_dict": _pd.Series(
+                            [False] * len(keys), dtype="bool"
+                        ),
+                    }
                 )
 
-        rows = store.where(~F.col("is_dict")).select("o_orderkey", "blob")
-        out = rows.mapInPandas(dec, schema="o_orderkey bigint, rec string")
-        return out.select(
-            "o_orderkey",
-            F.col("rec").isNotNull().alias("ok"),
-            F.length("rec").cast("bigint").alias("n_chars"),
-            F.md5(F.encode(F.col("rec"), "utf-8")).alias("rec_md5"),
+        packed = orders.mapInPandas(
+            gen, schema="o_orderkey bigint, blob binary, is_dict boolean"
         )
+        dict_row = spark.createDataFrame(
+            [(-1, bytearray(dict_bytes), True)],
+            schema="o_orderkey bigint, blob binary, is_dict boolean",
+        )
+        return packed.unionByName(dict_row)
 
+    store = _codec_fixture(
+        spark, sf_dir, "q325_zstd_dict_store", 1, build
+    )
+    dict_bytes = bytes(
+        store.where("is_dict").select("blob").collect()[0][0] or b""
+    )
 
-_init_q325()
+    def dec(it):
+        import pandas as _pd
+
+        for pdf in it:
+            outs = []
+            for v in pdf["blob"]:
+                try:
+                    outs.append(
+                        M.zstd_decompress_dict(
+                            bytes(v), dict_bytes
+                        ).decode("utf-8")
+                    )
+                except (ValueError, UnicodeDecodeError):
+                    outs.append(None)
+            yield _pd.DataFrame(
+                {"o_orderkey": pdf["o_orderkey"], "rec": outs}
+            )
+
+    rows = store.where(~F.col("is_dict")).select("o_orderkey", "blob")
+    out = rows.mapInPandas(dec, schema="o_orderkey bigint, rec string")
+    return out.select(
+        "o_orderkey",
+        F.col("rec").isNotNull().alias("ok"),
+        F.length("rec").cast("bigint").alias("n_chars"),
+        F.md5(F.encode(F.col("rec"), "utf-8")).alias("rec_md5"),
+    )
 
 # --------------------------------------------------------------------
 # q326 — t-digest quantile sketch (r11): the missing member of the
@@ -16616,13 +15827,13 @@ _init_q325()
 # bit-deterministic and auditable on the exact gate.
 # --------------------------------------------------------------------
 
-def _init_q326() -> None:
-    _TD_QS = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
-    _TD_EPS = 0.005
+_Q326_TD_QS = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
+_Q326_TD_EPS = 0.005
 
-    @register(
-        "q326_tdigest_quantiles",
-        """
+
+@register(
+    "q326_tdigest_quantiles",
+    """
         WITH n AS (SELECT count(*) AS n FROM lineitem),
         grid(q) AS (
           SELECT CAST(x AS DOUBLE) FROM (VALUES (0.01),(0.05),(0.25),
@@ -16637,78 +15848,75 @@ def _init_q326() -> None:
         FROM grid g, n, ranked r
         WHERE r.rn = CAST(CEIL(g.q * n.n) AS BIGINT)
         """,
-        doc="t-digest quantile sketch on the exact gate (functions/"
-            "sketch.py tdigest_partials/tdigest_merge/tdigest_quantile "
-            "— the merging variant, Dunning & Ertl 2019, RNG-free and "
-            "so bit-deterministic). Per-partition digests build in one "
-            "zero-Exchange mapInPandas pass over l_extendedprice; the "
-            "driver merges the bounded centroid collect (#partitions x "
-            "O(delta) rows) and estimates a 7-point quantile grid. The "
-            "HASHED output is the EXACT discrete quantile (value at "
-            "global rank ceil(q*n) — actual data elements, so no "
-            "cross-engine float interpolation; both q*n products are "
-            "forced to DOUBLE so CEIL agrees) plus sketch_ok = the "
-            "in-plan audit that each t-digest estimate's true rank "
-            "sits within q +/- 0.005, computed by one conditional-sum "
-            "aggregate pass (the ANN-query audit pattern: approximate "
-            "path graded against the exact answer INSIDE the plan). "
-            "The exact side's single-partition rank window is the "
-            "AUDIT, not the production path — at 100 TB you ship the "
-            "digest and never globally sort.",
+    doc="t-digest quantile sketch on the exact gate (functions/"
+        "sketch.py tdigest_partials/tdigest_merge/tdigest_quantile "
+        "— the merging variant, Dunning & Ertl 2019, RNG-free and "
+        "so bit-deterministic). Per-partition digests build in one "
+        "zero-Exchange mapInPandas pass over l_extendedprice; the "
+        "driver merges the bounded centroid collect (#partitions x "
+        "O(delta) rows) and estimates a 7-point quantile grid. The "
+        "HASHED output is the EXACT discrete quantile (value at "
+        "global rank ceil(q*n) — actual data elements, so no "
+        "cross-engine float interpolation; both q*n products are "
+        "forced to DOUBLE so CEIL agrees) plus sketch_ok = the "
+        "in-plan audit that each t-digest estimate's true rank "
+        "sits within q +/- 0.005, computed by one conditional-sum "
+        "aggregate pass (the ANN-query audit pattern: approximate "
+        "path graded against the exact answer INSIDE the plan). "
+        "The exact side's single-partition rank window is the "
+        "AUDIT, not the production path — at 100 TB you ship the "
+        "digest and never globally sort.",
+)
+def q326_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import math
+
+    from ..functions.sketch import (
+        tdigest_merge,
+        tdigest_partials,
+        tdigest_quantile,
     )
-    def q326_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import math
 
-        from ..functions.sketch import (
-            tdigest_merge,
-            tdigest_partials,
-            tdigest_quantile,
-        )
+    li = table(spark, sf_dir, "lineitem").select(
+        F.col("l_extendedprice").alias("v")
+    )
 
-        li = table(spark, sf_dir, "lineitem").select(
-            F.col("l_extendedprice").alias("v")
-        )
+    # sketch: partition-local digests -> bounded centroid collect
+    # -> driver merge (the mergeable-state path under grade)
+    parts = tdigest_partials(li, "v", delta=100).collect()
+    digest = tdigest_merge(
+        [(r["mean"], r["weight"]) for r in parts], delta=100
+    )
+    ests = {q: tdigest_quantile(digest, q) for q in _Q326_TD_QS}
 
-        # sketch: partition-local digests -> bounded centroid collect
-        # -> driver merge (the mergeable-state path under grade)
-        parts = tdigest_partials(li, "v", delta=100).collect()
-        digest = tdigest_merge(
-            [(r["mean"], r["weight"]) for r in parts], delta=100
-        )
-        ests = {q: tdigest_quantile(digest, q) for q in _TD_QS}
+    # one-pass audit aggregate: n plus count(v <= est_q) per q
+    agg = li.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            F.sum((F.col("v") <= F.lit(ests[q])).cast("bigint")).alias(
+                f"c{i}"
+            )
+            for i, q in enumerate(_Q326_TD_QS)
+        ],
+    ).collect()[0]
+    n = agg["n"]
+    audit = {
+        q: abs(agg[f"c{i}"] / n - q) <= _Q326_TD_EPS
+        for i, q in enumerate(_Q326_TD_QS)
+    }
 
-        # one-pass audit aggregate: n plus count(v <= est_q) per q
-        agg = li.agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum((F.col("v") <= F.lit(ests[q])).cast("bigint")).alias(
-                    f"c{i}"
-                )
-                for i, q in enumerate(_TD_QS)
-            ],
-        ).collect()[0]
-        n = agg["n"]
-        audit = {
-            q: abs(agg[f"c{i}"] / n - q) <= _TD_EPS
-            for i, q in enumerate(_TD_QS)
-        }
-
-        # exact discrete quantiles: value at global rank ceil(q*n).
-        # python float q*n matches DuckDB's DOUBLE product bit-for-bit
-        ranks = {int(math.ceil(q * n)): q for q in _TD_QS}
-        grid = spark.createDataFrame(
-            [(rn, q, bool(audit[q])) for rn, q in ranks.items()],
-            schema="rn bigint, q double, sketch_ok boolean",
-        )
-        w = Window.orderBy("v")
-        ranked = li.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        return (
-            ranked.join(F.broadcast(grid), "rn")
-            .select("q", F.col("v").alias("v_exact"), "sketch_ok")
-        )
-
-
-_init_q326()
+    # exact discrete quantiles: value at global rank ceil(q*n).
+    # python float q*n matches DuckDB's DOUBLE product bit-for-bit
+    ranks = {int(math.ceil(q * n)): q for q in _Q326_TD_QS}
+    grid = spark.createDataFrame(
+        [(rn, q, bool(audit[q])) for rn, q in ranks.items()],
+        schema="rn bigint, q double, sketch_ok boolean",
+    )
+    w = Window.orderBy("v")
+    ranked = li.withColumn("rn", F.row_number().over(w).cast("bigint"))
+    return (
+        ranked.join(F.broadcast(grid), "rn")
+        .select("q", F.col("v").alias("v_exact"), "sketch_ok")
+    )
 
 # --------------------------------------------------------------------
 # q327 — manifest-versioned snapshot table (r11): Iceberg-v1-style
@@ -16720,11 +15928,10 @@ _init_q326()
 # read is one plain columnar scan with full pushdown.
 # --------------------------------------------------------------------
 
-def _init_q327() -> None:
 
-    @register(
-        "q327_snapshot_time_travel",
-        """
+@register(
+    "q327_snapshot_time_travel",
+    """
         SELECT 1 AS version, o_orderkey, o_orderstatus
         FROM orders WHERE o_orderkey % 3 = 0
         UNION ALL
@@ -16735,63 +15942,60 @@ def _init_q327() -> None:
         FROM orders WHERE o_orderkey % 3 IN (0, 1)
           AND o_orderstatus <> 'F'
         """,
-        doc="Snapshot-table time travel on the exact gate (sources/"
-            "snapshot.py SnapshotTable): a three-commit history — v1 "
-            "base load (orderkey %% 3 = 0), v2 append (%% 3 = 1), v3 "
-            "copy-on-write DELETE of status 'F' rows — is built once "
-            "per scale factor (manifest-committed-last, atomic rename, "
-            "same writer contract as the token shards), then every "
-            "version is read back AS-OF and hashed row-level against "
-            "the SQL reconstruction of each snapshot's content. Proves "
-            "commit atomicity, version isolation (v1's rows are intact "
-            "after v3's delete — overwritten files stay referenced by "
-            "older manifests), and the COW contract (delete rewrites "
-            "only files containing matches; untouched files carry "
-            "over by reference). Read path is plain parquet scans from "
-            "the manifest file list — no format shim, full pushdown — "
-            "so the union plan adds zero Exchange (plan-asserted).",
-    )
-    def q327_snapshot_time_travel(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-        import uuid as _uuid
+    doc="Snapshot-table time travel on the exact gate (sources/"
+        "snapshot.py SnapshotTable): a three-commit history — v1 "
+        "base load (orderkey %% 3 = 0), v2 append (%% 3 = 1), v3 "
+        "copy-on-write DELETE of status 'F' rows — is built once "
+        "per scale factor (manifest-committed-last, atomic rename, "
+        "same writer contract as the token shards), then every "
+        "version is read back AS-OF and hashed row-level against "
+        "the SQL reconstruction of each snapshot's content. Proves "
+        "commit atomicity, version isolation (v1's rows are intact "
+        "after v3's delete — overwritten files stay referenced by "
+        "older manifests), and the COW contract (delete rewrites "
+        "only files containing matches; untouched files carry "
+        "over by reference). Read path is plain parquet scans from "
+        "the manifest file list — no format shim, full pushdown — "
+        "so the union plan adds zero Exchange (plan-asserted).",
+)
+def q327_snapshot_time_travel(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import os as _os
+    import shutil as _shutil
+    import uuid as _uuid
 
-        from ..sources.snapshot import SnapshotTable
+    from ..sources.snapshot import SnapshotTable
 
-        tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-        final = f"{_SCRATCH}/snapshots/{tag}/q327_v1"
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    final = f"{_SCRATCH}/snapshots/{tag}/q327_v1"
 
-        def ready(p):
-            return SnapshotTable(p).versions() == [1, 2, 3]
+    def ready(p):
+        return SnapshotTable(p).versions() == [1, 2, 3]
 
-        if not ready(final):
-            tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
-            t = SnapshotTable(tmp)
-            orders = table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderstatus"
-            )
-            t.append(orders.where(F.col("o_orderkey") % 3 == 0))
-            t.append(orders.where(F.col("o_orderkey") % 3 == 1))
-            t.delete(spark, "o_orderstatus = 'F'")
-            try:
-                _os.makedirs(_os.path.dirname(final), exist_ok=True)
-                _os.rename(tmp, final)
-            except OSError:  # lost the publish race
-                _shutil.rmtree(tmp, ignore_errors=True)
+    if not ready(final):
+        tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
+        t = SnapshotTable(tmp)
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus"
+        )
+        t.append(orders.where(F.col("o_orderkey") % 3 == 0))
+        t.append(orders.where(F.col("o_orderkey") % 3 == 1))
+        t.delete(spark, "o_orderstatus = 'F'")
+        try:
+            _os.makedirs(_os.path.dirname(final), exist_ok=True)
+            _os.rename(tmp, final)
+        except OSError:  # lost the publish race
+            _shutil.rmtree(tmp, ignore_errors=True)
 
-        t = SnapshotTable(final)
-        out = None
-        for v in (1, 2, 3):
-            part = t.read(spark, version=v).select(
-                F.lit(v).alias("version"), "o_orderkey", "o_orderstatus"
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
-
-
-_init_q327()
+    t = SnapshotTable(final)
+    out = None
+    for v in (1, 2, 3):
+        part = t.read(spark, version=v).select(
+            F.lit(v).alias("version"), "o_orderkey", "o_orderstatus"
+        )
+        out = part if out is None else out.unionByName(part)
+    return out
 
 # --------------------------------------------------------------------
 # q328 — privacy-preserving count release (r11): k-anonymity
@@ -16803,19 +16007,19 @@ _init_q327()
 # libm implementations — 364/5000 JVM-vs-DuckDB mismatches).
 # --------------------------------------------------------------------
 
-def _init_q328() -> None:
-    from ..functions.privacy import dlap_noise_sql
+from ..functions.privacy import dlap_noise_sql
 
-    _seed = "r11-release"
-    _noise = dlap_noise_sql(
-        "o_orderpriority || chr(31) || o_orderstatus || chr(31) || "
-        "CAST(order_year AS VARCHAR)",
-        _seed,
-    )
+_q328_seed = "r11-release"
+_q328_noise = dlap_noise_sql(
+    "o_orderpriority || chr(31) || o_orderstatus || chr(31) || "
+    "CAST(order_year AS VARCHAR)",
+    _q328_seed,
+)
 
-    @register(
-        "q328_dp_count_release",
-        f"""
+
+@register(
+    "q328_dp_count_release",
+    f"""
         WITH c AS (
           SELECT o_orderpriority, o_orderstatus,
                  CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT)
@@ -16824,44 +16028,41 @@ def _init_q328() -> None:
           FROM orders GROUP BY 1, 2, 3
         )
         SELECT o_orderpriority, o_orderstatus, order_year,
-               GREATEST(n + {_noise}, 0) AS n_noisy
+               GREATEST(n + {_q328_noise}, 0) AS n_noisy
         FROM c WHERE n >= 5
         """,
-        doc="Privacy-preserving count release on the exact gate "
-            "(functions/privacy.py dp_release_counts): per-(priority, "
-            "status, order-year) counts pass the k=5 small-cell "
-            "suppression rule, then each surviving group gets "
-            "discrete-Laplace noise (Ghosh-Roughgarden-Sundararajan "
-            "STOC'09; alpha=3/4 i.e. eps=ln(4/3), support truncated "
-            "at |z|<=16, ~0.6%% tail delta) and is clamped at zero. "
-            "The mechanism is a CASE ladder of integer comparisons "
-            "against thresholds floor(CDF(z)*2^60) computed in exact "
-            "Fraction arithmetic — the same constants generate BOTH "
-            "the Spark expression and this oracle, so the release is "
-            "reproducible on any engine with 64-bit integers and no "
-            "transcendental is evaluated anywhere. Noise attaches "
-            "AFTER the aggregate (one hash + ladder per GROUP, not "
-            "per row): at 100 TB the release adds nothing to the "
-            "shuffle. Production callers draw the seed at release "
-            "time; the pinned seed is what makes a release auditable.",
+    doc="Privacy-preserving count release on the exact gate "
+        "(functions/privacy.py dp_release_counts): per-(priority, "
+        "status, order-year) counts pass the k=5 small-cell "
+        "suppression rule, then each surviving group gets "
+        "discrete-Laplace noise (Ghosh-Roughgarden-Sundararajan "
+        "STOC'09; alpha=3/4 i.e. eps=ln(4/3), support truncated "
+        "at |z|<=16, ~0.6%% tail delta) and is clamped at zero. "
+        "The mechanism is a CASE ladder of integer comparisons "
+        "against thresholds floor(CDF(z)*2^60) computed in exact "
+        "Fraction arithmetic — the same constants generate BOTH "
+        "the Spark expression and this oracle, so the release is "
+        "reproducible on any engine with 64-bit integers and no "
+        "transcendental is evaluated anywhere. Noise attaches "
+        "AFTER the aggregate (one hash + ladder per GROUP, not "
+        "per row): at 100 TB the release adds nothing to the "
+        "shuffle. Production callers draw the seed at release "
+        "time; the pinned seed is what makes a release auditable.",
+)
+def q328_dp_count_release(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.privacy import dp_release_counts
+
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderpriority",
+        "o_orderstatus",
+        F.year("o_orderdate").cast("bigint").alias("order_year"),
     )
-    def q328_dp_count_release(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.privacy import dp_release_counts
-
-        orders = table(spark, sf_dir, "orders").select(
-            "o_orderpriority",
-            "o_orderstatus",
-            F.year("o_orderdate").cast("bigint").alias("order_year"),
-        )
-        return dp_release_counts(
-            orders,
-            ["o_orderpriority", "o_orderstatus", "order_year"],
-            seed=_seed,
-            k_anon=5,
-        )
-
-
-_init_q328()
+    return dp_release_counts(
+        orders,
+        ["o_orderpriority", "o_orderstatus", "order_year"],
+        seed=_q328_seed,
+        k_anon=5,
+    )
 
 # --------------------------------------------------------------------
 # q329 — snapshot compaction (r11): the maintenance half of q327.
@@ -16872,69 +16073,65 @@ _init_q328()
 # content-identical, with history untouched.
 # --------------------------------------------------------------------
 
-def _init_q329() -> None:
 
-    @register(
-        "q329_snapshot_compaction",
-        """
+@register(
+    "q329_snapshot_compaction",
+    """
         SELECT o_orderkey, o_orderstatus, TRUE AS compacted
         FROM orders
         """,
-        doc="Snapshot-table compaction on the exact gate (sources/"
-            "snapshot.py SnapshotTable.compact): eight small append "
-            "commits (o_orderkey %% 8 slices) produce a file-tail of "
-            ">= 8 data files; compact() rewrites the current snapshot "
-            "into 4 larger files as commit v9. The gate hashes the "
-            "POST-compaction read row-level against plain SQL over "
-            "orders (content identity is the whole contract) and the "
-            "'compacted' column pins the file-count drop read from "
-            "the manifests (strictly fewer files after, older "
-            "versions still reference the originals — history "
-            "survives maintenance). At 100 TB compaction runs per "
-            "partition-bucket with a size target; the read path is "
-            "unchanged plain parquet scans.",
-    )
-    def q329_snapshot_compaction(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-        import uuid as _uuid
+    doc="Snapshot-table compaction on the exact gate (sources/"
+        "snapshot.py SnapshotTable.compact): eight small append "
+        "commits (o_orderkey %% 8 slices) produce a file-tail of "
+        ">= 8 data files; compact() rewrites the current snapshot "
+        "into 4 larger files as commit v9. The gate hashes the "
+        "POST-compaction read row-level against plain SQL over "
+        "orders (content identity is the whole contract) and the "
+        "'compacted' column pins the file-count drop read from "
+        "the manifests (strictly fewer files after, older "
+        "versions still reference the originals — history "
+        "survives maintenance). At 100 TB compaction runs per "
+        "partition-bucket with a size target; the read path is "
+        "unchanged plain parquet scans.",
+)
+def q329_snapshot_compaction(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import os as _os
+    import shutil as _shutil
+    import uuid as _uuid
 
-        from ..sources.snapshot import SnapshotTable
+    from ..sources.snapshot import SnapshotTable
 
-        tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-        final = f"{_SCRATCH}/snapshots/{tag}/q329_v1"
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    final = f"{_SCRATCH}/snapshots/{tag}/q329_v1"
 
-        def ready(p):
-            return SnapshotTable(p).versions() == list(range(1, 10))
+    def ready(p):
+        return SnapshotTable(p).versions() == list(range(1, 10))
 
-        if not ready(final):
-            tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
-            t = SnapshotTable(tmp)
-            orders = table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderstatus"
-            )
-            for i in range(8):
-                t.append(orders.where(F.col("o_orderkey") % 8 == i))
-            t.compact(spark, target_files=4)
-            try:
-                _os.makedirs(_os.path.dirname(final), exist_ok=True)
-                _os.rename(tmp, final)
-            except OSError:  # lost the publish race
-                _shutil.rmtree(tmp, ignore_errors=True)
-
-        t = SnapshotTable(final)
-        n_before = len(t.manifest(8)["files"])
-        n_after = len(t.manifest(9)["files"])
-        return t.read(spark, version=9).select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.lit(bool(n_after < n_before)).alias("compacted"),
+    if not ready(final):
+        tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
+        t = SnapshotTable(tmp)
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus"
         )
+        for i in range(8):
+            t.append(orders.where(F.col("o_orderkey") % 8 == i))
+        t.compact(spark, target_files=4)
+        try:
+            _os.makedirs(_os.path.dirname(final), exist_ok=True)
+            _os.rename(tmp, final)
+        except OSError:  # lost the publish race
+            _shutil.rmtree(tmp, ignore_errors=True)
 
-
-_init_q329()
+    t = SnapshotTable(final)
+    n_before = len(t.manifest(8)["files"])
+    n_after = len(t.manifest(9)["files"])
+    return t.read(spark, version=9).select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.lit(bool(n_after < n_before)).alias("compacted"),
+    )
 
 # --------------------------------------------------------------------
 # q330 — content-defined chunking dedup (r11): the STORAGE-level
@@ -16945,37 +16142,34 @@ _init_q329()
 # per-position with unnest(generate_series).
 # --------------------------------------------------------------------
 
-def _init_q330() -> None:
-    from ..functions.dedup import cdc_store_oracle_sql, cdc_store_stats
-
-    @register(
-        "q330_cdc_chunk_dedup",
-        cdc_store_oracle_sql(),
-        doc="Content-defined chunking + corpus-wide chunk dedup on the "
-            "exact gate (functions/dedup.py cdc_chunks / "
-            "cdc_store_stats): every document explodes into chunks cut "
-            "where md5 of the 16-char sliding window satisfies a 1/32 "
-            "mask (stateless predicate -> SQL-replayable; production "
-            "gear-hash CDC with min/max clamps changes constants, not "
-            "plan shape), then a chunk is charged to the corpus-wide "
-            "FIRST occurrence of its hash (the skew-safe min-key "
-            "winner rule) and each document reports its incremental "
-            "store cost (n_chunks, n_new_chunks, stored_chars). On "
-            "this corpus ~11%% of chunks are duplicates, so the store "
-            "genuinely shrinks. Plan: one zero-Exchange chunker "
-            "mapInPandas, then exactly two inherent shuffles (window "
-            "by chunk hash, re-aggregate by doc). At 100 TB chunk "
-            "hashes are the dedup KEY — the store ships (hash -> "
-            "bytes) once per chunk, the doc table ships hash lists; "
-            "this is how crawl snapshots with 90%% overlap stop "
-            "costing 90%% redundant storage.",
-    )
-    def q330_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-        return cdc_store_stats(docs, "doc_id", "text")
+from ..functions.dedup import cdc_store_oracle_sql, cdc_store_stats
 
 
-_init_q330()
+@register(
+    "q330_cdc_chunk_dedup",
+    cdc_store_oracle_sql(),
+    doc="Content-defined chunking + corpus-wide chunk dedup on the "
+        "exact gate (functions/dedup.py cdc_chunks / "
+        "cdc_store_stats): every document explodes into chunks cut "
+        "where md5 of the 16-char sliding window satisfies a 1/32 "
+        "mask (stateless predicate -> SQL-replayable; production "
+        "gear-hash CDC with min/max clamps changes constants, not "
+        "plan shape), then a chunk is charged to the corpus-wide "
+        "FIRST occurrence of its hash (the skew-safe min-key "
+        "winner rule) and each document reports its incremental "
+        "store cost (n_chunks, n_new_chunks, stored_chars). On "
+        "this corpus ~11%% of chunks are duplicates, so the store "
+        "genuinely shrinks. Plan: one zero-Exchange chunker "
+        "mapInPandas, then exactly two inherent shuffles (window "
+        "by chunk hash, re-aggregate by doc). At 100 TB chunk "
+        "hashes are the dedup KEY — the store ships (hash -> "
+        "bytes) once per chunk, the doc table ships hash lists; "
+        "this is how crawl snapshots with 90%% overlap stop "
+        "costing 90%% redundant storage.",
+)
+def q330_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    return cdc_store_stats(docs, "doc_id", "text")
 
 # --------------------------------------------------------------------
 # q331 — incremental change reads (r11): the consumer half of the
@@ -16988,57 +16182,53 @@ _init_q330()
 # double-counting rewritten rows.
 # --------------------------------------------------------------------
 
-def _init_q331() -> None:
 
-    @register(
-        "q331_snapshot_changes",
-        """
+@register(
+    "q331_snapshot_changes",
+    """
         SELECT 2 AS to_version, o_orderkey, o_orderstatus
         FROM orders WHERE o_orderkey % 3 = 1
         UNION ALL
         SELECT 9 AS to_version, o_orderkey, o_orderstatus
         FROM orders WHERE o_orderkey % 8 IN (5, 6, 7)
         """,
-        doc="Incremental snapshot consumption on the exact gate "
-            "(sources/snapshot.py SnapshotTable.changes): over q327's "
-            "table, changes(1 -> 2) returns exactly the v2 append "
-            "(orderkey %% 3 = 1, scanned from only the files that "
-            "joined the manifest), and over q329's eight-append table, "
-            "changes(5 -> 9)... would span the compaction commit and "
-            "RAISES (append-only contract) — so the query reads "
-            "changes(5 -> 8) (appends 6,7,8 = orderkey %% 8 in 5,6,7) "
-            "and labels it with the to_version 9 twin the oracle "
-            "reconstructs; the rewrite-detection behavior itself is "
-            "pinned by unit test. Both legs hash row-level. The scan "
-            "cost claim is structural: version resolution is a "
-            "manifest diff, the plan contains scans of the delta "
-            "files only (plan row-count equals the delta).",
+    doc="Incremental snapshot consumption on the exact gate "
+        "(sources/snapshot.py SnapshotTable.changes): over q327's "
+        "table, changes(1 -> 2) returns exactly the v2 append "
+        "(orderkey %% 3 = 1, scanned from only the files that "
+        "joined the manifest), and over q329's eight-append table, "
+        "changes(5 -> 9)... would span the compaction commit and "
+        "RAISES (append-only contract) — so the query reads "
+        "changes(5 -> 8) (appends 6,7,8 = orderkey %% 8 in 5,6,7) "
+        "and labels it with the to_version 9 twin the oracle "
+        "reconstructs; the rewrite-detection behavior itself is "
+        "pinned by unit test. Both legs hash row-level. The scan "
+        "cost claim is structural: version resolution is a "
+        "manifest diff, the plan contains scans of the delta "
+        "files only (plan row-count equals the delta).",
+)
+def q331_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os as _os
+
+    from ..sources.snapshot import SnapshotTable
+
+    # both fixture tables exist: q327/q329 build them on first run
+    for dep in ("q327_snapshot_time_travel", "q329_snapshot_compaction"):
+        QUERIES[dep].fn(spark, sf_dir).limit(1).count()
+
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    t27 = SnapshotTable(f"{_SCRATCH}/snapshots/{tag}/q327_v1")
+    t29 = SnapshotTable(f"{_SCRATCH}/snapshots/{tag}/q329_v1")
+
+    leg1 = t27.changes(spark, 1, 2).select(
+        F.lit(2).alias("to_version"), "o_orderkey", "o_orderstatus"
     )
-    def q331_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-
-        from ..sources.snapshot import SnapshotTable
-
-        # both fixture tables exist: q327/q329 build them on first run
-        for dep in ("q327_snapshot_time_travel", "q329_snapshot_compaction"):
-            QUERIES[dep].fn(spark, sf_dir).limit(1).count()
-
-        tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-        t27 = SnapshotTable(f"{_SCRATCH}/snapshots/{tag}/q327_v1")
-        t29 = SnapshotTable(f"{_SCRATCH}/snapshots/{tag}/q329_v1")
-
-        leg1 = t27.changes(spark, 1, 2).select(
-            F.lit(2).alias("to_version"), "o_orderkey", "o_orderstatus"
-        )
-        # appends 6..8 on the q329 table (v9 is the compaction rewrite,
-        # which changes() refuses by contract — unit-tested)
-        leg2 = t29.changes(spark, 5, 8).select(
-            F.lit(9).alias("to_version"), "o_orderkey", "o_orderstatus"
-        )
-        return leg1.unionByName(leg2)
-
-
-_init_q331()
+    # appends 6..8 on the q329 table (v9 is the compaction rewrite,
+    # which changes() refuses by contract — unit-tested)
+    leg2 = t29.changes(spark, 5, 8).select(
+        F.lit(9).alias("to_version"), "o_orderkey", "o_orderstatus"
+    )
+    return leg1.unionByName(leg2)
 
 # --------------------------------------------------------------------
 # q332 — snapshot vacuum (r11): the storage-cost counterpart of time
@@ -17050,82 +16240,78 @@ _init_q331()
 # compact -> vacuum.
 # --------------------------------------------------------------------
 
-def _init_q332() -> None:
 
-    @register(
-        "q332_snapshot_vacuum",
-        """
+@register(
+    "q332_snapshot_vacuum",
+    """
         SELECT o_orderkey, o_orderstatus, TRUE AS vacuumed
         FROM orders
         """,
-        doc="Snapshot vacuum on the exact gate (sources/snapshot.py "
-            "SnapshotTable.vacuum): a four-commit history (two "
-            "appends, an OVERWRITE that replaces the file set, an "
-            "append) is vacuumed with retain_last=2 — v1/v2 manifests "
-            "expire, the files only they referenced are reclaimed, "
-            "and the surviving head (v3 overwrite of orderkey %% 4 in "
-            "0-2, plus v4's %% 4 = 3 append = the full orders table) "
-            "is hashed row-level against plain SQL. The 'vacuumed' "
-            "column pins the invariants read from disk: files were "
-            "actually removed, the retained versions still read, and "
-            "expired versions raise (unit-tested; here reflected as a "
-            "literal so the gate hash covers it). Orphan reclamation "
-            "and the refusal to vacuum everything are unit-tested.",
-    )
-    def q332_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-        import uuid as _uuid
+    doc="Snapshot vacuum on the exact gate (sources/snapshot.py "
+        "SnapshotTable.vacuum): a four-commit history (two "
+        "appends, an OVERWRITE that replaces the file set, an "
+        "append) is vacuumed with retain_last=2 — v1/v2 manifests "
+        "expire, the files only they referenced are reclaimed, "
+        "and the surviving head (v3 overwrite of orderkey %% 4 in "
+        "0-2, plus v4's %% 4 = 3 append = the full orders table) "
+        "is hashed row-level against plain SQL. The 'vacuumed' "
+        "column pins the invariants read from disk: files were "
+        "actually removed, the retained versions still read, and "
+        "expired versions raise (unit-tested; here reflected as a "
+        "literal so the gate hash covers it). Orphan reclamation "
+        "and the refusal to vacuum everything are unit-tested.",
+)
+def q332_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os as _os
+    import shutil as _shutil
+    import uuid as _uuid
 
-        from ..sources.snapshot import SnapshotTable
+    from ..sources.snapshot import SnapshotTable
 
-        tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-        final = f"{_SCRATCH}/snapshots/{tag}/q332_v1"
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    final = f"{_SCRATCH}/snapshots/{tag}/q332_v1"
 
-        def ready(p):
-            t = SnapshotTable(p)
-            return t.versions() == [3, 4] and _os.path.exists(
-                _os.path.join(p, "_VACUUMED")
-            )
-
-        if not ready(final):
-            tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
-            t = SnapshotTable(tmp)
-            orders = table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderstatus"
-            )
-            t.append(orders.where(F.col("o_orderkey") % 4 == 0))
-            t.append(orders.where(F.col("o_orderkey") % 4 == 1))
-            t.overwrite(orders.where(F.col("o_orderkey") % 4 < 3))
-            t.append(orders.where(F.col("o_orderkey") % 4 == 3))
-            stats = t.vacuum(retain_last=2)
-            ok = (
-                stats["files_removed"] > 0
-                and t.versions() == [3, 4]
-            )
-            if ok:  # expired version must refuse to read
-                try:
-                    t.read(spark, 1)
-                    ok = False
-                except ValueError:
-                    pass
-            with open(_os.path.join(tmp, "_VACUUMED"), "w") as f:
-                f.write("ok" if ok else "fail")
-            try:
-                _os.makedirs(_os.path.dirname(final), exist_ok=True)
-                _os.rename(tmp, final)
-            except OSError:  # lost the publish race
-                _shutil.rmtree(tmp, ignore_errors=True)
-
-        t = SnapshotTable(final)
-        with open(_os.path.join(final, "_VACUUMED")) as f:
-            ok = f.read() == "ok"
-        return t.read(spark, version=4).select(
-            "o_orderkey", "o_orderstatus", F.lit(ok).alias("vacuumed")
+    def ready(p):
+        t = SnapshotTable(p)
+        return t.versions() == [3, 4] and _os.path.exists(
+            _os.path.join(p, "_VACUUMED")
         )
 
+    if not ready(final):
+        tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
+        t = SnapshotTable(tmp)
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus"
+        )
+        t.append(orders.where(F.col("o_orderkey") % 4 == 0))
+        t.append(orders.where(F.col("o_orderkey") % 4 == 1))
+        t.overwrite(orders.where(F.col("o_orderkey") % 4 < 3))
+        t.append(orders.where(F.col("o_orderkey") % 4 == 3))
+        stats = t.vacuum(retain_last=2)
+        ok = (
+            stats["files_removed"] > 0
+            and t.versions() == [3, 4]
+        )
+        if ok:  # expired version must refuse to read
+            try:
+                t.read(spark, 1)
+                ok = False
+            except ValueError:
+                pass
+        with open(_os.path.join(tmp, "_VACUUMED"), "w") as f:
+            f.write("ok" if ok else "fail")
+        try:
+            _os.makedirs(_os.path.dirname(final), exist_ok=True)
+            _os.rename(tmp, final)
+        except OSError:  # lost the publish race
+            _shutil.rmtree(tmp, ignore_errors=True)
 
-_init_q332()
+    t = SnapshotTable(final)
+    with open(_os.path.join(final, "_VACUUMED")) as f:
+        ok = f.read() == "ok"
+    return t.read(spark, version=4).select(
+        "o_orderkey", "o_orderstatus", F.lit(ok).alias("vacuumed")
+    )
 
 # --------------------------------------------------------------------
 # q333 — manifest zonemaps: file pruning from commit-time stats
@@ -17139,74 +16325,70 @@ _init_q332()
 # the same columns so pruning survives maintenance.
 # --------------------------------------------------------------------
 
-def _init_q333() -> None:
 
-    @register(
-        "q333_snapshot_zonemap_scan",
-        """
+@register(
+    "q333_snapshot_zonemap_scan",
+    """
         WITH n AS (SELECT count(*) AS n FROM orders)
         SELECT o_orderkey, o_orderstatus, TRUE AS pruned
         FROM orders, n
         WHERE o_orderkey BETWEEN n.n // 4 AND n.n // 2
         """,
-        doc="Zonemap-pruned snapshot reads on the exact gate (sources/"
-            "snapshot.py append(stats_cols=...) / scan_files / "
-            "read(where=...)): orders commits range-partitioned into 8 "
-            "files with per-file o_orderkey [min,max] captured from "
-            "parquet footers into the manifest; the gate reads the "
-            "[n/4, n/2] key range and hashes row-level against plain "
-            "SQL. The 'pruned' column pins the structural claim: "
-            "scan_files() selects a strict subset of the manifest "
-            "(range partitioning makes key ranges disjoint, so ~3/4 "
-            "of files prove themselves irrelevant) while the result "
-            "stays exact because the predicate re-applies on the "
-            "surviving scans. At 100 TB this is the difference "
-            "between a driver-side metadata pass and opening every "
-            "file's footer.",
-    )
-    def q333_snapshot_zonemap_scan(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-        import uuid as _uuid
+    doc="Zonemap-pruned snapshot reads on the exact gate (sources/"
+        "snapshot.py append(stats_cols=...) / scan_files / "
+        "read(where=...)): orders commits range-partitioned into 8 "
+        "files with per-file o_orderkey [min,max] captured from "
+        "parquet footers into the manifest; the gate reads the "
+        "[n/4, n/2] key range and hashes row-level against plain "
+        "SQL. The 'pruned' column pins the structural claim: "
+        "scan_files() selects a strict subset of the manifest "
+        "(range partitioning makes key ranges disjoint, so ~3/4 "
+        "of files prove themselves irrelevant) while the result "
+        "stays exact because the predicate re-applies on the "
+        "surviving scans. At 100 TB this is the difference "
+        "between a driver-side metadata pass and opening every "
+        "file's footer.",
+)
+def q333_snapshot_zonemap_scan(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import os as _os
+    import shutil as _shutil
+    import uuid as _uuid
 
-        from ..sources.snapshot import SnapshotTable
+    from ..sources.snapshot import SnapshotTable
 
-        tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-        final = f"{_SCRATCH}/snapshots/{tag}/q333_v1"
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    final = f"{_SCRATCH}/snapshots/{tag}/q333_v1"
 
-        def ready(p):
-            t = SnapshotTable(p)
-            return t.versions() == [1] and t.manifest(1).get("stats")
+    def ready(p):
+        t = SnapshotTable(p)
+        return t.versions() == [1] and t.manifest(1).get("stats")
 
-        if not ready(final):
-            tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
-            t = SnapshotTable(tmp)
-            orders = (
-                table(spark, sf_dir, "orders")
-                .select("o_orderkey", "o_orderstatus")
-                .repartitionByRange(8, "o_orderkey")
-            )
-            t.append(orders, stats_cols=["o_orderkey"])
-            try:
-                _os.makedirs(_os.path.dirname(final), exist_ok=True)
-                _os.rename(tmp, final)
-            except OSError:  # lost the publish race
-                _shutil.rmtree(tmp, ignore_errors=True)
-
-        t = SnapshotTable(final)
-        n = table(spark, sf_dir, "orders").count()
-        where = ("o_orderkey", n // 4, n // 2)
-        pruned = len(t.scan_files(1, where)) < len(t.manifest(1)["files"])
-        return t.read(spark, 1, where=where).select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.lit(bool(pruned)).alias("pruned"),
+    if not ready(final):
+        tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
+        t = SnapshotTable(tmp)
+        orders = (
+            table(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_orderstatus")
+            .repartitionByRange(8, "o_orderkey")
         )
+        t.append(orders, stats_cols=["o_orderkey"])
+        try:
+            _os.makedirs(_os.path.dirname(final), exist_ok=True)
+            _os.rename(tmp, final)
+        except OSError:  # lost the publish race
+            _shutil.rmtree(tmp, ignore_errors=True)
 
-
-_init_q333()
+    t = SnapshotTable(final)
+    n = table(spark, sf_dir, "orders").count()
+    where = ("o_orderkey", n // 4, n // 2)
+    pruned = len(t.scan_files(1, where)) < len(t.manifest(1)["files"])
+    return t.read(spark, 1, where=where).select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.lit(bool(pruned)).alias("pruned"),
+    )
 
 # --------------------------------------------------------------------
 # q334 — GROUPED t-digest quantiles (r11): the per-key twin of q326
@@ -17218,12 +16400,12 @@ _init_q333()
 # collect anywhere. The same merge rolls partials across days/shards.
 # --------------------------------------------------------------------
 
-def _init_q334() -> None:
-    _GQS = [0.1, 0.5, 0.9]
+_Q334_GQS = [0.1, 0.5, 0.9]
 
-    @register(
-        "q334_grouped_tdigest",
-        """
+
+@register(
+    "q334_grouped_tdigest",
+    """
         WITH v AS (
           SELECT o_orderpriority AS priority, o_totalprice AS val
           FROM orders
@@ -17245,73 +16427,70 @@ def _init_q334() -> None:
           ON r.priority = n.priority
          AND r.rn = CAST(CEIL(g.q * n.n) AS BIGINT)
         """,
-        doc="Per-group t-digest quantiles on the exact gate (functions/"
-            "sketch.py tdigest_group_partials / tdigest_group_quantiles"
-            "): order-value quantiles per priority class. Unlike q326 "
-            "(global digest, driver merge) this is the fully "
-            "distributed rollup: partition-local grouped partials -> "
-            "applyInPandas merge keyed by group -> broadcast of the "
-            "(groups x qs)-row estimates back onto the data for the "
-            "in-plan audit (each estimate's within-group rank must sit "
-            "inside q +/- (0.005 + 1/n_g), the digest bound plus the "
-            "rank-quantization floor). HASHED output is the exact "
-            "per-group discrete quantile (value at rank ceil(q*n_g), "
-            "computed with PARTITIONED rank windows — the exact side "
-            "scales here, unlike a global sort) plus the audit bit. "
-            "ceil agrees cross-engine because both sides form the "
-            "rank as DOUBLE q times BIGINT n.",
+    doc="Per-group t-digest quantiles on the exact gate (functions/"
+        "sketch.py tdigest_group_partials / tdigest_group_quantiles"
+        "): order-value quantiles per priority class. Unlike q326 "
+        "(global digest, driver merge) this is the fully "
+        "distributed rollup: partition-local grouped partials -> "
+        "applyInPandas merge keyed by group -> broadcast of the "
+        "(groups x qs)-row estimates back onto the data for the "
+        "in-plan audit (each estimate's within-group rank must sit "
+        "inside q +/- (0.005 + 1/n_g), the digest bound plus the "
+        "rank-quantization floor). HASHED output is the exact "
+        "per-group discrete quantile (value at rank ceil(q*n_g), "
+        "computed with PARTITIONED rank windows — the exact side "
+        "scales here, unlike a global sort) plus the audit bit. "
+        "ceil agrees cross-engine because both sides form the "
+        "rank as DOUBLE q times BIGINT n.",
+)
+def q334_grouped_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.sketch import tdigest_group_quantiles
+
+    v = table(spark, sf_dir, "orders").select(
+        F.col("o_orderpriority").alias("priority"),
+        F.col("o_totalprice").alias("val"),
     )
-    def q334_grouped_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.sketch import tdigest_group_quantiles
+    ests = tdigest_group_quantiles(v, "priority", "val", _Q334_GQS)
 
-        v = table(spark, sf_dir, "orders").select(
-            F.col("o_orderpriority").alias("priority"),
-            F.col("o_totalprice").alias("val"),
+    # in-plan audit: one pass over data x broadcast estimates
+    audit = (
+        v.join(F.broadcast(ests), "priority")
+        .groupBy("priority", "q", "est")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                (F.col("val") <= F.col("est")).cast("bigint")
+            ).alias("n_le"),
         )
-        ests = tdigest_group_quantiles(v, "priority", "val", _GQS)
-
-        # in-plan audit: one pass over data x broadcast estimates
-        audit = (
-            v.join(F.broadcast(ests), "priority")
-            .groupBy("priority", "q", "est")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    (F.col("val") <= F.col("est")).cast("bigint")
-                ).alias("n_le"),
-            )
-            .select(
-                "priority",
-                "q",
-                "n",
-                (
-                    F.abs(F.col("n_le") / F.col("n") - F.col("q"))
-                    <= F.lit(0.005) + 1.0 / F.col("n")
-                ).alias("sketch_ok"),
-            )
-        )
-
-        # exact discrete quantile per group: partitioned rank window
-        w = Window.partitionBy("priority").orderBy("val")
-        ranked = v.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        targets = audit.select(
+        .select(
             "priority",
             "q",
+            "n",
+            (
+                F.abs(F.col("n_le") / F.col("n") - F.col("q"))
+                <= F.lit(0.005) + 1.0 / F.col("n")
+            ).alias("sketch_ok"),
+        )
+    )
+
+    # exact discrete quantile per group: partitioned rank window
+    w = Window.partitionBy("priority").orderBy("val")
+    ranked = v.withColumn("rn", F.row_number().over(w).cast("bigint"))
+    targets = audit.select(
+        "priority",
+        "q",
+        "sketch_ok",
+        F.ceil(F.col("q") * F.col("n")).cast("bigint").alias("rn"),
+    )
+    return (
+        ranked.join(F.broadcast(targets), ["priority", "rn"])
+        .select(
+            "priority",
+            "q",
+            F.col("val").alias("v_exact"),
             "sketch_ok",
-            F.ceil(F.col("q") * F.col("n")).cast("bigint").alias("rn"),
         )
-        return (
-            ranked.join(F.broadcast(targets), ["priority", "rn"])
-            .select(
-                "priority",
-                "q",
-                F.col("val").alias("v_exact"),
-                "sketch_ok",
-            )
-        )
-
-
-_init_q334()
+    )
 
 # --------------------------------------------------------------------
 # q336 — snapshot schema evolution (r11): additive column evolution
@@ -17323,71 +16502,67 @@ _init_q334()
 # column set.
 # --------------------------------------------------------------------
 
-def _init_q336() -> None:
 
-    @register(
-        "q336_snapshot_schema_evolution",
-        """
+@register(
+    "q336_snapshot_schema_evolution",
+    """
         SELECT o_orderkey, o_orderstatus,
                CASE WHEN o_orderkey % 2 = 0 THEN NULL
                     ELSE o_orderpriority END AS o_orderpriority
         FROM orders
         """,
-        doc="Additive schema evolution on the exact gate (sources/"
-            "snapshot.py manifest 'schema' field): v1 commits half of "
-            "orders with two columns, v2 appends the other half WITH "
-            "o_orderpriority. The latest read scans with v2's schema, "
-            "so v1's files null-fill the new column (hashed row-level "
-            "against the CASE reconstruction); the AS-OF v1 read still "
-            "presents exactly the old two-column schema (pinned by "
-            "unit test). No file is rewritten and no footer sweep "
-            "happens — the schema rides in the manifest, which is the "
-            "difference between O(1) metadata and O(files) mergeSchema "
-            "at 100 TB.",
-    )
-    def q336_snapshot_schema_evolution(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-        import uuid as _uuid
+    doc="Additive schema evolution on the exact gate (sources/"
+        "snapshot.py manifest 'schema' field): v1 commits half of "
+        "orders with two columns, v2 appends the other half WITH "
+        "o_orderpriority. The latest read scans with v2's schema, "
+        "so v1's files null-fill the new column (hashed row-level "
+        "against the CASE reconstruction); the AS-OF v1 read still "
+        "presents exactly the old two-column schema (pinned by "
+        "unit test). No file is rewritten and no footer sweep "
+        "happens — the schema rides in the manifest, which is the "
+        "difference between O(1) metadata and O(files) mergeSchema "
+        "at 100 TB.",
+)
+def q336_snapshot_schema_evolution(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import os as _os
+    import shutil as _shutil
+    import uuid as _uuid
 
-        from ..sources.snapshot import SnapshotTable
+    from ..sources.snapshot import SnapshotTable
 
-        tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-        final = f"{_SCRATCH}/snapshots/{tag}/q336_v1"
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    final = f"{_SCRATCH}/snapshots/{tag}/q336_v1"
 
-        def ready(p):
-            t = SnapshotTable(p)
-            return t.versions() == [1, 2] and t.manifest(2).get("schema")
+    def ready(p):
+        t = SnapshotTable(p)
+        return t.versions() == [1, 2] and t.manifest(2).get("schema")
 
-        if not ready(final):
-            tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
-            t = SnapshotTable(tmp)
-            orders = table(spark, sf_dir, "orders")
-            t.append(
-                orders.where(F.col("o_orderkey") % 2 == 0).select(
-                    "o_orderkey", "o_orderstatus"
-                )
+    if not ready(final):
+        tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
+        t = SnapshotTable(tmp)
+        orders = table(spark, sf_dir, "orders")
+        t.append(
+            orders.where(F.col("o_orderkey") % 2 == 0).select(
+                "o_orderkey", "o_orderstatus"
             )
-            t.append(
-                orders.where(F.col("o_orderkey") % 2 == 1).select(
-                    "o_orderkey", "o_orderstatus", "o_orderpriority"
-                )
-            )
-            try:
-                _os.makedirs(_os.path.dirname(final), exist_ok=True)
-                _os.rename(tmp, final)
-            except OSError:  # lost the publish race
-                _shutil.rmtree(tmp, ignore_errors=True)
-
-        t = SnapshotTable(final)
-        return t.read(spark).select(
-            "o_orderkey", "o_orderstatus", "o_orderpriority"
         )
+        t.append(
+            orders.where(F.col("o_orderkey") % 2 == 1).select(
+                "o_orderkey", "o_orderstatus", "o_orderpriority"
+            )
+        )
+        try:
+            _os.makedirs(_os.path.dirname(final), exist_ok=True)
+            _os.rename(tmp, final)
+        except OSError:  # lost the publish race
+            _shutil.rmtree(tmp, ignore_errors=True)
 
-
-_init_q336()
+    t = SnapshotTable(final)
+    return t.read(spark).select(
+        "o_orderkey", "o_orderstatus", "o_orderpriority"
+    )
 
 # --------------------------------------------------------------------
 # q337 — merge-on-read positional deletes (r11): the Iceberg-v2 half
@@ -17400,11 +16575,10 @@ _init_q336()
 # never resurrect mor-deleted rows (unit-tested).
 # --------------------------------------------------------------------
 
-def _init_q337() -> None:
 
-    @register(
-        "q337_snapshot_mor_delete",
-        """
+@register(
+    "q337_snapshot_mor_delete",
+    """
         SELECT 1 AS version, o_orderkey, o_orderstatus,
                TRUE AS no_rewrite
         FROM orders
@@ -17413,66 +16587,63 @@ def _init_q337() -> None:
                TRUE AS no_rewrite
         FROM orders WHERE o_orderstatus <> 'O'
         """,
-        doc="Merge-on-read positional deletes on the exact gate "
-            "(sources/snapshot.py delete(mode='mor')): v1 commits all "
-            "of orders; v2 MOR-deletes status 'O' rows — the commit "
-            "writes ONE delete-vector sidecar (parquet "
-            "_metadata.row_index positions per file, stable for "
-            "immutable files) and not a single data file. Both "
-            "versions read back and hash row-level; 'no_rewrite' pins "
-            "the structural claim (v2's file set is IDENTICAL to "
-            "v1's, checked from the manifests). The read applies the "
-            "vector as a broadcast anti-join on (file, position) — "
-            "at 100 TB the sidecar becomes a roaring bitmap per file "
-            "with the same join shape, and compact() turns pending "
-            "vectors back into clean files when the read-tax "
-            "outgrows the rewrite cost.",
-    )
-    def q337_snapshot_mor_delete(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-        import uuid as _uuid
+    doc="Merge-on-read positional deletes on the exact gate "
+        "(sources/snapshot.py delete(mode='mor')): v1 commits all "
+        "of orders; v2 MOR-deletes status 'O' rows — the commit "
+        "writes ONE delete-vector sidecar (parquet "
+        "_metadata.row_index positions per file, stable for "
+        "immutable files) and not a single data file. Both "
+        "versions read back and hash row-level; 'no_rewrite' pins "
+        "the structural claim (v2's file set is IDENTICAL to "
+        "v1's, checked from the manifests). The read applies the "
+        "vector as a broadcast anti-join on (file, position) — "
+        "at 100 TB the sidecar becomes a roaring bitmap per file "
+        "with the same join shape, and compact() turns pending "
+        "vectors back into clean files when the read-tax "
+        "outgrows the rewrite cost.",
+)
+def q337_snapshot_mor_delete(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import os as _os
+    import shutil as _shutil
+    import uuid as _uuid
 
-        from ..sources.snapshot import SnapshotTable
+    from ..sources.snapshot import SnapshotTable
 
-        tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-        final = f"{_SCRATCH}/snapshots/{tag}/q337_v1"
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    final = f"{_SCRATCH}/snapshots/{tag}/q337_v1"
 
-        def ready(p):
-            t = SnapshotTable(p)
-            return t.versions() == [1, 2] and t.manifest(2).get("deletes")
+    def ready(p):
+        t = SnapshotTable(p)
+        return t.versions() == [1, 2] and t.manifest(2).get("deletes")
 
-        if not ready(final):
-            tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
-            t = SnapshotTable(tmp)
-            orders = table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderstatus"
-            )
-            t.append(orders.repartition(4))
-            t.delete(spark, "o_orderstatus = 'O'", mode="mor")
-            try:
-                _os.makedirs(_os.path.dirname(final), exist_ok=True)
-                _os.rename(tmp, final)
-            except OSError:  # lost the publish race
-                _shutil.rmtree(tmp, ignore_errors=True)
+    if not ready(final):
+        tmp = f"{final}.build-{_uuid.uuid4().hex[:8]}"
+        t = SnapshotTable(tmp)
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus"
+        )
+        t.append(orders.repartition(4))
+        t.delete(spark, "o_orderstatus = 'O'", mode="mor")
+        try:
+            _os.makedirs(_os.path.dirname(final), exist_ok=True)
+            _os.rename(tmp, final)
+        except OSError:  # lost the publish race
+            _shutil.rmtree(tmp, ignore_errors=True)
 
-        t = SnapshotTable(final)
-        same_files = t.manifest(1)["files"] == t.manifest(2)["files"]
-        out = None
-        for v in (1, 2):
-            part = t.read(spark, version=v).select(
-                F.lit(v).alias("version"),
-                "o_orderkey",
-                "o_orderstatus",
-                F.lit(bool(same_files)).alias("no_rewrite"),
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
-
-
-_init_q337()
+    t = SnapshotTable(final)
+    same_files = t.manifest(1)["files"] == t.manifest(2)["files"]
+    out = None
+    for v in (1, 2):
+        part = t.read(spark, version=v).select(
+            F.lit(v).alias("version"),
+            "o_orderkey",
+            "o_orderstatus",
+            F.lit(bool(same_files)).alias("no_rewrite"),
+        )
+        out = part if out is None else out.unionByName(part)
+    return out
 
 # --------------------------------------------------------------------
 # q335 — streaming quantile monitor (r11): a t-digest per key carried
@@ -17486,11 +16657,10 @@ _init_q337()
 # estimates against batch-exact quantiles.
 # --------------------------------------------------------------------
 
-def _init_q335() -> None:
 
-    @register(
-        "q335_stream_quantiles",
-        """
+@register(
+    "q335_stream_quantiles",
+    """
         WITH v AS (
           SELECT event_type, value AS val FROM events
           WHERE value IS NOT NULL
@@ -17513,104 +16683,101 @@ def _init_q335() -> None:
           ON r90.event_type = n.event_type
          AND r90.rn = CAST(CEIL(CAST(0.9 AS DOUBLE) * n.n) AS BIGINT)
         """,
-        doc="Streaming per-key quantile monitor on the exact gate "
-            "(streaming/stream.py quantile_stream): the events table "
-            "replays through a real availableNow stream; each "
-            "event_type carries a t-digest in GroupState (a few KB of "
-            "centroids — state NEVER grows with the stream, the "
-            "mergeable-sketch property doing for quantiles what "
-            "watermarks do for windows). The freshest emission per "
-            "key (monotonic seq) yields the stream's p50/p90 "
-            "estimates plus its exact row count; the gate hashes the "
-            "batch-exact discrete quantiles (partitioned rank "
-            "windows) and sketch_ok = the in-plan audit that each "
-            "STREAM estimate's true rank sits within q +/- (0.005 + "
-            "1/n_g) AND the stream's count equals the batch count "
-            "(end-to-end no-loss proof). Same audit pattern as "
-            "q326/q334, now across the batch/stream boundary.",
+    doc="Streaming per-key quantile monitor on the exact gate "
+        "(streaming/stream.py quantile_stream): the events table "
+        "replays through a real availableNow stream; each "
+        "event_type carries a t-digest in GroupState (a few KB of "
+        "centroids — state NEVER grows with the stream, the "
+        "mergeable-sketch property doing for quantiles what "
+        "watermarks do for windows). The freshest emission per "
+        "key (monotonic seq) yields the stream's p50/p90 "
+        "estimates plus its exact row count; the gate hashes the "
+        "batch-exact discrete quantiles (partitioned rank "
+        "windows) and sketch_ok = the in-plan audit that each "
+        "STREAM estimate's true rank sits within q +/- (0.005 + "
+        "1/n_g) AND the stream's count equals the batch count "
+        "(end-to-end no-loss proof). Same audit pattern as "
+        "q326/q334, now across the batch/stream boundary.",
+)
+def q335_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..streaming.stream import quantile_stream
+
+    def build(source):
+        return quantile_stream(source())
+
+    sink = _replay_events(
+        spark,
+        sf_dir,
+        ["event_id", "ts", "event_type", "value"],
+        build,
+        mode="update",
+        sink_prefix="q335",
     )
-    def q335_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..streaming.stream import quantile_stream
+    w = Window.partitionBy("grp").orderBy(F.col("seq").desc())
+    final = (
+        sink.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("grp", "n_seen", "p50", "p90")
+    )
 
-        def build(source):
-            return quantile_stream(source())
-
-        sink = _replay_events(
-            spark,
-            sf_dir,
-            ["event_id", "ts", "event_type", "value"],
-            build,
-            mode="update",
-            sink_prefix="q335",
+    v = (
+        table(spark, sf_dir, "events")
+        .where(F.col("value").isNotNull())
+        .select(F.col("event_type"), F.col("value").alias("val"))
+    )
+    audit = (
+        v.join(F.broadcast(final), v.event_type == F.col("grp"))
+        .groupBy("event_type", "n_seen", "p50", "p90")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("val") <= F.col("p50")).cast("bigint")).alias(
+                "n50"
+            ),
+            F.sum((F.col("val") <= F.col("p90")).cast("bigint")).alias(
+                "n90"
+            ),
         )
-        w = Window.partitionBy("grp").orderBy(F.col("seq").desc())
-        final = (
-            sink.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("grp", "n_seen", "p50", "p90")
-        )
-
-        v = (
-            table(spark, sf_dir, "events")
-            .where(F.col("value").isNotNull())
-            .select(F.col("event_type"), F.col("value").alias("val"))
-        )
-        audit = (
-            v.join(F.broadcast(final), v.event_type == F.col("grp"))
-            .groupBy("event_type", "n_seen", "p50", "p90")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("val") <= F.col("p50")).cast("bigint")).alias(
-                    "n50"
-                ),
-                F.sum((F.col("val") <= F.col("p90")).cast("bigint")).alias(
-                    "n90"
-                ),
-            )
-            .select(
-                "event_type",
-                "n",
-                (
-                    (F.col("n_seen") == F.col("n"))
-                    & (
-                        F.abs(F.col("n50") / F.col("n") - 0.5)
-                        <= F.lit(0.005) + 1.0 / F.col("n")
-                    )
-                    & (
-                        F.abs(F.col("n90") / F.col("n") - 0.9)
-                        <= F.lit(0.005) + 1.0 / F.col("n")
-                    )
-                ).alias("sketch_ok"),
-            )
-        )
-
-        wq = Window.partitionBy("event_type").orderBy("val")
-        ranked = v.withColumn("rn", F.row_number().over(wq).cast("bigint"))
-        targets = audit.select(
+        .select(
             "event_type",
+            "n",
+            (
+                (F.col("n_seen") == F.col("n"))
+                & (
+                    F.abs(F.col("n50") / F.col("n") - 0.5)
+                    <= F.lit(0.005) + 1.0 / F.col("n")
+                )
+                & (
+                    F.abs(F.col("n90") / F.col("n") - 0.9)
+                    <= F.lit(0.005) + 1.0 / F.col("n")
+                )
+            ).alias("sketch_ok"),
+        )
+    )
+
+    wq = Window.partitionBy("event_type").orderBy("val")
+    ranked = v.withColumn("rn", F.row_number().over(wq).cast("bigint"))
+    targets = audit.select(
+        "event_type",
+        "sketch_ok",
+        F.col("n").alias("n_events"),
+        F.ceil(F.lit(0.5) * F.col("n")).cast("bigint").alias("rn50"),
+        F.ceil(F.lit(0.9) * F.col("n")).cast("bigint").alias("rn90"),
+    )
+    joined = ranked.join(F.broadcast(targets), "event_type").where(
+        (F.col("rn") == F.col("rn50")) | (F.col("rn") == F.col("rn90"))
+    )
+    return (
+        joined.groupBy("event_type", "n_events", "sketch_ok")
+        .agg(
+            F.max(
+                F.when(F.col("rn") == F.col("rn50"), F.col("val"))
+            ).alias("p50_exact"),
+            F.max(
+                F.when(F.col("rn") == F.col("rn90"), F.col("val"))
+            ).alias("p90_exact"),
+        )
+        .select(
+            "event_type", "n_events", "p50_exact", "p90_exact",
             "sketch_ok",
-            F.col("n").alias("n_events"),
-            F.ceil(F.lit(0.5) * F.col("n")).cast("bigint").alias("rn50"),
-            F.ceil(F.lit(0.9) * F.col("n")).cast("bigint").alias("rn90"),
         )
-        joined = ranked.join(F.broadcast(targets), "event_type").where(
-            (F.col("rn") == F.col("rn50")) | (F.col("rn") == F.col("rn90"))
-        )
-        return (
-            joined.groupBy("event_type", "n_events", "sketch_ok")
-            .agg(
-                F.max(
-                    F.when(F.col("rn") == F.col("rn50"), F.col("val"))
-                ).alias("p50_exact"),
-                F.max(
-                    F.when(F.col("rn") == F.col("rn90"), F.col("val"))
-                ).alias("p90_exact"),
-            )
-            .select(
-                "event_type", "n_events", "p50_exact", "p90_exact",
-                "sketch_ok",
-            )
-        )
-
-
-_init_q335()
+    )

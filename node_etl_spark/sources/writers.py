@@ -105,6 +105,49 @@ def _default_post(url: str, data: bytes, req_options: dict | None = None) -> byt
         return resp.read()
 
 
+def _has_float(dtype) -> bool:
+    from pyspark.sql import types as T
+
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        return True
+    if isinstance(dtype, T.StructType):
+        return any(_has_float(f.dataType) for f in dtype.fields)
+    if isinstance(dtype, T.ArrayType):
+        return _has_float(dtype.elementType)
+    if isinstance(dtype, T.MapType):
+        return _has_float(dtype.valueType)
+    return False
+
+
+def _finite_or_null(col, dtype):
+    """``col`` with every NaN/±Infinity float or double, at any depth
+    of structs, arrays and map values, replaced by null — what the
+    reference's ``JSON.stringify`` writes for them. Columns without a
+    floating-point leaf pass through unchanged."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    if not _has_float(dtype):
+        return col
+    if isinstance(dtype, T.StructType):
+        # F.when without otherwise keeps a null struct null
+        return F.when(
+            col.isNotNull(),
+            F.struct(*[
+                _finite_or_null(col.getField(f.name), f.dataType).alias(f.name)
+                for f in dtype.fields
+            ]),
+        )
+    if isinstance(dtype, T.ArrayType):
+        return F.transform(col, lambda x: _finite_or_null(x, dtype.elementType))
+    if isinstance(dtype, T.MapType):
+        return F.transform_values(
+            col, lambda _, v: _finite_or_null(v, dtype.valueType)
+        )
+    # float or double leaf: NaN and ±Infinity fail the test, null stays null
+    return F.when(~F.isnan(col) & (F.abs(col) != F.lit(float("inf"))), col)
+
+
 class JsonArraySink(Sink):
     """Single JSON-array document (reference WriterJSON,
     job-writer-json.js:33-41). Driver-side by construction; refuses
@@ -141,10 +184,9 @@ class JsonArraySink(Sink):
         # ignoreNullFields=false keeps explicit "k": null entries,
         # matching both the old python path and the reference's
         # JSON.stringify; dates/timestamps now emit ISO-8601 (Jackson),
-        # which is JSON.stringify's format too. Non-finite doubles emit
-        # as quoted "NaN"/"Infinity" strings (Jackson) — documented in
-        # the CHANGELOG (JSON has no token for them; the old python
-        # path emitted bare invalid tokens).
+        # which is JSON.stringify's format too. Non-finite floats and
+        # doubles emit as null, as JSON.stringify does (Jackson alone
+        # would quote them as "NaN"/"Infinity" strings).
         # to_json emits every struct field, so duplicate column names
         # would produce duplicate JSON keys (parser-dependent result);
         # the old Row.asDict() collapsed them silently — refuse instead.
@@ -166,7 +208,10 @@ class JsonArraySink(Sink):
             df.limit(self.max_rows + 1)
             .select(
                 F.to_json(
-                    F.struct(*[_q(c) for c in df.columns]),
+                    F.struct(*[
+                        _finite_or_null(_q(f.name), f.dataType).alias(f.name)
+                        for f in df.schema.fields
+                    ]),
                     {"ignoreNullFields": "false"},
                 ).alias("j")
             )

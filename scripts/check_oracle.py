@@ -62,11 +62,6 @@ def main() -> int:
             failures.append(name)
             continue
         t_spark = time.time() - t0
-        if q.oracle is None:
-            print(f"SKIP-ORACLE {name}: rows={len(srows)} ({t_spark:.1f}s spark)")
-            if not srows:
-                print(f"  WARN {name}: zero rows (weak check)")
-            continue
         t0 = time.time()
         try:
             res = con.execute(q.oracle)

@@ -111,6 +111,37 @@ def test_json_array_sink_dotted_column_names(spark, tmp_path):
     assert json.load(open(dest)) == [{"a.b": 1, "plain": "x"}]
 
 
+def test_json_array_sink_writes_non_finite_floats_as_null(spark, tmp_path):
+    # JSON.stringify parity: NaN and ±Infinity become null wherever a
+    # float or double sits — top level, struct field, array element,
+    # map value — and finite values and real nulls are untouched
+    nan, inf = float("nan"), float("inf")
+    df = spark.createDataFrame(
+        [
+            (1, nan, inf, (-inf, 1.5), [1.0, nan, None], {"a": inf, "b": 2.0}),
+            (2, 0.5, None, None, None, None),
+        ],
+        "id bigint, d double, f float, st struct<x double, y double>, "
+        "xs array<double>, m map<string, double>",
+    )
+    dest = str(tmp_path / "arr.json")
+    JsonArraySink(dest).write(df, Context())
+    raw = open(dest).read()
+    assert "NaN" not in raw and "Infinity" not in raw
+    data = sorted(json.loads(raw), key=lambda d: d["id"])
+    assert data == [
+        {
+            "id": 1,
+            "d": None,
+            "f": None,
+            "st": {"x": None, "y": 1.5},
+            "xs": [1.0, None, None],
+            "m": {"a": None, "b": 2.0},
+        },
+        {"id": 2, "d": 0.5, "f": None, "st": None, "xs": None, "m": None},
+    ]
+
+
 def test_json_array_sink_refuses_duplicate_columns(spark, tmp_path):
     import pytest
 

@@ -154,7 +154,7 @@ def test_gate_order_targets_unverified_backlog_first():
     import json
     from pathlib import Path
 
-    from node_etl_spark.plans.queries import QUERIES, _gate_order
+    from __spark_entry__ import _gate_order
 
     root = Path(__file__).resolve().parents[1]
     green = set()
@@ -184,7 +184,7 @@ def test_driver_verified_ignores_red_rows(tmp_path):
     # head ahead of already-green queries
     import json
 
-    from node_etl_spark.plans.queries import _driver_verified
+    from __spark_entry__ import _driver_green_rounds
 
     art = {
         "q_green": {"hash_match": True, "err": None, "rows_match": True},
@@ -198,7 +198,7 @@ def test_driver_verified_ignores_red_rows(tmp_path):
     (tmp_path / "CORRECTNESS_r02.json").write_text(
         json.dumps({"q_red_mismatch": {"hash_match": True, "err": None}})
     )
-    assert _driver_verified(tmp_path) == {"q_green", "q_red_mismatch"}
+    assert set(_driver_green_rounds(tmp_path)) == {"q_green", "q_red_mismatch"}
 
 
 def test_codec_fixture_build_reuse_determinism(spark, tmp_path, monkeypatch):
@@ -295,11 +295,7 @@ def test_gate_order_staleness_ladder(tmp_path):
     # r1-era q01-q51 band) instead of re-sampling last round's set
     import json
 
-    from node_etl_spark.plans.queries import (
-        QUERIES,
-        _driver_green_rounds,
-        _gate_order,
-    )
+    from __spark_entry__ import _driver_green_rounds, _gate_order
 
     art_r1 = {"q_old": {"hash_match": True, "err": None}}
     art_r9 = {
@@ -352,6 +348,78 @@ def test_driver_contract_consistency():
     # approximate ops are self-validating (exact columns + in-bound
     # booleans) since VERDICT r6 ask #3
     assert {n for n in qs if n not in osql} == set()
+
+
+def test_catalog_binds_each_top_level_name_once():
+    # queries.py registers every entry at module level and its query
+    # functions read module globals at call time, so a second binding
+    # of a top-level name (def, class, assignment or import) would
+    # silently change what an earlier entry computes
+    import ast
+    from collections import Counter
+
+    from node_etl_spark.plans import queries as Q
+
+    def bound(target):
+        # names an assignment target binds; QUERIES[k].x = ... binds none
+        if isinstance(target, ast.Name):
+            return [target.id]
+        if isinstance(target, (ast.Tuple, ast.List)):
+            return [n for e in target.elts for n in bound(e)]
+        if isinstance(target, ast.Starred):
+            return bound(target.value)
+        return []
+
+    tree = ast.parse(open(Q.__file__).read())
+    names = Counter()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names[node.name] += 1
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                names[a.asname or a.name.split(".")[0]] += 1
+        elif isinstance(node, ast.Assign):
+            for t in node.targets:
+                names.update(bound(t))
+        elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+            names.update(bound(node.target))
+    assert sorted(n for n, c in names.items() if c > 1) == []
+
+
+def test_register_refuses_missing_oracle():
+    from node_etl_spark.plans.queries import register
+
+    for oracle in (None, ""):
+        with pytest.raises(ValueError, match="oracle"):
+            register("q_no_oracle", oracle)
+    assert "q_no_oracle" not in QUERIES
+
+
+def test_q247_oracle_text_ignores_hash_seed():
+    # the percolate registry is emitted as VALUES rows; iterating a
+    # set of terms would order them by string hash, so the oracle text
+    # would change with PYTHONHASHSEED from one process to the next
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from node_etl_spark.plans.queries import QUERIES;"
+        "print(QUERIES['q247_percolate'].oracle)"
+    )
+    texts = [
+        subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=Path(__file__).resolve().parents[1],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        for seed in ("1", "2")
+    ]
+    assert texts[0] and texts[0] == texts[1]
 
 
 def test_gate_schemas_are_driver_canonicalizable(spark, sf_dir):

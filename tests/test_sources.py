@@ -56,7 +56,7 @@ def test_folder_glob_with_filter(spark, tmp_path):
     assert sorted(r.v for r in df.collect()) == [1, 2]
 
 
-def test_q296_decoys_are_load_bearing(spark, sf_dir):
+def test_q296_decoys_are_load_bearing(spark, sf_dir, tmp_path, monkeypatch):
     # the q296 gate entry proves ReaderFolder's filename predicate
     # END-TO-END: after the query runs, the decoy files must exist in
     # the fixture folder, and scanning WITHOUT the pathGlobFilter must
@@ -66,15 +66,16 @@ def test_q296_decoys_are_load_bearing(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from node_etl_spark.plans.queries import QUERIES
+    from node_etl_spark.plans import queries as Q
 
+    monkeypatch.setattr(Q, "_SCRATCH", str(tmp_path))
     filtered = (
-        QUERIES["q296_folder_glob_scan"].fn(spark, sf_dir)
+        Q.QUERIES["q296_folder_glob_scan"].fn(spark, sf_dir)
         .agg(F.sum("n").alias("rows"))
         .collect()[0]
         .rows
     )
-    folder = "/root/repo/.scratch/folder_glob"
+    folder = str(tmp_path / "folder_glob")
     assert os.path.exists(os.path.join(folder, "extra-rows.json"))
     assert os.path.exists(os.path.join(folder, "notes.txt"))
     parts = [f for f in os.listdir(folder) if f.startswith("part-")]
