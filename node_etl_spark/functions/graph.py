@@ -681,14 +681,19 @@ def label_propagation(
             labelled = voters.join(
                 F.broadcast(winner), F.col("e_src") == F.col("v"), "left"
             )
-        labelled = labelled.select(
-            F.col("e_dst").alias("v"), label.alias("label")
-        )
-        if i + 1 == iterations:
-            labelled = labelled.unionByName(endpoints, allowMissingColumns=True)
-        winner = labelled.groupBy("v").agg(
-            F.mode("label", deterministic=True).alias("new_label")
-        )
+        if i + 1 < iterations:
+            # grouped straight off the join: a projection in between
+            # would cost one more analysed DataFrame per round
+            winner = labelled.groupBy(F.col("e_dst").alias("v")).agg(
+                F.mode(label, deterministic=True).alias("new_label")
+            )
+        else:
+            votes = labelled.select(
+                F.col("e_dst").alias("v"), label.alias("label")
+            ).unionByName(endpoints, allowMissingColumns=True)
+            winner = votes.groupBy("v").agg(
+                F.mode("label", deterministic=True).alias("new_label")
+            )
         winner = _truncate(winner, i, iterations)
     return winner.select(
         F.col("v").alias("node"),

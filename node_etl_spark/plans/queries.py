@@ -1472,13 +1472,23 @@ def _codec_fixture(spark, sf_dir, name, version, build):
     fixture identity is checkable: an order-independent content
     fingerprint (bit_xor of xxhash64 over all columns + row count) is
     recorded in the ``_FIXTURE_OK`` sidecar at build time, and the
-    determinism test rebuilds into a fresh root and compares. The
-    build lands in a temp dir and publishes via atomic rename, so a
-    concurrent builder (pytest-xdist halves) either wins the rename or
-    discards its copy — readers never see a partial fixture. BUMP THE
+    determinism test rebuilds into a fresh root and compares. BUMP THE
     VERSION whenever the generation formula or encoder output bytes
     change, or a stale fixture from a previous round silently feeds
-    the new oracle."""
+    the new oracle.
+
+    Publication: ``{name}_v{version}`` is a symlink to a generation
+    directory ``{name}_v{version}.g-<id>``, and the returned DataFrame
+    reads the generation's real path. A build lands in a temp dir;
+    under an exclusive lock on the fixtures dir it is renamed to a new
+    generation and the link is swapped onto it with an atomic
+    ``os.replace``, so readers never see a partial fixture and a
+    concurrent builder (pytest-xdist halves) that finds the fixture
+    published meanwhile discards its copy. The previous generation is
+    kept until the next rebuild: a reader that listed it before the
+    swap still reads every file. A fixture directory from before this
+    layout becomes the previous generation."""
+    import fcntl as _fcntl
     import json as _json
     import os as _os
     import shutil as _shutil
@@ -1533,22 +1543,31 @@ def _codec_fixture(spark, sf_dir, name, version, build):
         ).collect()[0]
         with open(_os.path.join(tmp, "_FIXTURE_OK"), "w") as f:
             f.write(_json.dumps({"rows": fp["n"], "xxh64_xor": fp["h"]}))
-        _os.makedirs(_os.path.dirname(final), exist_ok=True)
-        # a stale layout stays readable until the new build replaces
-        # it: rename it aside, rename the build into place, then
-        # delete the aside copy — never an in-place delete
-        aside = f"{tmp}.stale"
-        if _os.path.exists(final) and not published(final):
-            try:
-                _os.rename(final, aside)
-            except OSError:  # another builder set it aside first
-                pass
+        parent = _os.path.dirname(final)
+        _os.makedirs(parent, exist_ok=True)
+        lock = _os.open(parent, _os.O_RDONLY)
         try:
-            _os.rename(tmp, final)
-        except OSError:  # lost the publish race: another build won
-            _shutil.rmtree(tmp, ignore_errors=True)
-        _shutil.rmtree(aside, ignore_errors=True)
-    return spark.read.parquet(final)
+            _fcntl.flock(lock, _fcntl.LOCK_EX)
+            if published(final):  # lost the publish race: another build won
+                _shutil.rmtree(tmp, ignore_errors=True)
+            else:
+                prev = None
+                if _os.path.islink(final):
+                    prev = _os.path.join(parent, _os.readlink(final))
+                elif _os.path.exists(final):  # a plain directory
+                    prev = f"{final}.g-{_uuid.uuid4().hex[:8]}"
+                    _os.rename(final, prev)
+                for old in _os.listdir(parent):
+                    old = _os.path.join(parent, old)
+                    if old.startswith(f"{final}.g-") and old != prev:
+                        _shutil.rmtree(old, ignore_errors=True)
+                gen = f"{final}.g-{_uuid.uuid4().hex[:8]}"
+                _os.rename(tmp, gen)
+                _os.symlink(_os.path.basename(gen), f"{tmp}.link")
+                _os.replace(f"{tmp}.link", final)
+        finally:
+            _os.close(lock)  # releases the lock
+    return spark.read.parquet(_os.path.realpath(final))
 
 
 def _roundtrip_frame(spark: SparkSession, sf_dir: str):
@@ -3802,24 +3821,32 @@ def _replay_events(
     spark, sf_dir: str, cols, build, mode: str, sink_prefix: str, copies: int = 1
 ):
     """Shared availableNow replay harness (q105/q137/q138/q149): stage
-    the events table to a temp parquet dir (normalizing the nanosecond
-    timestamps to us), hand ``build`` a factory of fresh streaming
-    scans over it (stream-stream joins need two independent sources),
-    drain the built stream into a memory sink, clean up the staging
-    dir, and return the sink table. ``copies > 1`` stages that many
-    identical copies of every event — the at-least-once re-delivery
-    simulation q149's dedup consumes.
+    the events table's parquet files (``{sf_dir}/events.parquet``, one
+    file or a directory of them) into a temp dir as symlinks, hand
+    ``build`` a factory of fresh streaming scans over it (stream-stream
+    joins need two independent sources), drain the built stream into a
+    memory sink, delete the staging dir, and return the sink table.
+    ``copies > 1`` links every file that many times — the at-least-once
+    re-delivery simulation q149's dedup consumes.
+
+    Staging runs no Spark job: nothing is rewritten. The stream reads
+    the links with an explicit schema of ``cols``; columns stored as
+    nanosecond timestamps are read as bigint and converted in the
+    stream exactly as ``tables.read_parquet`` converts them. Cleanup
+    removes the links only; the source files are never deleted.
 
     The drain is one micro-batch over the staged files, plus the
     input-less finalising batch for streams that need it
     (``stream.run_to_memory``): q138's session timeouts, q204's
     unmatched left rows and append-mode windows emit there, while a
     dedup-only stream such as q149's skips it."""
+    import os
     import shutil
     import tempfile
     import uuid
 
     from ..streaming import stream as st
+    from ..tables import nanos_as_long, nanos_to_micros, parquet_files
 
     ddl = {
         "event_id": "bigint",
@@ -3828,21 +3855,33 @@ def _replay_events(
         "event_type": "string",
         "value": "double",
     }
-    staged = tempfile.mkdtemp(prefix="netl_stream_") + "/events"
-    ev = table(spark, sf_dir, "events").select(*cols)
-    out_ev = ev
-    for _ in range(copies - 1):
-        out_ev = out_ev.unionAll(ev)
-    out_ev.write.mode("overwrite").parquet(staged)
-    schema = ", ".join(f"{c} {ddl[c]}" for c in cols)
-    sink = f"{sink_prefix}_{uuid.uuid4().hex[:8]}"
-    # state-store partition count derived from staged bytes (see
-    # stream.scaled_state_partitions): a replay this small pays more
-    # in per-store fixed cost than it gains from parallelism
-    with st.scaled_state_partitions(spark, st._dir_bytes(staged)):
-        out = build(lambda: st.stream_source(spark, staged, schema))
-        st.run_to_memory(out, sink, mode=mode)
-    shutil.rmtree(staged.rsplit("/", 1)[0], ignore_errors=True)
+    src = f"{sf_dir}/events.parquet"
+    ns_cols = [c for c in nanos_as_long(spark, src) if c in cols]
+    schema = ", ".join(
+        f"{c} {'bigint' if c in ns_cols else ddl[c]}" for c in cols
+    )
+    root = tempfile.mkdtemp(prefix="netl_stream_")
+    staged = f"{root}/events"
+    os.mkdir(staged)
+    try:
+        files = [os.path.abspath(f) for f in parquet_files(src)]
+        for k in range(copies):
+            for i, f in enumerate(files):
+                os.symlink(f, f"{staged}/part-{k:03d}-{i:05d}.parquet")
+        sink = f"{sink_prefix}_{uuid.uuid4().hex[:8]}"
+        # state-store partition count derived from staged bytes (see
+        # stream.scaled_state_partitions): a replay this small pays more
+        # in per-store fixed cost than it gains from parallelism
+        with st.scaled_state_partitions(spark, st._dir_bytes(staged)):
+            out = build(
+                lambda: nanos_to_micros(
+                    st.stream_source(spark, staged, schema), ns_cols
+                )
+            )
+            st.run_to_memory(out, sink, mode=mode)
+    finally:
+        # rmtree unlinks symlinks, it never follows them to the source
+        shutil.rmtree(root, ignore_errors=True)
     return spark.table(sink)
 
 
@@ -5771,17 +5810,19 @@ def _part_cooccur(spark: SparkSession, sf_dir: str, min_cnt: int = 1) -> DataFra
 
     r12 (guide §2.3 — shuffle fewer bytes): only ``src < dst`` pairs
     are generated and aggregated; the symmetric mirror is a narrow
-    per-row explode AFTER the count (each aggregated row emits both
-    directions in one pass — a union of the two directions would
-    execute the reduce-side aggregate twice). The co-order count of
+    per-row ``inline`` of a two-struct array AFTER the count (each
+    aggregated row emits both directions in one pass — a union of the
+    two directions would execute the reduce-side aggregate twice). The co-order count of
     (a, b) equals that of (b, a), so mirroring post-aggregation is
     value-identical while the explode output and the (src, dst) count
     shuffle both halve. Pairs come from two generators over the
     sorted set — each element (posexplode) against the elements after
     it (explode of a slice) — exactly n(n-1)/2 rows instead of the n^2
-    double explode + filter, with no lambda in the plan."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    sets = li.groupBy("l_orderkey").agg(
+    double explode + filter, with no lambda in the plan. The lineitem
+    scan needs no pruning ``select``: Catalyst's column pruning reads
+    only the two grouped columns, and each DataFrame call costs an
+    analysis pass on the driver."""
+    sets = table(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("ps")
     )
     lo = (
@@ -5796,7 +5837,7 @@ def _part_cooccur(spark: SparkSession, sf_dir: str, min_cnt: int = 1) -> DataFra
     if min_cnt > 1:
         lo = lo.filter(F.col("cnt") >= min_cnt)
     return lo.select(
-        F.explode(
+        F.inline(
             F.array(
                 F.struct(F.col("src"), F.col("dst"), F.col("cnt")),
                 F.struct(
@@ -5805,8 +5846,8 @@ def _part_cooccur(spark: SparkSession, sf_dir: str, min_cnt: int = 1) -> DataFra
                     F.col("cnt"),
                 ),
             )
-        ).alias("p")
-    ).select("p.src", "p.dst", "p.cnt")
+        )
+    )
 
 
 from ..functions.graph import label_propagation_oracle_sql

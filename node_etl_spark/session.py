@@ -11,6 +11,16 @@ on local[N]:
   cores — callers override via ``shuffle_partitions``.
 * Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle and are reproducible across clusters.
+* PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled``). With it on, every
+  Column method and ``F.col`` call makes about five extra JVM round
+  trips to record the calling Python line, which is most of the py4j
+  traffic of a query's lowering. The cost: analysis errors no longer
+  carry the Python "DataFrame" call-site context. PySpark reads the
+  flag once per process, at the first Column call, so it can only be
+  set when the session is built: pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to the first ``get_spark`` call of the process to turn it back on.
 """
 
 from __future__ import annotations
@@ -68,6 +78,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -7,10 +7,16 @@ the engine's determinism rules are supposed to make results
 bit-identical.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+    [--shuffle-partitions N]
+
+``--shuffle-partitions`` sets the session's
+``spark.sql.shuffle.partitions``; a query whose output depends on it
+fails the oracle at some setting (run at 1 and 64 to check).
 """
 
 from __future__ import annotations
 
+import argparse
 import math
 import sys
 import time
@@ -39,9 +45,15 @@ def normalize(rows: list[tuple], colnames: list[str]) -> list[tuple]:
 
 
 def main() -> int:
+    # the option may stand anywhere; what is left is [sf_dir] [query ...]
+    ap = argparse.ArgumentParser(
+        usage="check_oracle.py [sf_dir] [query ...] [--shuffle-partitions N]"
+    )
+    ap.add_argument("--shuffle-partitions", type=int, default=None)
+    opts, sys.argv[1:] = ap.parse_known_args()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("check-oracle")
+    spark = get_spark("check-oracle", shuffle_partitions=opts.shuffle_partitions)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

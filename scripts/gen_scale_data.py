@@ -23,7 +23,7 @@ installed; instead we scale the existing driver-generated tables
   original) so near-dup/ANN candidate structure also scales linearly.
 
 Usage: python scripts/gen_scale_data.py [--factor 10] \
-    [--src /root/testdata/sf0.1] [--dst /root/repo/.scratch/sf1]
+    [--src <testdata>/sf0.1] [--dst <checkout>/.scratch/sf1]
 """
 
 from __future__ import annotations
@@ -36,6 +36,8 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # key column -> cardinality at the source scale (dense 0..N-1); filled
 # at runtime from the actual tables so the script works for any src sf.
@@ -184,7 +186,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factor", type=int, default=10)
     ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--dst", default="/root/repo/.scratch/sf1")
+    ap.add_argument("--dst", default=os.path.join(REPO, ".scratch/sf1"))
     args = ap.parse_args()
     os.makedirs(args.dst, exist_ok=True)
     con = duckdb.connect()

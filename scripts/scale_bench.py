@@ -9,7 +9,7 @@ data, i.e. allows ~n log n plus constant noise) are flagged for
 explanation.
 
 Usage: python scripts/scale_bench.py \
-    [--small /root/testdata/sf0.1] [--large /root/repo/.scratch/sf1] \
+    [--small <testdata>/sf0.1] [--large <checkout>/.scratch/sf1] \
     [--runs-small 2] [--runs-large 1] [--flag-ratio 12]
 """
 

@@ -239,10 +239,11 @@ def test_codec_fixture_build_reuse_determinism(spark, tmp_path, monkeypatch):
 
 
 def test_codec_fixture_rebuild_keeps_stale_copy_readable(spark, tmp_path, monkeypatch):
-    # a stale single-file layout is rebuilt by renaming it aside and the
-    # new build into place: a reader racing the rebuild (the other
-    # half of a pytest-xdist run) reads the whole old copy while the
-    # build runs, never a missing or half-deleted one
+    # a stale single-file layout is rebuilt beside the old copy, which
+    # is kept as the previous generation when the new build is linked
+    # into place: a reader racing the rebuild (the other half of a
+    # pytest-xdist run) reads the whole old copy while the build runs,
+    # never a missing or half-deleted one
     import json
     import os
     import threading
@@ -285,7 +286,27 @@ def test_codec_fixture_rebuild_keeps_stale_copy_readable(spark, tmp_path, monkey
     assert df.count() == 10
     parts = [f for f in os.listdir(final) if f.startswith("part-")]
     assert len(parts) > 1, "stale layout was not replaced"
-    assert os.listdir(final.parent) == ["fx_v1"], "aside or build copy left"
+    # the fixture is a link to a generation; the old copy is kept as
+    # the previous generation, and no build copy is left
+    assert final.is_symlink()
+    gen1 = final.resolve()
+    kept = sorted(os.listdir(final.parent))
+    assert len(kept) == 3 and kept[0] == "fx_v1", kept
+    assert all(k.startswith("fx_v1.g-") for k in kept[1:]), kept
+
+    # a reader that listed the published copy before the next swap
+    # still reads every listed file after it
+    listing = sorted(str(p) for p in gen1.iterdir() if p.name.startswith("part-"))
+    held = Q._codec_fixture(spark, "/any/sf0.001", "fx", 1, build)
+    (gen1 / "_FIXTURE_OK").unlink()  # make it stale: forces a rebuild
+    Q._codec_fixture(spark, "/any/sf0.001", "fx", 1, build)
+    assert final.resolve() != gen1
+    assert sum(pq.read_table(f).num_rows for f in listing) == 10
+    assert held.count() == 10
+    # that rebuild dropped the generation before the previous one
+    assert sorted(os.listdir(final.parent)) == sorted(
+        ["fx_v1", gen1.name, final.resolve().name]
+    )
 
 
 def test_gate_order_staleness_ladder(tmp_path):

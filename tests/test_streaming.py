@@ -895,3 +895,72 @@ def test_quantile_stream_state_bounded_and_accurate(spark, tmp_path):
         for q, est in ((0.5, r["p50"]), (0.9, r["p90"])):
             rank = sum(1 for v in vals[g] if v <= est) / len(vals[g])
             assert abs(rank - q) < 0.01, (g, q, rank)
+
+
+def _events_frame(n: int = 40):
+    import pandas as pd
+
+    base = pd.Timestamp("2024-01-01")
+    return pd.DataFrame(
+        {
+            "event_id": list(range(n)),
+            # sub-microsecond parts: the stream must truncate like the batch
+            "ts": [base + pd.Timedelta(minutes=7 * i, nanoseconds=i * 37) for i in range(n)],
+            "user_id": [i % 3 for i in range(n)],
+            "event_type": ["click" if i % 2 else "view" for i in range(n)],
+            "value": [float(i) for i in range(n)],
+        }
+    )
+
+
+@pytest.mark.parametrize("layout", ["directory", "nanos_file"])
+def test_replay_links_source_and_matches_batch(spark, tmp_path, monkeypatch, layout):
+    # the replay stages links to the events files, not a rewritten copy:
+    # with copies=2 the stream sees every row twice, exactly the batch
+    # table() rows twice, and the source is untouched afterwards
+    import os
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from node_etl_spark import tables
+    from node_etl_spark.plans import queries as Q
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    events = sf / "events.parquet"
+    frame = _events_frame()
+    if layout == "directory":
+        events.mkdir()
+        half = len(frame) // 2
+        for i, part in enumerate((frame[:half], frame[half:])):
+            pq.write_table(
+                pa.Table.from_pandas(part, preserve_index=False),
+                str(events / f"part-{i}.parquet"),
+                coerce_timestamps="us",
+                allow_truncated_timestamps=True,
+            )
+        assert tables._nanos_columns(str(events)) == []
+    else:
+        pq.write_table(pa.Table.from_pandas(frame, preserve_index=False), str(events))
+        assert tables._nanos_columns(str(events)) == ["ts"]
+    before = {
+        p: os.stat(p).st_size for p in tables.parquet_files(str(events))
+    }
+    staging = tmp_path / "tmp"
+    staging.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(staging))
+
+    cols = ["event_id", "ts", "user_id", "event_type", "value"]
+    sink = Q._replay_events(
+        spark, str(sf), cols, lambda source: source(), mode="append",
+        sink_prefix="replay_links", copies=2,
+    )
+    batch = Q.table(spark, str(sf), "events").select(*cols)
+    got = sorted(map(tuple, sink.select(*cols).collect()))
+    want = sorted(map(tuple, batch.collect())) * 2
+    assert got == sorted(want)
+    assert len(got) == 2 * len(frame)
+    assert {p: os.stat(p).st_size for p in tables.parquet_files(str(events))} == before
+    assert os.listdir(staging) == [], "staging links were left behind"
