@@ -5,7 +5,9 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 JSON line: {"metric", "value", "unit", "queries", "sf"}.
 
 Each query is forced end-to-end with a noop write (computes every
-output column, no driver collect overhead).
+output column, no driver collect overhead). The per-query artifact
+also records, under ``layers``, what each query's best run ran
+(``measure``); README's "Profile one query" has the recipe.
 """
 
 from __future__ import annotations
@@ -20,13 +22,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from node_etl_spark.plans import QUERIES  # noqa: E402
 from node_etl_spark.session import get_spark  # noqa: E402
+from perfbench.status import StatusReader  # noqa: E402
 
 # The benched set is DERIVED from the registry (verdict r10 ask #3):
 # every gate query is benched unless explicitly excluded here with a
 # one-line reason, and tests/test_plans.py asserts the partition —
 # a new query can never land gate-green yet silently skip the bench.
-# (The r1-r10 HEADLINE list was hand-curated and had drifted 52
-# queries behind the registry for no documented reason.)
 EXCLUDED: dict[str, str] = {}
 
 HEADLINE = [n for n in QUERIES if n not in EXCLUDED]
@@ -35,18 +36,81 @@ HEADLINE = [n for n in QUERIES if n not in EXCLUDED]
 # run's probes by these gives that box's slowdown vs the anchor;
 # value_calib_adjusted divides the suite seconds by the geometric
 # mean of the two slowdowns (JVM + Python-worker), separating engine
-# changes from machine changes across rounds (verdict r10 ask #4 —
-# r10's raw 0.77x understated the win because its box probed 1.66x
-# slower than r9's).
+# changes from machine changes across rounds (verdict r10 ask #4).
 CALIB_REF_SEC = 0.071
 CALIB_REF_PY_SEC = 0.39
+
+# ExecStats totals copied into each query's layer dict
+EXEC_KEYS = (
+    "jobs", "stages", "tasks", "task_s", "cpu_s", "gc_s", "sched_gap_s",
+    "shuffle_read_mb", "shuffle_write_mb", "spill_mb",
+)
+
+
+def clear_blocks(spark) -> None:
+    """Unpersist every cached table and RDD in the session.
+
+    Iterative operators (connected components, pagerank, BFS)
+    localCheckpoint/persist per round; those blocks are only reclaimed
+    when the JVM GCs the RDD handles. Left alone they pile up across
+    the suite until storage eviction kicks in — and an evicted
+    localCheckpoint block is unrecoverable (lineage was truncated),
+    surfacing as task retries and wildly noisy timings. Each query
+    starts from a clean slate."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
+
+
+def measure(spark, fn, sf_dir: str, runs: int, reader: StatusReader):
+    """Best of ``runs`` timings of ``fn(spark, sf_dir)`` forced by a
+    noop write (a single run is hostage to co-tenant CPU noise and
+    first-touch cache effects), and the layer dict of that run.
+
+    The status store is read outside the timed region. ``fn_jobs``
+    counts the jobs submitted before ``fn`` returned (the eager
+    actions of iterative operators); ``rdds_left`` is the RDDs still
+    registered after the write, before ``clear_blocks``."""
+    best = layers = None
+    for _ in range(runs):
+        last_job = reader.last_job_id()
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        t_fn = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        dt = time.time() - t0
+        ex = reader.stats_since(last_job)
+        rdds_left = reader.persistent_rdds()
+        clear_blocks(spark)
+        if best is None or dt < best:
+            best = dt
+            layers = {
+                "fn_s": round(t_fn - t0, 3),
+                "fn_jobs": sum(
+                    1 for sub, _ in ex.job_times if sub <= t_fn * 1000
+                ),
+                **{k: round(getattr(ex, k), 3) for k in EXEC_KEYS},
+                "rdds_left": rdds_left,
+            }
+    return best, layers
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    spark = get_spark("node-etl-spark-bench")
+    # past spark.ui.retainedStages (default 1000) the status store
+    # evicts skipped stages first, and StatusReader.stats_since fails
+    # on a job whose skipped stage is gone, so keep every stage. Each
+    # run walks the retained jobs twice over py4j (0.36 s at 1000);
+    # 256 holds the largest query's 44 jobs whole
+    spark = get_spark(
+        "node-etl-spark-bench",
+        extra_conf={
+            "spark.ui.retainedJobs": "256",
+            "spark.ui.retainedStages": str(2**31 - 1),
+        },
+    )
     # warm the JVM, codegen, parquet reader, and Python/Arrow worker
     # pool so per-query timings measure steady-state engine
     # performance, not one-time session startup (the daemon fork +
@@ -63,21 +127,6 @@ def main() -> None:
     for t in TABLES:
         table(spark, sf_dir, t).count()
 
-    # best-of-2 per query: a single pass is hostage to co-tenant CPU
-    # noise and first-touch cache effects; the min is the steady-state
-    # engine cost
-    def clear_blocks() -> None:
-        # iterative operators (connected components, pagerank, BFS)
-        # localCheckpoint/persist per round; those blocks are only
-        # reclaimed when the JVM GCs the RDD handles. Left alone they
-        # pile up across the suite until storage eviction kicks in —
-        # and an evicted localCheckpoint block is unrecoverable
-        # (lineage was truncated), surfacing as task retries and
-        # wildly noisy timings. Each query starts from a clean slate.
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     # optional subset (comma-separated full names or qNN prefixes):
     # scale-decade runs re-measure a handful of queries on much
@@ -90,20 +139,12 @@ def main() -> None:
             n for n in HEADLINE
             if n in want or n.split("_", 1)[0] in want
         ]
+    reader = StatusReader(spark)
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     t_suite0 = time.time()
     for name in headline:
-        q = QUERIES.get(name)
-        if q is None:
-            continue
-        best = None
-        for _ in range(runs):
-            t0 = time.time()
-            df = q.fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            clear_blocks()
+        best, layers[name] = measure(spark, QUERIES[name].fn, sf_dir, runs, reader)
         timings[name] = round(best, 3)
     t_suite1 = time.time()
     total = round(sum(timings.values()), 3)
@@ -224,6 +265,7 @@ def main() -> None:
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
                      "BENCH_PERQ_LOCAL.json"),
     )
+    per_query = dict(sorted(timings.items(), key=lambda kv: kv[1]))
     try:
         with open(perq_path, "w") as fh:
             json.dump(
@@ -238,9 +280,8 @@ def main() -> None:
                     "value": total,
                     "value_calib_adjusted": adjusted,
                     "suite_wall_sec": round(t_suite1 - t_suite0, 3),
-                    "per_query": dict(
-                        sorted(timings.items(), key=lambda kv: kv[1])
-                    ),
+                    "per_query": per_query,
+                    "layers": {n: layers[n] for n in per_query},
                 },
                 fh,
                 indent=1,

@@ -3825,9 +3825,9 @@ def _replay_events(
     file or a directory of them) into a temp dir as symlinks, hand
     ``build`` a factory of fresh streaming scans over it (stream-stream
     joins need two independent sources), drain the built stream into a
-    memory sink, delete the staging dir, and return the sink table.
-    ``copies > 1`` links every file that many times — the at-least-once
-    re-delivery simulation q149's dedup consumes.
+    memory sink (``_drain``), delete the staging dir, and return the
+    sink's rows. ``copies > 1`` links every file that many times — the
+    at-least-once re-delivery simulation q149's dedup consumes.
 
     Staging runs no Spark job: nothing is rewritten. The stream reads
     the links with an explicit schema of ``cols``; columns stored as
@@ -3868,21 +3868,38 @@ def _replay_events(
         for k in range(copies):
             for i, f in enumerate(files):
                 os.symlink(f, f"{staged}/part-{k:03d}-{i:05d}.parquet")
-        sink = f"{sink_prefix}_{uuid.uuid4().hex[:8]}"
-        # state-store partition count derived from staged bytes (see
-        # stream.scaled_state_partitions): a replay this small pays more
-        # in per-store fixed cost than it gains from parallelism
-        with st.scaled_state_partitions(spark, st._dir_bytes(staged)):
-            out = build(
-                lambda: nanos_to_micros(
-                    st.stream_source(spark, staged, schema), ns_cols
-                )
+        out = build(
+            lambda: nanos_to_micros(
+                st.stream_source(spark, staged, schema), ns_cols
             )
-            st.run_to_memory(out, sink, mode=mode)
+        )
+        return _drain(
+            spark, out, f"{sink_prefix}_{uuid.uuid4().hex[:8]}", mode, staged
+        )
     finally:
         # rmtree unlinks symlinks, it never follows them to the source
         shutil.rmtree(root, ignore_errors=True)
-    return spark.table(sink)
+
+
+def _drain(
+    spark, out: DataFrame, sink: str, mode: str, staged: str
+) -> DataFrame:
+    """Drain the availableNow stream ``out`` into the memory sink
+    ``sink`` and return its rows. The state-store partition count is
+    derived from the bytes staged under ``staged`` (see
+    ``stream.scaled_state_partitions``): a replay this small pays more
+    in per-store fixed cost than it gains from parallelism. The sink's
+    temp view is dropped before returning: the returned frame keeps
+    the rows, and the session keeps no name for them, so repeated
+    replays do not accumulate tables."""
+    from ..streaming import stream as st
+    from ..util import dir_bytes
+
+    with st.scaled_state_partitions(spark, dir_bytes(staged)):
+        st.run_to_memory(out, sink, mode=mode)
+    df = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return df
 
 
 @register(
@@ -15183,10 +15200,7 @@ def q319_stream_crawl_refresh(
         F.octet_length("body").cast("bigint").alias("n_bytes"),
         F.lower(F.md5("body")).alias("body_md5"),
     )
-    sink = f"q319_{_uuid.uuid4().hex[:8]}"
-    with st.scaled_state_partitions(spark, st._dir_bytes(staged)):
-        st.run_to_memory(out, sink, mode="append")
-    return spark.table(sink)
+    return _drain(spark, out, f"q319_{_uuid.uuid4().hex[:8]}", "append", staged)
 
 # --------------------------------------------------------------------
 # q320 — FAST HTML extraction on the exact gate (r11, verdict r10

@@ -20,6 +20,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..util import dir_bytes
+
 
 def write_bucketed(
     df: DataFrame,
@@ -66,7 +68,7 @@ def compact(
 
     df = spark.read.format(fmt).load(path)
     # local-FS sizing; on an object store, list via the Hadoop FS API
-    total_bytes = _dir_bytes(path)
+    total_bytes = dir_bytes(path)
     n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
     tmp = path.rstrip("/") + ".__compact_tmp"
     df.repartition(n_files).write.mode("overwrite").format(fmt).save(tmp)
@@ -74,13 +76,3 @@ def compact(
     shutil.move(tmp, path)
     return n_files
 
-
-def _dir_bytes(path: str) -> int:
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total

@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import contextlib
 import math
-import os
 from typing import Callable, Sequence
 
 import pandas as pd
@@ -34,16 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.text import normalize_text
-
-
-def _dir_bytes(path: str) -> int:
-    """Total bytes under a local staging directory."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            with contextlib.suppress(OSError):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
 
 
 @contextlib.contextmanager

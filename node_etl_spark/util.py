@@ -13,6 +13,8 @@ exactly the local/bench regime.
 
 from __future__ import annotations
 
+import contextlib
+import os
 import re
 
 from pyspark.sql import DataFrame
@@ -316,3 +318,16 @@ def hof_shadow_risks(*cols) -> list[str]:
                 "transform first, re-alias in a second select"
             )
     return risks
+
+
+def dir_bytes(path: str) -> int:
+    """Total bytes of the data files under a local directory, following
+    symlinks; ``_``/``.``-prefixed files (``_SUCCESS``, ``.crc``) and
+    files that vanish mid-walk are not counted."""
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if not f.startswith(("_", ".")):
+                with contextlib.suppress(OSError):
+                    total += os.path.getsize(os.path.join(root, f))
+    return total

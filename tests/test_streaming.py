@@ -964,3 +964,17 @@ def test_replay_links_source_and_matches_batch(spark, tmp_path, monkeypatch, lay
     assert len(got) == 2 * len(frame)
     assert {p: os.stat(p).st_size for p in tables.parquet_files(str(events))} == before
     assert os.listdir(staging) == [], "staging links were left behind"
+
+
+def test_replay_drain_leaves_no_sink_table(spark, sf_dir):
+    # each replay drops its memory sink's view once it holds the rows:
+    # repeated runs in one session add no tables, and the returned
+    # frames still read the same rows
+    from node_etl_spark.plans import QUERIES
+
+    q = QUERIES["q149_stream_dedup"]
+    outs = [sorted(map(tuple, q.fn(spark, sf_dir).collect())) for _ in range(3)]
+    assert outs[0], "q149 returned no rows"
+    assert outs[1] == outs[0] and outs[2] == outs[0]
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("q149_")]
+    assert left == []
