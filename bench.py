@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from node_etl_spark.plans import QUERIES  # noqa: E402
-from node_etl_spark.session import get_spark  # noqa: E402
+from node_etl_spark.session import clear_blocks, get_spark  # noqa: E402
 from perfbench.status import StatusReader  # noqa: E402
 
 # The benched set is DERIVED from the registry (verdict r10 ask #3):
@@ -47,21 +47,6 @@ EXEC_KEYS = (
 )
 
 
-def clear_blocks(spark) -> None:
-    """Unpersist every cached table and RDD in the session.
-
-    Iterative operators (connected components, pagerank, BFS)
-    localCheckpoint/persist per round; those blocks are only reclaimed
-    when the JVM GCs the RDD handles. Left alone they pile up across
-    the suite until storage eviction kicks in — and an evicted
-    localCheckpoint block is unrecoverable (lineage was truncated),
-    surfacing as task retries and wildly noisy timings. Each query
-    starts from a clean slate."""
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(False)
-
-
 def measure(spark, fn, sf_dir: str, runs: int, reader: StatusReader):
     """Best of ``runs`` timings of ``fn(spark, sf_dir)`` forced by a
     noop write (a single run is hostage to co-tenant CPU noise and
@@ -70,7 +55,9 @@ def measure(spark, fn, sf_dir: str, runs: int, reader: StatusReader):
     The status store is read outside the timed region. ``fn_jobs``
     counts the jobs submitted before ``fn`` returned (the eager
     actions of iterative operators); ``rdds_left`` is the RDDs still
-    registered after the write, before ``clear_blocks``."""
+    registered after the write, before ``clear_blocks``;
+    ``plan_lines`` is the line count of the returned frame's executed
+    plan, so lineage growth shows per query."""
     best = layers = None
     for _ in range(runs):
         last_job = reader.last_job_id()
@@ -81,6 +68,7 @@ def measure(spark, fn, sf_dir: str, runs: int, reader: StatusReader):
         dt = time.time() - t0
         ex = reader.stats_since(last_job)
         rdds_left = reader.persistent_rdds()
+        plan = df._jdf.queryExecution().executedPlan().toString()
         clear_blocks(spark)
         if best is None or dt < best:
             best = dt
@@ -91,6 +79,7 @@ def measure(spark, fn, sf_dir: str, runs: int, reader: StatusReader):
                 ),
                 **{k: round(getattr(ex, k), 3) for k in EXEC_KEYS},
                 "rdds_left": rdds_left,
+                "plan_lines": len(plan.splitlines()),
             }
     return best, layers
 

@@ -30,13 +30,23 @@ Scale design (the 100 TB story):
 * Labels are ``min(reachable id)`` — deterministic, so results are
   oracle-checkable against a DuckDB recursive CTE at test scale.
 
-The iterative operators share two rules and take no tuning options:
+The iterative operators share three rules and take no tuning options:
 
 * **Truncation.** The fixed-round loops (pagerank, personalized
   pagerank, label propagation) checkpoint their per-round state every
   ``_TRUNCATE_EVERY`` rounds, never after the last (``_truncate``):
   short runs stay checkpoint-free and the plan stays bounded at tens
   of rounds.
+* **Round state.** The other loops (HITS, BFS, SSSP, connected
+  components, k-core, and ``operators.tree.resolve_hierarchy``) cut
+  each round's state with ``localCheckpoint(eager=False)`` and add no
+  action of their own: the read the loop already takes (HITS's max,
+  the BFS/SSSP frontier count, the components' convergence stats,
+  the hierarchy's emptiness check) or the next round's own stages
+  materialise the cut. Under AQE making the cut already runs the
+  plan's shuffle stages; only the final stage waits for that read.
+  Bradley–Terry keeps its eager per-round checkpoint: a lazy cut
+  there measured more jobs, not fewer.
 * **Broadcast.** Node-sized per-round state (ranks, winners, ratings)
   is always broadcast onto the edges persisted once, so each round is
   a map-side join plus one aggregation. HITS always shuffles (see
@@ -52,6 +62,7 @@ from pyspark.sql import functions as F
 
 _TRUNCATE_EVERY = 8
 _BROADCAST_MAX_ROWS = 5_000_000
+_DRIVER_MAX_EDGES = 100_000
 
 
 def _truncate(df: DataFrame, i: int, rounds: int) -> DataFrame:
@@ -68,7 +79,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Connected components over an undirected edge list.
 
@@ -79,14 +89,13 @@ def connected_components(
 
     **Small-graph fast path**: the canonical edge set is materialized
     (checkpointed) before iterating anyway, so its size is known for
-    free; at or below ``driver_threshold`` edges (bounded driver
+    free; at or below ``_DRIVER_MAX_EDGES`` edges (bounded driver
     memory — 100k edges is a few MB) the closure finishes as a
     driver-side union-find instead of paying 2-3 cluster jobs per
     star round on kilobyte data. Near-dup pair streams are sparse by
     construction, so this is the common case even at corpus scale;
     the iterative path takes over exactly when the edge set is big
-    enough to amortize its shuffles. ``driver_threshold=0`` forces
-    the distributed path.
+    enough to amortize its shuffles.
 
     Implementation: alternating large-star / small-star.  With
     neighborhood-plus-self N+(v) and m = min(N+(v)):
@@ -112,7 +121,7 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_threshold and e.count() <= driver_threshold:
+    if e.count() <= _DRIVER_MAX_EDGES:
         id_type = e.schema["a"].dataType.simpleString()
         parent: dict = {}
 
@@ -170,7 +179,7 @@ def connected_components(
             )
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         ls.unpersist()
         # converged iff the edges are a star forest: every vertex has
@@ -554,7 +563,8 @@ def bfs_hops(
     persisted edges — no per-round edge shuffle at all.
 
     The broadcast is decided **per round** from the frontier's actual
-    row count (free — the frontier is eagerly checkpointed anyway):
+    row count (free — the count is the read that materialises the
+    frontier's cut and doubles as the emptiness check):
     broadcast while ``<= _BROADCAST_MAX_ROWS``, shuffle join beyond,
     so a corpus-scale hop can never hit Spark's 8 GB broadcast
     ceiling or the driver's memory. Oracle: ``bfs_oracle_sql`` unrolls
@@ -568,28 +578,23 @@ def bfs_hops(
         F.col(node).alias("node"), F.lit(0).cast("int").alias("dist")
     ).localCheckpoint(eager=True)
     frontier = dist
-    n_frontier = None  # None = not yet counted (first round: seeds)
     for _ in range(max_hops):
-        # in unit-weight BFS any node already in `dist` was reached in
-        # <= k hops, so an anti-join (not a min-agg over the union) is
-        # enough to keep only first-time reachings
-        if n_frontier is None:
-            n_frontier = frontier.count()
+        n_frontier = frontier.count()
+        if n_frontier == 0:
+            break
         fr = F.broadcast(frontier) if n_frontier <= _BROADCAST_MAX_ROWS else frontier
         expanded = (
             e.join(fr, e.e_src == frontier.node)
             .select(F.col("e_dst").alias("node"), (F.col("dist") + 1).alias("dist"))
             .dropDuplicates(["node"])
         )
-        frontier = expanded.join(
-            dist, "node", "left_anti"
-        ).localCheckpoint(eager=True)
-        # counting the checkpointed frontier doubles as the emptiness
-        # check and feeds the next round's broadcast decision
-        n_frontier = frontier.count()
-        if n_frontier == 0:
-            break
-        dist = dist.unionByName(frontier).localCheckpoint(eager=True)
+        # in unit-weight BFS any node already in `dist` was reached in
+        # <= k hops, so an anti-join (not a min-agg over the union) is
+        # enough to keep only first-time reachings
+        frontier = expanded.join(dist, "node", "left_anti").localCheckpoint(
+            eager=False
+        )
+        dist = dist.unionByName(frontier).localCheckpoint(eager=False)
     return dist.select("node", F.col("dist").cast("int").alias("dist"))
 
 
@@ -763,7 +768,10 @@ def shortest_paths(
     full-relaxation form — same fixpoint per round). Edges persist
     once (localCheckpoint); a frontier of at most
     ``_BROADCAST_MAX_ROWS`` broadcasts, so the common round is a
-    map-side join.
+    map-side join. Each round cuts the frontier and ``dist`` lazily;
+    the next round's frontier count materialises the frontier, its
+    join reads materialise ``dist``, and the caller's action
+    materialises the last round's.
     """
     e = edges.select(
         F.col(src).alias("e_src"),
@@ -774,7 +782,7 @@ def shortest_paths(
         F.col(node).alias("node"), F.lit(0).cast("bigint").alias("dist")
     ).localCheckpoint(eager=True)
     frontier = dist
-    for rnd in range(max_rounds):
+    for _ in range(max_rounds):
         n_frontier = frontier.count()
         if n_frontier == 0:
             break
@@ -790,18 +798,14 @@ def shortest_paths(
             relax.join(dist.withColumnRenamed("dist", "old"), "node", "left")
             .filter(F.col("old").isNull() | (F.col("cand") < F.col("old")))
             .select("node", F.col("cand").alias("dist"))
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         frontier = improved
-        dist = dist.join(improved.select("node"), "node", "left_anti").unionByName(
-            improved
+        dist = (
+            dist.join(improved.select("node"), "node", "left_anti")
+            .unionByName(improved)
+            .localCheckpoint(eager=False)
         )
-        if rnd + 1 < max_rounds:
-            # the final round's dist is consumed once by the caller —
-            # both inputs (prior dist, improved) are already
-            # checkpointed, so the last eager materialization would be
-            # a pure extra job
-            dist = dist.localCheckpoint(eager=True)
     return dist.select("node", F.col("dist").cast("bigint").alias("dist"))
 
 
@@ -1108,9 +1112,9 @@ def kcore(
         keep = deg.filter(F.col("deg") >= k).select(
             F.col("e_src").alias("node")
         )
-        # per-round checkpoint (the module-header invariant): keep is
-        # referenced twice and derives from e, so an unchecked round
-        # would embed the prior plan three times — ~3^rounds growth
+        # per-round cut (the module-header rule): keep is referenced
+        # twice and derives from e, so an uncut round would embed the
+        # prior plan three times — ~3^rounds growth
         e = (
             e.join(
                 F.broadcast(keep),
@@ -1122,7 +1126,7 @@ def kcore(
                 F.col("e_dst") == F.col("node"),
                 "left_semi",
             )
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
     return (
         e.groupBy(F.col("e_src").alias("node"))
@@ -1400,10 +1404,13 @@ def hits(
     centrality PageRank's single score conflates.
 
     Execution per round: two joins (scores onto edges) + two hash
-    aggregates — exactly the Pregel cost shape of :func:`pagerank` —
-    with each half-round's raw sums persisted (the renorm max and the
-    next half-round both re-read them). Score state is one row per
-    node; edges persist once.
+    aggregates — exactly the Pregel cost shape of :func:`pagerank`.
+    Each half-round's raw sums are cut lazily and the renorm max,
+    fetched as a 1-row ``first()`` and folded in as a literal,
+    materialises the cut, so a half-round is one driver action, the
+    next half-round reads the cut, and the plan stays a few lines at
+    any round count. Score state is one row per node; edges persist
+    once.
     Unlike the other node-state loops, the score joins are never
     hinted to broadcast: interleaved best-of-2 A/B at sf0.1 (4 rounds)
     measured the shuffle form FASTER on local mode — 5.7-7.4s vs
@@ -1426,25 +1433,7 @@ def hits(
     ).localCheckpoint(eager=True)
 
     def renorm(df: DataFrame, col: str) -> DataFrame:
-        # Persist the raw sums and let the 1-row max read MATERIALIZE
-        # the cache: one driver action per half-round where the r11
-        # form (localCheckpoint(eager) then first()) paid two — the
-        # checkpoint job and the max job walked the same node-sized
-        # data back to back, and at sf0.1 the per-job fixed cost
-        # (planning + scheduling) was the whole bill (guide §2.4 /
-        # §5). The max is fetched as a 1-row first() and folded in as
-        # a literal exactly as before — the old crossJoin(broadcast(
-        # agg)) form re-walked the whole subtree per half-round. The
-        # floor projection stays lazy over the persisted frame; the
-        # double reference (max branch + next half-round) hits the
-        # cache, which is what made lazy chaining safe here (the
-        # un-persisted lazy form measured 2x worse in r11).
-        # Interleaved best-of-3 A/B at sf0.1 (4 rounds): 5.12s ->
-        # 4.06s, output bit-identical. The per-half-round persists
-        # are node-sized and owned by the returned plan (callers
-        # clear the session's RDD handles between queries, as
-        # bench.py does).
-        raw = df.persist()
+        raw = df.localCheckpoint(eager=False)
         m = raw.agg(F.max(F.col(col).cast("double")).alias("m")).first()["m"]
         return raw.select(
             df.columns[0],

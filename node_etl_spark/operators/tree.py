@@ -112,49 +112,44 @@ def resolve_hierarchy(
         F.lit(0).alias(level_col),
         ids.alias(mpath_col),
     )
-    frontier = resolved.select(
-        F.col(id_col).alias("__pid"),
-        F.col(level_col).alias("__plevel"),
-        F.col(mpath_col).alias("__pmpath"),
-    )
-    # persist each round's pending/newly: the loop would otherwise
-    # rebuild an exponentially deep lineage (each level re-derives all
-    # prior joins), and each round needs exactly one pass over pending
-    pending = edges.filter(F.col(parent_col).isNotNull()).persist()
-    out_parts = [resolved]
-    for _ in range(max_depth):
-        joined = pending.join(
-            F.broadcast(frontier), pending[parent_col] == frontier["__pid"], "left"
-        ).persist()
-        newly = joined.filter(F.col("__pid").isNotNull()).select(
-            *[pending[c] for c in pending.columns],
-            (F.col("__plevel") + 1).alias(level_col),
-            F.concat(F.col("__pmpath"), F.lit(mpath_sep), ids).alias(mpath_col),
+    pending = edges.filter(F.col(parent_col).isNotNull())
+    newly = resolved
+    # each level cuts newly, pending and resolved lazily (the round
+    # state rule of functions/graph.py), so the plan is a few lines at
+    # any depth; newly.isEmpty() is the read that materialises newly,
+    # the next level's joins materialise pending and the caller's
+    # action materialises the resolved unions. pending shrinks by
+    # anti-join rather than as a filter of the left join that yields
+    # newly: a cut keeps its plan's size estimate, and a join of two
+    # frames cut from one join would square that estimate per level
+    for lvl in range(1, max_depth + 1):
+        parents = F.broadcast(
+            newly.select(
+                F.col(id_col).alias("__pid"), F.col(mpath_col).alias("__pmpath")
+            )
+        )
+        child = F.col(parent_col) == F.col("__pid")
+        newly = (
+            pending.join(parents, child)
+            .select(
+                *edges.columns,
+                F.lit(lvl).alias(level_col),
+                F.concat(F.col("__pmpath"), F.lit(mpath_sep), ids).alias(mpath_col),
+            )
+            .localCheckpoint(eager=False)
         )
         if newly.isEmpty():
-            joined.unpersist()
             break
-        newly = newly.persist()
-        out_parts.append(newly)
-        frontier = newly.select(
-            F.col(id_col).alias("__pid"),
-            F.col(level_col).alias("__plevel"),
-            F.col(mpath_col).alias("__pmpath"),
+        pending = pending.join(parents, child, "left_anti").localCheckpoint(
+            eager=False
         )
-        pending = joined.filter(F.col("__pid").isNull()).select(
-            *[pending[c] for c in pending.columns]
-        ).persist()
-        # no pending.isEmpty() action here: if pending drained, the
-        # next round's newly.isEmpty() terminates at the same cost
+        resolved = resolved.unionByName(newly).localCheckpoint(eager=False)
     orphans = pending.select(
         "*",
         F.lit(None).cast("int").alias(level_col),
         F.lit(None).cast("string").alias(mpath_col),
     )
-    out = out_parts[0]
-    for part in out_parts[1:]:
-        out = out.unionByName(part)
-    return out.unionByName(orphans)
+    return resolved.unionByName(orphans)
 
 
 def build_document(

@@ -83,3 +83,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def clear_blocks(spark: SparkSession) -> None:
+    """Unpersist every cached table and RDD in the session.
+
+    Operators persist or ``localCheckpoint`` their state (the
+    iterative graph loops cut one per round, the hierarchy one per
+    level), and those blocks are only reclaimed when the JVM GCs the
+    RDD handles. Left alone they pile up across queries until storage
+    eviction kicks in, and an evicted ``localCheckpoint`` block is
+    unrecoverable (its lineage was cut). A runner that executes many
+    queries in one session (``bench.py``, ``scripts/check_oracle.py``)
+    calls this once a query's output has been consumed."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)

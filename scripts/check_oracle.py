@@ -26,7 +26,7 @@ import duckdb
 sys.path.insert(0, ".")
 
 from node_etl_spark.plans import QUERIES  # noqa: E402
-from node_etl_spark.session import get_spark  # noqa: E402
+from node_etl_spark.session import clear_blocks, get_spark  # noqa: E402
 from node_etl_spark.tables import TABLES  # noqa: E402
 
 
@@ -73,6 +73,8 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)
             continue
+        finally:
+            clear_blocks(spark)
         t_spark = time.time() - t0
         t0 = time.time()
         try:

@@ -7,7 +7,7 @@ from perfbench.status import StatusReader
 LAYER_KEYS = {
     "fn_s", "fn_jobs", "jobs", "stages", "tasks", "task_s", "cpu_s", "gc_s",
     "sched_gap_s", "shuffle_read_mb", "shuffle_write_mb", "spill_mb",
-    "rdds_left",
+    "rdds_left", "plan_lines",
 }
 
 
@@ -30,4 +30,5 @@ def test_measure_reads_layers_before_clearing_blocks(spark, sf_dir):
     assert 0 < layers["fn_s"] <= best
     assert layers["tasks"] >= layers["stages"] >= 1
     assert layers["rdds_left"] >= 1
+    assert layers["plan_lines"] >= 1
     assert reader.persistent_rdds() == 0, "measure leaves the session clear"

@@ -40,16 +40,21 @@ def test_star_already_converged(spark):
     assert _labels(comp) == {2: 1, 3: 1, 4: 1}
 
 
-def test_two_stars_bridge(spark):
+def test_two_stars_bridge(spark, monkeypatch):
     # two stars joined by one bridge edge -> single component; the
     # driver fast path and the forced-distributed path must agree
+    from node_etl_spark.functions import graph as G
+
     edges = [(1, i) for i in range(2, 6)] + [(100, i) for i in range(101, 105)]
     edges.append((5, 104))
-    for thr in (100_000, 0):
-        comp = connected_components(_edges(spark, edges), driver_threshold=thr)
+    for cap in (G._DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(G, "_DRIVER_MAX_EDGES", cap)
+        comp = connected_components(_edges(spark, edges))
         got = _labels(comp)
-        assert set(got.values()) == {1}, thr
-        assert set(got) == {2, 3, 4, 5, 100, 101, 102, 103, 104}, thr
+        assert set(got.values()) == {1}, cap
+        assert set(got) == {2, 3, 4, 5, 100, 101, 102, 103, 104}, cap
+    with pytest.raises(TypeError):
+        connected_components(_edges(spark, edges), driver_threshold=0)
 
 
 def test_empty_edges(spark):
@@ -484,6 +489,10 @@ def test_ppr_seed_outside_universe_ignored(spark):
 # ------------------------------------------------ lineage truncation
 
 
+def _plan_lines(df):
+    return len(df._jdf.queryExecution().executedPlan().toString().splitlines())
+
+
 @pytest.mark.parametrize(
     "op", ["label_propagation", "pagerank", "personalized_pagerank"]
 )
@@ -502,12 +511,17 @@ def test_fixed_round_lineage_stays_bounded(spark, op):
         ),
     }[op]
 
-    def plan_lines(rounds):
-        plan = run(rounds)._jdf.queryExecution().executedPlan().toString()
-        return len(plan.splitlines())
-
     assert 8 % G._TRUNCATE_EVERY == 0  # 16 and 24 end on a whole interval
-    assert plan_lines(16) == plan_lines(24)
+    assert _plan_lines(run(16)) == _plan_lines(run(24))
+
+
+def test_hits_lineage_stays_bounded(spark):
+    # every half-round's sums are cut, so the plan does not depend on
+    # the round count at all (no _TRUNCATE_EVERY interval involved)
+    from node_etl_spark.functions.graph import hits
+
+    edges = _edges(spark, [(i, 100 + (i * 7) % 13) for i in range(40)])
+    assert _plan_lines(hits(edges, rounds=8)) == _plan_lines(hits(edges, rounds=16))
 
 
 def test_kcore_peels_tail(spark):

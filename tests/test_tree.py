@@ -68,6 +68,22 @@ def test_resolve_hierarchy_levels_and_orphans(spark):
     assert out["zz"].level is None  # orphan kept, not dropped
 
 
+def test_resolve_hierarchy_lineage_stays_bounded(spark):
+    # each level is cut, so a 24-deep chain plans no longer than a
+    # 12-deep one
+    def plan_lines(depth):
+        edges = spark.createDataFrame(
+            [("0", None)] + [(str(i), str(i - 1)) for i in range(1, depth + 1)],
+            "id string, parent string",
+        )
+        out = resolve_hierarchy(edges)
+        assert out.where("level IS NULL").count() == 0
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return len(plan.splitlines())
+
+    assert plan_lines(12) == plan_lines(24)
+
+
 def test_build_json_column(spark):
     df = flatten_document(spark, DOC).select("id", "parent", "name")
     out = build_json_column(df, payload_cols=["id", "name"])
