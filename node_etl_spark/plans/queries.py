@@ -1880,8 +1880,10 @@ def q56_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id, session_seq
     """,
     doc="Batch sessionization (30-min inactivity gap): lag -> new-session "
-        "flag -> running sum = session id; one shuffle on user_id. "
-        "Streaming twin: streaming/stream.py sessionize.",
+        "flag (gap > 30 min, µs-exact) -> running sum = session id; "
+        "one shuffle on user_id. q135 (batch) and q138 (streaming, "
+        "streaming/stream.py sessionize) get the same sessions from "
+        "native session windows.",
 )
 def q57_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3837,7 +3839,7 @@ def _replay_events(
 
     The drain is one micro-batch over the staged files, plus the
     input-less finalising batch for streams that need it
-    (``stream.run_to_memory``): q138's session timeouts, q204's
+    (``stream.run_to_memory``): q138's closed sessions, q204's
     unmatched left rows and append-mode windows emit there, while a
     dedup-only stream such as q149's skips it."""
     import os
@@ -5537,7 +5539,7 @@ def q134_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     WITH flagged AS (
         SELECT user_id, event_id, ts, value,
-               CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) >= 1800
+               CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800
                     THEN 1 ELSE 0 END AS new_sess
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -5558,11 +5560,12 @@ def q134_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Native session windows (F.session_window, 30-min gap): the "
         "idiomatic Spark construct for gap sessionization — one "
         "shuffle on (user, merged window), windows merge while each "
-        "event starts within `gap` of the session end. q57 builds the "
-        "same sessions by hand with lag/cumsum (its manual boundary "
-        "is strictly-greater, the native one is >=, hence this "
-        "oracle's >=); the streaming twin is "
-        "streaming/stream.py sessionize (applyInPandasWithState).",
+        "event starts within `gap` of the session's last event, "
+        "inclusive: a gap of exactly 30 min stays one session and "
+        "30 min + 1 µs starts a new one. That is q57's hand-built "
+        "rule (lag/cumsum, new session on gap > 30 min), hence this "
+        "oracle's >; the streaming twin is streaming/stream.py "
+        "sessionize (q138), on the same native operator.",
 )
 def q135_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
@@ -5667,10 +5670,8 @@ def q137_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q138_stream_sessionize",
     """
     WITH flagged AS (
-        SELECT user_id, event_id, ts, value,
-               epoch_ms(date_trunc('millisecond', ts)) AS tms,
-               CASE WHEN epoch_ms(date_trunc('millisecond', ts))
-                       - epoch_ms(date_trunc('millisecond', lag(ts) OVER w)) > 1800000
+        SELECT user_id, event_id, ts,
+               CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
                     THEN 1 ELSE 0 END AS new_sess
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -5681,31 +5682,28 @@ def q137_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM flagged
     ),
     agg AS (
-        SELECT user_id, seq,
-               MIN(tms) AS session_start_ms, MAX(tms) AS session_end_ms,
+        SELECT user_id, MIN(ts) AS s, MAX(ts) AS e,
                CAST(COUNT(*) AS BIGINT) AS n_events
-        FROM sess GROUP BY 1, 2
+        FROM sess GROUP BY user_id, seq
     ),
-    wm AS (SELECT MAX(epoch_ms(date_trunc('millisecond', ts))) - 3600000 AS w
-           FROM events)
-    SELECT a.user_id, a.session_start_ms, a.session_end_ms, a.n_events
+    wm AS (SELECT (MAX(epoch_ms(ts)) - 3600000) * 1000 AS w_us FROM events)
+    SELECT a.user_id, epoch_ms(a.s) AS session_start_ms,
+           epoch_ms(a.e) AS session_end_ms, a.n_events
     FROM agg a, wm
-    WHERE a.seq < (SELECT MAX(seq) FROM agg b WHERE b.user_id = a.user_id)
-       OR a.session_end_ms + 1800000 < wm.w
+    WHERE epoch_us(a.e) + 1800000000 <= wm.w_us
     """,
-    doc="Custom stateful streaming operator (applyInPandasWithState "
-        "sessionize, 30-min gap, 1h watermark) on the exact oracle "
-        "gate. A single-batch availableNow replay emits (a) sessions "
-        "closed by a later in-batch event (every session except each "
-        "user's last) and (b) sessions whose event-time timeout "
-        "(end + gap) fell strictly below the final watermark "
-        "(max event ms - 1h) in the post-batch timeout sweep. The "
-        "oracle replicates both rules plus the operator's "
-        "millisecond-truncated gap arithmetic — pinning state "
-        "emission semantics (session boundaries + event counts; the "
-        "operator's float value accumulator has no order-independent "
-        "SQL twin, and value-sum parity is already gated by "
-        "q105/q137's symmetric decimal sums).",
+    doc="Streaming sessionization (streaming/stream.py sessionize: "
+        "native session windows, 30-min gap, 1h watermark, append "
+        "mode) on the exact oracle gate. Sessions follow q57's rule: "
+        "a gap of more than 30 min, in exact µs, starts a new one. "
+        "Append mode emits a session once the watermark reaches its "
+        "last event + 30 min; the availableNow replay's final "
+        "watermark is the max event time in ms minus 1h, so the "
+        "oracle keeps the sessions with end + gap <= that watermark "
+        "and withholds the rest, which never finalise. It pins "
+        "session boundaries, event counts and the emission rule; "
+        "value-sum parity is already gated by q105/q137's decimal "
+        "sums.",
 )
 def q138_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import stream as st

@@ -10,15 +10,15 @@ handling (SURVEY §2.6). This module is the net-new unbounded path:
   aggregation with a watermark for late data.
 * ``streaming_dedup``    — exact dedup over a stream
   (``dropDuplicatesWithinWatermark`` on content fingerprint).
-* ``sessionize``         — gap-based sessionization via
-  ``applyInPandasWithState`` (custom stateful operator, the
-  reference's stateful-Thru analogue at SURVEY §2.3).
+* ``sessionize``         — gap-based sessionization on native
+  session windows (``F.session_window``), the reference's
+  stateful-Thru analogue at SURVEY §2.3.
 * ``route_sinks``        — ``foreachBatch`` fan-out: the streaming
   Splitter (reference job-splitter.js) — one persist, N routed sinks.
 
 Scale notes: windowed aggs shuffle on (window, keys); state store size
-is bounded by the watermark horizon; sessionize state is per-key and
-times out on the event-time watermark.
+is bounded by the watermark horizon; sessionize holds each user's
+open sessions until the watermark passes their last event + gap.
 """
 
 from __future__ import annotations
@@ -154,62 +154,6 @@ SESSION_SCHEMA = (
     "user_id bigint, session_start timestamp, session_end timestamp, "
     "n_events bigint, total_value double"
 )
-_SESSION_STATE_SCHEMA = "start long, end long, n long, total double"
-
-
-_SESSION_GAP_MS = 30 * 60 * 1000
-
-
-def _sessions_frame(user_id, sessions) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "user_id": [user_id] * len(sessions),
-            "session_start": [pd.Timestamp(s[0], unit="ms") for s in sessions],
-            "session_end": [pd.Timestamp(s[1], unit="ms") for s in sessions],
-            "n_events": [s[2] for s in sessions],
-            "total_value": [s[3] for s in sessions],
-        }
-    )
-
-
-def _session_fn(
-    key: tuple,
-    pdf_iter,
-    state: GroupState,
-):
-    """Gap-based sessionization state function (applyInPandasWithState).
-
-    Events of one batch are merged with carried state and split on
-    >gap boundaries; every session but the trailing one is closed and
-    emitted immediately, the trailing one is kept in state with an
-    event-time timeout (fires when the watermark passes end+gap).
-    """
-    if state.hasTimedOut:
-        start, end, n, total = state.get
-        state.remove()
-        yield _sessions_frame(key[0], [(start, end, n, total)])
-        return
-
-    rows = pd.concat(list(pdf_iter), ignore_index=True).sort_values("ts")
-    ts_ms = (rows["ts"].astype("int64") // 1_000_000).to_numpy()
-    vals = rows["value"].to_numpy()
-    cur = list(state.get) if state.exists else None
-    closed: list[tuple] = []
-    for t, v in zip(ts_ms, vals):
-        t = int(t)
-        if cur is None:
-            cur = [t, t, 1, float(v)]
-        elif t - cur[1] <= _SESSION_GAP_MS:
-            cur[1] = max(cur[1], t)
-            cur[2] += 1
-            cur[3] += float(v)
-        else:
-            closed.append(tuple(cur))
-            cur = [t, t, 1, float(v)]
-    state.update(tuple(cur))
-    state.setTimeoutTimestamp(cur[1] + _SESSION_GAP_MS)
-    if closed:
-        yield _sessions_frame(key[0], closed)
 
 
 def sessionize(
@@ -218,17 +162,26 @@ def sessionize(
     user_col: str = "user_id",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Custom stateful operator: 30-min-gap sessions per user."""
+    """30-min-gap sessions per user (``SESSION_SCHEMA``), on Spark's
+    native session windows: an event within 30 min of its session's
+    last event (inclusive, compared in exact µs) extends it, and state
+    is merged and saved by the JVM operators with no Python worker.
+    Append mode emits a session once the watermark reaches its last
+    event + 30 min; ``session_end`` is that last event, not the window
+    end."""
     return (
         events.withWatermark(ts_col, watermark)
-        .groupBy(F.col(user_col))
-        .applyInPandasWithState(
-            _session_fn,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        .groupBy(
+            F.col(user_col).alias("user_id"),
+            F.session_window(ts_col, "30 minutes").alias("w"),
         )
+        .agg(
+            F.min(ts_col).alias("session_start"),
+            F.max(ts_col).alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("value").alias("total_value"),
+        )
+        .drop("w")
     )
 
 
@@ -359,8 +312,8 @@ def run_to_memory(stream: DataFrame, name: str, mode: str = "append"):
 
     Once the input is consumed, Spark runs one more micro-batch without
     input if the watermark moved, so stateful operators can finalise:
-    sessionize's timeouts, outer interval joins' unmatched rows and
-    append-mode window aggregations emit there. A deduplication emits
+    sessionize's closed sessions, outer interval joins' unmatched rows
+    and append-mode window aggregations emit there. A deduplication emits
     each row when it arrives, so for it that batch only evicts state.
     When every stateful operator in the plan is a deduplication, the
     query runs with ``spark.sql.streaming.noDataMicroBatches.enabled``

@@ -51,6 +51,8 @@ def main() -> int:
     )
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     opts, sys.argv[1:] = ap.parse_known_args()
+    # a piped sweep cut by a timeout keeps every line printed so far
+    sys.stdout.reconfigure(line_buffering=True)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("check-oracle", shuffle_partitions=opts.shuffle_partitions)

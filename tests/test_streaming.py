@@ -87,7 +87,15 @@ def test_sessionize(spark, tmp_path):
     path = str(tmp_path / "sess")
     df.coalesce(1).write.parquet(path)
     stream = st.stream_source(spark, path, SCHEMA)
-    st.run_to_memory(st.sessionize(stream), "sessions", mode="append")
+    out = st.sessionize(stream)
+    # native session windows: no Python stateful node in the plan, and
+    # the output columns are SESSION_SCHEMA's (nullability aside)
+    assert "PandasWithState" not in out._jdf.queryExecution().analyzed().toString()
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType)
+        for f in spark.createDataFrame([], st.SESSION_SCHEMA).schema
+    ]
+    st.run_to_memory(out, "sessions", mode="append")
     got = spark.sql("SELECT * FROM sessions ORDER BY user_id, session_start").collect()
     u7 = [r for r in got if r.user_id == 7]
     assert len(u7) == 2
@@ -324,8 +332,8 @@ def test_dedup_drain_skips_eviction_only_batch(spark, tmp_path):
 
 
 def test_sessionize_drain_keeps_finalising_batch(spark, tmp_path):
-    # sessions close on event-time timeouts, which fire only in the
-    # input-less batch after the watermark moved
+    # append mode emits a session only once the watermark passes its
+    # last event + gap, which happens in the input-less batch
     base = dt.datetime(2024, 1, 1)
     rows = [
         (1, base, 7, "click", 1.0),
@@ -389,7 +397,7 @@ def test_sessionize_restart_recovers_carried_state(spark, tmp_path):
     # from the checkpoint, CONTINUES a carried session with a
     # mid-gap event, and flushes via a watermark anchor. The single
     # cross-phase session can only exist if the restarted query
-    # recovered applyInPandasWithState state from the checkpoint.
+    # recovered the session-window state store from the checkpoint.
     base = dt.datetime(2024, 1, 1, 0, 0, 0)
     src = str(tmp_path / "in")
     out = str(tmp_path / "out")
@@ -440,6 +448,90 @@ def test_sessionize_restart_recovers_carried_state(spark, tmp_path):
     assert set(got) == {7, 8}
     assert got[7].n_events == 3 and got[7].total_value == 6.0
     assert got[8].n_events == 1 and got[8].total_value == 4.0
+
+
+def _boundary_events(path):
+    """Events on every sessionization boundary, written with the test
+    data's parquet schema. The final watermark is the max event time in
+    ms minus 1h: ``wm`` below (the anchor carries a sub-ms part that the
+    watermark drops)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = dt.datetime(2024, 1, 1)
+    gap, us = dt.timedelta(minutes=30), dt.timedelta(microseconds=1)
+    anchor = base + dt.timedelta(days=2)
+    wm = anchor - dt.timedelta(hours=1)
+    a = base + dt.timedelta(minutes=3)
+    times = {
+        # gaps of 30 min - 1 µs and exactly 30 min merge; 30 min + 1 µs
+        # starts a second session
+        1: [a, a + gap - us, a + 2 * gap - us, a + 3 * gap],
+        # last event + gap lands exactly on, and 1 µs past, the watermark
+        2: [wm - gap - dt.timedelta(minutes=5), wm - gap],
+        3: [wm - gap + us],
+        # closed by a later event, but its end + gap is past the watermark
+        4: [wm - dt.timedelta(minutes=20), wm + dt.timedelta(minutes=11)],
+        9: [anchor + dt.timedelta(microseconds=500)],
+    }
+    rows = [(u, t) for u, ts in times.items() for t in ts]
+    schema = pa.schema(
+        [
+            ("event_id", pa.int64()),
+            ("ts", pa.timestamp("us")),
+            ("user_id", pa.int64()),
+            ("event_type", pa.string()),
+            ("value", pa.float64()),
+            ("props", pa.string()),
+        ]
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": list(range(len(rows))),
+                "ts": [t for _, t in rows],
+                "user_id": [u for u, _ in rows],
+                "event_type": ["click"] * len(rows),
+                "value": [1.25 * (i + 1) for i in range(len(rows))],
+                "props": [None] * len(rows),
+            },
+            schema=schema,
+        ),
+        path,
+    )
+
+
+@pytest.mark.parametrize(
+    "name", ["q57_sessionize", "q135_session_window", "q138_stream_sessionize"]
+)
+def test_sessionizers_match_oracle_on_boundaries(spark, tmp_path, name):
+    # the three sessionizers share one rule: a gap of more than 30 min
+    # (in µs) starts a session; q138 emits a session once the final
+    # watermark reaches its last event + 30 min
+    import duckdb
+
+    from node_etl_spark.plans import QUERIES
+
+    _boundary_events(str(tmp_path / "events.parquet"))
+    q = QUERIES[name]
+    got_df = q.fn(spark, str(tmp_path))
+    got_cols, got = got_df.columns, [tuple(r) for r in got_df.collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    res = con.execute(q.oracle)
+    want_cols, want = [d[0] for d in res.description], res.fetchall()
+
+    def by_name(cols, rows):
+        order = sorted(range(len(cols)), key=cols.__getitem__)
+        return sorted(tuple(r[i] for i in order) for r in rows)
+
+    assert sorted(got_cols) == sorted(want_cols)
+    assert by_name(got_cols, got) == by_name(want_cols, want)
+    # users 1-4 and the anchor: 2 + 1 + 1 + 2 + 1 sessions in batch; the
+    # stream withholds user 3's, user 4's two and the anchor's
+    assert len(got) == (3 if name.startswith("q138") else 7)
 
 
 def test_bitmap_state_sink_restart_idempotent(spark, tmp_path):
